@@ -15,7 +15,8 @@ operate the lakehouse layer from the shell):
 
    Reads the input directory as text lines, pipes through the executables
    with reference dataflow parity (md5 partition, sorted runs), writes
-   ``part-*`` text files — a drop-in for the reference job descriptor
+   one ``part-NNNNN`` text file per reducer holding that reducer's
+   stdout verbatim — a drop-in for the reference job descriptor
    {input_directory, output_directory, mapper_executable,
    reducer_executable, num_mappers, num_reducers}. num_mappers is
    intentionally absent: input splitting is Spark's job now.
@@ -40,9 +41,10 @@ operate the lakehouse layer from the shell):
    concurrently with ``--parallel N``, where Spark's FAIR scheduler
    pools replace the reference's strictly serial queue (its workers ran
    one task at a time; a shared Spark app multiplexes jobs without
-   re-paying session startup). A failed job is reported and the queue
-   KEEPS GOING (reference parity: a bad mapper fails its job, not the
-   manager); exit status is non-zero if any job failed.
+   re-paying session startup). A failed job is reported with its root
+   cause (an executable's non-zero exit status fails its job) and the
+   queue KEEPS GOING (reference parity: a bad mapper fails its job, not
+   the manager); exit status is non-zero if any job failed.
 
 Unlike the reference's fire-and-forget TCP submit (``submit.py:92-94``,
 completion observed by polling output files), this CLI runs jobs in
@@ -75,13 +77,12 @@ def _run_exec(
     num_reducers: int = 4,
     num_mappers: int | None = None,
 ) -> str:
-    from mapreduce_google_spark.io import read_text_dir, write_text_dir
+    from mapreduce_google_spark.io import read_text_dir, write_part_files
     from mapreduce_google_spark.operators.pipe import pipe_map_reduce
 
     lines = read_text_dir(spark, input, num_mappers=num_mappers)
-    kv = pipe_map_reduce(lines, mapper, reducer, num_reducers=num_reducers)
-    out = kv.select(F.concat_ws("\t", F.col("key"), F.col("value")).alias("value"))
-    write_text_dir(out, output, num_files=num_reducers)
+    reduced = pipe_map_reduce(lines, mapper, reducer, num_reducers=num_reducers)
+    write_part_files(reduced, output, num_reducers)
     return output
 
 
@@ -107,6 +108,23 @@ def _run_query(
         df.show(limit, truncate=False)
         return -1
     return df.count()
+
+
+def _root_cause(exc: Exception) -> str:
+    """``Class: message`` of the innermost cause of ``exc``, first line of
+    the message only. A JVM failure reaches Python wrapped in a Py4J error
+    (or PySpark's conversion of it) whose text is a whole stack trace; its
+    root cause, such as ``java.lang.IllegalStateException: Subprocess
+    exited with status 3. …`` from a failing executable, is what a job
+    status needs."""
+    jexc = getattr(exc, "java_exception", None) or getattr(exc, "_origin", None)
+    if jexc is None:
+        name, msg = type(exc).__name__, str(exc)
+    else:
+        while jexc.getCause() is not None:
+            jexc = jexc.getCause()
+        name, msg = jexc.getClass().getName(), jexc.getMessage() or ""
+    return f"{name}: {(msg.splitlines() or [''])[0]}"[:500]
 
 
 def run_batch(
@@ -154,7 +172,7 @@ def run_batch(
                 }
             raise ValueError(f"unknown job type {kind!r}")
         except Exception as exc:  # noqa: BLE001 — queue keeps serving
-            return {"job": idx, "type": kind, "ok": False, "error": str(exc)[:500]}
+            return {"job": idx, "type": kind, "ok": False, "error": _root_cause(exc)}
         finally:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 

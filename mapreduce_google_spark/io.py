@@ -218,6 +218,28 @@ def write_text_dir(df: DataFrame, output_dir: str, num_files: int | None = None)
     df.write.mode("overwrite").text(output_dir)
 
 
+#: a Spark part file's name: ``part-<partition index><rest>``
+_PART_FILE = re.compile(r"part-(\d+)(.*)")
+
+
+def write_part_files(df: DataFrame, output_dir: str, num_parts: int) -> None:
+    """Reference reducer sink (F9): partition i of ``df``, ``num_parts``
+    partitions in all, becomes the one file ``part-<i:05d>…``, overwrite.
+
+    Spark writes no file for an empty partition other than the first, so
+    the missing indices get an empty file after the commit: the reference
+    leaves one output file per reducer, empty or not
+    (``worker/__main__.py:237-250``). ``output_dir`` is a local path.
+    """
+    df.write.mode("overwrite").text(output_dir)
+    found = [m for m in map(_PART_FILE.fullmatch, os.listdir(output_dir)) if m]
+    have = {int(m.group(1)) for m in found}
+    suffix = found[0].group(2) if found else ""
+    for i in range(num_parts):
+        if i not in have:
+            open(os.path.join(output_dir, f"part-{i:05d}{suffix}"), "w").close()
+
+
 def write_parquet(
     df: DataFrame,
     output_dir: str,

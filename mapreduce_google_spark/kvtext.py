@@ -17,8 +17,8 @@ engine's extension surface:
 * the TAB-split contract (first tab only, empty keys legal) implemented
   once, in the reader.
 
-Honesty at scale: a Python reader is interpreter-bound (~the rdd.pipe
-compatibility tier, NOT the parquet hot path) — it exists for format
+Honesty at scale: a Python reader is interpreter-bound (a compatibility
+tier, NOT the parquet hot path) — it exists for format
 compatibility and as the template for plugging genuinely custom formats
 into this engine; columnar data belongs in parquet.
 """

@@ -929,7 +929,7 @@ register(
             GROUP BY token
             ORDER BY token
         """,
-        doc="T01 via rdd.pipe + md5 partitioner + external mapper/reducer execs",
+        doc="T01 via external mapper/reducer execs piped in the JVM + md5 placement",
         tags=("text", "pipe"),
     )
 )
@@ -7145,7 +7145,7 @@ register(
 #: Specs whose BUILDER may run Spark jobs (beyond parquet file-listing)
 #: before the returned DataFrame is ever executed — the registry's
 #: honest ledger of construction-time eagerness (VERDICT r07 item 7).
-#: Three legitimate reasons, named per entry below:
+#: Four legitimate reasons, named per entry below:
 #:   (profile)   a driver-held statistic is computed up front (memoized
 #:               per process) — e.g. t21's skew profile, k-means
 #:               centroids, PCA moments, iterative label propagation;
@@ -7155,7 +7155,10 @@ register(
 #:               dirs) — whichever sibling builds first pays, so ALL
 #:               specs sharing an artifact are flagged;
 #:   (stream)    the builder runs a bounded Structured Streaming job to
-#:               completion and returns the sink's contents.
+#:               completion and returns the sink's contents;
+#:   (pipe)      the builder pipes an md5-placed Dataset through an
+#:               executable (JVM ``PipedRDD``), and forming an RDD from an
+#:               adaptive plan runs the plan's shuffle map stage.
 #: Everything NOT listed here must be strictly lazy at build time —
 #: asserted by tests/test_plans_global.py::test_plan_has_no_scale_antipatterns
 #: (job-group tracking around every registered builder), so tools that
@@ -7217,6 +7220,8 @@ EAGER_BUILD: frozenset[str] = frozenset(
         "t169_stream_pricing_summary",
         "t214_stream_top_tokens",
         "t229_stream_event_corrections",
+        # (pipe) the mapper's stage runs when the reducer's RDD is formed
+        "t20_pipe_word_count",
     }
 )
 
@@ -7414,6 +7419,10 @@ REPROVE: dict[str, int] = {
     "t207_cardinality_sketch_audit": 19,
     "t24_embedding_near_dup": 19,
     "t145_semantic_dedup_invariants": 19,
+    # r20 moved t20's exec path off Python workers: both executables run
+    # through the JVM PipedRDD, md5 placement and the whole-line sort are
+    # Catalyst expressions.
+    "t20_pipe_word_count": 20,
 }
 
 

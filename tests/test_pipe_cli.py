@@ -10,15 +10,200 @@ import sys
 
 from mapreduce_google_spark.operators.pipe import ASSETS, md5_partition
 
+#: ``key value`` input lines → ``key\tvalue`` mapper output
+IDENTITY_MAPPER = """
+import sys
+sys.stdin.reconfigure(encoding="utf-8")
+sys.stdout.reconfigure(encoding="utf-8")
+for line in sys.stdin:
+    key, _, value = line.rstrip("\\n").partition(" ")
+    print(f"{key}\\t{value}")
+"""
 
-def test_md5_partition_matches_reference_semantics():
+
+def _command(tmp_path, name: str, body: str) -> str:
+    """A Python executable written to ``tmp_path``, as a command line."""
+    path = tmp_path / f"{name}.py"
+    path.write_text(body, encoding="utf-8")
+    return f"{sys.executable} {path}"
+
+
+def _parts(out_dir) -> dict[str, list[str]]:
+    """Part file name → its lines."""
+    return {
+        p.name: p.read_text(encoding="utf-8").splitlines()
+        for p in sorted(out_dir.iterdir())
+        if p.name.startswith("part-")
+    }
+
+
+def _exec_job(input_dir, out_dir, mapper: str, reducer: str, num_reducers: int) -> dict:
+    return {
+        "type": "exec",
+        "input": str(input_dir),
+        "output": str(out_dir),
+        "mapper": mapper,
+        "reducer": reducer,
+        "num_reducers": num_reducers,
+    }
+
+
+def test_md5_partition_matches_reference_semantics(spark):
+    """``md5_partition`` is the reference's partition function, and
+    ``md5_bucket``, the SQL expression that places pipe output, agrees
+    with it for power-of-two and other moduli."""
     import hashlib
 
-    for key in ["the", "", "spark", "Ünïcôde"]:
+    from mapreduce_google_spark.functions.hashing import md5_bucket
+
+    keys = ["the", "", "spark", "Ünïcôde", "a\tb", "x" * 300]
+    for key in keys:
         for n in (1, 4, 8):
             assert md5_partition(key, n) == int(
                 hashlib.md5(key.encode()).hexdigest(), 16
             ) % n
+    ns = (1, 3, 4, 7, 8)
+    df = spark.createDataFrame([(k,) for k in keys], "key string")
+    rows = df.select("key", *[md5_bucket("key", n).alias(f"b{n}") for n in ns]).collect()
+    assert len(rows) == len(keys)
+    for row in rows:
+        assert [row[f"b{n}"] for n in ns] == [md5_partition(row["key"], n) for n in ns], row
+
+
+def test_exec_part_files_are_md5_placed_and_sorted(spark, tmp_path):
+    """The reference's output contract: one part file per reducer index,
+    empty ones included; every line in the part of its key's md5 bucket;
+    each part sorted by whole line."""
+    from mapreduce_google_spark.cli import run_batch
+
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    lines = [f"{k} {v}" for v in ("9", "1", "b", "10", "a") for k in ("Ünïcôde", "alpha")]
+    (input_dir / "a.txt").write_text("\n".join(lines[:5]) + "\n", encoding="utf-8")
+    (input_dir / "b.txt").write_text("\n".join(lines[5:]) + "\n", encoding="utf-8")
+    out_dir = tmp_path / "out"
+    mapper = _command(tmp_path, "mapper", IDENTITY_MAPPER)
+    job = _exec_job(input_dir, out_dir, mapper, "cat", num_reducers=8)
+    [status] = run_batch(spark, [job])
+    assert status["ok"], status
+
+    parts = _parts(out_dir)
+    assert sorted(int(name[5:10]) for name in parts) == list(range(8)), sorted(parts)
+    got = []
+    for name, part in parts.items():
+        index = int(name[5:10])
+        for line in part:
+            assert md5_partition(line.partition("\t")[0], 8) == index, (name, line)
+        assert part == sorted(part), name
+        got += part
+    assert sorted(got) == sorted(ln.replace(" ", "\t", 1) for ln in lines)
+
+
+def test_exec_reducer_output_is_written_verbatim(spark, tmp_path):
+    """A reducer line with no TAB is written as it is (not ``foo\\t``),
+    and non-ASCII text crosses both pipes as UTF-8."""
+    from mapreduce_google_spark.cli import run_batch
+
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.txt").write_text("foo 1\nÜnïcôde ß\n", encoding="utf-8")
+    reducer = _command(tmp_path, "reducer", """
+import sys
+sys.stdin.reconfigure(encoding="utf-8")
+sys.stdout.reconfigure(encoding="utf-8")
+for line in sys.stdin:
+    key, _, value = line.rstrip("\\n").partition("\\t")
+    print(key)
+    print(f"{key}\\t{value}\\tÿ")
+""")
+    out_dir = tmp_path / "out"
+    mapper = _command(tmp_path, "mapper", IDENTITY_MAPPER)
+    [status] = run_batch(spark, [_exec_job(input_dir, out_dir, mapper, reducer, 2)])
+    assert status["ok"], status
+    got = sorted(ln for part in _parts(out_dir).values() for ln in part)
+    assert got == sorted(["foo", "foo\t1\tÿ", "Ünïcôde", "Ünïcôde\tß\tÿ"])
+
+
+def test_exec_failing_mapper_fails_its_job(spark, tmp_path):
+    """A mapper that exits non-zero fails its job, and the status names
+    the exit status rather than carrying a stack trace."""
+    from mapreduce_google_spark.cli import run_batch
+
+    input_dir = tmp_path / "in"
+    input_dir.mkdir()
+    (input_dir / "a.txt").write_text("one line\nanother line\n")
+    mapper = _command(tmp_path, "mapper", """
+import sys
+for line in sys.stdin:
+    print(line.split()[0] + "\\t1")
+sys.exit(3)
+""")
+    job = _exec_job(input_dir, tmp_path / "out", mapper, "cat", num_reducers=2)
+    [status] = run_batch(spark, [job])
+    assert status["ok"] is False, status
+    assert "exited with status 3" in status["error"], status
+    assert status["error"].startswith("java.lang.IllegalStateException: "), status
+    assert "\n" not in status["error"]
+
+
+def test_exec_batch_parallel_jobs(spark, tmp_path):
+    """Two exec jobs run at once from driver threads
+    (``run_batch(parallel=2)``) and both outputs are correct."""
+    from mapreduce_google_spark.cli import run_batch
+
+    texts = {"x": "a b a\nc a\n", "y": "Ünïcôde b\nb b\n"}
+    jobs = []
+    for name, text in texts.items():
+        (tmp_path / name).mkdir()
+        (tmp_path / name / "in.txt").write_text(text, encoding="utf-8")
+        jobs.append(_exec_job(
+            tmp_path / name,
+            tmp_path / f"out-{name}",
+            f"{sys.executable} {ASSETS}/wc_mapper.py",
+            f"{sys.executable} {ASSETS}/wc_reducer.py",
+            num_reducers=3,
+        ))
+    statuses = run_batch(spark, jobs, parallel=2)
+    assert all(s["ok"] for s in statuses), statuses
+    for name, text in texts.items():
+        counts = {}
+        for tok in text.lower().split():
+            counts[tok] = counts.get(tok, 0) + 1
+        parts = _parts(tmp_path / f"out-{name}")
+        assert len(parts) == 3
+        got = dict(ln.split("\t") for part in parts.values() for ln in part)
+        assert got == {k: str(v) for k, v in counts.items()}
+
+
+def test_cli_exec_executables_inherit_the_environment(tmp_path):
+    """An executable sees the environment of the process that runs it,
+    as the reference's ``Popen`` does: a variable set for the driver
+    reaches the mapper."""
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    (input_dir / "a.txt").write_text("k\n")
+    mapper = _command(tmp_path, "mapper", """
+import os, sys
+for line in sys.stdin:
+    print(line.strip() + "\\t" + os.environ.get("MGS_PIPE_ENV_PROBE", "<unset>"))
+""")
+    out_dir = tmp_path / "out"
+    env = dict(os.environ, SPARK_GRAFT_CPUS="4", MGS_PIPE_ENV_PROBE="from-driver")
+    res = subprocess.run(
+        [
+            sys.executable, "-m", "mapreduce_google_spark.cli", "exec",
+            "--input", str(input_dir), "--output", str(out_dir),
+            "--mapper", mapper, "--reducer", "cat", "--num-reducers", "2",
+        ],
+        capture_output=True,
+        text=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        env=env,
+        timeout=300,
+    )
+    assert res.returncode == 0, res.stderr[-2000:]
+    got = [ln for part in _parts(out_dir).values() for ln in part]
+    assert got == ["k\tfrom-driver"]
 
 
 def test_cli_exec_job(tmp_path):

@@ -61,7 +61,7 @@ def test_plan_has_no_scale_antipatterns(name, spark, sf_dir):
     ), (
         f"{name}: builder ran Spark jobs during construction but is not "
         "in queries.EAGER_BUILD — make it lazy or add it to the ledger "
-        "with a (profile)/(ensure)/(stream) reason"
+        "with a (profile)/(ensure)/(stream)/(pipe) reason"
     )
     plan = formatted_plan(df)
     row_py = ROW_PYTHON.findall(plan)
