@@ -487,18 +487,50 @@ def _sweep_stranded_bucket_stores(path: str, min_age_s: float = 600.0) -> None:
             shutil.rmtree(full, ignore_errors=True)
 
 
+#: (applicationId, bucket count) of each SparkContext that has built
+#: or adopted a store — a runtime memo, a set like the package's others
+_STORE_BUCKETS: set[tuple[str, int]] = set()
+
+
+def store_bucket_count(spark: SparkSession) -> int:
+    """The bucket count of every store this SparkContext builds: its
+    ``defaultParallelism`` when first asked, then fixed for the
+    context's life. That is ``N`` under ``local[N]`` and
+    ``spark.default.parallelism`` when set; otherwise a cluster reports
+    the cores of the executors registered so far (at least 2), and
+    dynamic allocation moves it. Fixing it once keeps all of a
+    session's stores co-located; a cluster session should set
+    ``spark.default.parallelism`` to its executor cores so the count
+    does not depend on when the first store is built."""
+    sc = spark.sparkContext
+    app = sc.applicationId
+    for held, n in _STORE_BUCKETS:
+        if held == app:
+            return n
+    n = sc.defaultParallelism
+    _STORE_BUCKETS.add((app, n))
+    return n
+
+
 def adopt_or_build_bucketed_table(
     spark: SparkSession,
     name: str,
     path: str,
     bucket_cols: list[str],
-    num_buckets: int,
+    num_buckets: int | None,
     build,
     build_wait_s: float = 900.0,
 ) -> str:
     """Ensure a bucketed catalog table exists; returns the EFFECTIVE
     table name — ``{name}{bucket_table_suffix(...)}``, i.e.
-    ``{name}_k{num_buckets}_{cols}_{spec_hash}``. The FULL bucket spec
+    ``{name}_k{num_buckets}_{cols}_{spec_hash}``.
+
+    ``num_buckets=None`` — what every store builder passes — is
+    :func:`store_bucket_count`, the session's parallelism fixed once
+    per SparkContext. A store scan is then one wave of tasks, and every
+    store a session builds shares one count, so joins between stores
+    on their bucket keys stay co-located. An explicit count (the IVF
+    index's ``n_cells``, tests) wins. The FULL bucket spec
     — count AND columns — is part of the identity: files hashed mod M
     are unusable — or silently wrong — under metadata declaring N, and
     files bucketed by OLD columns adopted under CLUSTERED BY (new
@@ -545,6 +577,8 @@ def adopt_or_build_bucketed_table(
     import time
     import uuid
 
+    if num_buckets is None:
+        num_buckets = store_bucket_count(spark)
     suffix = bucket_table_suffix(num_buckets, bucket_cols)
     name = f"{name}{suffix}"
     path = f"{path.rstrip('/')}{suffix}"
@@ -661,7 +695,6 @@ def bucketed_fact_table(
     sf_dir: str,
     table: str,
     key: str,
-    num_buckets: int = 32,
 ) -> str:
     """Full-width copy of a source fact table, bucketed+sorted on its
     join key — the amortized-shuffle substrate for EVERY equi-join and
@@ -673,12 +706,13 @@ def bucketed_fact_table(
 
     Full-width on purpose: parquet column pruning makes query-time
     reads pay only for the columns they touch, while one store serves
-    every query in the key's join family. At 100 TB, ``num_buckets``
-    scales to cluster parallelism and the store lands on shared storage
-    — the one-time bucketed write replaces a per-query shuffle of the
-    fact table with a never-again cost (the reference has no analog:
-    its every job re-partitions the full input, manager/__main__.py
-    round-robin split)."""
+    every query in the key's join family. It has as many buckets as
+    the session's parallelism (:func:`store_bucket_count`), so at
+    100 TB the store is sized by the cluster's executor cores and
+    lands on shared storage — the one-time bucketed write replaces
+    a per-query shuffle of the fact table with a never-again cost (the
+    reference has no analog: its every job re-partitions the full
+    input, manager/__main__.py round-robin split)."""
     tag = cache_tag(sf_dir, table)
     name = f"mgs_fact_{table}_{key}_{tag}"
     return adopt_or_build_bucketed_table(
@@ -686,7 +720,7 @@ def bucketed_fact_table(
         name,
         shared_store_path(name),
         [key],
-        num_buckets,
+        None,
         lambda: load_table(spark, sf_dir, table),
     )
 

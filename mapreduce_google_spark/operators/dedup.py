@@ -475,7 +475,6 @@ def minhash_band_table(
     num_hashes: int = 32,
     bands: int = 8,
     max_df: int | None = None,
-    num_buckets: int = 32,
 ) -> str:
     """Materialize the (doc_id, band, bucket) LSH index as a parquet
     table BUCKETED BY (band, bucket) (one signature pass), keyed by the
@@ -495,7 +494,9 @@ def minhash_band_table(
     the bucket-size guard aggregation run with ZERO exchange of the
     banded set — the property the in-session path gets from
     ``repartition("band","bucket").cache()``, held durably on disk.
-    At 100 TB, raise ``num_buckets`` to match cluster parallelism.
+    It has as many buckets as the session's parallelism
+    (``io.store_bucket_count``), so at 100 TB the table is sized by the
+    cluster's executor cores with no argument to raise.
     """
     from mapreduce_google_spark.io import (
         adopt_or_build_bucketed_table,
@@ -517,7 +518,7 @@ def minhash_band_table(
         return _band_buckets(sig, num_hashes, bands)
 
     return adopt_or_build_bucketed_table(
-        spark, name, shared_store_path(name), ["band", "bucket"], num_buckets, build
+        spark, name, shared_store_path(name), ["band", "bucket"], None, build
     )
 
 
@@ -528,7 +529,6 @@ def minhash_band_table_counted(
     num_hashes: int = 32,
     bands: int = 8,
     max_df: int | None = None,
-    num_buckets: int = 32,
 ) -> str:
     """Band table WITH a precomputed ``bucket_n`` column — t22's DEFAULT
     substrate since r17 (BENCH_t22_guard_probe.json: the previous
@@ -568,7 +568,7 @@ def minhash_band_table_counted(
         return banded.withColumn("bucket_n", F.count("*").over(w))
 
     return adopt_or_build_bucketed_table(
-        spark, name, shared_store_path(name), ["band", "bucket"], num_buckets, build
+        spark, name, shared_store_path(name), ["band", "bucket"], None, build
     )
 
 
@@ -577,7 +577,6 @@ def shingle_store_table(
     sf_dir: str,
     n: int = 3,
     max_df: int | None = None,
-    num_buckets: int = 32,
 ) -> str:
     """Materialize per-document shingle sets as ``(doc_id, xh:
     array<long>, set_size)`` — sorted distinct ``xxhash64`` values of
@@ -630,7 +629,7 @@ def shingle_store_table(
         )
 
     return adopt_or_build_bucketed_table(
-        spark, name, shared_store_path(name), ["doc_id"], num_buckets, build
+        spark, name, shared_store_path(name), ["doc_id"], None, build
     )
 
 
@@ -849,7 +848,6 @@ def fingerprint_store_table(
     spark: SparkSession,
     sf_dir: str,
     batch_start: int = 250,
-    num_buckets: int = 32,
 ) -> str:
     """Materialize the HISTORICAL fingerprint store as a parquet table
     BUCKETED BY fingerprint — the durable asset t65's docstring
@@ -878,7 +876,7 @@ def fingerprint_store_table(
         )
 
     return adopt_or_build_bucketed_table(
-        spark, name, shared_store_path(name), ["fingerprint"], num_buckets, build
+        spark, name, shared_store_path(name), ["fingerprint"], None, build
     )
 
 

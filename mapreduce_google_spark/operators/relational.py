@@ -312,7 +312,7 @@ def prejoined_order_lines_table(spark: SparkSession, sf_dir: str) -> str:
         )
 
     return adopt_or_build_bucketed_table(
-        spark, name, shared_store_path(name), ["o_custkey"], 32, build
+        spark, name, shared_store_path(name), ["o_custkey"], None, build
     )
 
 

@@ -30,8 +30,19 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _host_cpus() -> int:
+    """CPUs this process may run on (``sched_getaffinity`` is Linux
+    only; elsewhere, the machine's CPU count)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def _default_master() -> str:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """``local[SPARK_GRAFT_CPUS]``, else one thread per CPU this process
+    may run on — the session's parallelism, which also sizes every
+    shared store's buckets (``io.store_bucket_count``)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus()
     return f"local[{cpus}]"
 
 

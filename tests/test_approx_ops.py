@@ -768,16 +768,26 @@ def test_bucket_count_is_part_of_table_identity(spark, tmp_path):
     n8 = adopt_or_build_bucketed_table(
         spark, "mgs_test_identity", base, ["k"], 8, lambda: df
     )
+    # None is the session's parallelism — a count of its own, so it
+    # adopts n4/n8 only when it equals theirs
+    n_default = adopt_or_build_bucketed_table(
+        spark, "mgs_test_identity", base, ["k"], None, lambda: df
+    )
+    default = spark.sparkContext.defaultParallelism
     try:
         assert n4 != n8
         assert n4.endswith(bucket_table_suffix(4, ["k"]))
         assert n8.endswith(bucket_table_suffix(8, ["k"]))
+        assert n_default.endswith(bucket_table_suffix(default, ["k"]))
+        assert (n_default == n4) == (default == 4)
+        assert (n_default == n8) == (default == 8)
         # both sidecar-stamped stores coexist — the sweep removes only
         # sidecar-LESS (retired-scheme) siblings, never live specs
         assert spark.table(n4).count() == spark.table(n8).count() == 50
+        assert spark.table(n_default).count() == 50
     finally:
-        spark.sql(f"DROP TABLE IF EXISTS {n4}")
-        spark.sql(f"DROP TABLE IF EXISTS {n8}")
+        for n in {n4, n8, n_default}:
+            spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
 def test_t24_auto_param_derivation():

@@ -275,6 +275,56 @@ def test_bucketed_table_identity_includes_bucket_cols(spark, tmp_path):
         spark.sql(f"DROP TABLE {name}")
 
 
+def test_store_buckets_default_to_session_parallelism(spark, sf_dir):
+    """A store builder called without a count sizes its buckets to the
+    session's defaultParallelism — one wave of tasks per store scan —
+    and stamps that count into its path suffix, its sidecar and its
+    bucket file ids."""
+    import json
+
+    from mapreduce_google_spark.io import (
+        _BUCKET_FILE_RE,
+        bucket_table_suffix,
+        bucketed_fact_table,
+        shared_store_path,
+    )
+
+    n = spark.sparkContext.defaultParallelism
+    name = bucketed_fact_table(spark, sf_dir, "orders", "o_custkey")
+    assert name.endswith(bucket_table_suffix(n, ["o_custkey"]))
+    path = shared_store_path(name)
+    with open(os.path.join(path, "_BUCKET_SPEC.json")) as fh:
+        assert json.load(fh)["num_buckets"] == n
+    ids = [
+        int(m.group(1))
+        for m in map(_BUCKET_FILE_RE.search, os.listdir(path))
+        if m is not None
+    ]
+    assert ids and max(ids) < n
+
+
+def test_store_bucket_count_is_fixed_per_spark_context(spark, tmp_path, monkeypatch):
+    """The count is read once per SparkContext and then held: a
+    cluster's defaultParallelism grows as executors register, and a
+    later store of another count would lose co-location with the
+    earlier ones."""
+    from mapreduce_google_spark import io as mio
+
+    sc = spark.sparkContext
+    assert mio.store_bucket_count(spark) == sc.defaultParallelism
+    monkeypatch.setattr(mio, "_STORE_BUCKETS", {(sc.applicationId, 3)})
+    assert mio.store_bucket_count(spark) == 3
+    df = spark.range(20).withColumnRenamed("id", "k")
+    name = mio.adopt_or_build_bucketed_table(
+        spark, "mgs_test_memo", str(tmp_path / "memo"), ["k"], None, lambda: df
+    )
+    try:
+        assert name.endswith(mio.bucket_table_suffix(3, ["k"]))
+        assert spark.table(name).count() == 20
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
 def test_bucketed_build_lock_serializes_and_breaks_dead_holders(spark, tmp_path):
     """adopt_or_build_bucketed_table builds under an O_EXCL lock (r13;
     the r8 shared-cache rule: one writer per _SUCCESS-gated store). A

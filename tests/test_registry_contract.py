@@ -745,6 +745,31 @@ def test_fingerprint_covers_codecs_submodule_constants():
     )
 
 
+def test_fingerprints_do_not_depend_on_checkout_path():
+    """A pin must hold in every checkout: a path constant built from
+    ``__file__`` (``operators/pipe.ASSETS``, read by t20) enters the
+    fingerprint relative to the repo, so no active entry's fingerprint
+    parts contain the repo's absolute path."""
+    import os
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(repo, "tools"))
+    try:
+        import reprove
+    finally:
+        sys.path.pop(0)
+
+    assert "const ASSETS" in reprove.fingerprint_parts(
+        REGISTRY["t20_pipe_word_count"]
+    )
+    leaking = {
+        name: [k for k, v in reprove.fingerprint_parts(spec).items() if repo in v]
+        for name, spec in reprove.active_specs().items()
+    }
+    assert not {n: ks for n, ks in leaking.items() if ks}
+
+
 def test_bench_payload_survives_stdout_tail_truncation():
     """VERDICT r13 item 5: the driver records only the last ~2000 chars
     of bench stdout, and BENCH_r13.json lost the per-query medians

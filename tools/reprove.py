@@ -21,7 +21,8 @@ A fingerprint is the md5 over:
   values and through closure cells — the registration patterns the
   registry actually uses);
 * the repr of every module-level plain-data constant those functions
-  read (dispatch thresholds — e.g. ``CLI_LOOKUP_DF_THRESHOLD``, or the
+  read, with a path inside the checkout made relative to it (dispatch
+  thresholds — e.g. ``CLI_LOOKUP_DF_THRESHOLD``, or the
   retired ``TOPK_WINDOW_STORE_MIN_ROWS`` while it lived — change the
   default path without touching any function body);
 * the entry's oracle SQL (an oracle edit changes what "green" means).
@@ -221,6 +222,15 @@ def _referenced(fn: types.FunctionType) -> list[tuple[str, object]]:
     return out
 
 
+def _repo_relative(obj: object) -> object:
+    """A path constant inside the checkout, relative to it: a constant
+    such as ``operators/pipe.ASSETS`` is built from ``__file__``, and
+    its absolute form would make the pin hold in one checkout only."""
+    if isinstance(obj, str) and obj.startswith(REPO + os.sep):
+        return os.path.relpath(obj, REPO)
+    return obj
+
+
 def _source_of(obj: object) -> str:
     try:
         return inspect.getsource(obj)
@@ -264,7 +274,7 @@ def fingerprint_parts(spec) -> dict[str, str]:
                     -1
                 ].startswith("_"):
                     continue  # private mutable global = runtime memo
-                parts[f"const {name}"] = repr(obj)
+                parts[f"const {name}"] = repr(_repo_relative(obj))
     return parts
 
 
