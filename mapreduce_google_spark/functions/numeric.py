@@ -16,7 +16,7 @@ DuckDB oracle. The fix (FIXTURES.md §5) is to accumulate EXACTLY:
 Every revenue/spend/average in the registry uses these helpers, and each
 query's DuckDB oracle mirrors the same casts, so both engines round the
 SAME exact value. ``scale.py`` pioneered the recipe (t32/t40/t41/t43
-green in CORRECTNESS_r01); this module makes it uniform.
+driver-green in round 1); this module makes it uniform.
 
 Measured cost of exactness (sf0.1, local[32], r5): a 600k-row decimal
 group-sum runs ~3.5× a ``sum(long)``/``sum(double)`` of the same data

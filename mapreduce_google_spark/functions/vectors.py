@@ -56,10 +56,10 @@ def cosine_similarity_checked(
     non-degenerate path.
 
     A NEW function rather than a guard inside :func:`cosine_similarity`
-    itself: the unchecked expression sits in six pinned oracle-bearing
-    closures (t24/t122/t145/t151/t158/t165) whose NaN-free behavior on
-    real corpora is already certified — widening those closures would
-    spend driver re-prove slots on a guard their inputs can never trip.
+    itself: the unchecked expression sits in six oracle-bearing
+    builders (t24/t122/t145/t151/t158/t165) whose NaN-free behavior on
+    real corpora is already certified, and whose inputs can never trip
+    the guard.
     """
     denom = l2_norm(a) * l2_norm(b)
     return F.when(

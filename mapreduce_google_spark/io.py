@@ -280,7 +280,7 @@ def write_parquet_bloom(
     arrival order has every row group spanning ~the full key range, so
     a point lookup scans everything. The bloom filter answers
     "definitely not in this row group" probabilistically regardless of
-    layout. Measured (tools/bloom_probe.py, BENCH_bloom_probe.json,
+    layout. Measured (bloom probe,
     20M rows / 8 files): a MISS lookup's median saves ~12% wall and its
     MAX rep falls 2.1 s → 0.76 s (the tail is the full-decode case the
     bloom removes); in a fresh session with the page cache dropped the

@@ -276,7 +276,7 @@ def ensure_registered(spark) -> None:
     DATA_SOURCE_NOT_FOUND regardless of registration (reproduced
     minimally; this is Spark's session-threading contract, not a
     registration bug). Drive kvtext reads/writes from the thread that
-    owns the session — tools/registry_sweep.py inverted its
+    owns the session — the registry sweep tool inverted its
     watchdog for exactly this reason."""
     key = (spark.sparkContext.applicationId, spark._jsparkSession.hashCode())
     if key not in _REGISTERED:

@@ -209,7 +209,7 @@ def ngram_jaccard_pairs(
     is then computed over the CAPPED sets on both engine and oracle).
 
     ``use_shingle_store`` (r19, default ON — guide §2.3 narrower types
-    + §6 build-once substrate; BENCH_shingle_hashjoin_probe.json): the
+    + §6 build-once substrate; r19 shingle hash-join probe): the
     inverted index is served from the persisted
     :func:`shingle_store_table` — each doc's sorted distinct
     ``xxhash64`` shingle values plus ``set_size``, the SAME store the
@@ -531,7 +531,7 @@ def minhash_band_table_counted(
     max_df: int | None = None,
 ) -> str:
     """Band table WITH a precomputed ``bucket_n`` column — t22's DEFAULT
-    substrate since r17 (BENCH_t22_guard_probe.json: the previous
+    substrate since r17 (r17 t22 guard probe: the previous
     ``max_bucket`` guard re-AGGREGATED the full band table and
     broadcast-anti-joined it on EVERY query; a per-row group count
     baked in at build time turns the guard into a pushed filter —
@@ -641,8 +641,8 @@ def _signatures_from_hashes(sets: DataFrame, num_hashes: int = 32) -> DataFrame:
     so the sorted store array yields identical signatures — equality is
     pinned transitively by the from-bands == direct pair-set test).
     Kept as a parallel fold rather than a refactor of
-    ``minhash_signatures`` so the fingerprint-pinned in-session pipeline
-    (t120's closure) stays byte-identical."""
+    ``minhash_signatures`` so the in-session pipeline (t120) keeps its
+    plan unchanged."""
     xs = sets.where(F.size("xh") > 0).select(
         "doc_id",
         F.transform("xh", lambda h: F.pmod(h, F.lit(_PRIME31))).alias("xs"),
@@ -680,7 +680,7 @@ def minhash_lsh_pairs_from_bands(
       re-run read cheap parquet instead of recomputing hashes
       (``max_bucket`` therefore defaults ON here);
     * the bucket-size guard is a PUSHED FILTER, not a query-time pass
-      (r17, BENCH_t22_guard_probe.json): the default ``guard="counted"``
+      (r17 t22 guard probe): the default ``guard="counted"``
       reads :func:`minhash_band_table_counted`, whose build stamps each
       row with its (band, bucket) group size, so ``bucket_n <=
       max_bucket`` drops exactly the rows the old per-query
@@ -985,15 +985,15 @@ def simhash_near_dup_pairs(
     near-identical corpus slice, which exact dedup (T17) should have
     removed upstream. ``max_bucket=None`` keeps the exact pigeonhole
     recall guarantee (and the quadratic exposure). Trip profile on the
-    shipped corpora (r17 diagnosis, BENCH_simhash_guard_probe.json):
+    shipped corpora (r17 diagnosis, simhash guard probe):
     sf0.01 max bucket 128 (the default cap never fires — the brute-force
     oracle is untouched), sf0.1 max 1,338 (fires marginally), sf1 max
     13,380 (fires massively; 186 → 9.9 s). The banded set is cached
     because the guard profile and both self-join sides read it; the
     cache is deliberately left to executor LRU eviction in-session
     (the :func:`minhash_lsh_pairs` recipe) — loops over this builder
-    should ``spark.catalog.clearCache()`` between reps, as
-    ``tools/simhash_guard_shootout.py`` does."""
+    should ``spark.catalog.clearCache()`` between reps, as the
+    r17 simhash guard shootout did."""
     docs = load_table(spark, sf_dir, "documents")
     fp = _simhash_fp(docs, bits)
     width = bits // bands
@@ -1347,7 +1347,7 @@ def containment_pairs(
     ``use_shingle_store`` (r19, default ON): the inverted index is
     served from the persisted :func:`shingle_store_table` exactly as in
     :func:`ngram_jaccard_pairs` — see the collision-bound and
-    measurement notes there (BENCH_shingle_hashjoin_probe.json: −58%
+    measurement notes there (r19 shingle hash-join probe: −58%
     at sf0.1, −23% at sf1 for t134; the residual 250M-row pair shuffle
     at sf1 is the EXACT operator's irreducible Σdf² volume on the
     closed-vocabulary corpus — measured join_rows ≈ distinct pairs ≈
@@ -1405,7 +1405,7 @@ def cross_source_dup_matrix(
     tiny — so the only real cost is the pair computation itself.
     ``max_df`` passes through to that pair computation (r18, default
     None = unchanged behavior; the r19 default decision rides on
-    BENCH_banded_tail_r18.json).
+    the r18 banded-tail measurement).
     """
     docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(
@@ -1506,7 +1506,7 @@ def ensemble_dup_pairs(
     (r18, default None = unchanged behavior): the SimHash side carries
     its own bucket guard since the r18 flip, and the family contract
     wants the lexical side cappable the same way — the r19 default
-    decision rides on BENCH_banded_tail_r18.json.
+    decision rides on the r18 banded-tail measurement.
     """
     jacc = ngram_jaccard_pairs(spark, sf_dir, max_df=max_df)
     sim = simhash_near_dup_pairs(spark, sf_dir)
@@ -1571,7 +1571,7 @@ def edit_distance_pairs(
     parallel form takes ~1 min). Bytes-based coalescing is the wrong
     heuristic whenever downstream cost is CPU-per-row, not bytes; the
     explicit numbered repartition is exempt from AQE coalescing by
-    contract (BENCH_editdist_repartition_probe.json).
+    contract (r18 edit-distance repartition probe).
 
     Length pre-filter (r18, results-identical): ``lev(a, b) >=
     |len(a) − len(b)|``, so a pair whose length gap exceeds
@@ -1582,7 +1582,7 @@ def edit_distance_pairs(
     signature matches token distribution, not length, so
     excerpt/expansion pairs flood the verify stage with doomed DP
     work): 130 → 73 s at sf1, −36% at sf0.1, row-identical at every
-    tier (BENCH_editdist_lenfilter_probe.json). The pre-filter
+    tier (r18 edit-distance length-filter probe). The pre-filter
     threshold carries a +1e-6 relative margin so the 6-decimal
     rounding of ``edit_sim`` at the final filter cannot disagree with
     the exact-length predicate at the boundary (round(x, 6) >= th only
@@ -1601,7 +1601,7 @@ def edit_distance_pairs(
     before the division is therefore results-identical, by the same
     margin argument as the length pre-filter. Row-identical at every
     tier, −51% at sf0.1 (7.45 → 3.64 s), −72% at sf1 (77.4 → 21.5 s)
-    on top of the pre-filter (BENCH_editdist_banded_probe.json).
+    on top of the pre-filter (r18 banded-DP probe).
 
     Plan note: Catalyst orders the banded-DP conjunct AHEAD of the
     length conjunct in the join condition, so the explicit length

@@ -88,7 +88,7 @@ def session_window_stats(
     Engine-path shootout vs the native ``session_window`` form
     (:func:`session_window_stats_native`, hash-equal by test): a DEAD
     HEAT at both tiers — sf0.1: 0.821 s islands vs 0.786 s native;
-    sf1: 3.619 s vs 3.617 s (tools/impl_shootout.py medians). Both
+    sf1: 3.619 s vs 3.617 s (r14 implementation shootout medians). Both
     plans shuffle once on user_id and scale n·log n in the per-user
     sort, so this oracle-transparent form stays registered; the native
     twin (t155) remains the streaming-parity witness.
@@ -166,7 +166,7 @@ def session_window_stats_native(
 
     Benched against the gaps-and-islands form at sf0.1 and sf1:
     statistically indistinguishable (sf0.1: 0.786 s vs 0.821 s; sf1:
-    3.617 s vs 3.619 s — tools/impl_shootout.py medians), so the
+    3.617 s vs 3.619 s — r14 implementation shootout medians), so the
     oracle-transparent islands form stays registered as t16 and this
     path is the measured proof that Spark's native operator would cost
     the same.

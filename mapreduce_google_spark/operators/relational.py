@@ -156,8 +156,8 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str, k: int = 3) -> Dat
     the per-customer sort runs with NO exchange of orders. This is the
     ONLY path since r16: the r13 size dispatcher
     (``TOPK_WINDOW_STORE_MIN_ROWS``, raw scan below 500k orders) was
-    retired when the r15 re-measurement (tools/topk_window_shootout.py,
-    BENCH_topk_window_shootout.json) showed the raw scan's small-tier
+    retired when the r15 re-measurement (top-k window shootout)
+    showed the raw scan's small-tier
     edge was NOISE — sf0.1 medians 0.853 vs 0.928 with fully
     overlapping spreads — while at sf1 the store dominates 3.1×
     (1.06 s vs 3.33 s). Same verdict shape that retired t33's
@@ -198,8 +198,7 @@ def revenue_rollup(
     lineitem ⋈ orders line store already carries ``o_custkey`` on every
     line, so the per-order pre-agg AND the fact-fact join the previous
     default ran at query time are paid once per corpus version in the
-    store build instead. Measured (tools/rollup_expand_shootout.py,
-    BENCH_rollup_expand_shootout.json, equality-gated in-tool): medians
+    store build instead. Measured (r16 rollup shootout, equality-gated): medians
     0.875 vs 1.418 s at sf0.1 (−38%), 1.055 vs 3.032 s at sf1 (−65%),
     2.087 vs 7.636 s at the 30× replica (−73%) — spreads fully
     separated at every tier, and the win GROWS with scale because the
@@ -431,7 +430,7 @@ def asof_latest_order(
     :func:`asof_latest_order_stores`): both facts read from their
     :func:`io.bucketed_fact_table` copies, join co-partitioned with
     zero exchange, per-customer history collapsed to one sorted array.
-    The r14 shootout (tools/impl_shootout.py, medians of 5) measured it
+    The r14 implementation shootout (medians of 5) measured it
     fastest at EVERY scale — sf0.1: 1.11 s vs 1.32 s union-merge vs
     2.23 s cogroup; sf1: 2.12 s vs 8.62 s vs 5.45 s — which retired
     the r13 size dispatcher (``ASOF_UNION_MERGE_MAX_ROWS``): there is
@@ -603,7 +602,7 @@ def asof_latest_order_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory. Since r14 the bucketed-stores form
     (:func:`asof_latest_order_stores`) is t33's default — it beats this
     path at every measured scale (sf1: 2.12 s vs 5.45 s here vs 8.62 s
-    union-merge, tools/impl_shootout.py medians of 5) because it ships
+    union-merge, r14 implementation shootout medians of 5) because it ships
     zero fact exchange and no Python stage. This form remains the
     SKEW-TOLERANT alternative: ``merge_asof`` streams each bucket's
     rows, so a single customer with a pathological history costs one
@@ -698,7 +697,7 @@ def asof_latest_order_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch overhead — on TPC-H-shaped data (≈10 orders/customer) the
     array scan is trivially cheap and the plan's only exchange is the
     events-side NONE (both sides co-located). Measured
-    (tools/impl_shootout.py, medians of 5): sf0.1 — 1.11 s vs 1.32 s
+    (r14 implementation shootout, medians of 5): sf0.1 — 1.11 s vs 1.32 s
     union-merge / 2.23 s cogroup; sf1 — 2.12 s vs 8.62 s / 5.45 s, and
     the gap WIDENS with scale because this is the only form whose plan
     ships no fact exchange at all. A pathological customer with a
@@ -2344,7 +2343,7 @@ def discount_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     template (t142's Zipf fit, per group).
 
     Moment arithmetic (r19, results-identical — guide §2.3 narrower
-    types; BENCH_t180_intmoments_probe.json: −25% steady-state at both
+    types; r19 scaled-int moments probe: −25% steady-state at both
     tiers, equality-gated): the 2-decimal regressors are carried as
     SCALED LONGS (x·100, y·100) so the per-row multiply-adds are
     integer codegen instead of five JVM-Decimal chains, with ONE

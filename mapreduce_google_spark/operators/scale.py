@@ -321,8 +321,7 @@ def event_pairs_within_minute(
     added), so the fact side runs with ZERO exchange — the previous
     default shuffled BOTH self-join sides on (user, bucket) and doubled
     the probe side with a 2-bucket explode, costs that grow with the
-    corpus. Measured (tools/event_pairs_shootout.py,
-    BENCH_event_pairs_shootout.json, equality-gated in-tool): medians
+    corpus. Measured (r16 event-pairs shootout, equality-gated): medians
     0.334 vs 0.678 s at sf0.1 (−51%), 0.439 vs 1.722 s at sf1 (−75%),
     0.327 vs 3.915 s at the 30× replica (−92%) — t45 was the worst 30×
     scaler (6.39×) and the exchange-free form is essentially FLAT
@@ -896,7 +895,7 @@ def cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``approx_count_distinct`` per key, i.e. a full 1,639-long HLL++
     sketch buffer (``MS[0..1638]``) attached to EVERY distinct key
     through the first HashAggregate and Exchange
-    (plans/r19/t207_..._before.txt node (2): Results [1640]) — ~13 KB
+    (r19 physical plan, node (2): Results [1640]) — ~13 KB
     of aggregation state per distinct orderkey, ~200 GB of transient
     state at sf1's 15M keys, all spill/GC. Dedup FIRST instead:
     ``select(c).distinct()`` is a plain partial-aggregated group-by
@@ -905,7 +904,7 @@ def cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     count by definition while ``approx_count_distinct`` is bit-
     identical to the raw-multiset sketch (HLL register state is a max
     over per-value hashes — duplicate-idempotent). Measured
-    (BENCH_t207_dedup_first_probe.json, interleaved + equality-gated):
+    (r19 dedup-first probe, interleaved + equality-gated):
     11.5 → 1.7 s at sf0.1, 62.5 → 4.8 s at sf1 (−92%). The output
     carries no raw estimate, so it is plan-shape-independent: exact
     counts are hash-checked by the oracle and the bound flag is the
@@ -1993,8 +1992,8 @@ INDEX_COMPACT_SEGMENTS = 8
 #: above this many probe keys, point_lookup switches from isin()
 #: literals (one codegen branch per key) to a broadcast semi-join
 #: against a keys DataFrame — the batched-lookup path. Set from the
-#: measured crossover at the 10x corpus (tools/batched_lookup_bench.py
-#: --crossover, n=3 medians): isin wins up to ~500 keys (0.8–1.3s vs a
+#: measured crossover at the 10x corpus (batched-lookup crossover
+#: bench, n=3 medians): isin wins up to ~500 keys (0.8–1.3s vs a
 #: flat ~1.2–1.3s semi-join), then degrades linearly with expression
 #: size (1.7s @1k, 2.6s @2k) while the semi-join stays flat.
 POINT_LOOKUP_ISIN_MAX = 500
@@ -2653,7 +2652,7 @@ def indexed_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_point_index.py``).
 
     Demoted from the t237 default in r15 by measurement
-    (``BENCH_bloom_vs_index.json``): the bloom layout answers the same
+    (bloom vs index shootout): the bloom layout answers the same
     probes 3–4× faster at both measured tiers with ZERO secondary
     assets, while the index pays a multi-job probe (refresh check +
     posting scan + collect) per lookup. The index still earns its keep
@@ -2710,7 +2709,7 @@ def bloom_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-exclude via their split-block bloom filters.
 
     The registered default since r15, by measurement
-    (tools/bloom_vs_index_shootout.py, BENCH_bloom_vs_index.json): hits
+    (r15 bloom vs index shootout): hits
     0.16 s vs 0.70 s via the posting index and misses 0.14 s vs 0.42 s
     at both sf0.1 and the 10× replica — with ZERO secondary assets (no
     refresh protocol, no staleness contract, no probe-time index jobs;

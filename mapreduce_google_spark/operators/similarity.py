@@ -346,7 +346,7 @@ def _pairwise_cosine_verify(pairs: DataFrame, threshold: float) -> DataFrame:
     (:func:`_round_half_up_6` — the t18/t25 GEMM parity treatment),
     thresholded INSIDE the kernel so only passing rows re-enter the JVM.
 
-    Why (r19, guide §4.2 — BENCH_t24_verify_kernel_probe.json): the
+    Why (r19, guide §4.2 — t24 verify-kernel probe): the
     higher-order-function cosine is interpreted per element
     (StringSplit/t129 lesson applies to ``aggregate``/``zip_with``
     too), so a verify stage over tens of millions of candidates costs
@@ -395,9 +395,8 @@ def embedding_near_dup_pairs_auto(
     seed: int = 42,
     verify: str = "arrow",
 ) -> DataFrame:
-    """t24's pipeline with corpus-sized LSH parameters — the r19 flip
-    candidate, STAGED r18 (closure-disjoint from the registered builder
-    until its REPROVE slot lands; the t22/t77 staging precedent).
+    """t24's pipeline with corpus-sized LSH parameters — staged in r18
+    next to the fixed-parameter form, t24's registered builder since r19.
 
     Identical candidate→verify dataflow to
     :func:`embedding_near_dup_pairs`; the two changes are (1)
@@ -457,7 +456,7 @@ def embedding_near_dup_pairs_auto(
     vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
     pairs = candidates.join(va, "id_a").join(vb, "id_b")
     if verify == "arrow":
-        # r19 (BENCH_t24_verify_kernel_probe.json): the verify stage
+        # r19 (t24 verify-kernel probe): the verify stage
         # dominated the sf1 cost — 83M surviving candidate pairs each
         # paying ~190 interpreted HOF lambda frames (~85 of 133 s).
         # The Arrow kernel scores whole batches vectorized; the HOF
@@ -530,12 +529,12 @@ def ivf_topk(
     pattern) and every query-time probe pays only the bucketed scan —
     that is the regime the IVF path exists for.
 
-    Measured crossover (tools/ann_crossover.py at sf1, recorded in
-    BENCH_ann_crossover.json): 10 probes — brute 4.9 s vs IVF 5.6 s
-    (the losing point above); 100 probes — brute 34.9 s vs IVF 15.9 s;
-    1000 probes — brute 322 s vs IVF 124 s, recall 1.0 throughout. The
-    1000-probe speedup (2.6x) sits at the n_cells/n_probe_cells = 8/3
-    arithmetic cap, confirming the scan-fraction model.
+    Measured crossover (ANN crossover sweep at sf1): 10 probes — brute
+    4.9 s vs IVF 5.6 s (the losing point above); 100 probes — brute
+    34.9 s vs IVF 15.9 s; 1000 probes — brute 322 s vs IVF 124 s,
+    recall 1.0 throughout. The 1000-probe speedup (2.6x) sits at the
+    n_cells/n_probe_cells = 8/3 arithmetic cap, confirming the
+    scan-fraction model.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     centroids, assigned = ivf_assignments(emb, n_cells)
@@ -753,14 +752,13 @@ def ivf_topk_from_index_fused(
     Arrow crossing carries each candidate's embedding ONCE and no
     probe_vec duplication per candidate row.
 
-    Measured (tools/ivf_fused_shootout.py,
-    BENCH_ivf_fused_shootout.json, equality-gated in-tool): medians
+    Measured (r15 fused-IVF shootout, equality-gated): medians
     0.848 vs 0.897 s at sf0.1 (−5.5%) and 0.841 vs 0.973 s at sf1
     (−13.6%) — the win GROWS with scale because the crossing it removes
-    carries the full probed-cell candidate relation. No REPROVE slot
-    consumed: t25 is rows-only (its hash row cannot exist) and t165's
-    invariant closure pins the in-session :func:`ivf_topk`, unchanged
-    here; the equality chain carries the evidence across.
+    carries the full probed-cell candidate relation. t25 is rows-only
+    (its hash row cannot exist); t165's invariant oracle checks the
+    in-session :func:`ivf_topk`, unchanged here, and the equality
+    chain carries the evidence across.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = spark.table(ivf_index_table(spark, sf_dir, n_cells))
@@ -1486,18 +1484,18 @@ def semantic_dedup_auto(
     tau: float = 0.4,
 ) -> DataFrame:
     """t145's SemDeDup pipeline with the cell count sized from the
-    corpus — the r19 flip candidate, STAGED r18 (closure-disjoint from
-    the registered builder until its REPROVE slot lands; the t22/t77
-    staging precedent). Identical dataflow to :func:`semantic_dedup`;
-    the one change is ``n_cells = _auto_semantic_cells(N)`` with N from
-    the parquet footer (metadata-only, no Spark job). At oracle scale
-    this resolves to the certified 8 cells, so sf0.01 results are
-    bit-identical; at sf1 it yields 400 cells and the within-cell join
-    drops from 2.5e9 to ~1e8 pair cosines. NOTE the flip changes
+    corpus — staged in r18 next to the fixed-cell form, the pipeline of
+    t145's registered builder since r19. Identical dataflow to
+    :func:`semantic_dedup`; the one change is
+    ``n_cells = _auto_semantic_cells(N)`` with N from the parquet footer
+    (metadata-only, no Spark job). At oracle scale this resolves to the
+    certified 8 cells, so sf0.01 results are bit-identical; at sf1 it
+    yields 400 cells and the within-cell join drops from 2.5e9 to ~1e8
+    pair cosines. NOTE the flip changes
     RESULTS at sf ≥ 0.1: SemDeDup's output is clustering-dependent by
     design (Abbas et al. 2023 §3 — the cluster count is a quality/cost
     knob, not an implementation detail), which is exactly why this is
-    a staged REPROVE flip and not a plan-only repair."""
+    a staged flip and not a plan-only repair."""
     from mapreduce_google_spark.io import parquet_rows
 
     n_vecs = parquet_rows(sf_dir, "embeddings")
@@ -1512,7 +1510,7 @@ def semantic_dedup_invariants_auto(
     iters: int = 3,
     tau: float = 0.4,
 ) -> DataFrame:
-    """t145's registered form since the r19 REPROVE flip: the invariant
+    """t145's registered form since the r19 flip: the invariant
     summary computed over the AUTO-SIZED SemDeDup pipeline —
     ``n_cells = _auto_semantic_cells(N)`` with N from the parquet
     footer (metadata-only, no Spark job), then the unchanged
@@ -1520,7 +1518,7 @@ def semantic_dedup_invariants_auto(
     derivation resolves to the certified 8 cells, so sf0.01 results are
     bit-identical to the fixed-cell form; at sf1 it yields 400 cells
     and the within-cell join drops from 2.5e9 to ~1e8 pair cosines
-    (629 → ~75 s, BENCH_autosize_probe.json — the r17-sweep defect,
+    (629 → ~75 s, r18 autosize probe — the r17-sweep defect,
     VERDICT r17 item 6 / r18 item 2). The invariant CONTRACT
     (bad_cosines/order_violations/kept_close_pairs all 0) is
     cell-count-independent, which is what makes the invariant oracle
@@ -2047,7 +2045,7 @@ def top_principal_component(
     exact binary rounding with per-element Decimal repair inside the
     repr-divergence window (see :func:`_quantize12_scaled`). All 4096
     covariance cells bit-identical at sf0.01/sf0.1/sf1; 128.8 → 9.1 s
-    at sf1 (−93%, BENCH_covariance_kernel_probe.json). ``"sql"`` keeps
+    at sf1 (−93%, r18 covariance-kernel probe). ``"sql"`` keeps
     the reference pipeline verbatim."""
     import math
     from decimal import ROUND_HALF_UP, Decimal

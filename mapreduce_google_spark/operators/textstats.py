@@ -629,7 +629,7 @@ def bpe_pair_counts(
     ``chars[i+1]``), and inlining the unnamed ``split(lower(text),'')``
     there makes Catalyst re-evaluate the full split per element access:
     O(len²) per row, measured 11.7× at sf0.01 and 477 s at sf1 in the
-    r17 registry sweep (BENCH_bpe_split_probe.json — the named column
+    r17 registry sweep (split probe — the named column
     is evaluated once per row; CollapseProject does not re-inline a
     non-cheap expression referenced 3×).
     """

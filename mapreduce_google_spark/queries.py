@@ -39,16 +39,12 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
-    headline: bool = False  # included in bench.py
+    headline: bool = False  # included in perfbench ``query_mix``
     #: True → superseded by a sibling spec (named in ``doc``): still in
-    #: REGISTRY (so the full local pytest/oracle certification keeps
-    #: covering it) but EXCLUDED from the driver contract
-    #: (queries()/oracle_sql()) and from the rotation/staleness budget —
-    #: retiring a twin is how the registry frees driver-window headroom
-    #: once the oracle-bearing count nears the rotation capacity
-    #: (3 canaries + 47 slots x 5-round budget = 238). Policy: README
-    #: "Registry capacity"; headroom is asserted in
-    #: tests/test_registry_contract.py::test_rotation_headroom.
+    #: REGISTRY, so the local oracle certification keeps covering it
+    #: (a retired spec must keep its oracle — asserted in
+    #: tests/test_registry_contract.py::test_every_query_declares_semantics),
+    #: but EXCLUDED from the driver contract (queries()/oracle_sql()).
     retired: bool = False
 
 
@@ -608,7 +604,7 @@ register(
         # recomputing signatures per run, the bucket-size guard a pushed
         # bucket_n filter stamped at build time (r17 — the pre-r17
         # per-query guard agg + broadcast anti-join stays as the forced
-        # guard="agg_antijoin" reference; BENCH_t22_guard_probe.json),
+        # guard="agg_antijoin" reference; r17 t22 guard probe),
         # verify from the doc_id-bucketed shingle-HASH store (r14 — the
         # steady state never scans the raw corpus, plan-gated) —
         # result-identical to the in-session minhash_lsh_pairs (equality
@@ -708,7 +704,7 @@ register(
 register(
     QuerySpec(
         name="t24_embedding_near_dup",
-        # r19 REPROVE flip (staged r18, BENCH_autosize_probe.json;
+        # r19 flip (staged r18 by an autosize probe;
         # VERDICT r18 item 1): the auto form derives (n_bits, n_tables)
         # from the parquet-footer corpus size so the expected LSH bucket
         # stays ~64 vectors at every N — candidate volume linear in N —
@@ -738,7 +734,7 @@ register(
         # production form: assignment pass served from the materialized
         # cell-bucketed ivf_index_table (one pass per corpus version,
         # the band-table pattern), candidates scored AND folded in one
-        # fused Arrow kernel (r15, BENCH_ivf_fused_shootout.json: -5.5%
+        # fused Arrow kernel (r15 fused-IVF shootout: -5.5%
         # at sf0.1, -13.6% at sf1 vs the JVM-HOF + separate-fold form;
         # removes the extra crossing behind r14's one ABBA regression)
         # — result-identical to the in-session ivf_topk (equality
@@ -750,8 +746,7 @@ register(
         doc="IVF-bucketed approximate cosine top-k (scale path for T18)",
         tags=("llm", "similarity"),
         headline=True,  # benched NEXT TO the exact t18 so the "scale
-        # path" claim is a measured number (bench.py also reports its
-        # recall vs t18 outside the timed loop)
+        # path" claim is a measured number
     )
 )
 
@@ -1992,7 +1987,7 @@ register(
         # pinned in tests/test_approx_ops.py. ORACLE-BEARING TWIN:
         # t124_percentile_rank_invariants proves the GK guarantee
         # (rank error <= n/accuracy per segment) with a driver-checkable
-        # hash oracle — driver-green in CORRECTNESS_r04.
+        # hash oracle — driver-green since round 4.
         doc="GK-sketch percentiles (median, p90) per segment — bounded-memory scale path of exact T35, rank error <= 1/accuracy; invariant twin t124",
         tags=("relational", "sketch", "percentile"),
     )
@@ -4010,7 +4005,7 @@ register(
 register(
     QuerySpec(
         name="t145_semantic_dedup_invariants",
-        # r19 REPROVE flip (staged r18, BENCH_autosize_probe.json;
+        # r19 flip (staged r18 by an autosize probe;
         # VERDICT r18 item 2): auto-sized SemDeDup cells — the
         # invariant contract is cell-count-independent, and the
         # derivation resolves to the certified 8 cells at oracle scale
@@ -7000,7 +6995,7 @@ register(
             ORDER BY event_id
         """,
         doc="point lookup over the bloom-filtered lookup layout (default "
-        "since r15 by measurement, BENCH_bloom_vs_index.json: 3-4x the "
+        "since r15 by measurement, bloom vs index shootout: 3-4x the "
         "posting index at both tiers with zero secondary assets): 6 "
         "fixed event ids answered by one pushed IN predicate over a "
         "16-file hash-scattered copy whose row groups self-exclude via "
@@ -7132,13 +7127,9 @@ register(
 
 # --------------------------------------------------------------------------
 # Registry ordering — the external correctness harness checks the FIRST 50
-# entries of queries() (round-1 evidence: CORRECTNESS_r01.json ends at the
-# 50th registration). Order therefore IS part of the contract: every
-# oracle-bearing query that still needs driver-side evidence must sit in
-# the window. The tail holds (a) rows-only specs (no SQL-portable oracle —
-# a window slot buys them nothing beyond a row count) and (b) trivial
-# variants already proven green in CORRECTNESS_r01 whose semantics this
-# round does not touch (identity/distinct/top-k text paths etc.).
+# entries of queries(), so order is part of the contract: DRIVER_WINDOW
+# (below) is moved to the front of REGISTRY at import, and every other
+# spec follows in registration order.
 # tests/test_registry_contract.py pins this ordering invariant.
 # --------------------------------------------------------------------------
 
@@ -7225,264 +7216,63 @@ EAGER_BUILD: frozenset[str] = frozenset(
     }
 )
 
-#: the three fixed canaries — trip-wires for systemic breakage, checked
-#: in every round's window regardless of staleness.
-WINDOW_CANARIES: tuple[str, ...] = (
+#: The first 50 ``queries()`` keys, frozen in the order the external
+#: driver checks them: three canaries (t01, t09, t17), then the last
+#: window the round-era rotation composed. Every slot is an active,
+#: oracle-bearing spec (tests/test_registry_contract.py::
+#: test_driver_window_ordering).
+DRIVER_WINDOW: tuple[str, ...] = (
     "t01_word_count",
     "t09_revenue_per_region",
     "t17_exact_dedup",
+    "t20_pipe_word_count",
+    "t07_filter_agg_revenue",
+    "t08_pricing_summary",
+    "t15_tumbling_window",
+    "t15b_sliding_window",
+    "t154_hourly_anomalies",
+    "t156_image_resize_checksum",
+    "t157_stream_hourly_anomalies",
+    "t158_cluster_source_chi2",
+    "t159_contrastive_pairs",
+    "t160_shard_planner",
+    "t161_event_pagerank",
+    "t162_conversion_latency",
+    "t163_rare_token_docs",
+    "t164_approx_distinct_invariants",
+    "t165_ivf_topk_invariants",
+    "t166_curated_corpus",
+    "t167_weighted_median_price",
+    "t168_cep_pattern_counts",
+    "t169_stream_pricing_summary",
+    "t170_ensemble_dup_pairs",
+    "t171_referential_integrity_audit",
+    "t172_linear_attribution",
+    "t173_rolling_window_dedup",
+    "t174_props_struct_stats",
+    "t175_transition_matrix",
+    "t176_price_bins_equidepth",
+    "t177_largest_remainder_allocation",
+    "t178_weekday_revenue_profile",
+    "t180_discount_sensitivity",
+    "t181_char_entropy",
+    "t182_token_burstiness",
+    "t183_interarrival_percentiles",
+    "t184_recursive_hierarchy_rollup",
+    "t185_header_dims",
+    "t186_vocab_mass_cut",
+    "t187_winsorized_price_stats",
+    "t188_shared_dialect_stats",
+    "t190_principal_score_stats",
+    "t191_pareto_frontier",
+    "t192_dedup_keep_best",
+    "t193_lm_quality_calibration",
+    "t194_transition_dwell_times",
+    "t239_chain_maintained_daily_revenue",
+    "t04_md5_partition_histogram",
+    "t05_distinct_tokens",
+    "t06_top_k_tokens",
 )
-
-#: window size — the external harness checks the FIRST 50 queries() keys.
-WINDOW_SIZE: int = 50
-
-
-def _tracked_correctness_files(repo: str) -> list[str] | None:
-    """``git ls-files CORRECTNESS_r*.json`` relative to the repo root, or
-    None when git is unavailable / this is not a checkout (tarball
-    install) — callers then fall back to a plain glob. Restricting the
-    window derivation to TRACKED artifacts is what makes the derived
-    window identical between a working tree and a fresh clone of HEAD:
-    the driver deposits each round's CORRECTNESS file untracked before
-    the boundary commit exists, and that deposit must not rotate the
-    window out from under the judge's in-tree pytest run (VERDICT r10
-    item 1 — the only red test in r10 was exactly this skew)."""
-    import os as _os
-    import subprocess as _sp
-
-    try:
-        out = _sp.run(
-            ["git", "ls-files", "--", "CORRECTNESS_r*.json"],
-            cwd=repo,
-            capture_output=True,
-            text=True,
-            timeout=30,
-        )
-    except (OSError, _sp.TimeoutExpired):
-        return None
-    if out.returncode != 0:
-        return None
-    return [
-        _os.path.join(repo, line)
-        for line in out.stdout.split()
-        if line  # paths have no spaces by construction (CORRECTNESS_rNN.json)
-    ]
-
-
-def _is_green_row(row: object) -> bool:
-    """True iff a CORRECTNESS artifact row is a FULL pass — rows +
-    schema + hash all matched. Red/err rows must not count as evidence:
-    a failing operator whose name merely appears in an artifact would
-    otherwise leave the stalest-first rotation for up to 5 rounds at
-    the exact moment it most needs re-proving (VERDICT r11 item 2 —
-    t40 went red in r11 and a presence-based clock would have hidden
-    it until ~r16)."""
-    return (
-        isinstance(row, dict)
-        and row.get("rows_match") is True
-        and row.get("schema_match") is True
-        and row.get("hash_match") is True
-    )
-
-
-def _correctness_last_checked() -> dict[str, int]:
-    """Per-query last driver-GREEN round (see :func:`_is_green_row`),
-    unioned over the COMMITTED (git-tracked) ``CORRECTNESS_r*.json``
-    history at the repo root.
-    Untracked round-boundary deposits are deliberately excluded so the
-    derivation is a pure function of HEAD; outside a git checkout the
-    glob fallback keeps the package importable. Empty dict when no
-    history exists (fresh clone → everything is never-checked and the
-    window falls back to pure registration order)."""
-    import glob as _glob
-    import json as _json
-    import os as _os
-    import re as _re
-
-    repo = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    files = _tracked_correctness_files(repo)
-    if files is None:
-        files = _glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json"))
-    last: dict[str, int] = {}
-    for f in files:
-        rnd = int(_re.search(r"r(\d+)", _os.path.basename(f)).group(1))
-        try:
-            with open(f) as fh:
-                rows = _json.load(fh)
-        except (OSError, ValueError):
-            continue  # a torn/partial artifact must not break import
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if _is_green_row(row):
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-#: Queries whose DEFAULT builder implementation changed in the mapped
-#: round — the driver-evidence re-prove hook (VERDICT r13 missing #1).
-#: ``_compose_driver_window`` keys evidence debt on last-GREEN round
-#: alone, so a query whose implementation changed could otherwise coast
-#: on a green earned by the OLD code for up to the full staleness
-#: budget. An entry here is slotted into the window right after the
-#: never-checked tier until the committed history shows a green from a
-#: round >= the mapped round (the first driver run that exercised the
-#: new code); it then clears automatically. Discipline is enforced two
-#: ways in tests/test_registry_contract.py: ``test_reprove_clears``
-#: fails by name if an entry survives a full driver round unproven, and
-#: ``test_builder_fingerprints_pin_reprove`` fails if any registered
-#: builder's implementation fingerprint (tools/reprove.py) changed
-#: without a matching entry here. Rows-only specs (e.g. t25) are
-#: covered by their oracle-bearing invariant twins — the window cannot
-#: buy them a hash row, so listing them here would waste a slot.
-REPROVE: dict[str, int] = {
-    # ONE entry per query at its LATEST implementation-change round
-    # (VERDICT r16 wrong #2: duplicate keys in a dict literal are the
-    # exact pattern where a later edit adds an OLDER round below an
-    # existing key and silently loses the newer schedule — pyflakes
-    # F601-class). History lives in the comments, not in shadowed keys.
-    #
-    # r13 moved t16's default onto the adaptive session-window path;
-    # only the t09 canary banked an r13 driver green on the new code
-    # (VERDICT r13).
-    "t16_session_window": 13,
-    # r14 added per-batch partial top-k to the GEMM kernel and touched
-    # the as-of dispatcher's fallback contract.
-    "t18_cosine_topk": 14,
-    "t33_asof_latest_order": 14,
-    # r16 retired t11's size dispatcher (TOPK_WINDOW_STORE_MIN_ROWS +
-    # the raw branch deleted per BENCH_topk_window_shootout.json: sf0.1
-    # wash, sf1 store 3.1×) — the custkey-bucketed store is now the ONLY
-    # path, so the driver green must come from it (VERDICT r15 item 1).
-    # (Earlier change: r13 first moved t11 onto the store path.)
-    "t11_top_orders_per_customer": 16,
-    # r16 touched the shared lookup substrate both defaults read
-    # (_indexed_events_path cold build sizes ndv from source parquet
-    # footers instead of a src.count() job — VERDICT r15 wrong #2; and
-    # bloom_lookup short-circuits an empty probe set to a guaranteed
-    # scan elision — ADVICE r15).
-    "t237_indexed_point_lookup": 16,
-    "t240_batched_point_lookup": 16,
-    # r16 flipped t12's default onto the custkey-bucketed PRE-JOINED
-    # line store (BENCH_rollup_expand_shootout.json: −38%/−65%/−73% at
-    # sf0.1/sf1/sf3, spreads fully separated) and t45's onto the
-    # range-frame window form (BENCH_event_pairs_shootout.json:
-    # −51%/−75%/−92%, flat across 30×) — both VERDICT r15 items 3/5.
-    # (Earlier changes: r13 first moved both onto bucketed-store paths.)
-    "t12_revenue_rollup": 16,
-    "t45_event_pairs_within_minute": 16,
-    # r17 landed the staged t22 counted-guard flip: the LSH band table
-    # is built WITH a per-bucket ``bucket_n`` column so the max_bucket
-    # guard is a pushed build-time filter instead of a per-query
-    # full-band-table aggregation + broadcast anti-join
-    # (BENCH_t22_guard_probe.json: −27%/−12%/−23% at sf0.1/sf1/sf3,
-    # interleaved, equality-gated at caps 1000 AND 2). t22 itself is
-    # rows-only; its oracle-bearing invariant twin t120 certifies the
-    # shared pipeline, so the re-prove slot goes to the twin.
-    "t120_lsh_precision_invariants": 17,
-    # r18 landed the staged t77 simhash guard flip: the registered
-    # builder gained max_bucket=1000 (pruning oversized band buckets
-    # from the left self-join side) plus the repartition+cache plan
-    # repair (BENCH_simhash_guard_probe.json: nocap result-identical
-    # 186→33 s at sf1; cap → 9.9 s; the cap NEVER fires at sf0.01
-    # oracle scale, max bucket 128). t170_ensemble_dup_pairs and
-    # t179_edit_distance_pairs compose this pipeline and inherit the
-    # change transitively — per VERDICT r17 next-round item 1 the one
-    # free r18 slot goes to t77 itself; t170/t179 take their REPROVE
-    # slots in r19 (r14 cohort = 43 due → 4 free slots) alongside any
-    # staged flips of their own.
-    "t77_simhash_near_dup": 18,
-    # r19 window math (VERDICT r18 items 1-3): the r14 cohort is 43
-    # entries, all budget-due, so 3 canaries + 43 leave exactly FOUR
-    # free slots. They go to the two r19 flips plus the two riskiest
-    # r18 plan repairs; t145 is itself r14-cohort (its REPROVE entry
-    # moves it to the reprove tier without costing a slot).
-    #   * t24: r19 flip onto embedding_near_dup_pairs_auto (corpus-
-    #     sized LSH params; resolves to the certified (3, 64) at
-    #     oracle scale — BENCH_autosize_probe.json).
-    #   * t145: r19 flip onto auto-sized SemDeDup cells (resolves to
-    #     the certified 8 cells at oracle scale).
-    #   * t179: r18 repaired 3× (repartition, length pre-filter,
-    #     banded thresholded levenshtein) — the round's deepest
-    #     arithmetic-path rewrite chain.
-    #   * t189: r18 scaled-int64 Arrow covariance kernel — the round's
-    #     riskiest bit-exactness claim (r19 additionally adds the
-    #     domain quarantine, so the green must come from r19 code).
-    #   * t207: r18 EXPAND-removal rewrite + r19 dedup-first rewrite
-    #     of the per-column distinct aggregations.
-    # t170 and t190 are pure compositions of driver-confirmed parts
-    # (t170 = t21 ∩ t77, both green r18; t190 consumes t189's kernel)
-    # and could not fit — both are budget-forced into the r20 window
-    # (last green r15 → staleness 5 at r20 composition time).
-    "t179_edit_distance_pairs": 18,
-    "t189_top_principal_component": 19,
-    "t207_cardinality_sketch_audit": 19,
-    "t24_embedding_near_dup": 19,
-    "t145_semantic_dedup_invariants": 19,
-    # r20 moved t20's exec path off Python workers: both executables run
-    # through the JVM PipedRDD, md5 placement and the whole-line sort are
-    # Catalyst expressions.
-    "t20_pipe_word_count": 20,
-}
-
-
-def _compose_driver_window() -> tuple[str, ...]:
-    """Derive the round's first-50 driver window from the committed
-    correctness history — SELF-ROTATING, never hand-maintained (the r7/r8
-    rounds both went red at the round boundary because a hand-pasted
-    window was one rotation behind the freshly landed CORRECTNESS file;
-    deriving it at import makes that alarm structurally impossible).
-
-    Policy (unchanged from the r7/r8 hand rotation, now executable):
-      * 3 fixed canaries first (:data:`WINDOW_CANARIES`);
-      * never-driver-checked oracle-bearing entries next, registration
-        order (evidence debt beats staleness);
-      * then :data:`REPROVE` entries whose last green predates their
-        implementation change, registration order (a changed default
-        must never coast on a stale green — VERDICT r13);
-      * then the stalest oracle-bearing entries by union last-checked
-        round, ties broken by registration order, until the window holds
-        :data:`WINDOW_SIZE`;
-      * rows-only and retired specs excluded — a slot can never buy them
-        a hash row (invariant twins rotate on their own merits).
-
-    At this call site ``REGISTRY`` insertion order IS registration order
-    (``_apply_driver_window`` has not reordered it yet), so the tie-break
-    needs no source parsing. ``tools/window_planner.py`` remains the
-    debugging view (prints the composed window / verifies it)."""
-    last = _correctness_last_checked()
-    reg = list(REGISTRY)  # registration order — see docstring
-    order = {n: i for i, n in enumerate(reg)}
-    oracle_bearing = [
-        n
-        for n in reg
-        if REGISTRY[n].oracle is not None
-        and not REGISTRY[n].retired
-        and n not in WINDOW_CANARIES
-    ]
-    never = [n for n in oracle_bearing if n not in last]
-    reprove = [
-        n
-        for n in oracle_bearing
-        if n in last and last[n] < REPROVE.get(n, 0)
-    ]
-    stale = sorted(
-        (n for n in oracle_bearing if n in last and n not in set(reprove)),
-        key=lambda n: (last[n], order[n]),
-    )
-    return tuple(
-        (list(WINDOW_CANARIES) + never + reprove + stale)[:WINDOW_SIZE]
-    )
-
-
-#: first-50 window, in the order the driver will check them — computed at
-#: import from the committed CORRECTNESS history (see
-#: :func:`_compose_driver_window`). With 47 rotating slots over the
-#: oracle-bearing registry, every entry is re-provable within 5 rounds;
-#: tests/test_registry_contract.py asserts that budget against the
-#: recorded history (test_staleness_budget) and that this tuple is
-#: exactly the policy output (test_window_is_policy_output).
-DRIVER_WINDOW: tuple[str, ...] = _compose_driver_window()
 
 
 def _apply_driver_window() -> None:

@@ -27,8 +27,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _host_cpus() -> int:
     """CPUs this process may run on (``sched_getaffinity`` is Linux

@@ -630,7 +630,7 @@ def test_write_parquet_bloom_materializes_and_serves_lookups(spark, tmp_path):
     same rows, same encoding, only the filter differs), reads must be
     result-identical to the plain layout, and a guaranteed-miss point
     lookup must return empty without error. The wall-clock skip is
-    measured in tools/bloom_probe.py (BENCH_bloom_probe.json), not
+    measured by the bloom probe, not
     asserted here — timing bounds flake."""
     import glob
     import os

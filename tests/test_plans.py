@@ -148,7 +148,7 @@ def test_t33_stores_form_equal_and_coloc(spark, sf_dir):
 
 def test_t11_window_reads_bucketed_store(spark, sf_dir):
     """t11's ONLY path reads the custkey-bucketed orders store (the r13
-    size dispatcher was retired in r16 — BENCH_topk_window_shootout.json
+    size dispatcher was retired in r16 — the top-k window shootout
     measured the raw scan's small-tier edge as noise and the store 3.1×
     ahead at sf1): the bucketed scan must appear, the window must
     consume bucket co-location (fewer exchanges than the raw form), and
@@ -221,7 +221,7 @@ def test_t16_session_window_reads_bucketed_events(spark, sf_dir):
 def test_t45_rangeframe_default_equals_forced_forms(spark, sf_dir):
     """t45's r16 flip gate: the registered default (range-frame window
     over the user_id-bucketed store —
-    BENCH_event_pairs_shootout.json: −51% sf0.1, −75% sf1, −92% at 30×,
+    r16 event-pairs shootout: −51% sf0.1, −75% sf1, −92% at 30×,
     essentially flat across scale) must produce exactly the bucketed
     self-join's and the raw join's (type_a, type_b) counts — the frame
     bounds (1 µs, window] encode the same strictly-after /
@@ -444,7 +444,7 @@ def test_t12_preaggregates_below_join(spark, sf_dir):
 
 def test_t12_prejoined_default_equals_forced_forms(spark, sf_dir):
     """t12's r16 flip gate: the registered default (custkey-bucketed
-    PRE-JOINED line store — BENCH_rollup_expand_shootout.json: −38%
+    PRE-JOINED line store — r16 rollup shootout: −38%
     sf0.1, −65% sf1, −73% at 30×, spreads fully separated) must equal
     both forced reference forms — the store's build is the same
     lineitem ⋈ orders the old default ran at query time, and decimal
@@ -472,7 +472,7 @@ def test_t12_prejoined_default_equals_forced_forms(spark, sf_dir):
 
 def test_t22_counted_guard_equals_agg_antijoin(spark, sf_dir):
     """The r17 default for t22's guard stage
-    (BENCH_t22_guard_probe.json): the counted band table's pushed
+    (r17 t22 guard probe): the counted band table's pushed
     ``bucket_n <= max_bucket`` filter must produce exactly the pre-r17
     reference form's pairs — both at the default cap (the guard fires
     on nothing here) and at a tiny forced cap (max_bucket=2, where the
@@ -512,7 +512,7 @@ def test_t22_counted_guard_equals_agg_antijoin(spark, sf_dir):
 
 def test_t77_guard_semantics_and_plan(spark, sf_dir):
     """Post-flip pins for t77's r18 guard (landed from the r17 staging,
-    BENCH_simhash_guard_probe.json): (a) the default cap (1000) and the
+    simhash guard probe): (a) the default cap (1000) and the
     guard-off form (max_bucket=None) produce the IDENTICAL pair set at
     oracle scale — sf0.01's max band bucket is ~128, so the brute-force
     all-pairs oracle is untouched by the flip; (b) a cap that actively
@@ -1017,7 +1017,7 @@ def test_runtime_bloom_filter_join_injection_available(spark, sf_dir):
 
 
 def test_t207_distinct_aggs_carry_no_per_key_sketch(spark, sf_dir):
-    """t207's r19 repair (BENCH_t207_dedup_first_probe.json): dedup
+    """t207's r19 repair (dedup-first probe): dedup
     FIRST, then sketch+count over the set. The defective shape — one
     countDistinct mixed with approx_count_distinct in a single agg —
     plans a partial HLL++ sketch buffer (1,639 MS[...] longs) attached
@@ -1041,7 +1041,7 @@ def test_t207_distinct_aggs_carry_no_per_key_sketch(spark, sf_dir):
 
 
 def test_exact_jaccard_family_reads_shingle_store(spark, sf_dir):
-    """r19 (BENCH_shingle_hashjoin_probe.json): the registered t21/t134
+    """r19 (shingle hash-join probe): the registered t21/t134
     builders serve their inverted index from the persisted shingle-hash
     store — the plan must scan the store table and must NOT scan (or
     retokenize) the raw documents; the string-keyed legacy path stays

@@ -112,12 +112,12 @@ _BANDED_EXCEPTIONS = {
     "ngram_jaccard_pairs": (
         "max_df",
         "BY-DESIGN: t21 is the exact-Jaccard oracle anchor "
-        "(BENCH_registry_sweep_r17.json by_design) — at 100 TB it runs "
+        "(r17 registry sweep: by design) — at 100 TB it runs "
         "on samples; capping it would change what 'exact' means",
     ),
     "containment_pairs": (
         "max_df",
-        "MEASURED r18, default stays None (BENCH_banded_tail_r18.json): "
+        "MEASURED r18, default stays None (r18 banded-tail measurement): "
         "3-gram shingle document frequencies do not collapse like 8-bit "
         "band values — the 1000 cap never fires at sf1 (rows identical) "
         "and only adds the df-profile pass (~5-8%). The guard stays "
@@ -126,7 +126,7 @@ _BANDED_EXCEPTIONS = {
     "embedding_near_dup_pairs": (
         "n_bits",
         "SUPERSEDED r19: the t24 default flipped onto the guarded "
-        "embedding_near_dup_pairs_auto (REPROVE[t24]=19). This fixed-"
+        "embedding_near_dup_pairs_auto (flipped r19). This fixed-"
         "param form stays only as the certified-(3,64) reference the "
         "auto derivation resolves to at oracle scale — shootout and "
         "equality-test substrate, never a registered default again",
@@ -140,7 +140,7 @@ _BANDED_EXCEPTIONS = {
         "n_cells",
         "RESOLVED r19 at the registration layer: t145's registered "
         "builder is semantic_dedup_invariants_auto, which derives "
-        "n_cells from the corpus size (REPROVE[t145]=19) — the fixed "
+        "n_cells from the corpus size (flipped r19) — the fixed "
         "default here is the certified oracle-scale value the auto "
         "derivation clamps to, reached only through explicit callers "
         "(tests, shootouts, the auto wrapper itself)",

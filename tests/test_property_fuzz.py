@@ -562,7 +562,7 @@ def test_t16_native_equals_islands(spark, sf_dir):
     """The two t16 engine paths — gaps-and-islands (lag + running sum)
     and Spark's native session_window aggregation — must produce the
     identical per-user session stats (same output contract, benched
-    against each other in tools/impl_shootout.py)."""
+    against each other in the r14 implementation shootout)."""
     from mapreduce_google_spark.operators.events import (
         session_window_stats,
         session_window_stats_native,

@@ -116,7 +116,7 @@ def test_sf1_headline_scaling_curve(spark, tmp_path_factory):
     sf01_total = bench_sf1["sf01_reference_total"]
     sf01_queries = bench_sf1.get("sf01_reference_queries", {})
     headline = {n: s for n, s in sorted(REGISTRY.items()) if s.headline}
-    # warm once (codegen + caches), then time once — mirrors bench.py
+    # warm once (codegen + caches), then time once
     for spec in headline.values():
         spec.builder(spark, sf1_dir).count()
     total = 0.0

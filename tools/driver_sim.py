@@ -1,28 +1,27 @@
-"""Driver-contract simulation: what the verify harness does each round.
+"""Driver-contract simulation: what the external verify harness does.
 
 Fresh process → import __spark_entry__ → entry(spark) smoke → run
 queries()[name] at sf0.01 → run oracle_sql()[name] in DuckDB on the same
 parquet views → order-insensitive value-hash compare.
 
 Usage:
-    python tools/driver_sim.py [sf_dir] [--window] [--json OUT]
+    python tools/driver_sim.py [sf_dir] [--window] [--only NAMES] [--json OUT]
 
---window replays the EXACT driver gate: only the first 50 registry
-entries (DRIVER_WINDOW order) — run this before a round closes so
-window-composition mistakes (a vacuous slot, a mis-aliased column) are
-caught locally, not by the next verdict. Without it, every registered
-query runs (the full local certification sweep — len(REGISTRY)
-entries). --json writes the results in
-CORRECTNESS_rNN.json format for diffing against driver output.
+--window replays the EXACT driver gate: only the first 50 queries()
+entries (DRIVER_WINDOW order). Without it, every registered query runs
+(the full local certification sweep). --only NAME[,NAME...] runs the
+named queries. --json writes one record per query (rows/schema/hash
+match, row counts, error).
 """
 import datetime
 import hashlib
 import json
 import math
+import os
 import sys
 from decimal import Decimal
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as e
