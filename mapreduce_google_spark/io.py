@@ -148,12 +148,6 @@ def parquet_rows(sf_dir: str, *tables: str) -> int | None:
     return total
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
     """Register the tables as temp views so ``spark.sql`` can use them."""
     for name in names:

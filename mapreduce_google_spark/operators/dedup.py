@@ -20,7 +20,9 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from mapreduce_google_spark.functions.text import tokenize
@@ -308,23 +310,7 @@ def minhash_signatures(
     sets = (
         shingle_arrays if shingle_arrays is not None else _doc_shingle_arrays(docs, n)
     )
-    xs = sets.where(F.size("shingles") > 0).select(
-        "doc_id",
-        F.transform(
-            "shingles", lambda s: F.pmod(F.xxhash64(s), F.lit(_PRIME31))
-        ).alias("xs"),
-    )
-    def _perm(a: int, b: int):
-        # closure factory: transform() inspects the lambda's arity, so the
-        # constants must be captured, not passed as defaulted params
-        return lambda x: (x * a + b) % _PRIME31
-
-    mins = []
-    for i in range(num_hashes):
-        a = 2 * i + 1  # odd multipliers, deterministic
-        b = (0x9E3779B9 * (i + 1)) % _PRIME31
-        mins.append(F.array_min(F.transform("xs", _perm(a, b))))
-    return xs.select("doc_id", F.array(*mins).alias("signature"))
+    return _signatures_from_hashes(sets, num_hashes, "shingles", F.xxhash64)
 
 
 def _band_buckets(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
@@ -633,27 +619,39 @@ def shingle_store_table(
     )
 
 
-def _signatures_from_hashes(sets: DataFrame, num_hashes: int = 32) -> DataFrame:
-    """(doc_id, signature) from the shingle-hash store's ``xh`` column —
-    the SAME permutation family as :func:`minhash_signatures` applied to
-    already-computed ``xxhash64`` values (xs = xh mod p instead of
-    xs = xxhash64(shingle) mod p; min over a set is order-insensitive,
-    so the sorted store array yields identical signatures — equality is
-    pinned transitively by the from-bands == direct pair-set test).
-    Kept as a parallel fold rather than a refactor of
-    ``minhash_signatures`` so the in-session pipeline (t120) keeps its
-    plan unchanged."""
-    xs = sets.where(F.size("xh") > 0).select(
+def _signatures_from_hashes(
+    sets: DataFrame,
+    num_hashes: int = 32,
+    col: str = "xh",
+    hash_of: Callable[[Column], Column] = lambda h: h,
+) -> DataFrame:
+    """(doc_id, signature) — the MinHash permutation fold of
+    :func:`minhash_signatures` over each doc's 64-bit shingle hashes
+    ``hash_of(x)`` for x in ``col``: the shingle-hash store's ``xh``
+    as is, or ``xxhash64`` of the raw shingle strings. x is folded to 31
+    bits (xs = hash mod p); min over a set is order-insensitive, so the
+    sorted distinct store array yields the same signatures as the raw
+    shingle array.
+
+    The hash is applied inside the fold's one ``transform``, after the
+    empty-set filter on ``col``: a hashed column projected under that
+    filter would be evaluated twice, because the optimizer pushes the
+    filter below the projection and inlines the hash expression."""
+    xs = sets.where(F.size(col) > 0).select(
         "doc_id",
-        F.transform("xh", lambda h: F.pmod(h, F.lit(_PRIME31))).alias("xs"),
+        F.transform(col, lambda h: F.pmod(hash_of(h), F.lit(_PRIME31))).alias(
+            "xs"
+        ),
     )
 
     def _perm(a: int, b: int):
+        # closure factory: transform() inspects the lambda's arity, so the
+        # constants must be captured, not passed as defaulted params
         return lambda x: (x * a + b) % _PRIME31
 
     mins = []
     for i in range(num_hashes):
-        a = 2 * i + 1
+        a = 2 * i + 1  # odd multipliers, deterministic
         b = (0x9E3779B9 * (i + 1)) % _PRIME31
         mins.append(F.array_min(F.transform("xs", _perm(a, b))))
     return xs.select("doc_id", F.array(*mins).alias("signature"))

@@ -85,13 +85,14 @@ def session_window_stats(
     The streaming equivalent is ``F.session_window(ts, gap)``; this batch
     formulation is oracle-checkable SQL with identical semantics.
 
-    Engine-path shootout vs the native ``session_window`` form
-    (:func:`session_window_stats_native`, hash-equal by test): a DEAD
-    HEAT at both tiers — sf0.1: 0.821 s islands vs 0.786 s native;
-    sf1: 3.619 s vs 3.617 s (r14 implementation shootout medians). Both
-    plans shuffle once on user_id and scale n·log n in the per-user
-    sort, so this oracle-transparent form stays registered; the native
-    twin (t155) remains the streaming-parity witness.
+    Spark's native ``session_window`` aggregation produced the same
+    rows and measured a dead heat (sf0.1: 0.821 s islands vs 0.786 s
+    native; sf1: 3.619 s vs 3.617 s, r14 medians): both plans shuffle
+    once on user_id and scale n·log n in the per-user sort, so this
+    oracle-transparent form is the one kept. The native operator's
+    boundary semantics are pinned by
+    ``tests/test_property_fuzz.py::test_session_window_boundary_fuzz``
+    and the streaming session tests.
 
     ``use_bucketed_store`` (default on, r13): events come from the
     user_id-bucketed :func:`io.bucketed_fact_table` copy, so the
@@ -149,74 +150,6 @@ def session_window_stats(
             F.max("duration_us").cast("long").alias("max_session_us"),
         )
         .orderBy("user_id")
-    )
-
-
-def session_window_stats_native(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
-    """T16 via Spark's NATIVE ``session_window`` operator — identical
-    output contract to :func:`session_window_stats` (hash-equality
-    pinned in ``tests/test_property_fuzz.py``), different engine path: the
-    sessionization happens inside one session-window aggregation
-    (shuffle on user_id, bounded per-key state — the same operator
-    streaming uses) instead of a lag window + running sum + two
-    aggregations. ``w.end`` is ``last_ts + gap``, so the island
-    duration is ``end − gap − start``.
-
-    Benched against the gaps-and-islands form at sf0.1 and sf1:
-    statistically indistinguishable (sf0.1: 0.786 s vs 0.821 s; sf1:
-    3.617 s vs 3.619 s — r14 implementation shootout medians), so the
-    oracle-transparent islands form stays registered as t16 and this
-    path is the measured proof that Spark's native operator would cost
-    the same.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    gap_us = gap_minutes * 60 * 1_000_000
-    win = F.session_window(F.col("ts"), f"{gap_minutes} minutes")
-    per_session = ev.groupBy("user_id", win.alias("w")).agg(
-        F.count("*").cast("long").alias("n_events")
-    )
-    return (
-        per_session.select(
-            "user_id",
-            "n_events",
-            (
-                F.unix_micros(F.col("w.end")) - gap_us - F.unix_micros(F.col("w.start"))
-            ).alias("duration_us"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.count("*").cast("long").alias("n_sessions"),
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.max("duration_us").cast("long").alias("max_session_us"),
-        )
-        .orderBy("user_id")
-    )
-
-
-def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T37 — semi-structured extraction: pull ``$.k`` out of the JSON
-    ``props`` string, aggregate per event_type.
-
-    ``get_json_object`` evaluates JVM-side inside codegen (no Python).
-    For repeated multi-field extraction prefer ``from_json`` with an
-    explicit schema — one parse per row instead of one per field; at
-    100 TB parse cost dominates this operator, so the single-pass parse
-    and an explicit schema (no sampling-based inference) are the rule.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.round(F.avg("k"), 6).alias("avg_k"),
-            F.min("k").cast("long").alias("min_k"),
-            F.max("k").cast("long").alias("max_k"),
-            F.count("k").cast("long").alias("n_with_k"),
-        )
-        .orderBy("event_type")
     )
 
 
@@ -839,40 +772,6 @@ def hourly_anomalies(
     )
 
 
-def native_session_windows(
-    spark: SparkSession, sf_dir: str, gap_minutes: int = 30
-) -> DataFrame:
-    """T155 — Spark's NATIVE ``session_window`` aggregation (the operator
-    Structured Streaming uses for session state), batch mode: per
-    (user, session) event counts with the session's start and end.
-
-    Complements t16 (the gaps-and-islands formulation): here the engine
-    operator itself produces the windows and the SQL oracle re-derives
-    them from first principles — a session ends when no event follows
-    within the gap, the window end is last_event + gap, and an event
-    landing EXACTLY at the previous end EXTENDS the session (Spark's
-    end bound is inclusive — empirically pinned by the boundary fuzzer
-    in ``tests/test_property_fuzz.py``, which constructs events on a
-    grid that hits the gap exactly; the oracle's island rule is
-    therefore ``diff > gap``). One shuffle on user_id; session state is
-    bounded per key, which is what makes the same operator viable under
-    a streaming watermark.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    win = F.session_window(F.col("ts"), f"{gap_minutes} minutes")
-    return (
-        ev.groupBy("user_id", win.alias("w"))
-        .agg(F.count("*").cast("long").alias("n_events"))
-        .select(
-            "user_id",
-            F.date_format(F.col("w.start"), TS_FMT).alias("session_start"),
-            F.date_format(F.col("w.end"), TS_FMT).alias("session_end"),
-            "n_events",
-        )
-        .orderBy("user_id", "session_start")
-    )
-
-
 def event_type_pagerank(
     spark: SparkSession, sf_dir: str, iters: int = 20, damping: float = 0.85
 ) -> DataFrame:
@@ -1079,7 +978,7 @@ def linear_attribution(
 
 def props_struct_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T174 — schema-first JSON parsing: ``from_json`` with an EXPLICIT
-    schema (t37 used per-field ``get_json_object``) — one parse per row
+    schema (not per-field ``get_json_object``) — one parse per row
     regardless of field count, the rule at 100 TB where parse cost
     dominates semi-structured scans; malformed rows surface as NULL
     structs instead of poisoning the job.
@@ -1354,21 +1253,20 @@ def user_behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T235 — T37's semi-structured extraction through Spark 4's
-    VARIANT type: ``parse_json`` once into a binary variant column,
-    typed ``try_variant_get`` extraction, same per-event_type stats.
+    """T235 — semi-structured extraction: pull ``$.k`` out of the JSON
+    ``props`` string through Spark 4's VARIANT type — ``parse_json``
+    once into a binary variant column, typed ``try_variant_get``
+    extraction — and aggregate per event_type.
 
-    Why a second registration of the same semantics: at 100 TB the two
-    forms differ where it matters. ``get_json_object`` (t37) re-parses
-    the JSON TEXT on every query and every field; a variant column is
-    parsed ONCE at ingest into a binary encoding that parquet stores
-    natively (Spark 4 shreds it columnar), so each later query pays a
-    typed path lookup, not a parse — the difference between CPU-bound
-    and IO-bound scans on a props-heavy event table. The write side is
-    one ``parse_json`` in the ingest job; here both steps run inline so
-    the op stays self-contained and oracle-identical to t37
-    (``try_variant_get`` returns NULL on a missing path, matching
-    ``json_extract`` semantics).
+    Why VARIANT: at 100 TB ``get_json_object`` re-parses the JSON TEXT
+    on every query and every field; a variant column is parsed ONCE at
+    ingest into a binary encoding that parquet stores natively (Spark 4
+    shreds it columnar), so each later query pays a typed path lookup,
+    not a parse — the difference between CPU-bound and IO-bound scans
+    on a props-heavy event table. The write side is one ``parse_json``
+    in the ingest job; here both steps run inline so the op stays
+    self-contained and oracle-identical (``try_variant_get`` returns
+    NULL on a missing path, matching ``json_extract`` semantics).
     """
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", F.parse_json("props").alias("v")

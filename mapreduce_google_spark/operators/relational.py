@@ -208,16 +208,14 @@ def revenue_rollup(
     (the expand was never the dominant cost; the join chain was), so
     the retired ``revenue_rollup_twolevel`` candidate is gone.
 
-    ``form`` forces a reference path (equality pinned in
-    ``tests/test_plans.py``): ``"orderkey_stores"`` is the r13–r15
-    default — per-order pre-agg below the fact-fact join on
-    orderkey-bucketed stores, customer-grain partials exchanged;
-    ``"direct"`` is the storeless form (a corpus read with no store
-    budget). Shared tail for all three: broadcast
-    customer/nation/region joins, rollup Expand over the per-customer
-    relation (~|customers| rows — grouping-set expansion after
-    aggregation, no extra scan), exact decimal partials throughout
-    (associative, so regrouping across forms is value-identical).
+    ``form="direct"`` forces the storeless reference path (equality
+    pinned in ``tests/test_plans.py``): per-order pre-agg below the
+    fact-fact join over the raw scans, customer-grain partials
+    exchanged. Shared tail for both: broadcast customer/nation/region
+    joins, rollup Expand over the per-customer relation (~|customers|
+    rows — grouping-set expansion after aggregation, no extra scan),
+    exact decimal partials throughout (associative, so regrouping
+    across forms is value-identical).
     """
     form = form or "prejoined"
     customer = load_table(spark, sf_dir, "customer")
@@ -230,19 +228,9 @@ def revenue_rollup(
             F.sum(revenue).alias("rev_dec"),  # exact decimal partials
             F.count("*").alias("n_lines"),
         )
-    elif form in ("orderkey_stores", "direct"):
-        if form == "orderkey_stores":
-            from mapreduce_google_spark.io import bucketed_fact_table
-
-            li = spark.table(
-                bucketed_fact_table(spark, sf_dir, "lineitem", "l_orderkey")
-            )
-            orders = spark.table(
-                bucketed_fact_table(spark, sf_dir, "orders", "o_orderkey")
-            )
-        else:
-            li = load_table(spark, sf_dir, "lineitem")
-            orders = load_table(spark, sf_dir, "orders")
+    elif form == "direct":
+        li = load_table(spark, sf_dir, "lineitem")
+        orders = load_table(spark, sf_dir, "orders")
         li_per_order = li.groupBy("l_orderkey").agg(
             F.sum(revenue).alias("rev_dec"),  # exact decimal partial sum
             F.count("*").alias("n_lines"),
@@ -260,7 +248,7 @@ def revenue_rollup(
         )
     else:
         raise ValueError(
-            f"unknown form {form!r}; use prejoined|orderkey_stores|direct"
+            f"unknown form {form!r}; use prejoined|direct"
         )
     joined = (
         per_cust.join(customer, per_cust.o_custkey == customer.c_custkey)

@@ -327,28 +327,27 @@ def event_pairs_within_minute(
     scaler (6.39×) and the exchange-free form is essentially FLAT
     across 30× of data on 32 local cores.
 
-    ``form`` forces a reference path (equality pinned in
-    ``tests/test_plans.py``): ``"bucket_join"`` is the r13–r15 default
-    — time bucketed into ``window_s`` blocks, self-join on (user_id,
-    bucket) with the later side probing its own and the previous bucket
-    (any pair ≤ window_s apart lands in same/adjacent buckets), exact
-    timestamp refine — hash-equi-join + filter, never a cross product
-    (a naive interval self-join is BroadcastNestedLoop, undoable at
-    100 TB); ``"raw_join"`` is the same join over the raw scan (no
-    store budget). At 100 TB the window form's per-user frame buffer is
-    bounded by events-per-user-per-minute — per-key skew, not corpus
-    size — while the join forms' exchange grows with the corpus.
+    ``form="raw_join"`` forces the reference path (equality pinned in
+    ``tests/test_plans.py``) over the raw scan: time bucketed into
+    ``window_s`` blocks, self-join on (user_id, bucket) with the later
+    side probing its own and the previous bucket (any pair ≤ window_s
+    apart lands in same/adjacent buckets), exact timestamp refine —
+    hash-equi-join + filter, never a cross product (a naive interval
+    self-join is BroadcastNestedLoop, undoable at 100 TB). At 100 TB
+    the window form's per-user frame buffer is bounded by
+    events-per-user-per-minute — per-key skew, not corpus size — while
+    the join form's exchange grows with the corpus.
     """
     # ADVICE r16: window_s=0 fails differently per form (rangeframe
-    # builds an inverted rangeBetween(1, 0) frame; bucket_join divides
-    # by zero) — reject the degenerate window up front so every form
-    # fails identically and loudly.
+    # builds an inverted rangeBetween(1, 0) frame; raw_join divides by
+    # zero) — reject the degenerate window up front so every form fails
+    # identically and loudly.
     if window_s < 1:
         raise ValueError(f"window_s must be >= 1 second, got {window_s}")
     form = form or "rangeframe"
-    from mapreduce_google_spark.io import bucketed_fact_table
-
     if form == "rangeframe":
+        from mapreduce_google_spark.io import bucketed_fact_table
+
         ev = spark.table(
             bucketed_fact_table(spark, sf_dir, "events", "user_id")
         ).select("user_id", "ts", "event_type")
@@ -367,17 +366,11 @@ def event_pairs_within_minute(
             .agg(F.count("*").cast("long").alias("n_pairs"))
             .orderBy("type_a", "type_b")
         )
-    if form == "bucket_join":
-        ev_src = spark.table(
-            bucketed_fact_table(spark, sf_dir, "events", "user_id")
-        )
-    elif form == "raw_join":
-        ev_src = load_table(spark, sf_dir, "events")
-    else:
-        raise ValueError(
-            f"unknown form {form!r}; use rangeframe|bucket_join|raw_join"
-        )
-    ev = ev_src.select("event_id", "user_id", "ts", "event_type")
+    if form != "raw_join":
+        raise ValueError(f"unknown form {form!r}; use rangeframe|raw_join")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type"
+    )
     bucket = F.floor(F.unix_micros("ts") / F.lit(window_s * 1_000_000))
     earlier = ev.select(
         F.col("user_id").alias("u_a"),

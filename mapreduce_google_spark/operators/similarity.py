@@ -210,8 +210,9 @@ def embedding_near_dup_pairs_exact(
 
     Quadratic (BroadcastNestedLoopJoin on ``id_a < id_b``) — kept ONLY as
     the verification baseline for tests and as the semantic definition
-    the DuckDB oracle mirrors. The registered t24 operator is
-    :func:`embedding_near_dup_pairs` (LSH candidates → exact verify),
+    the DuckDB oracle mirrors; its HOF cosine is also the rounding
+    reference for the Arrow verify kernel. The registered t24 operator
+    is :func:`embedding_near_dup_pairs` (LSH candidates → exact verify),
     which produces the same rows without the quadratic join.
     """
     emb = load_table(spark, sf_dir, "embeddings")
@@ -229,72 +230,6 @@ def embedding_near_dup_pairs_exact(
     )
 
 
-def embedding_near_dup_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.4,
-    n_tables: int = 64,
-    n_bits: int = 3,
-    dim: int = 64,
-    seed: int = 42,
-) -> DataFrame:
-    """T24 — embedding near-dup pairs: hyperplane-LSH candidate buckets →
-    exact cosine verify. Same candidate-then-verify shape as
-    :func:`~mapreduce_google_spark.operators.dedup.minhash_lsh_pairs`.
-
-    Stage 1 (candidates): each vector gets ``n_tables`` bucket ids —
-    ``n_bits`` sign bits of dot products against fixed random hyperplanes
-    — computed as ONE Arrow-batched matrix multiply per partition
-    (``pandas_udf``: (batch × dim) @ (dim × tables·bits); a GEMM beats
-    per-element codegen for hundreds of planes). Candidates are pairs
-    sharing any (table, bucket) — an EQUI-join, so the plan is a hash
-    join on the bucket key, never a nested loop over all pairs.
-
-    Stage 2 (verify): exact JVM-side cosine on candidates only, then the
-    threshold — so precision is 1.0 by construction and any candidate
-    miss is the only error source.
-
-    Parameter choice: with bit-collision probability p = 1 − θ/π ≈ 0.63
-    at cosine 0.4, a qualifying pair misses ALL 64 3-bit tables with
-    probability (1 − p³)^64 ≈ 9e-9 — ~5e-6 expected missing pairs on the
-    oracle datasets (measured), so the result equals the all-pairs form
-    (``tests/test_approx_ops.py`` asserts exact equality; the driver
-    hash-checks it against the brute-force SQL oracle). At 100 TB you
-    raise ``n_bits`` with corpus size to keep buckets bounded and accept
-    the measured recall; the dataflow is unchanged.
-    """
-    lsh_buckets = _lsh_bucket_udf(dim, n_tables, n_bits, seed)
-    emb = load_table(spark, sf_dir, "embeddings")
-    banded = emb.select(
-        "vec_id",
-        F.posexplode(lsh_buckets("embedding")).alias("tbl", "bucket"),
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-        .distinct()
-    )
-    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"))
-    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
-    return (
-        candidates.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(cosine_similarity("vec_a", "vec_b"), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
-
-
 def _auto_lsh_near_dup_params(
     n_vecs: int,
     threshold: float,
@@ -302,11 +237,10 @@ def _auto_lsh_near_dup_params(
     max_tables: int = 256,
     delta: float = 1e-3,
 ) -> tuple[int, int]:
-    """Derive (n_bits, n_tables) for :func:`embedding_near_dup_pairs_auto`
-    from the corpus size — the tables/recall re-derivation VERDICT r17
-    item 4 asked for (the registered t24 fixes n_bits=3, whose 8
-    buckets/table over 200k vectors reconstruct ~1.6e11 candidates and
-    HANG at sf1).
+    """Derive (n_bits, n_tables) for :func:`embedding_near_dup_pairs`
+    from the corpus size. A fixed n_bits=3 gives 8 buckets per table,
+    which over 200k vectors reconstructs ~1.6e11 candidates (the job
+    hung at sf1).
 
     Math (Charikar 2002 sign-random-projection): a pair at cosine θ
     agrees on one sign bit w.p. p = 1 − arccos(θ)/π, on a b-bit bucket
@@ -315,12 +249,11 @@ def _auto_lsh_near_dup_params(
     * ``n_bits``: ceil(log2(N / target_bucket)) so the EXPECTED bucket
       holds ~target_bucket vectors regardless of N — candidate volume
       is then T·N·target_bucket/2 (linear in N), never quadratic.
-      Floored at 3 = the certified oracle-scale regime (N = 500 ≤
-      8·target_bucket keeps 3 bits, so sf0.01 results are bit-identical
-      to the registered builder).
+      Floored at 3 (N = 500 ≤ 8·target_bucket keeps 3 bits at oracle
+      scale).
     * ``n_tables``: ceil(ln(1/δ)/p^b) for per-pair miss rate δ at the
       THRESHOLD boundary (pairs further above θ recall strictly
-      better), floored at the certified 64 and capped at ``max_tables``
+      better), floored at 64 and capped at ``max_tables``
       — the cap is the honest LSH tradeoff: at θ = 0.4 (p = 0.631) and
       b = 12 the δ=1e-3 table count is ~1,740, so the capped detector's
       boundary recall degrades to 1−(1−p^b)^256 ≈ 0.64 while cos ≥ 0.7
@@ -352,11 +285,11 @@ def _pairwise_cosine_verify(pairs: DataFrame, threshold: float) -> DataFrame:
     too), so a verify stage over tens of millions of candidates costs
     ~190 interpreted lambda frames per pair; the kernel pays one Arrow
     transfer of exactly the four needed columns and scores the whole
-    batch at NumPy speed. Rounding parity with the HOF form carries the
-    same pinned contract as the t18/t25 kernels (equality on real
-    corpora; the pre-round last-ulp BLAS-vs-codegen difference is
-    absorbed by the 6-decimal round away from sub-ulp boundary
-    coincidences)."""
+    batch at NumPy speed. Rounding parity with the HOF cosine carries
+    the same pinned contract as the t18/t25 kernels: equality with the
+    HOF-rounded :func:`embedding_near_dup_pairs_exact` on real corpora
+    (the pre-round last-ulp BLAS-vs-codegen difference is absorbed by
+    the 6-decimal round away from sub-ulp boundary coincidences)."""
     import pandas as _pd
 
     def score(batches):
@@ -383,7 +316,7 @@ def _pairwise_cosine_verify(pairs: DataFrame, threshold: float) -> DataFrame:
     )
 
 
-def embedding_near_dup_pairs_auto(
+def embedding_near_dup_pairs(
     spark: SparkSession,
     sf_dir: str,
     threshold: float = 0.4,
@@ -393,23 +326,41 @@ def embedding_near_dup_pairs_auto(
     max_bucket: int | None = 10_000,
     dim: int = 64,
     seed: int = 42,
-    verify: str = "arrow",
 ) -> DataFrame:
-    """t24's pipeline with corpus-sized LSH parameters — staged in r18
-    next to the fixed-parameter form, t24's registered builder since r19.
+    """T24 — embedding near-dup pairs: hyperplane-LSH candidate buckets →
+    exact cosine verify. Same candidate-then-verify shape as
+    :func:`~mapreduce_google_spark.operators.dedup.minhash_lsh_pairs`.
 
-    Identical candidate→verify dataflow to
-    :func:`embedding_near_dup_pairs`; the two changes are (1)
-    ``(n_bits, n_tables)`` derived from the parquet-footer row count by
-    :func:`_auto_lsh_near_dup_params` (metadata-only — no Spark job;
-    N = 500 at oracle scale resolves to exactly the certified (3, 64),
-    so sf0.01 results are bit-identical), and (2) the family-contract
-    ``max_bucket`` guard: (tbl, bucket) groups larger than the cap are
-    pruned from the left self-join side (duplicate-heavy corpora
-    collapse LSH buckets exactly like simhash bands — exact dedup
-    should run upstream; the cap documents that contract). The default
-    cap is ~150× the target bucket size, so it fires only on true
-    collapse, never on Poisson skew.
+    Stage 1 (candidates): each vector gets ``n_tables`` bucket ids —
+    ``n_bits`` sign bits of dot products against fixed random hyperplanes
+    — computed as ONE Arrow-batched matrix multiply per partition
+    (``pandas_udf``: (batch × dim) @ (dim × tables·bits); a GEMM beats
+    per-element codegen for hundreds of planes). Candidates are pairs
+    sharing any (table, bucket) — an EQUI-join, so the plan is a hash
+    join on the bucket key, never a nested loop over all pairs.
+    ``(n_bits, n_tables)`` come from the parquet-footer row count
+    (:func:`_auto_lsh_near_dup_params`, metadata-only — no Spark job),
+    so the expected bucket holds ~``target_bucket`` vectors at every N
+    and candidate volume grows linearly with the corpus. At oracle
+    scale (N = 500) they resolve to (3, 64): a pair at cosine 0.4 then
+    misses all tables with probability (1 − p³)^64 ≈ 9e-9, so the result
+    equals the all-pairs form (``tests/test_approx_ops.py`` asserts
+    exact equality with :func:`embedding_near_dup_pairs_exact`; the
+    driver hash-checks it against the brute-force SQL oracle).
+
+    ``max_bucket`` is the banded-family guard: (tbl, bucket) groups
+    larger than the cap are pruned from the left self-join side
+    (duplicate-heavy corpora collapse LSH buckets exactly like simhash
+    bands — exact dedup should run upstream; the cap documents that
+    contract). The default is ~150× the target bucket size, so it fires
+    only on true collapse, never on Poisson skew.
+
+    Stage 2 (verify): exact cosine on candidates only
+    (:func:`_pairwise_cosine_verify`, one Arrow ``einsum`` per batch),
+    then the threshold — so precision is 1.0 by construction and any
+    candidate miss is the only error source. At sf1 the verify stage
+    scores ~83M candidate pairs; the per-element HOF cosine spent ~85 of
+    133 s there.
     """
     from mapreduce_google_spark.io import parquet_rows
 
@@ -455,24 +406,7 @@ def embedding_near_dup_pairs_auto(
     va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"))
     vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
     pairs = candidates.join(va, "id_a").join(vb, "id_b")
-    if verify == "arrow":
-        # r19 (t24 verify-kernel probe): the verify stage
-        # dominated the sf1 cost — 83M surviving candidate pairs each
-        # paying ~190 interpreted HOF lambda frames (~85 of 133 s).
-        # The Arrow kernel scores whole batches vectorized; the HOF
-        # form stays reachable below (shootout/equality substrate).
-        return _pairwise_cosine_verify(pairs, threshold).orderBy(
-            "id_a", "id_b"
-        )
-    return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            F.round(cosine_similarity("vec_a", "vec_b"), 6).alias("cosine"),
-        )
-        .where(F.col("cosine") >= threshold)
-        .orderBy("id_a", "id_b")
-    )
+    return _pairwise_cosine_verify(pairs, threshold).orderBy("id_a", "id_b")
 
 
 def ivf_assignments(
@@ -1053,34 +987,6 @@ def embedding_quantization_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cell_scores(centroids: list[list[float]]) -> tuple["F.Column", "F.Column"]:
-    """(best_cos, best_cell) of the max-cosine centroid for the
-    ``embedding`` column — a PURE PROJECTION: the centroid state is
-    inlined as literals, so assignment needs no join and no shuffle.
-    Ties take the lowest cell index (``array_position`` returns the
-    FIRST exact match of the max).
-    """
-    import math
-
-    cos_exprs = []
-    emb_norm = F.sqrt(
-        F.aggregate(F.col("embedding"), F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-    for c in centroids:
-        lit = F.array(*[F.lit(float(v)) for v in c])
-        num = F.aggregate(
-            F.zip_with(F.col("embedding"), lit, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        c_norm = math.sqrt(sum(v * v for v in c)) or 1.0
-        cos_exprs.append(num / (emb_norm * F.lit(c_norm)))
-    arr = F.array(*cos_exprs)
-    best_cos = F.array_max(arr)
-    best_cell = (F.array_position(arr, best_cos) - 1).cast("int")
-    return best_cos, best_cell
-
-
 def kmeans_fit(
     emb: DataFrame, n_cells: int = 8, iters: int = 5
 ) -> list[list[float]]:
@@ -1090,12 +996,13 @@ def kmeans_fit(
 
     The MLlib recipe, restated in DataFrame ops: cluster state is k×dim
     floats (tiny), so each iteration collects it to the driver and
-    inlines it as literals — assignment is then a narrow projection
-    (zero shuffle, no join), and the update is ONE map-side-combined
-    aggregation of (cell, dim) partial sums. Per-iteration cluster sums
-    accumulate in decimal(20,12) (order-independent), so the fit — and
-    every downstream assignment — is bit-deterministic regardless of
-    partitioning; empty cells keep their previous centroid.
+    hands it to the GEMM kernel (:func:`_assign_cells`) — assignment
+    is then a narrow projection (zero shuffle, no join), and the update
+    is ONE map-side-combined aggregation of (cell, dim) partial sums.
+    Per-iteration cluster sums accumulate in decimal(20,12)
+    (order-independent), so the fit — and every downstream assignment —
+    is bit-deterministic regardless of partitioning; empty cells keep
+    their previous centroid.
 
     Driver traffic per iteration: k·dim·partitions partial rows in, one
     k·dim state out. At 100 TB that is still KBs — the data never moves.
@@ -1106,7 +1013,7 @@ def kmeans_fit(
     for _ in range(iters):
         # GEMM assignment: constant plan shape across iterations (no
         # per-round codegen recompile of a k·dim-literal tree)
-        assign = _cell_scores_gemm(centroids)
+        assign = _assign_cells(centroids)
         stats = (
             emb.select(
                 assign("embedding").getField("cell").alias("cell"),
@@ -1140,7 +1047,7 @@ def kmeans_cluster_stats(
     """
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = kmeans_fit(emb, n_cells, iters)
-    assign = _cell_scores_gemm(centroids)
+    assign = _assign_cells(centroids)
     assigned = emb.select("vec_id", assign("embedding").alias("a")).select(
         "vec_id",
         F.col("a.cell").alias("cell_id"),
@@ -1179,7 +1086,7 @@ def kmeans_invariants(
     """
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = kmeans_fit(emb, n_cells, iters)
-    assign = _cell_scores_gemm(centroids)
+    assign = _assign_cells(centroids)
     assigned = emb.select("vec_id", assign("embedding").alias("a")).select(
         "vec_id",
         F.col("a.cell").alias("cell_id"),
@@ -1201,22 +1108,19 @@ def kmeans_invariants(
     )
 
 
-def _cell_scores_gemm(centroids: list[list[float]]):
-    """GEMM form of :func:`_cell_scores`: one Arrow-batched
-    ``pandas_udf`` computing ``struct(cos, cell)`` of the max-cosine
-    centroid via ``(batch × dim) @ (dim × k)``.
+def _assign_cells(centroids: list[list[float]]):
+    """Max-cosine centroid assignment: one Arrow-batched ``pandas_udf``
+    computing ``struct(cos, cell)`` via ``(batch × dim) @ (dim × k)``.
+    Ties take the lowest cell index (``argmax`` returns the first max).
 
-    Why it exists: the literal-expression form re-materializes k·dim
-    literals into the plan — fine for ONE assignment pass (t25 IVF), but
-    Lloyd's loop rebuilds it EVERY iteration, paying a fresh
-    whole-stage-codegen compile of a 512-literal tree per round (the
-    dominant cost of t82 at small data: ~39 s for 5 rounds at sf0.1).
-    Here the centroid state is a broadcast numpy constant — the plan
-    shape (and its compiled code) is identical every iteration, and the
-    kernel is one BLAS call per batch. Same argmax/lowest-index
-    tie-break; numpy float64 vs expression-fold sums may differ in the
-    last ulp, which only matters for exact-tie pathologies absent from
-    real embeddings.
+    Why a kernel and not a projection with the centroids inlined as
+    k·dim literals: Lloyd's loop rebuilds the assignment EVERY
+    iteration, and a literal tree pays a fresh whole-stage-codegen
+    compile of 512 literals per round (the dominant cost of t82 at
+    small data: ~39 s for 5 rounds at sf0.1). Here the centroid state
+    is a broadcast numpy constant — the plan shape (and its compiled
+    code) is identical every iteration, and the kernel is one BLAS call
+    per batch.
     """
     from pyspark.sql.functions import pandas_udf
 
@@ -1399,7 +1303,7 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def semantic_dedup(
     spark: SparkSession,
     sf_dir: str,
-    n_cells: int = 8,
+    n_cells: int,
     iters: int = 3,
     tau: float = 0.4,
 ) -> DataFrame:
@@ -1415,11 +1319,13 @@ def semantic_dedup(
     the quadratic stage to within-cell self-joins (cost Σ|cell|² ≪ N²,
     and cells are capped in practice); assignment is the shared GEMM
     kernel, the self-join is an equi-join on cell_id, and the per-pair
-    cosine is the JVM HOF kernel t24 uses. No global quadratic anywhere.
+    cosine is the JVM HOF ``cosine_similarity``. No global quadratic
+    anywhere. ``n_cells`` is sized from the corpus by the caller
+    (:func:`_auto_semantic_cells`), which keeps |cell| bounded.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = kmeans_fit(emb, n_cells, iters)
-    assign = _cell_scores_gemm(centroids)
+    assign = _assign_cells(centroids)
     assigned = emb.select(
         "vec_id",
         "embedding",
@@ -1461,87 +1367,32 @@ def semantic_dedup(
 
 
 def _auto_semantic_cells(n_vecs: int, target_cell: int = 500) -> int:
-    """Cell count for :func:`semantic_dedup_auto`: N/target_cell clamped
-    to [8, 4096]. The within-cell self-join costs Σ|cell|² ≈ N·|cell|,
-    so a FIXED cell count makes |cell| (and the join) grow linearly
-    with the corpus — the r17-sweep defect that put t145 at 629 s at
-    sf1 (8 cells over 200k vectors = 25k-vector cells = 2.5e9 pair
-    cosines). Holding |cell| ≈ target_cell instead makes the join
-    linear in N; the k-means assignment GEMM (N × cells) grows, but at
-    N/target_cell cells it is N²/500 multiply-adds × dim — still dwarfed
-    by the join it saves. Floor 8 = the certified oracle-scale regime
-    (N = 500 → max(1, …) → clamp to 8: sf0.01 results bit-identical to
-    the registered builder); cap 4096 bounds the broadcast centroid
-    table (4096 × 64 doubles ≈ 2 MB)."""
+    """Cell count for :func:`semantic_dedup`: N/target_cell clamped to
+    [8, 4096]. The within-cell self-join costs Σ|cell|² ≈ N·|cell|, so
+    a FIXED cell count makes |cell| (and the join) grow linearly with
+    the corpus — 8 cells over 200k vectors at sf1 are 25k-vector cells
+    and 2.5e9 pair cosines (629 s). Holding |cell| ≈ target_cell
+    instead makes the join linear in N (400 cells and ~1e8 pair cosines
+    at sf1, ~75 s); the k-means assignment GEMM (N × cells) grows, but
+    at N/target_cell cells it is N²/500 multiply-adds × dim — still
+    dwarfed by the join it saves. Floor 8 (N = 500 at oracle scale
+    clamps to 8); cap 4096 bounds the broadcast centroid table
+    (4096 × 64 doubles ≈ 2 MB). SemDeDup's dropped set depends on the
+    clustering by design (Abbas et al. 2023 §3 — the cluster count is a
+    quality/cost knob), so the cell count is part of the result."""
     return max(8, min(4096, n_vecs // target_cell if target_cell else 8))
-
-
-def semantic_dedup_auto(
-    spark: SparkSession,
-    sf_dir: str,
-    target_cell: int = 500,
-    iters: int = 3,
-    tau: float = 0.4,
-) -> DataFrame:
-    """t145's SemDeDup pipeline with the cell count sized from the
-    corpus — staged in r18 next to the fixed-cell form, the pipeline of
-    t145's registered builder since r19. Identical dataflow to
-    :func:`semantic_dedup`; the one change is
-    ``n_cells = _auto_semantic_cells(N)`` with N from the parquet footer
-    (metadata-only, no Spark job). At oracle scale this resolves to the
-    certified 8 cells, so sf0.01 results are bit-identical; at sf1 it
-    yields 400 cells and the within-cell join drops from 2.5e9 to ~1e8
-    pair cosines. NOTE the flip changes
-    RESULTS at sf ≥ 0.1: SemDeDup's output is clustering-dependent by
-    design (Abbas et al. 2023 §3 — the cluster count is a quality/cost
-    knob, not an implementation detail), which is exactly why this is
-    a staged flip and not a plan-only repair."""
-    from mapreduce_google_spark.io import parquet_rows
-
-    n_vecs = parquet_rows(sf_dir, "embeddings")
-    n_cells = _auto_semantic_cells(n_vecs if n_vecs is not None else 0)
-    return semantic_dedup(spark, sf_dir, n_cells=n_cells, iters=iters, tau=tau)
-
-
-def semantic_dedup_invariants_auto(
-    spark: SparkSession,
-    sf_dir: str,
-    target_cell: int = 500,
-    iters: int = 3,
-    tau: float = 0.4,
-) -> DataFrame:
-    """t145's registered form since the r19 flip: the invariant
-    summary computed over the AUTO-SIZED SemDeDup pipeline —
-    ``n_cells = _auto_semantic_cells(N)`` with N from the parquet
-    footer (metadata-only, no Spark job), then the unchanged
-    :func:`semantic_dedup_invariants` body. At oracle scale the
-    derivation resolves to the certified 8 cells, so sf0.01 results are
-    bit-identical to the fixed-cell form; at sf1 it yields 400 cells
-    and the within-cell join drops from 2.5e9 to ~1e8 pair cosines
-    (629 → ~75 s, r18 autosize probe — the r17-sweep defect,
-    VERDICT r17 item 6 / r18 item 2). The invariant CONTRACT
-    (bad_cosines/order_violations/kept_close_pairs all 0) is
-    cell-count-independent, which is what makes the invariant oracle
-    valid at every scale even though the dropped-pair SET is
-    clustering-dependent by design (Abbas et al. 2023 §3)."""
-    from mapreduce_google_spark.io import parquet_rows
-
-    n_vecs = parquet_rows(sf_dir, "embeddings")
-    n_cells = _auto_semantic_cells(n_vecs if n_vecs is not None else 0)
-    return semantic_dedup_invariants(
-        spark, sf_dir, n_cells=n_cells, iters=iters, tau=tau
-    )
 
 
 def semantic_dedup_invariants(
     spark: SparkSession,
     sf_dir: str,
-    n_cells: int = 8,
     iters: int = 3,
     tau: float = 0.4,
 ) -> DataFrame:
     """T145 — SQL-checkable invariant summary of :func:`semantic_dedup`
-    (the k-means fit isn't SQL-portable — t83/t84 recipe):
+    (the k-means fit isn't SQL-portable — t83/t84 recipe), with the cell
+    count derived from the parquet-footer row count
+    (:func:`_auto_semantic_cells`; metadata-only, no Spark job):
 
     - ``bad_cosines = 0`` — every reported cosine re-verified by an
       independent numpy float64 kernel to 6 decimals, and ≥ tau;
@@ -1553,13 +1404,20 @@ def semantic_dedup_invariants(
       the drop rule — re-derived here by an independent self-join over
       the survivor set);
     - ``found_nonempty = 1`` — deterministic non-vacuity anchor.
+
+    The contract is cell-count-independent, which keeps the invariant
+    oracle valid at every scale although the dropped set is not.
     """
     from pyspark.sql.functions import pandas_udf
 
+    from mapreduce_google_spark.io import parquet_rows
+
+    n_vecs = parquet_rows(sf_dir, "embeddings")
+    n_cells = _auto_semantic_cells(n_vecs if n_vecs is not None else 0)
     dropped = semantic_dedup(spark, sf_dir, n_cells, iters, tau).localCheckpoint()
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = kmeans_fit(emb, n_cells, iters)
-    assign = _cell_scores_gemm(centroids)
+    assign = _assign_cells(centroids)
     assigned = emb.select(
         "vec_id",
         "embedding",

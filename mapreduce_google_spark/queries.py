@@ -40,9 +40,11 @@ class QuerySpec:
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
     headline: bool = False  # included in perfbench ``query_mix``
-    #: True → superseded by a sibling spec (named in ``doc``): still in
-    #: REGISTRY, so the local oracle certification keeps covering it
-    #: (a retired spec must keep its oracle — asserted in
+    #: True → superseded by a sibling spec (named beside its registration)
+    #: but kept because tests use its builder as a reference (t50's,
+    #: superseded by t33, in test_property_fuzz and test_scale_smoke):
+    #: still in REGISTRY, so the local oracle certification keeps
+    #: covering it (a retired spec must keep its oracle — asserted in
     #: tests/test_registry_contract.py::test_every_query_declares_semantics),
     #: but EXCLUDED from the driver contract (queries()/oracle_sql()).
     retired: bool = False
@@ -704,16 +706,11 @@ register(
 register(
     QuerySpec(
         name="t24_embedding_near_dup",
-        # r19 flip (staged r18 by an autosize probe;
-        # VERDICT r18 item 1): the auto form derives (n_bits, n_tables)
-        # from the parquet-footer corpus size so the expected LSH bucket
-        # stays ~64 vectors at every N — candidate volume linear in N —
-        # where the old fixed n_bits=3 reconstructed ~1.6e11 candidates
-        # at 200k vectors and HUNG at sf1 (r17 sweep). At oracle scale
-        # (N=500) the derivation resolves to exactly the certified
-        # (3, 64), so sf0.01 results are bit-identical to the old
-        # builder and the brute-force oracle below is untouched.
-        builder=sim_ops.embedding_near_dup_pairs_auto,
+        # (n_bits, n_tables) derived from the parquet-footer corpus size
+        # so the expected LSH bucket stays ~64 vectors at every N; at
+        # oracle scale (N=500) they resolve to (3, 64), and the result
+        # equals the brute-force oracle below
+        builder=sim_ops.embedding_near_dup_pairs,
         oracle=f"""
             SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                    {_COS.format(a="a.embedding::DOUBLE[]",
@@ -1075,33 +1072,6 @@ register(
         """,
         doc="pivot: lineitem counts, returnflag rows x linestatus columns",
         tags=("relational", "pivot"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t37_json_props_stats",
-        builder=event_ops.json_props_stats,
-        oracle="""
-            SELECT event_type,
-                   round(avg(k), 6) AS avg_k,
-                   CAST(min(k) AS BIGINT) AS min_k,
-                   CAST(max(k) AS BIGINT) AS max_k,
-                   CAST(count(k) AS BIGINT) AS n_with_k
-            FROM (
-                SELECT event_type,
-                       CAST(json_extract(props, '$.k') AS BIGINT) AS k
-                FROM events
-            )
-            GROUP BY event_type
-            ORDER BY event_type
-        """,
-        doc="JSON field extraction from props, stats per event_type",
-        tags=("relational", "json"),
-        retired=True,
-        # retired in r8 (registry headroom): superseded by
-        # t235_variant_props_stats (parse-once VARIANT extraction over the
-        # same props JSON); stays locally certified via test_queries_oracle
     )
 )
 
@@ -4005,12 +3975,9 @@ register(
 register(
     QuerySpec(
         name="t145_semantic_dedup_invariants",
-        # r19 flip (staged r18 by an autosize probe;
-        # VERDICT r18 item 2): auto-sized SemDeDup cells — the
-        # invariant contract is cell-count-independent, and the
-        # derivation resolves to the certified 8 cells at oracle scale
-        # so sf0.01 results are bit-identical to the fixed-cell form.
-        builder=sim_ops.semantic_dedup_invariants_auto,
+        # SemDeDup cells sized from the corpus; the invariant contract
+        # is cell-count-independent
+        builder=sim_ops.semantic_dedup_invariants,
         oracle="""
             SELECT CAST(0 AS BIGINT) AS bad_cosines,
                    CAST(0 AS BIGINT) AS order_violations,
@@ -4374,48 +4341,6 @@ register(
         """,
         doc="volume anomaly alerting: hourly counts per type flagged beyond 2 population std-devs of the type's own hourly mean; exact integer moments, broadcast moment join",
         tags=("events", "statistics", "monitoring"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t155_native_session_windows",
-        builder=event_ops.native_session_windows,
-        oracle="""
-            WITH ev AS (
-                SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events
-            ),
-            marked AS (
-                SELECT user_id, ts_us,
-                       CASE WHEN lag(ts_us) OVER w IS NULL
-                              OR ts_us - lag(ts_us) OVER w > 1800000000
-                            THEN 1 ELSE 0 END AS is_start
-                FROM ev
-                WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)
-            ),
-            sess AS (
-                SELECT user_id, ts_us,
-                       sum(is_start) OVER (PARTITION BY user_id
-                                           ORDER BY ts_us
-                                           ROWS BETWEEN UNBOUNDED PRECEDING
-                                                    AND CURRENT ROW) AS sid
-                FROM marked
-            )
-            SELECT user_id,
-                   strftime(make_timestamp(min(ts_us)),
-                            '%Y-%m-%d %H:%M:%S') AS session_start,
-                   strftime(make_timestamp(max(ts_us) + 1800000000),
-                            '%Y-%m-%d %H:%M:%S') AS session_end,
-                   CAST(count(*) AS BIGINT) AS n_events
-            FROM sess GROUP BY user_id, sid
-            ORDER BY user_id, session_start
-        """,
-        doc="Spark's native session_window operator vs a first-principles islands oracle: window end = last event + gap, INCLUSIVE boundary (an event exactly at the previous end extends the session; pinned by the boundary fuzzer)",
-        tags=("events", "window", "streaming-semantics"),
-        retired=True,
-        # retired in r8 (registry headroom): driver slot ceded to its twin
-        # t16_session_window — identical output, measured dead heat at sf1
-        # (r6 shootout); stays locally certified via test_queries_oracle
     )
 )
 
@@ -4982,7 +4907,7 @@ register(
             GROUP BY event_type
             ORDER BY event_type
         """,
-        doc="schema-first JSON: from_json with an explicit struct schema (one parse per row, malformed rows become NULL structs) vs t37's per-field extraction",
+        doc="schema-first JSON: from_json with an explicit struct schema (one parse per row, malformed rows become NULL structs) vs per-field get_json_object extraction",
         tags=("events", "json", "io"),
     )
 )
@@ -6957,12 +6882,14 @@ register(
             GROUP BY event_type
             ORDER BY event_type
         """,
-        doc="t37's semi-structured extraction through Spark 4's VARIANT "
+        doc="JSON field extraction from props, stats per event_type, "
+        "through Spark 4's VARIANT "
         "type: parse_json once into a binary variant column, typed "
         "try_variant_get path lookup — at 100 TB the variant is parsed "
         "once at ingest and stored columnar-shredded in parquet, so "
         "props-heavy scans stop being CPU-bound re-parses; "
-        "hash-identical to the t37 oracle (NULL on missing path)",
+        "hash-identical to the json_extract oracle (NULL on missing "
+        "path)",
         tags=("relational", "json", "scale"),
     )
 )

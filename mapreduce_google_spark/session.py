@@ -14,9 +14,9 @@ a large cluster:
 * AQE on (+ coalesce + skew join) — runtime re-planning is the main lever
   that keeps a static plan viable at 100 TB (partition coalescing after
   filters, skew-join splitting for hot keys).
-* ``spark.sql.shuffle.partitions`` defaults to 4× local cores; on a real
-  cluster this should be ~2-3× total executor cores — AQE coalesces down,
-  so erring high is safe.
+* ``spark.sql.shuffle.partitions`` defaults to 2× local cores, at least
+  8; on a real cluster this should be ~2-3× total executor cores — AQE
+  coalesces down, so erring high is safe.
 * Arrow enabled — every Python-side exchange (Pandas UDF, toPandas) is
   batched, never row-at-a-time pickling.
 """
@@ -42,6 +42,18 @@ def _default_master() -> str:
     shared store's buckets (``io.store_bucket_count``)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus()
     return f"local[{cpus}]"
+
+
+def _default_shuffle_partitions(master: str) -> int:
+    """2× the thread count of a ``local[N]`` master, at least 8: headroom
+    for skew, which AQE coalesces back. ``local[*]`` and a master that
+    names no thread count count the CPUs this process may run on."""
+    try:
+        n = master.split("[", 1)[1].rstrip("]")
+        cores = _host_cpus() if n == "*" else int(n)
+    except (IndexError, ValueError):
+        cores = _host_cpus()
+    return max(cores * 2, 8)
 
 
 def _ensure_driver_memory() -> None:
@@ -99,12 +111,7 @@ def get_spark(
     """
     master = master or _default_master()
     if shuffle_partitions is None:
-        # local[N] → parse N; 2× gives headroom for skew, AQE coalesces back.
-        try:
-            n = int(master.split("[", 1)[1].rstrip("]").replace("*", str(os.cpu_count() or 8)))
-        except (IndexError, ValueError):
-            n = os.cpu_count() or 8
-        shuffle_partitions = max(n * 2, 8)
+        shuffle_partitions = _default_shuffle_partitions(master)
 
     conf: dict[str, str] = {
         "spark.sql.session.timeZone": "UTC",

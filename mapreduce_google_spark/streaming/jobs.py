@@ -239,6 +239,19 @@ def _recover_store(store: str) -> None:
         os.rename(old, store)
 
 
+def _reset_store(store: str, ckpt: str) -> None:
+    """Start a merge store and its checkpoint from empty. The whole swap
+    family goes: a prior invocation killed mid-:func:`_swap_store`
+    leaves ``store_old`` / ``store_tmp`` behind, and if only (store,
+    ckpt) were removed, :func:`_recover_store` would resurrect the stale
+    previous-run store, whose ``_BATCH_ID`` would make the batch-id skip
+    drop this run's early batches (fresh checkpoints restart ids at 0)."""
+    import shutil
+
+    for d in (store, store + "_old", store + "_tmp", ckpt):
+        shutil.rmtree(d, ignore_errors=True)
+
+
 def _swap_store(merged: DataFrame, store: str, batch_id: int) -> None:
     """Atomically replace a merge store via rename-aside (store → _old,
     tmp → store, drop _old) and stamp the applied batch_id. A crash at
@@ -477,7 +490,6 @@ def stream_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     size is (types × hours), independent of event volume.
     """
     import os
-    import shutil
 
     from mapreduce_google_spark.operators.events import TS_FMT
 
@@ -485,13 +497,7 @@ def stream_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(staged).schema
     store = f"/tmp/mgs_anom_store_{tag}"
     ckpt = f"{store}_ckpt"
-    # A prior invocation killed mid-_swap_store leaves store+'_old' /
-    # store+'_tmp' behind; if only (store, ckpt) were removed here,
-    # _recover_store would resurrect the stale previous-run store and its
-    # _BATCH_ID would make the batch-id skip drop this run's early batches
-    # (fresh checkpoints restart ids at 0). Sweep the whole family.
-    for d in (store, store + "_old", store + "_tmp", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    _reset_store(store, ckpt)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         _recover_store(store)
@@ -567,7 +573,6 @@ def stream_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``_swap_store``/``_recover_store``).
     """
     import os
-    import shutil
 
     from mapreduce_google_spark.functions.numeric import (
         money,
@@ -585,13 +590,7 @@ def stream_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(staged).schema
     store = f"/tmp/mgs_q1_store_{tag}"
     ckpt = f"{store}_ckpt"
-    # A prior invocation killed mid-_swap_store leaves store+'_old' /
-    # store+'_tmp' behind; if only (store, ckpt) were removed here,
-    # _recover_store would resurrect the stale previous-run store and its
-    # _BATCH_ID would make the batch-id skip drop this run's early batches
-    # (fresh checkpoints restart ids at 0). Sweep the whole family.
-    for d in (store, store + "_old", store + "_tmp", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    _reset_store(store, ckpt)
 
     def partials(df: DataFrame) -> DataFrame:
         disc_price = money("l_extendedprice") * one_minus("l_discount")
@@ -673,7 +672,6 @@ def stream_top_tokens(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFram
     counts and the cut happens at read time.
     """
     import os
-    import shutil
 
     from mapreduce_google_spark.functions.text import tokenize
 
@@ -681,13 +679,7 @@ def stream_top_tokens(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFram
     schema = spark.read.parquet(staged).schema
     store = f"/tmp/mgs_toptok_store_{tag}"
     ckpt = f"{store}_ckpt"
-    # A prior invocation killed mid-_swap_store leaves store+'_old' /
-    # store+'_tmp' behind; if only (store, ckpt) were removed here,
-    # _recover_store would resurrect the stale previous-run store and its
-    # _BATCH_ID would make the batch-id skip drop this run's early batches
-    # (fresh checkpoints restart ids at 0). Sweep the whole family.
-    for d in (store, store + "_old", store + "_tmp", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    _reset_store(store, ckpt)
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         _recover_store(store)
@@ -743,7 +735,6 @@ def stream_intradoc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Must hash-equal batch t222.
     """
     import os
-    import shutil
 
     from mapreduce_google_spark.operators.textstats import (
         repetition_rollup,
@@ -754,9 +745,7 @@ def stream_intradoc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema = spark.read.parquet(staged).schema
     store = f"/tmp/mgs_rep_store_{tag}"
     ckpt = f"{store}_ckpt"
-    # sweep the whole swap family (see stream_hourly_anomalies)
-    for d in (store, store + "_old", store + "_tmp", ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    _reset_store(store, ckpt)
 
     sum_cols = ["n_docs", "n_flagged", "tw", "dw", "t2", "d2", "t3", "d3"]
 

@@ -551,11 +551,12 @@ def test_lsh_retok_fallback_matches_direct_with_max_df(spark, sf_dir):
 
 def test_signatures_from_hashes_equal_string_pipeline(spark, sf_dir):
     """The band-table build derives MinHash signatures from the stored
-    xxhash64 values via a PARALLEL fold (``_signatures_from_hashes``),
-    deliberately duplicated so the fingerprint-pinned in-session
-    pipeline stays byte-identical — this test is what keeps the two
-    folds from drifting apart: per-doc signatures must be EQUAL, not
-    merely produce the same candidate pairs."""
+    xxhash64 values, the in-session pipeline from the raw shingle
+    strings; both share one fold (``_signatures_from_hashes``), which
+    hashes the strings inside its transform. Hashing first into the
+    store's sorted distinct array must not change a signature: per-doc
+    signatures must be EQUAL, not merely produce the same candidate
+    pairs."""
     from pyspark.sql import functions as F
 
     from mapreduce_google_spark.io import load_table
@@ -791,8 +792,8 @@ def test_bucket_count_is_part_of_table_identity(spark, tmp_path):
 
 
 def test_t24_auto_param_derivation():
-    """The r18-staged auto-sizing (VERDICT r17 item 4): oracle scale
-    must resolve to EXACTLY the certified (3, 64); bigger corpora get
+    """t24's corpus-sized LSH parameters: oracle scale must resolve to
+    EXACTLY (3, 64); bigger corpora get
     log-scaled bits with the table count re-derived from the collision
     probability at the threshold boundary, floored at 64 and capped at
     256 (at theta=0.4 / b=12 the delta=1e-3 count is ~1,740 — the cap
@@ -821,80 +822,61 @@ def test_t24_auto_param_derivation():
 
 
 def test_t24_auto_equals_registered_at_oracle_scale(spark, sf_dir):
-    """Staging gate (t22/t77 precedent): at oracle scale the auto form
-    resolves to (3, 64) and its result must be IDENTICAL to the
-    registered builder (which equals the exact all-pairs form); the
-    max_bucket guard never fires at N=500 (cap 10,000) and must appear
-    in the plan exactly when on."""
+    """The registered t24 builder sizes its LSH parameters from the
+    corpus; at oracle scale they resolve to (3, 64) and its result must
+    be IDENTICAL to the exact all-pairs form, whose HOF cosine is also
+    the rounding reference for the Arrow verify kernel. The max_bucket
+    guard never fires at N=500 (cap 10,000) and must appear in the plan
+    exactly when on."""
     from mapreduce_google_spark.operators.similarity import (
         embedding_near_dup_pairs,
-        embedding_near_dup_pairs_auto,
+        embedding_near_dup_pairs_exact,
     )
     from mapreduce_google_spark.plans import formatted_plan
     from mapreduce_google_spark.queries import REGISTRY
 
-    # the r19 flip: the auto form IS the registered default now, and
-    # the fixed-(3,64) form below is the certified reference it must
-    # equal at oracle scale
-    assert (
-        REGISTRY["t24_embedding_near_dup"].builder
-        is embedding_near_dup_pairs_auto
-    )
+    assert REGISTRY["t24_embedding_near_dup"].builder is embedding_near_dup_pairs
+    exact = [
+        tuple(r) for r in embedding_near_dup_pairs_exact(spark, sf_dir).collect()
+    ]
     registered = [
         tuple(r) for r in embedding_near_dup_pairs(spark, sf_dir).collect()
     ]
-    auto = [
-        tuple(r) for r in embedding_near_dup_pairs_auto(spark, sf_dir).collect()
-    ]
-    assert auto == registered and len(auto) > 0
+    assert registered == exact and len(exact) > 0
     nocap = [
         tuple(r)
-        for r in embedding_near_dup_pairs_auto(
+        for r in embedding_near_dup_pairs(
             spark, sf_dir, max_bucket=None
         ).collect()
     ]
-    assert nocap == registered
-    # r19 verify kernel: the Arrow einsum verify (default) must equal
-    # the interpreted HOF verify row-for-row — the rounding-parity
-    # contract the t18/t25 kernels ship on (_round_half_up_6)
-    hof = [
-        tuple(r)
-        for r in embedding_near_dup_pairs_auto(
-            spark, sf_dir, verify="hof"
-        ).collect()
-    ]
-    assert hof == auto
-    plan_on = formatted_plan(embedding_near_dup_pairs_auto(spark, sf_dir))
+    assert nocap == exact
+    plan_on = formatted_plan(embedding_near_dup_pairs(spark, sf_dir))
     plan_off = formatted_plan(
-        embedding_near_dup_pairs_auto(spark, sf_dir, max_bucket=None)
+        embedding_near_dup_pairs(spark, sf_dir, max_bucket=None)
     )
     assert "LeftAnti" in plan_on, plan_on
     assert "LeftAnti" not in plan_off, plan_off
 
 
 def test_t145_auto_cells_derivation_and_oracle_equality(spark, sf_dir):
-    """Staging gate for the t145 auto-cells form: the derivation clamps
-    to the certified 8 cells at oracle scale (bit-identical output) and
-    scales the cell count linearly with N in between the clamps."""
+    """The registered t145 builder derives its cell count from the
+    corpus size: the derivation clamps to 8 cells at oracle scale and
+    scales the cell count linearly with N in between the clamps; the
+    invariant summary equals the oracle's constant row."""
     from mapreduce_google_spark.operators.similarity import (
         _auto_semantic_cells,
-        semantic_dedup,
-        semantic_dedup_auto,
-        semantic_dedup_invariants_auto,
+        semantic_dedup_invariants,
     )
     from mapreduce_google_spark.queries import REGISTRY
 
-    # the r19 flip: the registered t145 builder derives its cell count
-    # through the same _auto_semantic_cells pinned below
     assert (
         REGISTRY["t145_semantic_dedup_invariants"].builder
-        is semantic_dedup_invariants_auto
+        is semantic_dedup_invariants
     )
     assert _auto_semantic_cells(500) == 8
     assert _auto_semantic_cells(0) == 8
     assert _auto_semantic_cells(5_000) == 10
     assert _auto_semantic_cells(200_000) == 400
     assert _auto_semantic_cells(10_000_000) == 4096  # broadcast cap
-    registered = [tuple(r) for r in semantic_dedup(spark, sf_dir).collect()]
-    auto = [tuple(r) for r in semantic_dedup_auto(spark, sf_dir).collect()]
-    assert auto == registered and len(auto) > 0
+    rows = [tuple(r) for r in semantic_dedup_invariants(spark, sf_dir).collect()]
+    assert rows == [(0, 0, 0, 1)]

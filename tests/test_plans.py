@@ -222,51 +222,41 @@ def test_t45_rangeframe_default_equals_forced_forms(spark, sf_dir):
     """t45's r16 flip gate: the registered default (range-frame window
     over the user_id-bucketed store —
     r16 event-pairs shootout: −51% sf0.1, −75% sf1, −92% at 30×,
-    essentially flat across scale) must produce exactly the bucketed
-    self-join's and the raw join's (type_a, type_b) counts — the frame
-    bounds (1 µs, window] encode the same strictly-after /
-    within-window predicate. Also pin the plan shape the flip bought:
-    no join at all, a bucketed store scan, and strictly fewer
-    exchanges than either join form (the window consumes bucket
-    co-location; the joins shuffled both sides on (user, bucket))."""
+    essentially flat across scale) must produce exactly the raw join's
+    (type_a, type_b) counts — the frame bounds (1 µs, window] encode
+    the same strictly-after / within-window predicate. Also pin the
+    plan shape the flip bought: no join at all, a bucketed store scan,
+    and strictly fewer exchanges than the join form (the window
+    consumes bucket co-location; the join shuffles both sides on
+    (user, bucket))."""
     from mapreduce_google_spark.operators.scale import event_pairs_within_minute
 
     a = [tuple(r) for r in event_pairs_within_minute(spark, sf_dir).collect()]
-    b = [
-        tuple(r)
-        for r in event_pairs_within_minute(
-            spark, sf_dir, form="bucket_join"
-        ).collect()
-    ]
     c = [
         tuple(r)
         for r in event_pairs_within_minute(spark, sf_dir, form="raw_join").collect()
     ]
-    assert a == b == c and len(a) > 0
+    assert a == c and len(a) > 0
     plan = formatted_plan(event_pairs_within_minute(spark, sf_dir))
     assert "Join" not in plan, plan
     assert "Bucketed: true" in plan, plan
-    for ref_form in ("bucket_join", "raw_join"):
-        ref = formatted_plan(
-            event_pairs_within_minute(spark, sf_dir, form=ref_form)
-        )
-        assert plan.count("Exchange") < ref.count("Exchange"), (
-            ref_form,
-            plan.count("Exchange"),
-            ref.count("Exchange"),
-        )
+    ref = formatted_plan(event_pairs_within_minute(spark, sf_dir, form="raw_join"))
+    assert plan.count("Exchange") < ref.count("Exchange"), (
+        plan.count("Exchange"),
+        ref.count("Exchange"),
+    )
 
 
 def test_t45_rejects_degenerate_window(spark, sf_dir):
     """ADVICE r16: window_s=0 used to fail differently per form (an
     inverted rangeBetween(1, 0) frame on the default; a division by
-    zero on bucket_join) — every form must now reject it up front with
-    the same ValueError, before any store or scan work."""
+    zero on the join form) — every form must now reject it up front
+    with the same ValueError, before any store or scan work."""
     import pytest
 
     from mapreduce_google_spark.operators.scale import event_pairs_within_minute
 
-    for form in (None, "rangeframe", "bucket_join", "raw_join"):
+    for form in (None, "rangeframe", "raw_join"):
         for bad in (0, -5):
             with pytest.raises(ValueError, match="window_s"):
                 event_pairs_within_minute(spark, sf_dir, window_s=bad, form=form)
@@ -431,43 +421,37 @@ def test_t12_preaggregates_below_join(spark, sf_dir):
     t12 pre-aggregates below the customer join in EVERY form: the
     default (prejoined store) must carry a HashAggregate keyed solely
     on o_custkey below the join (only customer-grain partials reach the
-    broadcast tail), and the forced orderkey_stores reference must keep
-    its lineitem→order-grain pre-aggregation (the heavy exchange
-    shrinks by the lines-per-order factor)."""
+    broadcast tail), and the forced direct reference must keep its
+    lineitem→order-grain pre-aggregation (the heavy exchange shrinks by
+    the lines-per-order factor)."""
     import re
 
     plan = formatted_plan(revenue_rollup(spark, sf_dir))
     assert re.search(r"Keys \[1\]: \[o_custkey", plan), plan
-    stores = formatted_plan(revenue_rollup(spark, sf_dir, form="orderkey_stores"))
-    assert re.search(r"Keys \[1\]: \[l_orderkey", stores), stores
+    direct = formatted_plan(revenue_rollup(spark, sf_dir, form="direct"))
+    assert re.search(r"Keys \[1\]: \[l_orderkey", direct), direct
 
 
 def test_t12_prejoined_default_equals_forced_forms(spark, sf_dir):
     """t12's r16 flip gate: the registered default (custkey-bucketed
     PRE-JOINED line store — r16 rollup shootout: −38%
     sf0.1, −65% sf1, −73% at 30×, spreads fully separated) must equal
-    both forced reference forms — the store's build is the same
-    lineitem ⋈ orders the old default ran at query time, and decimal
+    the forced direct reference — the store's build is the same
+    lineitem ⋈ orders the direct form runs at query time, and decimal
     partials are associative, so collapsing per-customer straight off
     the store is value-identical. Also pin the plan shape the flip
     bought: a bucketed store scan, zero fact-side exchange — strictly
-    fewer exchanges than either reference."""
+    fewer exchanges than the reference."""
     a = [tuple(r) for r in revenue_rollup(spark, sf_dir).collect()]
-    b = [
-        tuple(r)
-        for r in revenue_rollup(spark, sf_dir, form="orderkey_stores").collect()
-    ]
     c = [tuple(r) for r in revenue_rollup(spark, sf_dir, form="direct").collect()]
-    assert a == b == c and len(a) > 0
+    assert a == c and len(a) > 0
     plan = formatted_plan(revenue_rollup(spark, sf_dir))
     assert "Bucketed: true" in plan, plan
-    for ref_form in ("orderkey_stores", "direct"):
-        ref = formatted_plan(revenue_rollup(spark, sf_dir, form=ref_form))
-        assert plan.count("Exchange") < ref.count("Exchange"), (
-            ref_form,
-            plan.count("Exchange"),
-            ref.count("Exchange"),
-        )
+    ref = formatted_plan(revenue_rollup(spark, sf_dir, form="direct"))
+    assert plan.count("Exchange") < ref.count("Exchange"), (
+        plan.count("Exchange"),
+        ref.count("Exchange"),
+    )
 
 
 def test_t22_counted_guard_equals_agg_antijoin(spark, sf_dir):
@@ -561,23 +545,6 @@ def test_t77_guard_semantics_and_plan(spark, sf_dir):
     )
     assert "LeftAnti" in plan_on, plan_on
     assert "LeftAnti" not in plan_off, plan_off
-
-
-def test_t12_orderkey_stores_form_removes_fact_exchanges(spark, sf_dir):
-    """The r13–r15 default, kept as a forced reference
-    (form="orderkey_stores"): both fact scans must report the bucketed
-    layout and the plan must carry strictly fewer exchanges than the
-    direct path — the per-order pre-agg and the fact-fact join consume
-    bucket co-location instead of shuffling (VERDICT r12 item 6). The
-    property is pinned so the reference the r16 default is
-    equality-gated against cannot silently degrade."""
-    direct = formatted_plan(revenue_rollup(spark, sf_dir, form="direct"))
-    bucketed = formatted_plan(revenue_rollup(spark, sf_dir, form="orderkey_stores"))
-    assert bucketed.count("Bucketed: true") >= 2, bucketed
-    assert bucketed.count("Exchange") < direct.count("Exchange"), (
-        bucketed.count("Exchange"),
-        direct.count("Exchange"),
-    )
 
 
 def test_t09_bucketed_store_removes_fact_exchange(spark, sf_dir):

@@ -95,12 +95,15 @@ def test_plan_has_no_scale_antipatterns(name, spark, sf_dir):
 #      explicit exception dict with the reason and (for pending
 #      default-flips) the scheduled round.
 
-#: builder -> guard parameter whose default must be ON (not None)
+#: builder -> guard parameter whose default must be ON (not None); a
+#: required parameter has no default and counts as ON (semantic_dedup's
+#: cell count, which its caller sizes from the corpus)
 _BANDED_GUARDED = {
     "minhash_lsh_pairs": "max_bucket",
     "minhash_lsh_pairs_from_bands": "max_bucket",
     "simhash_near_dup_pairs": "max_bucket",
-    "embedding_near_dup_pairs_auto": "max_bucket",
+    "embedding_near_dup_pairs": "max_bucket",
+    "semantic_dedup": "n_cells",
 }
 
 #: builder -> (guard param that EXISTS, reason the default is still
@@ -123,27 +126,10 @@ _BANDED_EXCEPTIONS = {
         "and only adds the df-profile pass (~5-8%). The guard stays "
         "available for degenerate/boilerplate corpora",
     ),
-    "embedding_near_dup_pairs": (
-        "n_bits",
-        "SUPERSEDED r19: the t24 default flipped onto the guarded "
-        "embedding_near_dup_pairs_auto (flipped r19). This fixed-"
-        "param form stays only as the certified-(3,64) reference the "
-        "auto derivation resolves to at oracle scale — shootout and "
-        "equality-test substrate, never a registered default again",
-    ),
     "embedding_near_dup_pairs_exact": (
         None,
         "BY-DESIGN: the brute-force verification baseline tests and "
         "the DuckDB oracle mirror — never a registered default",
-    ),
-    "semantic_dedup": (
-        "n_cells",
-        "RESOLVED r19 at the registration layer: t145's registered "
-        "builder is semantic_dedup_invariants_auto, which derives "
-        "n_cells from the corpus size (flipped r19) — the fixed "
-        "default here is the certified oracle-scale value the auto "
-        "derivation clamps to, reached only through explicit callers "
-        "(tests, shootouts, the auto wrapper itself)",
     ),
 }
 

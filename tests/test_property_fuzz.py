@@ -218,8 +218,9 @@ def test_session_window_boundary_fuzz(spark, duck, offsets):
     islands rule (new session only when diff > gap, end = last + gap:
     an event landing exactly at the previous end EXTENDS the session —
     Spark's end bound is inclusive, verified by this very fuzzer).
-    This pins the boundary semantics t155 relies on, which the
-    µs-random events table can never exercise."""
+    This pins the boundary semantics of the native operator the
+    streaming session jobs use, which the µs-random events table can
+    never exercise."""
     import pandas as pd
 
     from pyspark.sql import functions as F
@@ -556,23 +557,6 @@ def test_token_hof_fuzz_spark_matches_duckdb(
     assert (got["total_tokens"] or 0) == (want[0] or 0)
     assert (got["total_chars"] or 0) == (want[1] or 0)
     assert got["n_distinct"] == want[2]
-
-
-def test_t16_native_equals_islands(spark, sf_dir):
-    """The two t16 engine paths — gaps-and-islands (lag + running sum)
-    and Spark's native session_window aggregation — must produce the
-    identical per-user session stats (same output contract, benched
-    against each other in the r14 implementation shootout)."""
-    from mapreduce_google_spark.operators.events import (
-        session_window_stats,
-        session_window_stats_native,
-    )
-
-    islands = [tuple(r) for r in session_window_stats(spark, sf_dir).collect()]
-    native = [
-        tuple(r) for r in session_window_stats_native(spark, sf_dir).collect()
-    ]
-    assert islands == native and len(islands) > 0
 
 
 def test_asof_boundary_parity(spark, tmp_path):

@@ -3,7 +3,10 @@
 import os
 
 from mapreduce_google_spark import session
-from mapreduce_google_spark.session import _default_master
+from mapreduce_google_spark.session import (
+    _default_master,
+    _default_shuffle_partitions,
+)
 
 
 def test_default_master_falls_back_to_the_cpus_of_this_process(monkeypatch):
@@ -20,3 +23,15 @@ def test_default_master_without_sched_getaffinity(monkeypatch):
     monkeypatch.delattr(session.os, "sched_getaffinity")
     monkeypatch.setattr(session.os, "cpu_count", lambda: 6)
     assert _default_master() == "local[6]"
+
+
+def test_default_shuffle_partitions_count_the_cpus_of_this_process(monkeypatch):
+    """``local[*]`` and an unparseable master are sized by the affinity
+    mask, not by the machine's CPU count: two CPUs of a 64-CPU machine
+    give 2 × 2, floored at 8."""
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1})
+    monkeypatch.setattr(session.os, "cpu_count", lambda: 64)
+    assert _default_shuffle_partitions("local[*]") == 8
+    assert _default_shuffle_partitions("yarn") == 8
+    assert _default_shuffle_partitions("local[6]") == 12
+    assert _default_shuffle_partitions("local[2]") == 8
