@@ -59,8 +59,8 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
       pinned to UTC this is instant-preserving and matches DuckDB.
 
     Shared by the batch loader AND every streaming reader (including ones
-    over /tmp staging dirs, which may hold either representation depending
-    on which code version staged them).
+    over :func:`derived_dir` stagings, which may hold either representation
+    depending on which code version staged them).
     """
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
@@ -84,7 +84,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def cache_tag(sf_dir: str, *names: str) -> str:
-    """Stable key for /tmp-cached derivations of source tables.
+    """Stable key for cached derivations of source tables
+    (:func:`derived_dir`).
 
     Combines the FULL absolute path with a fingerprint (file list + sizes
     + mtimes) of each named source table, so (a) two sf_dirs sharing a
@@ -358,8 +359,8 @@ def shared_store_root() -> str:
     module adopts into DEFAULT query results (fact stores, LSH band
     table, fingerprint store, IVF assignment index).
 
-    The pre-r14 layout put adoptable stores at the predictable
-    world-writable path ``/tmp/{name}`` — another local user could
+    The pre-r14 layout put adoptable stores at a predictable name
+    directly in the world-writable temp dir — another local user could
     pre-plant a directory with a valid ``_BUCKET_SPEC.json`` and
     bucket-stamped files that t09/t11/t12/t16/t45 would then silently
     adopt into their results (ADVICE r13). Rooting stores under
@@ -400,6 +401,25 @@ def shared_store_path(name: str) -> str:
     return os.path.join(shared_store_root(), name)
 
 
+def derived_dir(kind: str, sf_dir: str, *tables: str) -> str:
+    """Directory for data of ``kind`` derived from ``tables`` of
+    ``sf_dir``: ``mgs_{kind}_{cache_tag}`` under
+    :func:`shared_store_root`, so regenerating a source moves its
+    derivations to a fresh directory. Every staging, layout copy and
+    stream scratch directory the operators write is named here; the
+    caller decides whether the directory is written once
+    (:func:`write_once`) or rebuilt on every run."""
+    return shared_store_path(f"mgs_{kind}_{cache_tag(sf_dir, *tables)}")
+
+
+def write_once(path: str, write) -> str:
+    """Run ``write(path)`` unless ``path`` holds a committed Spark write
+    (its ``_SUCCESS`` marker); return ``path``."""
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        write(path)
+    return path
+
+
 def bucket_table_suffix(num_buckets: int, bucket_cols: list[str]) -> str:
     """Path/table suffix encoding the FULL bucket spec. The trailing 6
     hex chars hash the column TUPLE with a NUL separator, so specs that
@@ -433,13 +453,12 @@ def _sweep_stranded_bucket_stores(path: str, min_age_s: float = 600.0) -> None:
     (``_k{N}`` pre-r12, ``_k{N}_{cols}`` r12) can never be adopted
     again and would otherwise accumulate as junk forever (VERDICT r12
     missing #2). Sidecar-bearing siblings are other LIVE specs of the
-    same base (different count/columns) and are kept. Same policy as
-    the warehouse orphan cleanup in ``operators/scale.py``, including
-    its age floor: a sidecar-less sibling younger than ``min_age_s`` is
-    skipped — a concurrent peer building a different spec stamps its
-    sidecar LAST, and sweeping its half-written files out from under it
-    would fail that build (same TOCTOU family as vacuum, io vacuum
-    retention floor).
+    same base (different count/columns) and are kept. Age floor: a
+    sidecar-less sibling younger than ``min_age_s`` is skipped — a
+    concurrent peer building a different spec stamps its sidecar LAST,
+    and sweeping its half-written files out from under it would fail
+    that build (same TOCTOU family as vacuum, io vacuum retention
+    floor).
 
     The age floor alone is NOT enough for long builds (ADVICE r13):
     Spark stages output under ``_temporary/`` subtrees, so a sibling's

@@ -28,7 +28,6 @@ tools that replace and extend that single lever:
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -37,9 +36,10 @@ from mapreduce_google_spark.functions.numeric import dsum, money
 from mapreduce_google_spark.functions.text import tokenize
 from mapreduce_google_spark.io import (
     _break_dead_holder_lock,
-    cache_tag,
+    derived_dir,
     load_table,
     register_views,
+    write_once,
 )
 
 #: decimal sum → double, rounded — deterministic vs the oracle regardless
@@ -49,40 +49,7 @@ def _revenue(col: str):
     return dsum(money(col))
 
 
-def _tag(sf_dir: str, *names: str) -> str:
-    """Cache key = full-path + source-fingerprint (see io.cache_tag) —
-    basename-only tags collide across datasets and go stale on regen."""
-    return cache_tag(sf_dir, *names)
-
-
-def _warehouse_dir(spark: SparkSession) -> str:
-    """The LIVE session's resolved warehouse directory as a local path.
-
-    Never hardcode the engine's own default (``/tmp/mgs-warehouse``,
-    ``session.py``): a caller-supplied session — the driver's, a
-    notebook's — resolves ``spark.sql.warehouse.dir`` elsewhere
-    (typically ``$PWD/spark-warehouse``), and a cleanup that looks in
-    the wrong warehouse lets an orphaned table directory brick every
-    managed ``saveAsTable`` with ``LOCATION_ALREADY_EXISTS`` (the t40
-    r11 driver-red; VERDICT r11 item 1)."""
-    return _warehouse_path_from_uri(spark.conf.get("spark.sql.warehouse.dir"))
-
-
-def _warehouse_path_from_uri(raw: str) -> str:
-    """``spark.sql.warehouse.dir`` (a URI for local filesystems) as a
-    plain local path — scheme stripped AND percent-decoding applied
-    (Spark reports ``/data/my project`` as ``file:/data/my%20project``;
-    keeping the ``%20`` would make the orphan-location check miss the
-    real directory, re-opening the exact bug this parsing fixes)."""
-    from urllib.parse import unquote, urlparse
-
-    parsed = urlparse(raw)
-    return unquote(parsed.path) if parsed.scheme in ("file", "") else raw
-
-
-def bucketed_revenue_per_segment(
-    spark: SparkSession, sf_dir: str, num_buckets: int = 8
-) -> DataFrame:
+def bucketed_revenue_per_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T40 — co-located join via bucketed tables: revenue per market
     segment from ``orders ⋈ customer``, with both sides bucketed (and
     sorted) on custkey at write time.
@@ -93,39 +60,22 @@ def bucketed_revenue_per_segment(
     pins ≤2 exchanges: only the final agg + order-by). At 100 TB this is
     the difference between re-shuffling the fact table per query and
     never shuffling it again; the same layout serves every custkey join
-    (orders⋈customer, lineitem⋈orders via orderkey buckets, …).
+    (orders⋈customer, lineitem⋈orders via orderkey buckets, …). Both
+    sides are :func:`io.bucketed_fact_table` stores — orders on
+    ``o_custkey`` is the one t09/t11 read — so they share the session's
+    bucket count and are adopted, not rebuilt, by later sessions.
 
     The ``merge`` hint opts this join out of broadcasting so the gate
     actually proves bucket co-location (at test scale customer would
     otherwise broadcast; at 100 TB neither side broadcasts and the
     bucketed sort-merge IS the plan).
     """
-    tag = _tag(sf_dir, "orders", "customer")
-    tables = {
-        "orders": ("o_custkey", f"mgs_b_orders_{tag}"),
-        "customer": ("c_custkey", f"mgs_b_customer_{tag}"),
-    }
-    for name, (key, tbl) in tables.items():
-        if not spark.catalog.tableExists(tbl):
-            # the in-memory catalog dies with the session but the warehouse
-            # dir survives — clear any orphaned location before re-creating
-            # (with a persistent metastore this rewrite never happens).
-            # The warehouse must come from THIS session's conf, not the
-            # engine default: the two can differ (see _warehouse_dir)
-            loc = os.path.join(_warehouse_dir(spark), tbl)
-            if os.path.exists(loc):
-                shutil.rmtree(loc)
-            (
-                load_table(spark, sf_dir, name)
-                .repartition(num_buckets, key)  # 1 file per bucket, sorted
-                .write.mode("overwrite")
-                .bucketBy(num_buckets, key)
-                .sortBy(key)
-                .format("parquet")
-                .saveAsTable(tbl)
-            )
-    orders = spark.table(tables["orders"][1])
-    customer = spark.table(tables["customer"][1])
+    from mapreduce_google_spark.io import bucketed_fact_table
+
+    orders = spark.table(bucketed_fact_table(spark, sf_dir, "orders", "o_custkey"))
+    customer = spark.table(
+        bucketed_fact_table(spark, sf_dir, "customer", "c_custkey")
+    )
     return (
         orders.hint("merge")
         .join(customer, orders.o_custkey == customer.c_custkey)
@@ -217,19 +167,20 @@ def partition_pruned_daily_counts(
     layout decision any event table makes; pruning is what keeps
     point-in-time queries O(day) instead of O(history).
 
-    The one-time partitioned write is cached under /tmp per sf_dir.
+    The one-time partitioned write is cached per corpus version
+    (:func:`io.derived_dir`).
     """
-    tag = _tag(sf_dir, "events")
-    out = f"/tmp/mgs_part_events_{tag}"
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
+    out = write_once(
+        derived_dir("part_events", sf_dir, "events"),
+        lambda path: (
             load_table(spark, sf_dir, "events")
             .withColumn("event_date", F.date_format("ts", "yyyy-MM-dd"))
             .repartition("event_date")  # one task per day → one file per dir
             .write.mode("overwrite")
             .partitionBy("event_date")
-            .parquet(out)
-        )
+            .parquet(path)
+        ),
+    )
     return (
         spark.read.parquet(out)
         .where(F.col("event_date") == day)
@@ -415,21 +366,21 @@ def jsonl_ingest_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference surprises) fails the hash. Schema is passed explicitly —
     at 100 TB inference costs a full pre-scan and can mis-type sparse
     fields; the explicit schema is the contract (io.read_source
-    docstring). The staged copy is /tmp-cached per source fingerprint
-    (io.cache_tag), mirroring t42's staging pattern.
+    docstring). The staged copy is cached per source fingerprint
+    (:func:`io.derived_dir`), mirroring t42's staging pattern.
     """
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from mapreduce_google_spark.io import read_source, write_sink
 
-    tag = _tag(sf_dir, "documents")
-    staged = f"/tmp/mgs_jsonl_docs_{tag}"
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        write_sink(
+    staged = write_once(
+        derived_dir("jsonl_docs", sf_dir, "documents"),
+        lambda path: write_sink(
             load_table(spark, sf_dir, "documents").select("doc_id", "text"),
             "json",
-            staged,
-        )
+            path,
+        ),
+    )
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("text", StringType())]
     )
@@ -463,22 +414,23 @@ def schema_evolution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from mapreduce_google_spark.io import read_parquet_evolved
 
-    tag = _tag(sf_dir, "documents")
-    staged = f"/tmp/mgs_evolved_docs_{tag}"
+    staged = derived_dir("evolved_docs", sf_dir, "documents")
     docs = load_table(spark, sf_dir, "documents")
-    if not (
-        os.path.exists(os.path.join(staged, "v1", "_SUCCESS"))
-        and os.path.exists(os.path.join(staged, "v2", "_SUCCESS"))
-    ):
-        docs.where(F.col("doc_id") < 250).select("doc_id", "n_chars").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(staged, "v1"))
-        docs.where(F.col("doc_id") >= 250).select(
-            "doc_id", "n_chars", "lang"
-        ).write.mode("overwrite").parquet(os.path.join(staged, "v2"))
-    merged = read_parquet_evolved(
-        spark, os.path.join(staged, "v1"), os.path.join(staged, "v2")
+    v1 = write_once(
+        os.path.join(staged, "v1"),
+        docs.where(F.col("doc_id") < 250)
+        .select("doc_id", "n_chars")
+        .write.mode("overwrite")
+        .parquet,
     )
+    v2 = write_once(
+        os.path.join(staged, "v2"),
+        docs.where(F.col("doc_id") >= 250)
+        .select("doc_id", "n_chars", "lang")
+        .write.mode("overwrite")
+        .parquet,
+    )
+    merged = read_parquet_evolved(spark, v1, v2)
     return (
         merged.groupBy(F.coalesce("lang", F.lit("_pre_schema")).alias("lang"))
         .agg(
@@ -509,9 +461,8 @@ def dead_letter_ingest_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mapreduce_google_spark.io import read_json_with_dead_letters
 
-    tag = _tag(sf_dir, "documents")
-    staged = f"/tmp/mgs_deadletter_docs_{tag}"
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
+
+    def write(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
         lines = docs.select(
             F.when(
@@ -521,7 +472,9 @@ def dead_letter_ingest_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.to_json(F.struct("doc_id", "n_chars")))
             .alias("value")
         )
-        lines.write.mode("overwrite").text(staged)
+        lines.write.mode("overwrite").text(path)
+
+    staged = write_once(derived_dir("deadletter_docs", sf_dir, "documents"), write)
     schema = StructType(
         [StructField("doc_id", LongType()), StructField("n_chars", LongType())]
     )
@@ -593,27 +546,21 @@ def compaction_invariants(
     until the corpus changes).
     """
     import glob
-    import os
 
-    from mapreduce_google_spark.io import cache_tag
-
-    tag = cache_tag(sf_dir, "documents")
-    small = f"/tmp/mgs_smallfiles_{tag}_{small_files}"
-    compacted = f"/tmp/mgs_compacted_{tag}_{target_files}"
-    if not os.path.exists(os.path.join(small, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "documents")
-            .repartition(small_files)
-            .write.mode("overwrite")
-            .parquet(small)
-        )
-    if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
-        (
-            spark.read.parquet(small)
-            .coalesce(target_files)
-            .write.mode("overwrite")
-            .parquet(compacted)
-        )
+    small = write_once(
+        derived_dir(f"smallfiles_{small_files}", sf_dir, "documents"),
+        lambda path: load_table(spark, sf_dir, "documents")
+        .repartition(small_files)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
+    compacted = write_once(
+        derived_dir(f"compacted_{target_files}", sf_dir, "documents"),
+        lambda path: spark.read.parquet(small)
+        .coalesce(target_files)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
     n_files = len(glob.glob(os.path.join(compacted, "*.parquet")))
     after = spark.read.parquet(compacted)
     return after.agg(
@@ -1069,14 +1016,13 @@ ZORDER_BOX = {"l_partkey": (1, 50), "l_suppkey": (1, 25)}
 
 def _zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the once-per-corpus Z-ordered lineitem layout exists
-    (cache_tag-keyed like t40's buckets) and return its path — shared by
+    (:func:`io.derived_dir`) and return its path — shared by
     the row-group-pruned scan (t224) and the manifest-pruned scan
     (t227), which exercise the same layout at two pruning granularities.
     """
-    tag = _tag(sf_dir, "lineitem")
-    path = f"/tmp/mgs_zorder_lineitem_{tag}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_zordered(
+    return write_once(
+        derived_dir("zorder_lineitem", sf_dir, "lineitem"),
+        lambda path: write_zordered(
             load_table(spark, sf_dir, "lineitem").select(
                 "l_orderkey",
                 "l_partkey",
@@ -1088,8 +1034,8 @@ def _zordered_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
             ),
             path,
             ["l_partkey", "l_suppkey"],
-        )
-    return path
+        ),
+    )
 
 
 def zordered_box_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,8 +1043,8 @@ def zordered_box_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter: revenue and volume per returnflag for
     ``l_partkey ≤ 50 AND l_suppkey ≤ 25``.
 
-    The layout write (once per corpus version, ``cache_tag``-keyed like
-    t40's buckets) clusters lineitem on the (l_partkey, l_suppkey)
+    The layout write (once per corpus version, :func:`io.derived_dir`)
+    clusters lineitem on the (l_partkey, l_suppkey)
     z-curve; the query then reads it back with both range predicates
     pushed to the parquet scan, where row-group min/max pruning skips
     everything outside the box's z-range — data skipping on TWO
@@ -1135,7 +1081,7 @@ UPSERT_DAY = "2024-01-02"
 #: 1e9 clears any replica count this repo will ever build (<100).
 UPSERT_INSERT_OFFSET = 1_000_000_000
 
-#: corpora already upserted this process — the upsert is idempotent
+#: table paths already upserted this process — the upsert is idempotent
 #: (same delta, same keys, same result), so re-running it on every
 #: builder call (registry sweeps, plan audits) would only burn a write
 #: job; one application per corpus per process is enough.
@@ -1174,21 +1120,23 @@ def _events_daily_upserted_path(spark: SparkSession, sf_dir: str) -> str:
     is idempotent) and return its path. Shared by the upsert query
     (t225) and the snapshot-diff CDC query (t226), which audits what
     the upsert changed."""
-    tag = _tag(sf_dir, "events")
     # offset in the path: changing UPSERT_INSERT_OFFSET must invalidate
     # any previous process's cached table (its inserts carry old ids)
-    path = f"/tmp/mgs_events_daily_{tag}_o{UPSERT_INSERT_OFFSET}"
+    path = derived_dir(f"events_daily_o{UPSERT_INSERT_OFFSET}", sf_dir, "events")
     ev = _events_source(spark, sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         ev.repartition("day").write.mode("overwrite").partitionBy("day").parquet(
             path
         )
-        _UPSERTED.discard(tag)
-    if tag not in _UPSERTED:
+        _UPSERTED.discard(path)
+
+    write_once(path, write)
+    if path not in _UPSERTED:
         from mapreduce_google_spark.io import partition_upsert
 
         partition_upsert(spark, path, _corrections_delta(ev), "day", ["event_id"])
-        _UPSERTED.add(tag)
+        _UPSERTED.add(path)
     return path
 
 
@@ -1417,8 +1365,7 @@ def _events_snapshot_root(spark: SparkSession, sf_dir: str) -> str:
     root. Shared by time travel (t228) and cross-snapshot IVM (t239)."""
     from mapreduce_google_spark.io import list_versions, versioned_write
 
-    tag = _tag(sf_dir, "events")
-    root = f"/tmp/mgs_events_snapshots_{tag}_o{UPSERT_INSERT_OFFSET}"
+    root = derived_dir(f"events_snapshots_o{UPSERT_INSERT_OFFSET}", sf_dir, "events")
     if len(list_versions(root)) < 2:
         ev = _events_source(spark, sf_dir)
         delta = _corrections_delta(ev)
@@ -1624,7 +1571,7 @@ def pruned_files_from_manifest(
 #: the DML verbs are probed on different partitions)
 DV_DELETE_DAY = "2024-01-03"
 
-#: corpora whose DV delete already ran this process — delete_where is
+#: table paths whose DV delete already ran this process — delete_where is
 #: idempotent (already-masked rows are never re-marked), the memo just
 #: skips the no-op scan on registry sweeps
 _DV_DELETED: set[str] = set()
@@ -1648,21 +1595,23 @@ def events_after_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from mapreduce_google_spark.io import delete_where, read_with_deletes
 
-    tag = _tag(sf_dir, "events")
-    path = f"/tmp/mgs_events_dv_{tag}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    path = derived_dir("events_dv", sf_dir, "events")
+
+    def write(path: str) -> None:
         _events_source(spark, sf_dir).repartition(4).write.mode(
             "overwrite"
         ).parquet(path)
-        _DV_DELETED.discard(tag)
-    if tag not in _DV_DELETED:
+        _DV_DELETED.discard(path)
+
+    write_once(path, write)
+    if path not in _DV_DELETED:
         delete_where(
             spark,
             path,
             (F.col("day") == F.lit(DV_DELETE_DAY).cast("date"))
             & (F.pmod("event_id", F.lit(13)) == 0),
         )
-        _DV_DELETED.add(tag)
+        _DV_DELETED.add(path)
     return (
         read_with_deletes(spark, path)
         .groupBy("day")
@@ -1701,19 +1650,17 @@ def rolling_distinct_users_hll(
     TRUE — the t83/t84-style invariant-oracle pattern for approximate
     ops, here folded into the op itself.
     """
-    tag = _tag(sf_dir, "events")
-    path = f"/tmp/mgs_hll_daily_{tag}"
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
     )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            ev.groupBy("day")
-            .agg(F.hll_sketch_agg("user_id").alias("sketch"))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
+    path = write_once(
+        derived_dir("hll_daily", sf_dir, "events"),
+        ev.groupBy("day")
+        .agg(F.hll_sketch_agg("user_id").alias("sketch"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet,
+    )
     sketches = spark.read.parquet(path)
     days = sketches.select("day").distinct()
     lo = F.date_sub(days.day, window_days - 1)
@@ -2620,9 +2567,8 @@ def _indexed_events_path(spark: SparkSession, sf_dir: str) -> str:
     unreadable."""
     from mapreduce_google_spark.io import parquet_rows, write_parquet_bloom
 
-    tag = _tag(sf_dir, "events")
-    path = f"/tmp/mgs_events_lookup_{tag}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def write(path: str) -> None:
         src = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
@@ -2634,7 +2580,8 @@ def _indexed_events_path(spark: SparkSession, sf_dir: str) -> str:
             path,
             {"event_id": max(1000, n // 16)},
         )
-    return path
+
+    return write_once(derived_dir("events_lookup", sf_dir, "events"), write)
 
 
 def indexed_point_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2842,31 +2789,29 @@ def _ivm_chain_dir(spark: SparkSession, sf_dir: str) -> str:
     artifact per corpus."""
     from mapreduce_google_spark.io import read_snapshot
 
-    tag = _tag(sf_dir, "events")
-    root = f"/tmp/mgs_ivm_chain_{tag}_o{UPSERT_INSERT_OFFSET}"
-    view_dir = os.path.join(root, "view_v1")
-    cdc_dir = os.path.join(root, "cdc")
-    if os.path.exists(os.path.join(view_dir, "_SUCCESS")) and os.path.exists(
-        os.path.join(cdc_dir, "_SUCCESS")
-    ):
-        return root
-    snap_root = _events_snapshot_root(spark, sf_dir)
-    v1 = read_snapshot(spark, snap_root, version=1)
-    v2 = read_snapshot(spark, snap_root, version=2)
-    (
-        v1.groupBy("day")
+    def snapshot(version: int) -> DataFrame:
+        return read_snapshot(
+            spark, _events_snapshot_root(spark, sf_dir), version=version
+        )
+
+    root = derived_dir(f"ivm_chain_o{UPSERT_INSERT_OFFSET}", sf_dir, "events")
+    write_once(
+        os.path.join(root, "view_v1"),
+        lambda path: snapshot(1)
+        .groupBy("day")
         .agg(
             F.count("*").cast("long").alias("n_events"),
             F.sum(F.col("value").cast("decimal(12,2)")).alias("sum_value"),
         )
         .coalesce(1)  # per-day view: O(days) rows, metadata-sized
         .write.mode("overwrite")
-        .parquet(view_dir)
+        .parquet(path),
     )
-    (
-        snapshot_diff(
-            v1,
-            v2,
+    write_once(
+        os.path.join(root, "cdc"),
+        lambda path: snapshot_diff(
+            snapshot(1),
+            snapshot(2),
             ["event_id"],
             ["day", "value"],
             carry_old=("day", "value"),
@@ -2874,7 +2819,7 @@ def _ivm_chain_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         .where(F.col("change_type") != "unchanged")
         .write.mode("overwrite")
-        .parquet(cdc_dir)
+        .parquet(path),
     )
     return root
 

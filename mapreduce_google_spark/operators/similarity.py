@@ -1323,9 +1323,17 @@ def semantic_dedup(
     anywhere. ``n_cells`` is sized from the corpus by the caller
     (:func:`_auto_semantic_cells`), which keeps |cell| bounded.
     """
+    return _semantic_dedup(spark, sf_dir, n_cells, iters, tau)[0]
+
+
+def _semantic_dedup(
+    spark: SparkSession, sf_dir: str, n_cells: int, iters: int, tau: float
+) -> tuple[DataFrame, DataFrame]:
+    """:func:`semantic_dedup`'s dropped rows, and the cell assignment
+    (vec_id, embedding, cell_id) they come from — one k-means fit,
+    which the t145 invariant checks reuse."""
     emb = load_table(spark, sf_dir, "embeddings")
-    centroids = kmeans_fit(emb, n_cells, iters)
-    assign = _assign_cells(centroids)
+    assign = _assign_cells(kmeans_fit(emb, n_cells, iters))
     assigned = emb.select(
         "vec_id",
         "embedding",
@@ -1353,7 +1361,7 @@ def semantic_dedup(
         .where(F.col("cosine") >= tau)
     )
     w = Window.partitionBy("drop_id").orderBy("keep_id")
-    return (
+    dropped = (
         pairs.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select(
@@ -1364,6 +1372,7 @@ def semantic_dedup(
         )
         .orderBy("vec_id")
     )
+    return dropped, assigned
 
 
 def _auto_semantic_cells(n_vecs: int, target_cell: int = 500) -> int:
@@ -1414,15 +1423,8 @@ def semantic_dedup_invariants(
 
     n_vecs = parquet_rows(sf_dir, "embeddings")
     n_cells = _auto_semantic_cells(n_vecs if n_vecs is not None else 0)
-    dropped = semantic_dedup(spark, sf_dir, n_cells, iters, tau).localCheckpoint()
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = kmeans_fit(emb, n_cells, iters)
-    assign = _assign_cells(centroids)
-    assigned = emb.select(
-        "vec_id",
-        "embedding",
-        assign("embedding").getField("cell").alias("cell_id"),
-    )
+    dropped, assigned = _semantic_dedup(spark, sf_dir, n_cells, iters, tau)
+    dropped = dropped.localCheckpoint()
 
     @pandas_udf("double")
     def np_cosine(a: pd.Series, b: pd.Series) -> pd.Series:

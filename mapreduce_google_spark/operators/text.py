@@ -282,19 +282,17 @@ def pysource_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     losslessly. The Python reader is the compatibility tier (see module
     docstring); the aggregation above it is the same JVM hash-agg as T01.
     """
-    import os
-
-    from mapreduce_google_spark.io import cache_tag, write_text_dir
+    from mapreduce_google_spark.io import derived_dir, write_once, write_text_dir
     from mapreduce_google_spark.kvtext import read_kvtext
 
-    tag = cache_tag(sf_dir, "documents")
-    staged = f"/tmp/mgs_kvsrc_docs_{tag}"
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        write_text_dir(
+    staged = write_once(
+        derived_dir("kvsrc_docs", sf_dir, "documents"),
+        lambda path: write_text_dir(
             load_table(spark, sf_dir, "documents").select("text"),
-            staged,
+            path,
             num_files=4,
-        )
+        ),
+    )
     lines = read_kvtext(spark, staged)
     toks = F.filter(F.split(F.lower("key"), r"\s+"), lambda t: t != "")
     return (
@@ -351,13 +349,13 @@ def kvtext_roundtrip_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere are unrepresentable in the line format; the writer
     validates and raises on those rather than corrupting records.)
     """
+    from mapreduce_google_spark.io import derived_dir
     from mapreduce_google_spark.kvtext import read_kvtext, write_kvtext
 
     counts = word_count(spark, sf_dir).select(
         F.col("token").alias("key"), F.col("cnt").cast("string").alias("value")
     )
-    tag = sf_dir.rstrip("/").replace("/", "_")
-    out = f"/tmp/mgs_kv_roundtrip{tag}"
+    out = derived_dir("kv_roundtrip", sf_dir, "documents")
     write_kvtext(counts, out)
     return (
         read_kvtext(spark, out)

@@ -24,8 +24,11 @@ a large cluster:
 from __future__ import annotations
 
 import os
+import pathlib
 
 from pyspark.sql import SparkSession
+
+from mapreduce_google_spark.io import shared_store_path
 
 
 def _host_cpus() -> int:
@@ -138,9 +141,10 @@ def get_spark(
         # of ~128 MB rather than a few giant ones.
         "spark.sql.files.maxPartitionBytes": "134217728",
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        # bucketed tables (operators/scale.py T40) live outside the repo;
-        # bucketing pruning/reading on by default, pinned as contract
-        "spark.sql.warehouse.dir": "file:///tmp/mgs-warehouse",
+        # the warehouse lives under the store root with everything else the
+        # engine writes, never in the working directory; bucketing
+        # pruning/reading on by default, pinned as contract
+        "spark.sql.warehouse.dir": pathlib.Path(shared_store_path("warehouse")).as_uri(),
         "spark.sql.sources.bucketing.enabled": "true",
         "spark.ui.enabled": "false",
         "spark.driver.extraJavaOptions": "-Djava.security.manager=allow",

@@ -15,6 +15,9 @@ O(events).
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,7 +26,9 @@ from mapreduce_google_spark.io import (
     _ensure_read_confs,
     _normalize_events_ts,
     cache_tag,
+    derived_dir,
     load_table,
+    write_once,
 )
 from mapreduce_google_spark.operators.events import TS_FMT
 
@@ -129,13 +134,13 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_type. The result must equal the plain batch counts of the
     ORIGINAL table — the oracle the driver checks.
     """
-    import os
-
     tag = cache_tag(sf_dir, "events")
-    doubled = f"/tmp/mgs_doubled_events_{tag}"
-    if not os.path.exists(os.path.join(doubled, "_SUCCESS")):
+
+    def write(path: str) -> None:
         ev = load_table(spark, sf_dir, "events")
-        ev.union(ev).repartition(4).write.mode("overwrite").parquet(doubled)
+        ev.union(ev).repartition(4).write.mode("overwrite").parquet(path)
+
+    doubled = write_once(derived_dir("doubled_events", sf_dir, "events"), write)
     schema = spark.read.parquet(doubled).schema
     stream = _normalize_events_ts(spark.readStream.schema(schema).parquet(doubled))
     deduped = dedup_stream(stream, keys=["event_id"])
@@ -171,7 +176,8 @@ def stream_event_pairs(
     the tiny type-pair rollup happens on the materialized sink, mirroring
     T49's harness. Oracle: identical to T45's batch semantics.
     """
-    tag, staged = _staged_events_dir(spark, sf_dir)
+    tag = cache_tag(sf_dir, "events")
+    staged = _staged_dir(spark, sf_dir, "events")
     schema = spark.read.parquet(staged).schema
 
     def src() -> DataFrame:
@@ -219,8 +225,6 @@ def _store_last_batch_id(store: str) -> int:
     the store (an underscore-prefixed marker parquet ignores) lets the
     merge skip already-applied replays, making it effectively
     exactly-once."""
-    import os
-
     try:
         with open(os.path.join(store, "_BATCH_ID"), encoding="ascii") as fh:
             return int(fh.read().strip())
@@ -232,8 +236,6 @@ def _recover_store(store: str) -> None:
     """Roll back a swap interrupted between the two renames: if the
     store is missing but the rename-aside copy exists, restore it — the
     prior state is never lost (unlike rmtree-then-rename)."""
-    import os
-
     old = store + "_old"
     if not os.path.exists(store) and os.path.exists(old):
         os.rename(old, store)
@@ -246,8 +248,6 @@ def _reset_store(store: str, ckpt: str) -> None:
     ckpt) were removed, :func:`_recover_store` would resurrect the stale
     previous-run store, whose ``_BATCH_ID`` would make the batch-id skip
     drop this run's early batches (fresh checkpoints restart ids at 0)."""
-    import shutil
-
     for d in (store, store + "_old", store + "_tmp", ckpt):
         shutil.rmtree(d, ignore_errors=True)
 
@@ -257,9 +257,6 @@ def _swap_store(merged: DataFrame, store: str, batch_id: int) -> None:
     tmp → store, drop _old) and stamp the applied batch_id. A crash at
     any point leaves either the old state (recoverable via
     :func:`_recover_store`) or the new state — never neither."""
-    import os
-    import shutil
-
     tmp = store + "_tmp"
     merged.coalesce(1).write.mode("overwrite").parquet(tmp)
     with open(os.path.join(tmp, "_BATCH_ID"), "w", encoding="ascii") as fh:
@@ -273,37 +270,66 @@ def _swap_store(merged: DataFrame, store: str, batch_id: int) -> None:
     shutil.rmtree(old, ignore_errors=True)
 
 
-def _staged_events_dir(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage the events table into a multi-file /tmp directory (the file
-    stream source requires a directory; 4 files → 4 micro-batches under
-    ``maxFilesPerTrigger=1``). Returns (tag, path); idempotent per sf."""
-    import os
+def _merge_store_stream(
+    spark: SparkSession,
+    staged: str,
+    store: str,
+    delta,
+    keys: list[str],
+) -> DataFrame:
+    """Drain ``staged`` into a mergeable-state store and return the
+    store: each 1-file micro-batch contributes ``delta(batch_df)``,
+    merged into the previous store by summing every non-key column per
+    ``keys`` (all state these streams keep is additive, so merge order
+    cannot matter). The store starts empty (:func:`_reset_store`), is
+    replaced whole per batch (:func:`_swap_store`, rename-aside), and a
+    replayed batch id is skipped (:func:`_store_last_batch_id`), so an
+    at-least-once ``foreachBatch`` applies each batch exactly once."""
+    ckpt = f"{store}_ckpt"
+    _reset_store(store, ckpt)
 
-    tag = cache_tag(sf_dir, "events")
-    staged = f"/tmp/mgs_events_dir_{tag}"
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(staged)
-    return tag, staged
+    def merge(batch_df: DataFrame, batch_id: int) -> None:
+        _recover_store(store)
+        if batch_id <= _store_last_batch_id(store):
+            return  # at-least-once replay of an applied batch: skip
+        merged = delta(batch_df)
+        if os.path.exists(store):
+            merged = (
+                batch_df.sparkSession.read.parquet(store)
+                .unionByName(merged)
+                .groupBy(*keys)
+                .agg(*[F.sum(c).alias(c) for c in merged.columns if c not in keys])
+            )
+        _swap_store(merged, store, batch_id)
+
+    q = (
+        spark.readStream.schema(spark.read.parquet(staged).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return spark.read.parquet(store)
 
 
-def _staged_docs_dir(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage the documents table (ALL columns) into a multi-file /tmp
-    directory shared by every documents-driven stream. Single writer for
-    the shared path: a consumer-specific projection here once poisoned
-    the cache for full-column consumers (whoever staged first won), so
-    staging always writes the full schema and consumers project in
-    their own pipelines. Returns (tag, path); idempotent per sf."""
-    import os
-
-    tag = cache_tag(sf_dir, "documents")
-    staged = f"/tmp/mgs_docs_dir_{tag}"
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        load_table(spark, sf_dir, "documents").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(staged)
-    return tag, staged
+def _staged_dir(spark: SparkSession, sf_dir: str, table: str) -> str:
+    """Stage a source table (ALL columns) into a 4-file directory (the
+    file stream source requires a directory; 4 files → 4 micro-batches
+    under ``maxFilesPerTrigger=1``), shared by every stream over that
+    table. Staging always writes the full schema and consumers project
+    in their own pipelines: a consumer-specific projection here once
+    poisoned the cache for full-column consumers (whoever staged first
+    won). Written once per corpus version."""
+    return write_once(
+        derived_dir(f"{table}_dir", sf_dir, table),
+        lambda path: load_table(spark, sf_dir, table)
+        .repartition(4)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
 
 
 def foreachbatch_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -323,12 +349,9 @@ def foreachbatch_ingest_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the sink directory, counted per event_type — must still equal
     the plain batch counts of the source, which is the oracle.
     """
-    import os
-    import shutil
-
-    tag, staged = _staged_events_dir(spark, sf_dir)
+    staged = _staged_dir(spark, sf_dir, "events")
     schema = spark.read.parquet(staged).schema
-    out_dir = f"/tmp/mgs_fbsink_{tag}"
+    out_dir = derived_dir("fbsink", sf_dir, "events")
     ckpt = f"{out_dir}_ckpt"
     for d in (out_dir, ckpt):
         if os.path.exists(d):
@@ -378,12 +401,9 @@ def stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same copy-on-write discipline table formats (Delta/Iceberg)
     provide natively.
     """
-    import os
-    import shutil
+    staged = _staged_dir(spark, sf_dir, "documents")
 
-    tag, staged = _staged_docs_dir(spark, sf_dir)
-
-    work = f"/tmp/mgs_dedup_store_{tag}"
+    work = derived_dir("dedup_store", sf_dir, "documents")
     if os.path.exists(work):
         shutil.rmtree(work)
     schema = spark.read.parquet(staged).schema
@@ -489,47 +509,18 @@ def stream_hourly_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     running z computed per-batch would depend on arrival order). Store
     size is (types × hours), independent of event volume.
     """
-    import os
-
     from mapreduce_google_spark.operators.events import TS_FMT
 
-    tag, staged = _staged_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    store = f"/tmp/mgs_anom_store_{tag}"
-    ckpt = f"{store}_ckpt"
-    _reset_store(store, ckpt)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store)
-        if batch_id <= _store_last_batch_id(store):
-            return  # at-least-once replay of an applied batch: skip
-        delta = batch_df.groupBy(
+    hourly = _merge_store_stream(
+        spark,
+        _staged_dir(spark, sf_dir, "events"),
+        derived_dir("anom_store", sf_dir, "events"),
+        lambda batch_df: batch_df.groupBy(
             "event_type",
             F.date_format(F.date_trunc("hour", F.col("ts")), TS_FMT).alias("hour"),
-        ).agg(F.count("*").cast("long").alias("n_events"))
-        if os.path.exists(store):
-            prev = batch_df.sparkSession.read.parquet(store)
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("event_type", "hour")
-                .agg(F.sum("n_events").cast("long").alias("n_events"))
-            )
-        else:
-            merged = delta
-        _swap_store(merged, store, batch_id)
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        ).agg(F.count("*").cast("long").alias("n_events")),
+        ["event_type", "hour"],
     )
-    q.awaitTermination()
-
-    hourly = spark.read.parquet(store)
     moments = hourly.groupBy("event_type").agg(
         F.count("*").cast("double").alias("n_hours"),
         F.sum(F.col("n_events").cast("decimal(20,0)")).cast("double").alias("sc"),
@@ -572,25 +563,12 @@ def stream_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     crash at any point leaves either the old or the new state intact
     (``_swap_store``/``_recover_store``).
     """
-    import os
-
     from mapreduce_google_spark.functions.numeric import (
         money,
         one_minus,
         one_plus,
         rate,
     )
-
-    tag = cache_tag(sf_dir, "lineitem")
-    staged = f"/tmp/mgs_li_dir_{tag}"
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        load_table(spark, sf_dir, "lineitem").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(staged)
-    schema = spark.read.parquet(staged).schema
-    store = f"/tmp/mgs_q1_store_{tag}"
-    ckpt = f"{store}_ckpt"
-    _reset_store(store, ckpt)
 
     def partials(df: DataFrame) -> DataFrame:
         disc_price = money("l_extendedprice") * one_minus("l_discount")
@@ -608,41 +586,13 @@ def stream_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store)
-        if batch_id <= _store_last_batch_id(store):
-            return  # at-least-once replay of an applied batch: skip
-        delta = partials(batch_df)
-        if os.path.exists(store):
-            prev = batch_df.sparkSession.read.parquet(store)
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("l_returnflag", "l_linestatus")
-                .agg(
-                    F.sum("s_qty").alias("s_qty"),
-                    F.sum("s_price").alias("s_price"),
-                    F.sum("s_disc_price").alias("s_disc_price"),
-                    F.sum("s_charge").alias("s_charge"),
-                    F.sum("s_disc").alias("s_disc"),
-                    F.sum("n").cast("long").alias("n"),
-                )
-            )
-        else:
-            merged = delta
-        _swap_store(merged, store, batch_id)
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    state = _merge_store_stream(
+        spark,
+        _staged_dir(spark, sf_dir, "lineitem"),
+        derived_dir("q1_store", sf_dir, "lineitem"),
+        partials,
+        ["l_returnflag", "l_linestatus"],
     )
-    q.awaitTermination()
-
-    state = spark.read.parquet(store)
     return state.select(
         "l_returnflag",
         "l_linestatus",
@@ -671,53 +621,22 @@ def stream_top_tokens(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFram
     can enter it tomorrow), which is exactly why the store keeps FULL
     counts and the cut happens at read time.
     """
-    import os
-
     from mapreduce_google_spark.functions.text import tokenize
 
-    tag, staged = _staged_docs_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    store = f"/tmp/mgs_toptok_store_{tag}"
-    ckpt = f"{store}_ckpt"
-    _reset_store(store, ckpt)
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store)
-        if batch_id <= _store_last_batch_id(store):
-            return  # at-least-once replay of an applied batch: skip
-        delta = (
-            batch_df.select(
+    return (
+        _merge_store_stream(
+            spark,
+            _staged_dir(spark, sf_dir, "documents"),
+            derived_dir("toptok_store", sf_dir, "documents"),
+            lambda batch_df: batch_df.select(
                 F.explode(F.filter(tokenize("text"), lambda t: t != "")).alias(
                     "token"
                 )
             )
             .groupBy("token")
-            .agg(F.count("*").cast("long").alias("cnt"))
+            .agg(F.count("*").cast("long").alias("cnt")),
+            ["token"],
         )
-        if os.path.exists(store):
-            prev = batch_df.sparkSession.read.parquet(store)
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("token")
-                .agg(F.sum("cnt").cast("long").alias("cnt"))
-            )
-        else:
-            merged = delta
-        _swap_store(merged, store, batch_id)
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    return (
-        spark.read.parquet(store)
         .orderBy(F.col("cnt").desc(), F.col("token").asc())
         .limit(k)
     )
@@ -729,56 +648,24 @@ def stream_intradoc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source ADDITIVE state (doc/flag counts + word/2-gram/3-gram
     occurrence and distinct sums — every column a sum, every doc whole
     within one batch, so merge order cannot matter), maintained
-    crash-safe and replay-idempotent by the shared
-    ``_swap_store``/``_recover_store`` + batch-id-skip recipe; the
+    crash-safe and replay-idempotent by :func:`_merge_store_stream`; the
     micro-averaged rates are computed from merged state at drain.
     Must hash-equal batch t222.
     """
-    import os
-
     from mapreduce_google_spark.operators.textstats import (
         repetition_rollup,
         repetition_sums,
     )
 
-    tag, staged = _staged_docs_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    store = f"/tmp/mgs_rep_store_{tag}"
-    ckpt = f"{store}_ckpt"
-    _reset_store(store, ckpt)
-
-    sum_cols = ["n_docs", "n_flagged", "tw", "dw", "t2", "d2", "t3", "d3"]
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_store(store)
-        if batch_id <= _store_last_batch_id(store):
-            return  # at-least-once replay of an applied batch: skip
-        delta = repetition_sums(batch_df)
-        if os.path.exists(store):
-            prev = batch_df.sparkSession.read.parquet(store)
-            merged = (
-                prev.unionByName(delta)
-                .groupBy("source")
-                .agg(
-                    *[F.sum(c).cast("long").alias(c) for c in sum_cols]
-                )
-            )
-        else:
-            merged = delta
-        _swap_store(merged, store, batch_id)
-
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-        .writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    return repetition_rollup(
+        _merge_store_stream(
+            spark,
+            _staged_dir(spark, sf_dir, "documents"),
+            derived_dir("rep_store", sf_dir, "documents"),
+            repetition_sums,
+            ["source"],
+        )
     )
-    q.awaitTermination()
-
-    return repetition_rollup(spark.read.parquet(store))
 
 
 def stream_event_corrections(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -797,9 +684,6 @@ def stream_event_corrections(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch 0 through the sink twice. No checkpoint-side state beyond
     Spark's offsets; the table itself is the state.
     """
-    import os
-    import shutil
-
     from mapreduce_google_spark.io import partition_upsert
     from mapreduce_google_spark.operators.scale import (
         UPSERT_INSERT_OFFSET,
@@ -807,11 +691,7 @@ def stream_event_corrections(spark: SparkSession, sf_dir: str) -> DataFrame:
         _events_source,
     )
 
-    tag = cache_tag(sf_dir, "events")
-    table = f"/tmp/mgs_events_daily_stream_{tag}"
-    # offset in the staged-delta path: a cached delta from a previous
-    # process with a different UPSERT_INSERT_OFFSET must not be reused
-    staged = f"/tmp/mgs_corrections_dir_{tag}_o{UPSERT_INSERT_OFFSET}"
+    table = derived_dir("events_daily_stream", sf_dir, "events")
     ckpt = f"{table}_ckpt"
     ev = _events_source(spark, sf_dir)
     # fresh base table + staged delta every run — the stream mutates the
@@ -821,11 +701,13 @@ def stream_event_corrections(spark: SparkSession, sf_dir: str) -> DataFrame:
         if os.path.exists(d):
             shutil.rmtree(d)
     ev.repartition("day").write.mode("overwrite").partitionBy("day").parquet(table)
-    if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-        # 3 files → 3 micro-batches under maxFilesPerTrigger=1
-        _corrections_delta(ev).repartition(3).write.mode("overwrite").parquet(
-            staged
-        )
+    # offset in the staged-delta path: a cached delta from a previous
+    # process with a different UPSERT_INSERT_OFFSET must not be reused;
+    # 3 files → 3 micro-batches under maxFilesPerTrigger=1
+    staged = write_once(
+        derived_dir(f"corrections_dir_o{UPSERT_INSERT_OFFSET}", sf_dir, "events"),
+        _corrections_delta(ev).repartition(3).write.mode("overwrite").parquet,
+    )
     schema = spark.read.parquet(staged).schema
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:

@@ -5,10 +5,10 @@ The driver hands the registry its OWN SparkSession
 static confs — in particular ``spark.sql.warehouse.dir``, which is a
 SharedState (per-JVM) conf that CANNOT be changed after the first
 session exists. That is exactly how t40 passed 700+ in-process tests
-and died in the driver (VERDICT r11 item 1: the orphan-cleanup guard
+and died in the driver (VERDICT r11 item 1: its managed-table cleanup
 looked in the engine's warehouse while the driver's session resolved
-the default one). This script re-runs the catalog/warehouse-touching
-registry entries on a DEFAULT-conf session and oracle-checks them; the
+the default one). This script re-runs the catalog-touching registry
+entries on a DEFAULT-conf session and oracle-checks them; the
 in-process suite can never exercise this because its JVM already pinned
 the engine warehouse. Launched by ``tests/test_foreign_session.py``
 with cwd set to a temp dir, so the default warehouse lands there.
@@ -30,7 +30,7 @@ def main() -> int:
     import duckdb
     from pyspark.sql import SparkSession
 
-    from mapreduce_google_spark.io import TABLES, cache_tag
+    from mapreduce_google_spark.io import TABLES, shared_store_root
     from mapreduce_google_spark.queries import REGISTRY
     from tests.oracle import assert_matches_oracle
 
@@ -47,22 +47,10 @@ def main() -> int:
         .getOrCreate()
     )
     wh = spark.conf.get("spark.sql.warehouse.dir")
-    assert "mgs-warehouse" not in wh, (
+    assert shared_store_root() not in wh, (
         f"probe session inherited the engine warehouse conf ({wh}) — "
         "it must resolve Spark's default to reproduce the driver"
     )
-
-    # replant the exact r11 failure: an orphan managed-table directory
-    # (a previous session's leftover) sitting in THIS session's default
-    # warehouse, where a warehouse-blind cleanup will never look
-    from mapreduce_google_spark.operators.scale import _warehouse_path_from_uri
-
-    wh_path = _warehouse_path_from_uri(wh)
-    tag = cache_tag(sf_dir, "orders", "customer")
-    orphan = os.path.join(wh_path, f"mgs_b_orders_{tag}")
-    os.makedirs(orphan, exist_ok=True)
-    with open(os.path.join(orphan, "stale-debris.parquet"), "w") as fh:
-        fh.write("not parquet — simulates a crashed writer's leftovers")
 
     duck = duckdb.connect()
     for t in TABLES:

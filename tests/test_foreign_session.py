@@ -2,9 +2,7 @@
 warehouse-touching registry entries must be green on a SparkSession
 created WITHOUT the engine's static confs — the session shape the
 driver actually hands us. ``spark.sql.warehouse.dir`` is per-JVM
-(SharedState), so this necessarily runs in a subprocess; the probe also
-replants the exact r11 t40 failure (an orphan managed-table dir in the
-default warehouse) before running the queries."""
+(SharedState), so this necessarily runs in a subprocess."""
 
 from __future__ import annotations
 
@@ -14,13 +12,13 @@ import sys
 
 from tests.conftest import SF_DIR
 
-#: every registry entry that touches the catalog or the warehouse —
-#: t40 writes MANAGED bucketed tables (the r11 driver-red), t120/t22's
-#: band table and t223's fingerprint store go through
-#: io.adopt_or_build_bucketed_table (external LOCATION under /tmp +
-#: CREATE TABLE / saveAsTable), and t12's default path reads
-#: io.bucketed_fact_table stores (same machinery; r13). Grep audit for
-#: completeness lives in test_probe_list_covers_catalog_touchers below.
+#: every registry entry that touches the catalog — t40 (the r11
+#: driver-red, when it wrote MANAGED tables) and t12's default path read
+#: io.bucketed_fact_table stores, t120/t22's band table and t223's
+#: fingerprint store go through io.adopt_or_build_bucketed_table
+#: (external LOCATION under io.shared_store_root + CREATE TABLE). Grep
+#: audit for completeness lives in test_probe_list_covers_catalog_touchers
+#: below.
 CATALOG_TOUCHING = (
     "t40_bucketed_segment_revenue",
     "t120_lsh_precision_invariants",
@@ -46,7 +44,7 @@ RUNTIME_CONF_SENSITIVE = (
 def test_catalog_queries_green_on_default_session(tmp_path):
     """Run the probe with cwd=tmp_path so Spark's DEFAULT warehouse
     resolves to tmp_path/spark-warehouse — exactly the driver's session
-    shape, plus a pre-planted orphan table dir (the r11 red)."""
+    shape."""
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     probe = os.path.join(repo, "tests", "foreign_session_probe.py")
     env = dict(os.environ, PYTHONPATH=repo)
@@ -64,8 +62,10 @@ def test_catalog_queries_green_on_default_session(tmp_path):
     )
     assert '"ok": true' in out.stdout
     # the probe really used the default warehouse (sanity that the test
-    # tested what it claims)
+    # tested what it claims), and no entry left a managed table there:
+    # every store lives under io.shared_store_root
     assert os.path.isdir(tmp_path / "spark-warehouse")
+    assert not os.listdir(tmp_path / "spark-warehouse")
 
 
 def test_probe_list_covers_catalog_touchers():

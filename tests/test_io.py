@@ -156,7 +156,7 @@ def test_read_text_dir_num_mappers(spark, tmp_path):
 
 
 def test_cache_tag_fingerprints_source(spark, tmp_path):
-    """/tmp-cache keys must change when the source is regenerated at the
+    """Derivation cache keys must change when the source is regenerated at the
     SAME path (stale-cache bug class) and differ across same-basename
     dirs (collision bug class)."""
     import shutil

@@ -45,7 +45,7 @@ def test_maintained_view_equals_recomputation(spark, sf_dir):
 
 def test_maintenance_never_reads_the_merged_table(spark, sf_dir):
     """The plan must scan the SOURCE events parquet only — no
-    /tmp/mgs_events_daily_* (the materialized upserted table) and no
+    mgs_events_daily_* directory (the materialized upserted table) and no
     join against a second corpus-sized relation; the delta contribution
     comes from one filtered day slice."""
     plan = formatted_plan(maintained_daily_revenue(spark, sf_dir))

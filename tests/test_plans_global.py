@@ -96,14 +96,15 @@ def test_plan_has_no_scale_antipatterns(name, spark, sf_dir):
 #      default-flips) the scheduled round.
 
 #: builder -> guard parameter whose default must be ON (not None); a
-#: required parameter has no default and counts as ON (semantic_dedup's
-#: cell count, which its caller sizes from the corpus)
+#: required parameter has no default and counts as ON (the cell count
+#: of _semantic_dedup, the body of semantic_dedup, which its caller
+#: sizes from the corpus)
 _BANDED_GUARDED = {
     "minhash_lsh_pairs": "max_bucket",
     "minhash_lsh_pairs_from_bands": "max_bucket",
     "simhash_near_dup_pairs": "max_bucket",
     "embedding_near_dup_pairs": "max_bucket",
-    "semantic_dedup": "n_cells",
+    "_semantic_dedup": "n_cells",
 }
 
 #: builder -> (guard param that EXISTS, reason the default is still

@@ -147,25 +147,30 @@ def test_oracles_are_nonvacuous_at_driver_scale():
 
 def test_claimed_test_references_exist():
     """Every ``tests/xxx.py`` (optionally ``::test_name``) cited in
-    package source — docstrings claiming "plan-gated in tests/..." and
-    the like — must name a test file that exists and, when a specific
-    test is named, a function defined in it. Pins the r9 t239 failure
-    class (a docstring asserting a gate that was never written) forever
-    (VERDICT r9 item 8). Likewise every ``tools/<name>.py`` and root
-    ``<NAME>.json`` cited must exist: a measurement note names the round
-    and the numbers, not a script or artifact no longer in the tree."""
+    package source, ``COVERAGE.md`` or ``README.md`` — docstrings
+    claiming "plan-gated in tests/..." and the like — must name a test
+    file that exists and, when a specific test is named, a function
+    defined in it. Pins the r9 t239 failure class (a docstring asserting
+    a gate that was never written) forever (VERDICT r9 item 8).
+    Likewise every ``tools/<name>.py`` and root ``<NAME>.json`` cited
+    must exist: a measurement note names the round and the numbers, not
+    a script or artifact no longer in the tree."""
     import glob
     import os
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pkg = os.path.join(repo, "mapreduce_google_spark")
+    sources = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True) + [
+        os.path.join(repo, "COVERAGE.md"),
+        os.path.join(repo, "README.md"),
+    ]
     ref = re.compile(r"(tests/[A-Za-z0-9_]+\.py)(::([A-Za-z0-9_]+))?")
     artifact = re.compile(
         r"(?<![\w/.-])"
         r"(tools/[A-Za-z0-9_]+\.py|[A-Z][A-Z0-9]*(?:_[A-Za-z0-9*]+)*\.json)"
     )
     problems = []
-    for src in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+    for src in sources:
         text = open(src).read()
         for m in ref.finditer(text):
             # reference-repo citations ("reference ``tests/test_worker_08
@@ -182,6 +187,34 @@ def test_claimed_test_references_exist():
         for m in artifact.finditer(text):
             if not os.path.exists(os.path.join(repo, m.group(1))):
                 problems.append(f"{src}: cites missing {m.group(1)}")
+    assert not problems, "\n".join(problems)
+
+
+def test_package_source_names_no_temp_paths():
+    """Everything the engine writes lives under ``io.shared_store_root``
+    (per-user, mode 0700, owner-checked): stores, stagings, stream
+    scratch and the warehouse, named through ``io.derived_dir`` or
+    ``io.shared_store_path``. A path under the shared temp dir would let
+    two users, or two corpus versions, collide, so no string or
+    f-string literal in package source may name one — neither
+    ``/tmp/...`` nor a ``file:///tmp`` URI."""
+    import ast
+    import glob
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "mapreduce_google_spark")
+    temp_path = re.compile(r"(?<![\w.-])/tmp\b")
+    problems = []
+    for src in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        for node in ast.walk(ast.parse(open(src).read(), src)):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and temp_path.search(node.value)
+            ):
+                rel = os.path.relpath(src, repo)
+                problems.append(f"{rel}:{node.lineno}: {node.value.strip()[:70]!r}")
     assert not problems, "\n".join(problems)
 
 

@@ -184,14 +184,14 @@ def test_snapshot_totals_recovers_from_crash_after_v1(spark, sf_dir):
     source."""
     import shutil
 
-    from mapreduce_google_spark.io import cache_tag
     from mapreduce_google_spark.operators.scale import (
+        _events_snapshot_root,
         _events_source,
         snapshot_version_totals,
     )
 
-    root = f"/tmp/mgs_events_snapshots_{cache_tag(sf_dir, 'events')}"
-    shutil.rmtree(root, ignore_errors=True)
+    root = _events_snapshot_root(spark, sf_dir)
+    shutil.rmtree(root)
     versioned_write(_events_source(spark, sf_dir), root)  # simulated crash point
     rows = snapshot_version_totals(spark, sf_dir).collect()
     assert [r["version"] for r in rows] == [1, 2]
@@ -667,24 +667,6 @@ def test_vacuum_reclaims_unparseable_legacy_claims_by_age(spark, tmp_path):
     assert not os.path.exists(os.path.join(root, "v=2"))
     # the freed number is allocatable again
     assert versioned_write(spark.range(1).selectExpr("id AS n"), root) == 2
-
-
-def test_warehouse_path_from_uri_decodes_and_strips_scheme():
-    """Percent-encoded warehouse URIs (paths with spaces) must decode,
-    or the orphan-location cleanup misses the real directory — the t40
-    failure class re-opened for encoded paths."""
-    from mapreduce_google_spark.operators.scale import _warehouse_path_from_uri
-
-    assert (
-        _warehouse_path_from_uri("file:/data/my%20project/spark-warehouse")
-        == "/data/my project/spark-warehouse"
-    )
-    assert (
-        _warehouse_path_from_uri("file:///tmp/mgs-warehouse")
-        == "/tmp/mgs-warehouse"
-    )
-    assert _warehouse_path_from_uri("/plain/path") == "/plain/path"
-    assert _warehouse_path_from_uri("s3a://bucket/wh") == "s3a://bucket/wh"
 
 
 def test_dead_manifest_lock_is_broken_automatically(spark, tmp_path):

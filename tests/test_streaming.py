@@ -176,10 +176,9 @@ def test_stream_dedup_actually_drops_redeliveries(spark, sf_dir):
     total = sum(r.n_events for r in out.collect())
     assert total == n_orig, (total, n_orig)
     # doubled copy really is doubled
-    from mapreduce_google_spark.io import cache_tag
+    from mapreduce_google_spark.io import derived_dir
 
-    tag = cache_tag(sf_dir, "events")
-    doubled = spark.read.parquet(f"/tmp/mgs_doubled_events_{tag}")
+    doubled = spark.read.parquet(derived_dir("doubled_events", sf_dir, "events"))
     assert doubled.count() == 2 * n_orig
 
 
@@ -234,13 +233,15 @@ def test_transform_with_state_counts_match_batch(spark, sf_dir):
         reason="transformWithStateInPandas needs protobuf (absent here); "
         "operator is exercised on protobuf-equipped clusters",
     )
+    from mapreduce_google_spark.io import cache_tag
     from mapreduce_google_spark.streaming.jobs import (
-        _staged_events_dir,
+        _staged_dir,
         run_available_now,
     )
     from mapreduce_google_spark.streaming.stateful import tws_user_event_counts
 
-    tag, staged = _staged_events_dir(spark, sf_dir)
+    tag = cache_tag(sf_dir, "events")
+    staged = _staged_dir(spark, sf_dir, "events")
     schema = spark.read.parquet(staged).schema
     stream = (
         spark.readStream.schema(schema)
@@ -343,14 +344,11 @@ def test_stale_prior_run_store_not_resurrected(spark, sf_dir):
     ids at 0), merging stale counts into the result."""
     import os
 
+    from mapreduce_google_spark.io import derived_dir
     from mapreduce_google_spark.operators.events import hourly_anomalies
-    from mapreduce_google_spark.streaming.jobs import (
-        _staged_events_dir,
-        stream_hourly_anomalies,
-    )
+    from mapreduce_google_spark.streaming.jobs import stream_hourly_anomalies
 
-    tag, _ = _staged_events_dir(spark, sf_dir)
-    store = f"/tmp/mgs_anom_store_{tag}"
+    store = derived_dir("anom_store", sf_dir, "events")
     poison = store + "_old"
     # plant a poisoned previous-run store: bogus rows + batch_id far past
     # anything the fresh run will produce

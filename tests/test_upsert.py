@@ -69,8 +69,7 @@ def test_t225_is_idempotent_and_keeps_other_days_untouched(spark, sf_dir):
 
     first = event_corrections_upsert(spark, sf_dir).collect()
 
-    tag = scale._tag(sf_dir, "events")
-    path = f"/tmp/mgs_events_daily_{tag}_o{UPSERT_INSERT_OFFSET}"
+    path = scale._events_daily_upserted_path(spark, sf_dir)
     other_days = {
         d: _mtimes(path, os.path.basename(d))
         for d in glob.glob(os.path.join(path, "day=*"))
@@ -78,7 +77,7 @@ def test_t225_is_idempotent_and_keeps_other_days_untouched(spark, sf_dir):
     }
     assert other_days
 
-    scale._UPSERTED.discard(tag)  # force a real re-application
+    scale._UPSERTED.discard(path)  # force a real re-application
     second = event_corrections_upsert(spark, sf_dir).collect()
     assert second == first
     for d, before in other_days.items():

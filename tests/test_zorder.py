@@ -102,9 +102,9 @@ def test_t224_box_prunes_rowgroups_at_sf01(spark):
     query itself builds."""
     sf_dir = "/root/testdata/sf0.1"
     zordered_box_revenue(spark, sf_dir).collect()  # ensure layout exists
-    from mapreduce_google_spark.operators.scale import _tag
+    from mapreduce_google_spark.operators.scale import _zordered_lineitem_path
 
-    path = f"/tmp/mgs_zorder_lineitem_{_tag(sf_dir, 'lineitem')}"
+    path = _zordered_lineitem_path(spark, sf_dir)
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
     audit = rowgroup_skipping_audit(
         path,
