@@ -10,6 +10,7 @@ tables plus thin text-dir helpers that reproduce the reference surface.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 
@@ -412,11 +413,59 @@ def derived_dir(kind: str, sf_dir: str, *tables: str) -> str:
     return shared_store_path(f"mgs_{kind}_{cache_tag(sf_dir, *tables)}")
 
 
+@contextlib.contextmanager
+def exclusive(lock_path: str, wait_s: float | None):
+    """Hold an exclusive ``flock`` on ``lock_path`` for the ``with``
+    body: the one lock of every writer in the package (store builds,
+    :func:`write_once` stagings, the snapshot manifest and version
+    claims, the point-index refresh).
+
+    Waits up to ``wait_s`` seconds (``None``: until the lock is free,
+    ``0``: one try), then raises :class:`TimeoutError`. The kernel drops
+    the lock when its holder's process dies, so a crashed writer never
+    blocks the next one and nothing has to prove a holder dead. Each
+    open file description locks on its own, so threads of one process
+    serialize too (POSIX record locks would not: they belong to the
+    whole process, and closing any descriptor of the file drops them).
+    Never unlink a lock file another writer may open: a waiter that
+    opened the path before the unlink would lock an orphaned inode."""
+    import fcntl
+    import time
+
+    fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o600)
+    try:
+        deadline = None if wait_s is None else time.monotonic() + wait_s
+        while True:
+            try:
+                fcntl.flock(
+                    fd, fcntl.LOCK_EX | (0 if deadline is None else fcntl.LOCK_NB)
+                )
+                break
+            except BlockingIOError:
+                if time.monotonic() >= deadline:
+                    raise TimeoutError(
+                        f"{lock_path} held by another writer for >{wait_s:g}s"
+                    ) from None
+                time.sleep(0.05)
+        yield
+    finally:
+        os.close(fd)
+
+
 def write_once(path: str, write) -> str:
     """Run ``write(path)`` unless ``path`` holds a committed Spark write
-    (its ``_SUCCESS`` marker); return ``path``."""
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write(path)
+    (its ``_SUCCESS`` marker); return ``path``. The check is repeated
+    under :func:`exclusive` on ``{path}.lock``, so of two processes on
+    one staging the second waits and then reads the first one's
+    directory. A writer killed halfway leaves no ``_SUCCESS``, and the
+    next one overwrites its torn directory: ``write`` must write with
+    ``mode("overwrite")``."""
+    done = os.path.join(path, "_SUCCESS")
+    if not os.path.exists(done):
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with exclusive(path + ".lock", None):
+            if not os.path.exists(done):
+                write(path)
     return path
 
 
@@ -445,59 +494,6 @@ def _read_bucket_spec(path: str) -> dict | None:
     except (OSError, ValueError):
         return None
     return spec if isinstance(spec, dict) else None
-
-
-def _sweep_stranded_bucket_stores(path: str, min_age_s: float = 600.0) -> None:
-    """Remove sibling ``{base}_k*`` directories that carry NO valid
-    spec sidecar — stores materialized under a retired suffix scheme
-    (``_k{N}`` pre-r12, ``_k{N}_{cols}`` r12) can never be adopted
-    again and would otherwise accumulate as junk forever (VERDICT r12
-    missing #2). Sidecar-bearing siblings are other LIVE specs of the
-    same base (different count/columns) and are kept. Age floor: a
-    sidecar-less sibling younger than ``min_age_s`` is skipped — a
-    concurrent peer building a different spec stamps its sidecar LAST,
-    and sweeping its half-written files out from under it would fail
-    that build (same TOCTOU family as vacuum, io vacuum retention
-    floor).
-
-    The age floor alone is NOT enough for long builds (ADVICE r13):
-    Spark stages output under ``_temporary/`` subtrees, so a sibling's
-    TOP-LEVEL mtime goes stale minutes into a still-running job and the
-    sweep would rmtree the live build out from under its writer. So a
-    sidecar-less sibling whose ``{sibling}.build.lock`` has a holder
-    not provably dead (live same-host pid, foreign host, or a fresh
-    empty lock) is always skipped; :func:`_break_dead_holder_lock`
-    doubles as the liveness probe and reclaims truly dead locks on the
-    way through."""
-    import os
-    import re
-    import shutil
-    import time
-
-    parent, current = os.path.dirname(path), os.path.basename(path)
-    m = re.match(r"^(.*)_k\d+", current)
-    if m is None or not os.path.isdir(parent):
-        return
-    sibling_re = re.compile(rf"^{re.escape(m.group(1))}_k\d+")
-    for entry in os.listdir(parent):
-        full = os.path.join(parent, entry)
-        try:
-            young = time.time() - os.path.getmtime(full) < min_age_s
-        except OSError:
-            continue  # raced with a concurrent sweep/unlink
-        if (
-            entry != current
-            and sibling_re.match(entry)
-            and not young
-            and os.path.isdir(full)
-            and _read_bucket_spec(full) is None
-        ):
-            sibling_lock = full + ".build.lock"
-            if os.path.exists(sibling_lock) and not _break_dead_holder_lock(
-                sibling_lock, empty_age_s=min_age_s
-            ):
-                continue  # a live/foreign builder owns this sibling
-            shutil.rmtree(full, ignore_errors=True)
 
 
 #: (applicationId, bucket count) of each SparkContext that has built
@@ -569,33 +565,25 @@ def adopt_or_build_bucketed_table(
        write; it is bucketed+sorted via :func:`write_parquet` and the
        sidecar is stamped last (a crash mid-build leaves no sidecar →
        the next caller rebuilds instead of adopting a torn store).
-       Builds are SERIALIZED by a ``{path}.build.lock`` acquired by
-       atomic hard-link with the ``host:pid`` payload already in place
-       (r14; the r8 shared-cache lesson — one writer per _SUCCESS-gated
-       store): concurrent losers wait up to ``build_wait_s`` and adopt
-       the winner's files; dead same-host holders are broken via the
-       manifest-lock protocol, and a held lock is never observably
-       empty, so the empty-age breaker cannot displace a slow winner.
+       Builds are SERIALIZED by :func:`exclusive` on
+       ``{path}.build.lock`` (one writer per _SUCCESS-gated store):
+       concurrent callers wait up to ``build_wait_s`` and then adopt
+       the winner's files. A builder that died released the lock with
+       its process, and the next one clears its torn directory.
 
-    Stores stranded under a RETIRED suffix scheme next to ``path`` are
-    swept (:func:`_sweep_stranded_bucket_stores`). This function is what
-    makes the materialized LSH band table and the fingerprint store cost
-    one signature pass per CORPUS VERSION, not one per session (with a
-    persistent metastore case 2 never fires).
+    This function is what makes the materialized LSH band table and
+    the fingerprint store cost one signature pass per CORPUS VERSION,
+    not one per session (with a persistent metastore case 2 never
+    fires).
     """
     import json
-    import os
     import shutil
-    import socket
-    import time
-    import uuid
 
     if num_buckets is None:
         num_buckets = store_bucket_count(spark)
     suffix = bucket_table_suffix(num_buckets, bucket_cols)
     name = f"{name}{suffix}"
     path = f"{path.rstrip('/')}{suffix}"
-    _sweep_stranded_bucket_stores(path)
     want_spec = {"num_buckets": num_buckets, "bucket_cols": list(bucket_cols)}
 
     def _try_adopt() -> bool:
@@ -636,71 +624,32 @@ def adopt_or_build_bucketed_table(
     if _try_adopt():
         return name
 
-    # Build path — SINGLE WRITER enforced by a link-atomic build lock
-    # (the r8 shared-cache lesson: any _SUCCESS-gated shared store needs
-    # exactly one writer; two sessions racing write_parquet at one path
-    # corrupt each other's commit). Losers wait and ADOPT the winner's
-    # files; a dead same-host holder is broken automatically; a crash
-    # after write but before the sidecar stamp leaves an unadoptable dir
-    # that the next locked builder clears and rebuilds.
-    lock = path + ".build.lock"
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    me = f"{socket.gethostname()}:{os.getpid()}"
-    deadline = time.time() + build_wait_s
-    while True:
-        if _try_adopt():
-            return name
-        # Acquire by HARD LINK, not O_EXCL+write: the payload is staged
-        # into a private temp file first and linked to the lock path in
-        # one atomic step, so a held lock is NEVER observably empty.
-        # Under the old two-step protocol a winner stalled >10s between
-        # the O_EXCL create and the payload write looked like a crash
-        # leftover to the empty-age breaker — the lock was broken, a
-        # second writer entered, and the displaced winner's finally then
-        # unlinked the NEW holder's lock, cascading to a third writer
-        # (ADVICE r13). Empty-age breaking below now only ever fires on
-        # true pre-r14 crash leftovers.
-        staged = f"{lock}.{uuid.uuid4().hex[:12]}.tmp"
-        with open(staged, "w") as fh:
-            fh.write(me)
+    lock = path + ".build.lock"
+    with contextlib.ExitStack() as held:
         try:
-            os.link(staged, lock)
-            acquired = True
-        except FileExistsError:
-            acquired = False
-        finally:
-            os.remove(staged)
-        if not acquired:
-            if not _break_dead_holder_lock(lock, empty_age_s=10.0):
-                if time.time() > deadline:
-                    raise RuntimeError(
-                        f"bucketed-store build lock {lock} held by a live "
-                        f"or foreign-host builder for >{build_wait_s:.0f}s"
-                    )
-                time.sleep(0.1)
-            continue
-        try:
-            if _try_adopt():  # winner finished in the link() race window
-                return name
-            if os.path.exists(path):  # unadoptable leftovers (torn build)
-                shutil.rmtree(path, ignore_errors=True)
-            write_parquet(
-                build().repartition(num_buckets, *bucket_cols),
-                path,
-                bucket_table=name,
-                bucket_cols=bucket_cols,
-                num_buckets=num_buckets,
-            )
-            tmp = os.path.join(path, _BUCKET_SPEC_FILE + ".tmp")
-            with open(tmp, "w") as fh:
-                json.dump({**want_spec, "version": 2}, fh)
-            os.replace(tmp, os.path.join(path, _BUCKET_SPEC_FILE))
+            held.enter_context(exclusive(lock, build_wait_s))
+        except TimeoutError:
+            raise RuntimeError(
+                f"bucketed-store build lock {lock} held by a live builder "
+                f"for >{build_wait_s:.0f}s"
+            ) from None
+        if _try_adopt():  # the lock's previous holder built it
             return name
-        finally:
-            try:
-                os.remove(lock)
-            except FileNotFoundError:  # pragma: no cover - defensive
-                pass
+        if os.path.exists(path):  # unadoptable leftovers (torn build)
+            shutil.rmtree(path, ignore_errors=True)
+        write_parquet(
+            build().repartition(num_buckets, *bucket_cols),
+            path,
+            bucket_table=name,
+            bucket_cols=bucket_cols,
+            num_buckets=num_buckets,
+        )
+        tmp = os.path.join(path, _BUCKET_SPEC_FILE + ".tmp")
+        with open(tmp, "w") as fh:
+            json.dump({**want_spec, "version": 2}, fh)
+        os.replace(tmp, os.path.join(path, _BUCKET_SPEC_FILE))
+        return name
 
 
 def bucketed_fact_table(
@@ -964,158 +913,24 @@ def _versions_manifest(root: str) -> str:
     return os.path.join(root, "_versions.json")
 
 
-def _break_dead_holder_lock(lock: str, empty_age_s: float | None = None) -> bool:
-    """Remove ``lock`` iff it is provably stale: its recorded
-    ``host:pid`` holder is a same-host process that no longer exists,
-    or — when ``empty_age_s`` is given — its payload is unparseable
-    (a crash between the O_EXCL create and the payload write, or a
-    pre-payload legacy file) and the file is at least that old. Foreign
-    hosts and alive-under-another-uid holders are always left alone
-    (False). Shared by the point-index refresh lock
-    (``operators/scale.py``), the manifest lock and the snapshot claim
-    sweep — lives here because ``io`` is the dependency root.
-
-    The check-then-remove runs under a sibling ``.breaker`` O_EXCL
-    mutex with a RE-READ inside: without it two waiters can both
-    observe the dead holder, the first breaks the lock and re-acquires,
-    and the second's ``os.remove`` then unlinks the new holder's LIVE
-    lock — two processes inside the critical section (review r12). A
-    breaker leaked by a crash mid-break is itself swept by age (>10s;
-    the break is a microseconds-scale operation)."""
-    import socket
-    import time
-
-    def _stale() -> bool:
-        try:
-            payload = open(lock).read().strip()
-        except OSError:
-            return False  # vanished → nothing to break
-        host, _, pid_s = payload.partition(":")
-        if pid_s.isdigit():
-            if host != socket.gethostname():
-                return False
-            try:
-                os.kill(int(pid_s), 0)
-            except ProcessLookupError:
-                return True
-            except PermissionError:
-                return False  # alive under another uid
-            return False  # alive
-        if empty_age_s is None:
-            return False
-        try:
-            return time.time() - os.path.getmtime(lock) >= empty_age_s
-        except OSError:
-            return False
-
-    if not _stale():
-        return False
-    breaker = lock + ".breaker"
-    try:
-        bfd = os.open(breaker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        try:  # a breaker crashed mid-break: sweep its mutex by age
-            if time.time() - os.path.getmtime(breaker) > 10:
-                os.remove(breaker)
-        except OSError:
-            pass
-        return False  # someone else is breaking — let the caller retry
-    try:
-        os.close(bfd)
-        if not _stale():  # re-verify: the lock may have changed hands
-            return False
-        try:
-            os.remove(lock)
-        except OSError:
-            return False
-        return True
-    finally:
-        try:
-            os.remove(breaker)
-        except OSError:
-            pass
-
-
-def _sweep_dead_claims(root: str) -> list[int]:
-    """Reclaim ``v=N.claim`` markers whose holder is provably dead
-    (VERDICT r11 item 5): a publisher that crashes between claiming a
-    number and its ``finally`` leaves a claim that blocks that version
-    number forever — ``_next_version`` correctly skips it, but without
-    this sweep only an explicit vacuum ever reclaims it. Runs at
-    allocation time (cheap: one listdir + one /proc probe per stale
-    claim). Claims with live, foreign-host, or unreadable holders are
-    left alone — pre-payload legacy claims age out via vacuum. Returns
-    the reclaimed version numbers."""
-    import re as _re
-
-    freed: list[int] = []
-    if not os.path.isdir(root):
-        return freed
+def _held_claims(root: str) -> set[int]:
+    """Version numbers whose ``v=N.claim`` a live publisher holds. A
+    claim nobody holds belongs to a publisher that died (or committed
+    and died before removing it); it is removed here. The caller holds
+    the manifest lock, under which alone claims are taken and removed,
+    so the non-blocking try cannot race a publisher taking its claim."""
+    held: set[int] = set()
     for name in os.listdir(root):
-        m = _re.fullmatch(r"v=(\d+)\.claim", name)
-        if m and _break_dead_holder_lock(os.path.join(root, name)):
-            freed.append(int(m.group(1)))
-    return freed
-
-
-class _manifest_lock:
-    """O_EXCL critical section around the versions-manifest
-    read-modify-replace — held for microseconds (pure metadata), shared
-    by publish and vacuum so neither can swap away the other's commit
-    (ADVICE r11). The lock records ``host:pid``; a holder that crashed
-    on THIS host is broken automatically (same dead-holder protocol as
-    the point-index refresh lock), so only a live or foreign-host
-    holder can make the next taker fail after ~5s naming the file."""
-
-    def __init__(self, root: str):
-        self._lock = _versions_manifest(root) + ".lock"
-        self._fd: int | None = None
-
-    def __enter__(self):
-        import socket
-        import time
-
-        me = f"{socket.gethostname()}:{os.getpid()}"
-        for _ in range(500):
-            try:
-                self._fd = os.open(
-                    self._lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY
-                )
-                try:
-                    os.write(self._fd, me.encode())
-                except BaseException:
-                    # a failed payload write (ENOSPC…) must not leak the
-                    # fd or leave an empty lock stalling every taker for
-                    # the 10s empty-age floor (ADVICE r12)
-                    os.close(self._fd)
-                    self._fd = None
-                    try:
-                        os.remove(self._lock)
-                    except FileNotFoundError:  # pragma: no cover
-                        pass
-                    raise
-                return self
-            except FileExistsError:
-                # break a provably-dead same-host holder immediately; a
-                # zero-byte lock (crash between create and payload
-                # write) falls back to age — live holders hold this for
-                # microseconds, so >10s empty means crashed
-                if _break_dead_holder_lock(self._lock, empty_age_s=10.0):
-                    continue
-                time.sleep(0.01)
-        raise RuntimeError(
-            f"snapshot manifest lock {self._lock} held for >5s — a crashed "
-            "publisher on another host left it behind; delete the file "
-            "and retry"
-        )
-
-    def __exit__(self, *exc):
-        os.close(self._fd)
+        m = re.fullmatch(r"v=(\d+)\.claim", name)
+        if not m:
+            continue
+        claim = os.path.join(root, name)
         try:
-            os.remove(self._lock)
-        except FileNotFoundError:  # pragma: no cover - defensive
-            pass
-        return False
+            with exclusive(claim, 0):
+                os.remove(claim)
+        except TimeoutError:
+            held.add(int(m.group(1)))
+    return held
 
 
 def list_versions(root: str) -> list[int]:
@@ -1132,20 +947,18 @@ def list_versions(root: str) -> list[int]:
 
 
 def _next_version(root: str) -> int:
-    """Next unclaimed snapshot version: 1 + the max over the committed
-    manifest AND any on-disk ``v=N`` directory or ``v=N.claim`` marker.
-    Orphan directories from crashed writers must be SKIPPED, never
-    collided with — allocating from the manifest alone meant one
-    crashed publish bricked every later publish (``mode("error")`` on
-    the orphan dir) until a vacuum swept it."""
-    import re
-
-    taken = set(list_versions(root))
-    if os.path.isdir(root):
-        for name in os.listdir(root):
-            m = re.fullmatch(r"v=(\d+)(\.claim)?", name)
-            if m:
-                taken.add(int(m.group(1)))
+    """Next free snapshot version: 1 + the max over the committed
+    manifest, every on-disk ``v=N`` directory and every held
+    ``v=N.claim``; the caller holds the manifest lock. Orphan
+    directories from crashed writers must be SKIPPED, never collided
+    with — allocating from the manifest alone meant one crashed publish
+    bricked every later publish (``mode("error")`` on the orphan dir)
+    until a vacuum swept it."""
+    taken = set(list_versions(root)) | _held_claims(root)
+    for name in os.listdir(root):
+        m = re.fullmatch(r"v=(\d+)", name)
+        if m:
+            taken.add(int(m.group(1)))
     return (max(taken) + 1) if taken else 1
 
 
@@ -1162,54 +975,37 @@ def versioned_write(df: DataFrame, root: str) -> int:
     reclaimable by a vacuum sweep, SKIPPED by the next publisher's
     version allocator — never a torn table, never a bricked store.
 
-    Concurrent publishers are safe: version numbers are allocated with
-    an O_EXCL ``v=N.claim`` marker stamped ``host:pid`` (losers recompute
-    and take the next number; claims whose holder is provably dead are
-    swept at allocation so a crashed publisher never bricks a number —
-    VERDICT r11 item 5), and the manifest read-modify-replace runs under
-    a tiny ``_versions.lock`` critical section (pure metadata,
-    microseconds) so a slow writer cannot swap away a faster writer's
-    commit. A publisher that crashes INSIDE the manifest swap leaves the
-    lock behind; the next publisher fails after ~5s with a message
-    naming the file to delete.
+    Concurrent publishers are safe. Under the manifest lock
+    (:func:`exclusive` on ``_versions.json.lock``) a publisher
+    allocates the next number and takes :func:`exclusive` on its
+    ``v=N.claim``, which it holds until it commits: a held claim keeps
+    its number from other publishers and its ``v=N`` directory from
+    vacuum, and a dead publisher's claim is released by the kernel and
+    removed at the next allocation. The commit re-reads the committed
+    versions under the manifest lock, so a slow writer cannot swap away
+    a faster writer's commit, then removes the claim.
     """
     import json
-    import socket
 
     os.makedirs(root, exist_ok=True)
-    _sweep_dead_claims(root)
-    me = f"{socket.gethostname()}:{os.getpid()}"
-    while True:
-        n = _next_version(root)
-        claim = os.path.join(root, f"v={n}.claim")
-        try:
-            fd = os.open(claim, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            continue  # a concurrent publisher claimed n — take the next
-        os.write(fd, me.encode())
-        os.close(fd)
-        break
-    try:
+    mf = _versions_manifest(root)
+    lock = mf + ".lock"
+    with contextlib.ExitStack() as held:
+        with exclusive(lock, None):
+            n = _next_version(root)
+            claim = os.path.join(root, f"v={n}.claim")
+            # free by construction: n is past every held claim, and
+            # claims are only taken under the manifest lock
+            held.enter_context(exclusive(claim, 0))
         df.write.mode("error").parquet(os.path.join(root, f"v={n}"))
-        # manifest swap under the metadata lock: re-read committed
-        # versions NOW (a concurrent publisher may have committed while
-        # our data wrote) so no commit is ever lost to a stale swap
-        mf = _versions_manifest(root)
-        with _manifest_lock(root):
+        with exclusive(lock, None):
             versions = sorted(set(list_versions(root)) | {n})
             tmp = f"{mf}.tmp.{n}"
             with open(tmp, "w") as fh:
                 json.dump({"versions": versions}, fh)
             os.replace(tmp, mf)
-        return n
-    finally:
-        try:
             os.remove(claim)
-        except FileNotFoundError:
-            # a concurrent vacuum saw the version committed and removed
-            # the marker for us — the claim's job ended at the commit,
-            # and a successful publish must not raise over its absence
-            pass
+        return n
 
 
 def read_snapshot(
@@ -1253,17 +1049,16 @@ def vacuum_snapshots(
     race with the delete exactly as in Delta/Iceberg VACUUM; production
     deployments add a time-based retention floor for that reason.
 
-    Safe against concurrent PUBLISHERS (ADVICE r11): the manifest
-    read-modify-replace runs under the same ``_versions.lock`` as
-    commit (a racing commit is either included in the read or blocked
-    until the swap lands), and the physical sweep never touches an
-    in-flight publish — an uncommitted ``v=N`` directory or ``v=N.claim``
-    marker is removed only when its claim holder is provably dead (or,
-    for claims, the version already committed, i.e. a crash after the
-    manifest swap but before claim cleanup).
+    Safe against concurrent PUBLISHERS (ADVICE r11): the whole vacuum,
+    deletes included, runs under the manifest lock publishers allocate
+    and commit under, so the committed versions it reads are still the
+    committed versions when it deletes, and a freed number cannot be
+    handed to a new publisher before its directory is gone. An
+    uncommitted ``v=N`` directory is an orphan only when no live
+    publisher holds its ``v=N.claim`` (a non-blocking try of the claim's
+    lock; claims nobody holds are removed).
     """
     import json
-    import re
     import shutil
     import time
 
@@ -1281,7 +1076,7 @@ def vacuum_snapshots(
             return False  # directory gone → nothing to protect
 
     mf = _versions_manifest(root)
-    with _manifest_lock(root):
+    with exclusive(mf + ".lock", None):
         versions = list_versions(root)
         keep = versions[-keep_last:] if keep_last > 0 else []
         dropped = [v for v in versions if v not in keep and not _too_young(v)]
@@ -1291,63 +1086,15 @@ def vacuum_snapshots(
             with open(tmp, "w") as fh:
                 json.dump({"versions": keep}, fh)
             os.replace(tmp, mf)
-    committed = set(versions)
-
-    def _reclaim_stale_claim(claim: str, v: int) -> None:
-        # committed → the publisher crashed between manifest swap and
-        # claim cleanup; the number is permanently taken, marker is junk
-        # (racing the publisher's own cleanup is fine — both tolerate
-        # the already-gone case)
-        if v in committed:
-            try:
-                os.remove(claim)
-            except OSError:
-                pass
-            return
-        # uncommitted: reclaim a provably-dead same-host holder, or an
-        # UNPARSEABLE payload (pre-payload legacy claim, or a crash
-        # between the O_EXCL create and the payload write) by AGE. The
-        # age floor never drops below 60s even at min_age_s=0: a live
-        # publisher sits in the create→write window for microseconds,
-        # and sweeping it there would re-open the allocation collision
-        # the claim protocol exists to prevent. Both cases run under
-        # the breaker mutex with a re-read (no double-break).
-        _break_dead_holder_lock(claim, empty_age_s=max(min_age_s, 60.0))
-
-    # claims FIRST, then directories: a reclaimed legacy claim frees its
-    # partial data dir for the orphan sweep within the SAME vacuum
-    listing = sorted(os.listdir(root))
-    for name in listing:
-        c = re.fullmatch(r"v=(\d+)\.claim", name)
-        if c:
-            _reclaim_stale_claim(os.path.join(root, name), int(c.group(1)))
-    orphans = []
-    for name in listing:
-        m = re.fullmatch(r"v=(\d+)", name)
-        if not m or int(m.group(1)) in keep:
-            continue
-        v = int(m.group(1))
-        if v in dropped:  # retention: committed, already delisted above
-            # ignore_errors: a concurrent vacuum may have won the race
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
-            continue
-        # uncommitted directory: an in-flight publish holds a LIVE claim
-        # for it — only sweep when there is no claim (graceful failure
-        # already removed it) or the claim holder is provably dead
-        if _too_young(v):  # retention floor: not yet presumed crashed
-            continue
-        claim = os.path.join(root, f"v={v}.claim")
-        if os.path.exists(claim) and not _break_dead_holder_lock(claim):
-            continue
-        # TOCTOU guard: a publisher may have COMMITTED v (and removed
-        # its claim) after our manifest read above — re-read before the
-        # irreversible delete. Past this check no commit of v can land:
-        # committing requires a claim, no claim for v exists now, and a
-        # dead holder can't commit.
-        if v in set(list_versions(root)):
-            continue
-        orphans.append(v)
-        shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+        in_flight = _held_claims(root)
+        on_disk = (re.fullmatch(r"v=(\d+)", name) for name in os.listdir(root))
+        orphans = sorted(
+            v
+            for v in (int(m.group(1)) for m in on_disk if m)
+            if v not in versions and v not in in_flight and not _too_young(v)
+        )
+        for v in dropped + orphans:
+            shutil.rmtree(os.path.join(root, f"v={v}"), ignore_errors=True)
     return {"dropped": dropped, "orphans": orphans}
 
 

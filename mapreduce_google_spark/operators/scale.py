@@ -27,6 +27,7 @@ tools that replace and extend that single lever:
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -35,8 +36,8 @@ from pyspark.sql import functions as F
 from mapreduce_google_spark.functions.numeric import dsum, money
 from mapreduce_google_spark.functions.text import tokenize
 from mapreduce_google_spark.io import (
-    _break_dead_holder_lock,
     derived_dir,
+    exclusive,
     load_table,
     register_views,
     write_once,
@@ -1952,49 +1953,10 @@ class ConcurrentRefreshError(RuntimeError):
     files and the ``_covered_files.json`` sidecar — so two concurrent
     writers can under-count segments (last-writer-wins on the sidecar)
     and leave a double-appended segment uncompacted. The refresh is
-    therefore single-writer by contract, enforced with an O_EXCL lock
-    file (VERDICT r10 item 6). Concurrent LOOKUPS are unaffected: the
-    steady-state no-op refresh never takes the lock."""
-
-
-def _acquire_refresh_lock(idx_dir: str) -> str:
-    """Take the single-writer refresh lock via O_CREAT|O_EXCL — atomic
-    on POSIX local and NFS v3+ filesystems. The lock lives BESIDE the
-    index dir (``<idx_dir>.refresh.lock`` in the table dir), not inside
-    it: compaction's ``mode("overwrite")`` clears the index dir and
-    would silently release a lock stored there mid-mutation. The lock
-    records ``host:pid``; a lock whose holder is a provably dead
-    SAME-HOST process is broken automatically (crashed refresh),
-    anything else raises :class:`ConcurrentRefreshError` with the
-    holder identity — deleting the file manually is the documented
-    override when the holder host is known dead."""
-    import socket
-
-    lock = idx_dir.rstrip("/") + ".refresh.lock"
-    me = f"{socket.gethostname()}:{os.getpid()}"
-    for attempt in range(2):
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            if attempt == 0 and _break_dead_holder_lock(lock):
-                continue  # stale lock removed — retry the O_EXCL create
-            try:
-                holder = open(lock).read().strip() or "<unknown>"
-            except OSError:
-                holder = "<unknown>"
-            raise ConcurrentRefreshError(
-                f"refresh_point_index is single-writer: {lock} is held by "
-                f"{holder}. If that process is dead on another host, "
-                "delete the lock file and retry."
-            ) from None
-        os.write(fd, me.encode())
-        os.close(fd)
-        return lock
-    raise AssertionError("unreachable")
-
-
-# _break_dead_holder_lock moved to io.py (shared with the snapshot
-# store's claim sweep); imported at the module header.
+    therefore single-writer by contract, enforced with
+    :func:`io.exclusive` on a lock file beside the index dir (VERDICT
+    r10 item 6). Concurrent LOOKUPS are unaffected: the steady-state
+    no-op refresh never takes the lock."""
 
 
 def _read_covered_sidecar(
@@ -2089,12 +2051,13 @@ def refresh_point_index(
     **Single-writer contract**: segment files and the sidecar mutate
     non-atomically, so concurrent refreshes could under-count segments
     (last sidecar writer wins) and strand a duplicate segment until the
-    next compaction. Mutating refreshes therefore take an O_EXCL lock
-    file beside the index dir; a second writer fails fast with
-    :class:`ConcurrentRefreshError` (a dead same-host holder's lock is
-    broken automatically). The steady-state no-op refresh — every
-    lookup's path — never takes the lock, so concurrent readers never
-    contend.
+    next compaction. Mutating refreshes therefore try
+    :func:`io.exclusive` on ``<idx_dir>.refresh.lock``, BESIDE the
+    index dir (compaction's ``mode("overwrite")`` clears the dir
+    itself); a second writer fails fast with
+    :class:`ConcurrentRefreshError`, and a crashed writer's lock died
+    with its process. The steady-state no-op refresh — every lookup's
+    path — never takes the lock, so concurrent readers never contend.
     """
     import glob
 
@@ -2137,11 +2100,18 @@ def refresh_point_index(
         return idx_dir
     # mutation needed → single-writer gate (lock-free up to here, so
     # concurrent steady-state lookups never contend). Re-derive the
-    # sidecar state UNDER the lock: a writer that finished while we
-    # waited at the O_EXCL create may have covered our files already,
-    # and re-appending them would duplicate a whole segment.
-    lock = _acquire_refresh_lock(idx_dir)
-    try:
+    # sidecar state UNDER the lock: a writer that finished just before
+    # we took it may have covered our files already, and re-appending
+    # them would duplicate a whole segment.
+    lock = idx_dir.rstrip("/") + ".refresh.lock"
+    with contextlib.ExitStack() as held:
+        try:
+            held.enter_context(exclusive(lock, 0))
+        except TimeoutError:
+            raise ConcurrentRefreshError(
+                f"refresh_point_index is single-writer: {lock} is held by "
+                "another writer"
+            ) from None
         known, segments = _read_covered_sidecar(spark, idx_dir, flist)
         new = [f for f in files if f not in known]
         vanished = known - set(files)
@@ -2151,8 +2121,6 @@ def refresh_point_index(
             spark, idx_dir, flist, files, new, vanished, known, segments,
             key_col, index_partitions, compact_after,
         )
-    finally:
-        os.remove(lock)
 
 
 def _refresh_point_index_locked(

@@ -44,3 +44,16 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture
+def store_root_in_tmp_path(tmp_path, monkeypatch):
+    """Point ``tempfile.tempdir`` at ``tmp_path``, so the stores and
+    stagings a test derives from a corpus it writes under ``tmp_path``
+    land in ``io.shared_store_root`` under ``tmp_path`` too. Each such
+    corpus has its own ``io.cache_tag``; under the user's real root
+    nothing would ever adopt or delete what they leave."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path

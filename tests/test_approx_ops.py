@@ -348,7 +348,9 @@ def test_packing_invariants(spark, sf_dir):
     assert len(packs) <= 2 * (total_tokens // budget + 16)
 
 
-def test_boilerplate_footer_does_not_explode_candidates(spark, tmp_path):
+def test_boilerplate_footer_does_not_explode_candidates(
+    spark, tmp_path, store_root_in_tmp_path
+):
     """max_df / max_bucket skew guards: a shared footer must not turn
     near-dup detection into an all-pairs join.
 
@@ -711,8 +713,7 @@ def test_adoption_refuses_non_bucketed_files(spark, tmp_path):
     adopted — adopting it would make every scan fail with
     'Invalid bucket file' or silently mis-route co-located joins. Plain
     parquet carries no ``_BUCKET_SPEC.json`` sidecar, so the adoption
-    check rejects it; a retired-scheme sibling (``_k4``, pre-r12) is
-    additionally SWEPT — it can never be adopted again (VERDICT r12)."""
+    check rejects it."""
     import os
 
     from mapreduce_google_spark.io import (
@@ -723,14 +724,9 @@ def test_adoption_refuses_non_bucketed_files(spark, tmp_path):
     df = spark.range(100).selectExpr("id", "id % 7 AS k")
     base = str(tmp_path / "poisoned")
     suffix = bucket_table_suffix(4, ["k"])
-    # plant non-bucketed files at the EXACT path the builder will use,
-    # plus a stranded store under the retired pre-r12 suffix scheme
+    # plant non-bucketed files at the EXACT path the builder will use
     df.write.mode("overwrite").parquet(f"{base}{suffix}")
-    df.write.mode("overwrite").parquet(f"{base}_k4")
     assert os.path.exists(f"{base}{suffix}/_SUCCESS")
-    # age the stranded sibling past the sweep's retention floor (a
-    # YOUNG sidecar-less dir is skipped — it may be a peer mid-build)
-    os.utime(f"{base}_k4", (1.0, 1.0))
 
     name = adopt_or_build_bucketed_table(
         spark, "mgs_test_poisoned_adopt", base, ["k"], 4, lambda: df
@@ -745,8 +741,6 @@ def test_adoption_refuses_non_bucketed_files(spark, tmp_path):
         assert all("_000" in f for f in data_files), data_files
         # the rebuilt store is sidecar-stamped (adoptable next session)
         assert os.path.exists(f"{base}{suffix}/_BUCKET_SPEC.json")
-        # the retired-scheme sibling was swept, not left as junk
-        assert not os.path.exists(f"{base}_k4")
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
@@ -782,8 +776,7 @@ def test_bucket_count_is_part_of_table_identity(spark, tmp_path):
         assert n_default.endswith(bucket_table_suffix(default, ["k"]))
         assert (n_default == n4) == (default == 4)
         assert (n_default == n8) == (default == 8)
-        # both sidecar-stamped stores coexist — the sweep removes only
-        # sidecar-LESS (retired-scheme) siblings, never live specs
+        # both sidecar-stamped stores coexist
         assert spark.table(n4).count() == spark.table(n8).count() == 50
         assert spark.table(n_default).count() == 50
     finally:

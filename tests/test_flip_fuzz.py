@@ -101,7 +101,9 @@ def _brute_force_pairs(df: pd.DataFrame, window_s: int) -> dict:
     return dict(exp)
 
 
-def test_t45_forms_agree_on_adversarial_corpus(spark, tmp_path):
+def test_t45_forms_agree_on_adversarial_corpus(
+    spark, tmp_path, store_root_in_tmp_path
+):
     """Both t45 forms must agree with each other AND a pure-Python
     brute force on a corpus concentrating ties, boundary pairs, bucket
     straddles, and per-user skew — at three window widths (the narrow
@@ -198,7 +200,9 @@ _T12_ORACLE = """
 """
 
 
-def test_t12_forms_agree_on_ragged_corpus(spark, tmp_path):
+def test_t12_forms_agree_on_ragged_corpus(
+    spark, tmp_path, store_root_in_tmp_path
+):
     """Both t12 forms must agree with each other AND the registered
     DuckDB oracle SQL on a corpus with referential raggedness: customers
     without orders (must not appear — inner joins), orders without
@@ -251,7 +255,9 @@ def _boilerplate_documents(seed: int = 1701) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def test_t22_guard_forms_agree_on_boilerplate_corpus(spark, tmp_path):
+def test_t22_guard_forms_agree_on_boilerplate_corpus(
+    spark, tmp_path, store_root_in_tmp_path
+):
     """The r17 flip gate, fuzzed where the guard actually FIRES: on a
     corpus with a planted 30-copy boilerplate cluster, the counted
     table's pushed ``bucket_n <= max_bucket`` filter must drop exactly

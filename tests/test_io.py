@@ -326,15 +326,12 @@ def test_store_bucket_count_is_fixed_per_spark_context(spark, tmp_path, monkeypa
 
 
 def test_bucketed_build_lock_serializes_and_breaks_dead_holders(spark, tmp_path):
-    """adopt_or_build_bucketed_table builds under an O_EXCL lock (r13;
-    the r8 shared-cache rule: one writer per _SUCCESS-gated store). A
-    provably-dead same-host holder is broken automatically; a LIVE/
-    foreign-host holder makes the call fail after build_wait_s instead
-    of corrupting the winner's commit; concurrent threads produce
-    exactly one build that everyone adopts."""
-    import socket
-    import subprocess
-    import sys
+    """adopt_or_build_bucketed_table builds under io.exclusive on
+    {path}.build.lock (the r8 shared-cache rule: one writer per
+    _SUCCESS-gated store). A killed holder never blocks the next build;
+    a LIVE holder in another process makes the call fail after
+    build_wait_s instead of corrupting the winner's commit; concurrent
+    threads produce exactly one build that everyone adopts."""
     import threading
 
     import pytest
@@ -343,44 +340,43 @@ def test_bucketed_build_lock_serializes_and_breaks_dead_holders(spark, tmp_path)
         adopt_or_build_bucketed_table,
         bucket_table_suffix,
     )
+    from tests.lock_holders import killed_holder, live_holder
 
     df = spark.range(60).selectExpr("id", "id % 5 AS k")
 
-    # 1. dead same-host holder → broken, build proceeds
+    # 1. killed holder → its lock died with it, build proceeds at once
     base = str(tmp_path / "locked")
     path = base + bucket_table_suffix(4, ["k"])
-    dead = subprocess.run([sys.executable, "-c", "import os; print(os.getpid())"],
-                          capture_output=True, text=True).stdout.strip()
-    with open(path + ".build.lock", "w") as fh:
-        fh.write(f"{socket.gethostname()}:{dead}")
+    killed_holder(path + ".build.lock")
     n1 = adopt_or_build_bucketed_table(
-        spark, "mgs_test_lock_a", base, ["k"], 4, lambda: df
+        spark, "mgs_test_lock_a", base, ["k"], 4, lambda: df, build_wait_s=0.5
     )
     assert spark.table(n1).count() == 60
-    assert not os.path.exists(path + ".build.lock")
 
-    # 2. live foreign-host holder → bounded failure, never a torn write
-    base2 = str(tmp_path / "foreign")
+    # 2. live holder in another process → bounded failure, no write
+    base2 = str(tmp_path / "held")
     path2 = base2 + bucket_table_suffix(4, ["k"])
-    os.makedirs(os.path.dirname(path2), exist_ok=True)
-    with open(path2 + ".build.lock", "w") as fh:
-        fh.write("some-other-host:12345")
-    with pytest.raises(RuntimeError, match="build lock"):
-        adopt_or_build_bucketed_table(
-            spark, "mgs_test_lock_b", base2, ["k"], 4, lambda: df,
-            build_wait_s=0.5,
-        )
-    os.remove(path2 + ".build.lock")
+    with live_holder(path2 + ".build.lock"):
+        with pytest.raises(RuntimeError, match="build lock"):
+            adopt_or_build_bucketed_table(
+                spark, "mgs_test_lock_b", base2, ["k"], 4, lambda: df,
+                build_wait_s=0.5,
+            )
+    assert not os.path.exists(path2)
 
     # 3. concurrent callers: one build, every caller adopts the same table
     base3 = str(tmp_path / "race")
-    results, errors = [], []
+    results, errors, builds = [], [], []
+
+    def build():
+        builds.append(1)
+        return df
 
     def worker():
         try:
             results.append(
                 adopt_or_build_bucketed_table(
-                    spark, "mgs_test_lock_c", base3, ["k"], 4, lambda: df
+                    spark, "mgs_test_lock_c", base3, ["k"], 4, build
                 )
             )
         except Exception as e:  # pragma: no cover - failure detail
@@ -393,9 +389,74 @@ def test_bucketed_build_lock_serializes_and_breaks_dead_holders(spark, tmp_path)
         t.join()
     assert not errors, errors
     assert len(set(results)) == 1 and len(results) == 4
+    assert len(builds) == 1
     assert spark.table(results[0]).count() == 60
     for n in {n1, results[0]}:
         spark.sql(f"DROP TABLE IF EXISTS {n}")
+
+
+def test_store_build_killed_halfway_is_rebuilt_not_adopted(spark, tmp_path):
+    """A builder SIGKILLed after writing part files and _SUCCESS but
+    before stamping _BUCKET_SPEC.json leaves a torn store. Its lock died
+    with it, so the next call takes the lock at once (build_wait_s=0.5
+    would raise otherwise), refuses to adopt the torn files and
+    rebuilds: right row count, the torn part files gone."""
+    from mapreduce_google_spark.io import (
+        _BUCKET_SPEC_FILE,
+        adopt_or_build_bucketed_table,
+        bucket_table_suffix,
+    )
+    from tests.lock_holders import killed_holder
+
+    df = spark.range(40).selectExpr("id", "id % 4 AS k")
+    base = str(tmp_path / "torn")
+    path = base + bucket_table_suffix(2, ["k"])
+    os.makedirs(path)
+    torn = [
+        os.path.join(path, f"part-00000-torn_0000{b}.c000.snappy.parquet")
+        for b in (0, 1)
+    ]
+    killed_holder(path + ".build.lock", *torn, os.path.join(path, "_SUCCESS"))
+    assert all(os.path.exists(f) for f in torn)
+    assert not os.path.exists(os.path.join(path, _BUCKET_SPEC_FILE))
+
+    name = adopt_or_build_bucketed_table(
+        spark, "mgs_test_torn", base, ["k"], 2, lambda: df, build_wait_s=0.5
+    )
+    try:
+        assert spark.table(name).count() == 40
+        assert not any(os.path.exists(f) for f in torn)
+        assert os.path.exists(os.path.join(path, _BUCKET_SPEC_FILE))
+        assert glob.glob(os.path.join(path, "part-*"))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_write_once_runs_one_writer_across_processes(tmp_path):
+    """Two processes calling io.write_once on one staging path: the
+    second waits on {path}.lock, sees the first one's _SUCCESS and
+    skips its writer, so the writer runs exactly once and both callers
+    return the same path. No JVM: the writer is plain Python."""
+    import multiprocessing
+
+    from tests.lock_holders import write_once_slowly
+
+    ctx = multiprocessing.get_context("spawn")
+    path, log = str(tmp_path / "staged"), str(tmp_path / "writers.log")
+    start, out = ctx.Barrier(2), ctx.Queue()
+    procs = [
+        ctx.Process(target=write_once_slowly, args=(path, log, start, out))
+        for _ in range(2)
+    ]
+    for p in procs:
+        p.start()
+    got = [out.get(timeout=120) for _ in procs]
+    for p in procs:
+        p.join(timeout=60)
+    assert [p.exitcode for p in procs] == [0, 0]
+    assert got == [path, path]
+    assert len(open(log).read().split()) == 1
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
 def test_bucketed_fact_table_adopts_and_serves_colocated_join(spark, sf_dir):
@@ -435,117 +496,6 @@ def test_bucketed_fact_table_adopts_and_serves_colocated_join(spark, sf_dir):
         )
     )
     assert "SortMergeJoin" in plan and "Exchange" not in plan, plan
-
-
-def test_sweep_skips_sibling_with_live_build_lock(spark, tmp_path):
-    """_sweep_stranded_bucket_stores must not rmtree a sidecar-less
-    sibling whose builder is still ALIVE (ADVICE r13): Spark stages a
-    long build's output under _temporary/, so the sibling's top-level
-    mtime goes stale minutes into a running job and the age floor alone
-    would let the sweep delete the live build out from under its
-    writer. The sibling's .build.lock with a live holder is the skip
-    signal; once the holder is provably dead the same sibling IS swept
-    (and the dead lock reclaimed on the way through)."""
-    import socket
-    import subprocess
-    import sys
-
-    from mapreduce_google_spark.io import _sweep_stranded_bucket_stores
-
-    base = str(tmp_path / "st")
-    current = base + "_k4_k_abc123"  # the store whose build triggers sweeps
-    sibling = base + "_k8"  # retired-scheme shape, no sidecar
-    os.makedirs(sibling)
-    with open(os.path.join(sibling, "part-0.parquet"), "w") as fh:
-        fh.write("x")
-    os.utime(sibling, (1.0, 1.0))  # far past the age floor
-
-    # live same-host holder → skipped
-    with open(sibling + ".build.lock", "w") as fh:
-        fh.write(f"{socket.gethostname()}:{os.getpid()}")
-    _sweep_stranded_bucket_stores(current)
-    assert os.path.isdir(sibling), "sweep deleted a live builder's store"
-
-    # provably-dead same-host holder → lock reclaimed, sibling swept
-    dead = subprocess.run(
-        [sys.executable, "-c", "import os; print(os.getpid())"],
-        capture_output=True,
-        text=True,
-    ).stdout.strip()
-    with open(sibling + ".build.lock", "w") as fh:
-        fh.write(f"{socket.gethostname()}:{dead}")
-    _sweep_stranded_bucket_stores(current)
-    assert not os.path.exists(sibling)
-    assert not os.path.exists(sibling + ".build.lock")
-
-
-def test_build_lock_is_never_observably_empty(spark, tmp_path):
-    """The build lock is acquired by hard-linking a payload-complete
-    temp file (r14): at no point while a builder holds the lock can a
-    reader observe an empty file. Under the old O_EXCL-then-write
-    protocol a winner stalled >10s between create and write looked like
-    a crash leftover, the empty-age breaker displaced it, and the
-    displaced writer's cleanup then unlinked the NEW holder's lock —
-    two live writers at one path (ADVICE r13). Observed here by
-    blocking the builder INSIDE build() and reading the lock from the
-    outside; a planted legacy empty lock older than the age floor is
-    still broken."""
-    import socket
-    import threading
-    import time
-
-    from mapreduce_google_spark.io import (
-        adopt_or_build_bucketed_table,
-        bucket_table_suffix,
-    )
-
-    df = spark.range(20).selectExpr("id", "id % 3 AS k")
-    base = str(tmp_path / "atomic")
-    lock = base + bucket_table_suffix(2, ["k"]) + ".build.lock"
-    entered, release = threading.Event(), threading.Event()
-
-    def build():
-        entered.set()
-        release.wait(timeout=30)
-        return df
-
-    out: list[str] = []
-    t = threading.Thread(
-        target=lambda: out.append(
-            adopt_or_build_bucketed_table(
-                spark, "mgs_test_lock_atomic", base, ["k"], 2, build
-            )
-        )
-    )
-    t.start()
-    try:
-        assert entered.wait(timeout=30)
-        # builder is mid-build: the lock exists and already carries the
-        # full host:pid payload — never an empty window
-        payload = open(lock).read()
-        assert payload == f"{socket.gethostname()}:{os.getpid()}", payload
-        # no staged temp files leak next to the lock
-        assert glob.glob(lock + ".*.tmp") == []
-    finally:
-        release.set()
-        t.join(timeout=120)
-    assert out and spark.table(out[0]).count() == 20
-    assert not os.path.exists(lock)
-
-    # legacy empty lock (pre-r14 crash leftover), aged past the floor →
-    # broken, build proceeds
-    base2 = str(tmp_path / "legacy")
-    lock2 = base2 + bucket_table_suffix(2, ["k"]) + ".build.lock"
-    os.makedirs(os.path.dirname(lock2), exist_ok=True)
-    open(lock2, "w").close()
-    old = time.time() - 60
-    os.utime(lock2, (old, old))
-    n2 = adopt_or_build_bucketed_table(
-        spark, "mgs_test_lock_legacy", base2, ["k"], 2, lambda: df
-    )
-    assert spark.table(n2).count() == 20
-    for n in out + [n2]:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
 def test_shared_store_root_is_per_user_0700(tmp_path, monkeypatch):

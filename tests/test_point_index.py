@@ -459,76 +459,68 @@ def test_point_lookup_df_huge_keyset_does_not_broadcast(spark, tmp_path):
         scale.POINT_LOOKUP_BROADCAST_MAX = old
 
 
+def _lock_is_free(lock: str) -> bool:
+    """One non-blocking try of the refresh lock from a fresh descriptor
+    (a held flock conflicts with it even inside the holder's process)."""
+    from mapreduce_google_spark.io import exclusive
+
+    try:
+        with exclusive(lock, 0):
+            return True
+    except TimeoutError:
+        return False
+
+
 def test_concurrent_refresh_second_writer_fails_cleanly(spark, tmp_path):
     """VERDICT r10 item 6: the LSM refresh is single-writer — segment
     files and the sidecar mutate non-atomically, so a second concurrent
     writer must fail fast (ConcurrentRefreshError), not silently race.
-    A lock whose holder is a provably dead same-host process is broken
-    automatically; lookups stay exact throughout."""
-    import socket
-
+    A killed holder's lock died with it; lookups stay exact throughout."""
     from mapreduce_google_spark.operators.scale import (
         ConcurrentRefreshError,
         point_lookup,
     )
+    from tests.lock_holders import live_holder
 
     path = str(tmp_path / "tbl")
     _write_hashed(spark, path, 1_000, 4)
     idx_dir = refresh_point_index(spark, path, "k")
     lock = idx_dir.rstrip("/") + ".refresh.lock"
-    assert not os.path.exists(lock)  # released after a successful build
+    assert _lock_is_free(lock)  # released after a successful build
 
-    # steady-state lookups are LOCK-FREE: a held lock never blocks a
-    # reader whose refresh has nothing to do
-    with open(lock, "w") as fh:
-        fh.write("some-other-host:999999")
-    assert {(r["k"], r["v"]) for r in point_lookup(spark, path, "k", [7]).collect()} == {
-        (7, 21)
-    }
+    with live_holder(lock):
+        # steady-state lookups are LOCK-FREE: a held lock never blocks a
+        # reader whose refresh has nothing to do
+        got = point_lookup(spark, path, "k", [7]).collect()
+        assert {(r["k"], r["v"]) for r in got} == {(7, 21)}
 
-    # force a mutating refresh (new source file) while the live foreign
-    # writer holds the lock: unbreakable (other host), must raise
-    _append_source_file(spark, path, [(60_001, 9)], "k long, v long", "v1")
-    try:
-        refresh_point_index(spark, path, "k")
-        raise AssertionError("second writer did not fail")
-    except ConcurrentRefreshError as exc:
-        assert "some-other-host:999999" in str(exc)
-    assert os.path.exists(lock)  # a foreign live lock is never broken
-    # the failed writer must not have touched the index: the committed
-    # generation still answers exactly for its covered keys
-    idx = spark.read.parquet(idx_dir)
-    assert idx.count() == 1_000 and idx.where(F.col("key") == 60_001).count() == 0
+        # force a mutating refresh (new source file) while the live
+        # writer in another process holds the lock: must raise
+        _append_source_file(spark, path, [(60_001, 9)], "k long, v long", "v1")
+        try:
+            refresh_point_index(spark, path, "k")
+            raise AssertionError("second writer did not fail")
+        except ConcurrentRefreshError as exc:
+            assert lock in str(exc)
+        assert not _lock_is_free(lock)  # a live holder is never displaced
+        # the failed writer must not have touched the index: the
+        # committed generation still answers exactly for its covered keys
+        idx = spark.read.parquet(idx_dir)
+        assert idx.count() == 1_000
+        assert idx.where(F.col("key") == 60_001).count() == 0
 
-    # same-host DEAD holder: broken automatically, refresh proceeds
-    with open(lock, "w") as fh:
-        pid = 999_999_999 % 4_194_304  # guaranteed-unused pid space is
-        # not portable; use a pid far above typical pid_max and verify
-        fh.write(f"{socket.gethostname()}:{pid}")
-    try:
-        os.kill(pid, 0)
-        dead = False
-    except ProcessLookupError:
-        dead = True
-    except PermissionError:
-        dead = False
-    if dead:
-        idx2 = refresh_point_index(spark, path, "k")
-        assert not os.path.exists(lock)
-        assert {
-            (r["k"], r["v"])
-            for r in point_lookup(spark, path, "k", [60_001]).collect()
-        } == {(60_001, 9)}
-        assert idx2 == idx_dir
-    else:
-        os.remove(lock)  # rare collision with a live pid: clean up
+    # the holder was killed: its lock died with it, refresh proceeds
+    assert refresh_point_index(spark, path, "k") == idx_dir
+    assert {
+        (r["k"], r["v"]) for r in point_lookup(spark, path, "k", [60_001]).collect()
+    } == {(60_001, 9)}
 
 
 def test_refresh_lock_survives_compaction_overwrite(spark, tmp_path):
     """The lock lives BESIDE the index dir: compaction's
     mode('overwrite') clears the index dir, and a lock stored inside it
     would be silently released mid-mutation. Prove the lock is held for
-    the whole compaction and released (removed) only at the end."""
+    the whole compaction and released only at the end."""
     import mapreduce_google_spark.operators.scale as scale
 
     path = str(tmp_path / "tbl")
@@ -541,8 +533,10 @@ def test_refresh_lock_survives_compaction_overwrite(spark, tmp_path):
     real = scale._refresh_point_index_locked
 
     def spy(*a, **kw):
-        seen["held_during_mutation"] = os.path.exists(lock)
-        return real(*a, **kw)
+        seen["held_during_mutation"] = not _lock_is_free(lock)
+        out = real(*a, **kw)
+        seen["held_after_overwrite"] = not _lock_is_free(lock)
+        return out
 
     scale._refresh_point_index_locked = spy
     try:
@@ -550,8 +544,8 @@ def test_refresh_lock_survives_compaction_overwrite(spark, tmp_path):
         refresh_point_index(spark, path, "k", compact_after=1)  # forces compaction
     finally:
         scale._refresh_point_index_locked = real
-    assert seen["held_during_mutation"] is True
-    assert not os.path.exists(lock)  # released after
+    assert seen == {"held_during_mutation": True, "held_after_overwrite": True}
+    assert _lock_is_free(lock)  # released after
     got = point_lookup(spark, path, "k", [70_001]).collect()
     assert [(r["k"], r["v"]) for r in got] == [(70_001, 1)]
 
@@ -585,7 +579,7 @@ def test_batched_lookup_composes_with_deletion_vectors(spark, tmp_path):
 
 def test_real_concurrent_refresh_race_one_writer_wins(spark, tmp_path):
     """Two ACTUAL concurrent refresh calls (threads, not a hand-planted
-    lock file): the first to take the O_EXCL lock mutates while holding
+    lock file): the first to take the refresh lock mutates while holding
     it; the second must fail with ConcurrentRefreshError while the
     holder is inside the mutation. Afterwards the index is exactly the
     single-writer result and a rerun refresh is a clean no-op."""

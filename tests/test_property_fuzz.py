@@ -559,7 +559,9 @@ def test_token_hof_fuzz_spark_matches_duckdb(
     assert got["n_distinct"] == want[2]
 
 
-def test_asof_boundary_parity(spark, tmp_path):
+def test_asof_boundary_parity(
+    spark, tmp_path, store_root_in_tmp_path
+):
     """ALL THREE as-of engine paths (the r14-default bucketed-stores
     form, the union-merge fallback, the cogrouped merge_asof skew form)
     must agree with a brute-force reference on a corpus built entirely

@@ -218,6 +218,35 @@ def test_package_source_names_no_temp_paths():
     assert not problems, "\n".join(problems)
 
 
+def test_package_source_has_one_lock():
+    """Every writer in the package locks through ``io.exclusive``, a
+    ``flock`` the kernel drops when its holder dies. A hand-rolled lock
+    file (an ``O_EXCL`` create or a hard link, stamped with a host and
+    pid that a later writer probes with ``os.kill``) needs a breaker
+    for dead holders, which is what this helper replaced, so none may
+    appear anywhere else in package source."""
+    import ast
+    import glob
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "mapreduce_google_spark")
+    hand_rolled = re.compile(r"O_EXCL|os\.link\(|os\.kill\(|gethostname")
+    problems = []
+    for src in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        text = open(src).read()
+        lines = text.splitlines()
+        allowed = set()
+        for node in ast.walk(ast.parse(text, src)):
+            if isinstance(node, ast.FunctionDef) and node.name == "exclusive":
+                allowed |= set(range(node.lineno, node.end_lineno + 1))
+        for lineno, line in enumerate(lines, 1):
+            if hand_rolled.search(line) and lineno not in allowed:
+                rel = os.path.relpath(src, repo)
+                problems.append(f"{rel}:{lineno}: {line.strip()[:70]}")
+    assert not problems, "\n".join(problems)
+
+
 def test_registry_import_has_no_side_effects():
     """Importing the driver entry point spawns no process and opens no
     JSON file of the checkout: the registry order is a literal, not

@@ -388,31 +388,17 @@ def test_concurrent_versioned_writes_get_distinct_versions(spark, tmp_path):
     assert not [f for f in os.listdir(root) if f.endswith(".claim")]
 
 
-def _dead_claim_payload() -> str:
-    """``host:pid`` of a REAL process that has already exited — spawned
-    and reaped here, so os.kill(pid, 0) deterministically raises
-    ProcessLookupError (no guessing at unused pid space)."""
-    import socket
-    import subprocess
-    import sys
-
-    p = subprocess.Popen([sys.executable, "-c", "pass"])
-    p.wait()
-    return f"{socket.gethostname()}:{p.pid}"
-
-
 def test_dead_publisher_claim_is_reclaimed_at_allocation(spark, tmp_path):
     """VERDICT r11 item 5: a publisher that crashes between claiming a
-    version number and its finally leaves a v=N.claim that blocked the
-    number forever (the allocator skips it; only vacuum swept it). The
-    allocation-time sweep reclaims a claim whose holder is provably
-    dead, so the next publish REUSES the number."""
+    version number and its commit must not block the number forever.
+    Its claim's lock died with it, so the next allocation removes the
+    claim and the next publish REUSES the number."""
     from mapreduce_google_spark.io import versioned_write
+    from tests.lock_holders import killed_holder
 
     root = str(tmp_path / "store")
     assert versioned_write(spark.range(3).selectExpr("id AS n"), root) == 1
-    with open(os.path.join(root, "v=2.claim"), "w") as fh:
-        fh.write(_dead_claim_payload())
+    killed_holder(os.path.join(root, "v=2.claim"))
     # no data dir for v=2 (crashed before the write): number is reusable
     assert versioned_write(spark.range(5).selectExpr("id AS n"), root) == 2
     assert list_versions(root) == [1, 2]
@@ -421,33 +407,30 @@ def test_dead_publisher_claim_is_reclaimed_at_allocation(spark, tmp_path):
 
 def test_live_claim_is_never_reclaimed(spark, tmp_path):
     """A claim held by a LIVE process is an in-flight publish: neither
-    the allocation sweep nor vacuum may touch it (or its data dir) —
-    doing so would re-open the allocation collision the claim protocol
-    exists to prevent (ADVICE r11)."""
-    import socket
-
+    allocation nor vacuum may touch it (or its data dir) — doing so
+    would re-open the allocation collision the claim protocol exists to
+    prevent (ADVICE r11)."""
     from mapreduce_google_spark.io import vacuum_snapshots, versioned_write
+    from tests.lock_holders import live_holder
 
     root = str(tmp_path / "store")
     versioned_write(spark.range(3).selectExpr("id AS n"), root)
     claim = os.path.join(root, "v=2.claim")
-    with open(claim, "w") as fh:
-        fh.write(f"{socket.gethostname()}:{os.getpid()}")  # us: alive
-    # mid-publish: the claimed version's data is landing
-    spark.range(9).selectExpr("id AS n").write.parquet(os.path.join(root, "v=2"))
-
-    # a concurrent publisher must allocate PAST the live claim
-    assert versioned_write(spark.range(5).selectExpr("id AS n"), root) == 3
-    # vacuum must leave both the live claim and its uncommitted dir
-    out = vacuum_snapshots(root, keep_last=10)
-    assert out["orphans"] == []
-    assert os.path.exists(claim)
-    assert os.path.isdir(os.path.join(root, "v=2"))
-    assert list_versions(root) == [1, 3]
+    with live_holder(claim):
+        # mid-publish: the claimed version's data is landing
+        spark.range(9).selectExpr("id AS n").write.parquet(
+            os.path.join(root, "v=2")
+        )
+        # a concurrent publisher must allocate PAST the live claim
+        assert versioned_write(spark.range(5).selectExpr("id AS n"), root) == 3
+        # vacuum must leave both the live claim and its uncommitted dir
+        out = vacuum_snapshots(root, keep_last=10)
+        assert out["orphans"] == []
+        assert os.path.exists(claim)
+        assert os.path.isdir(os.path.join(root, "v=2"))
+        assert list_versions(root) == [1, 3]
 
     # once the holder is dead, vacuum sweeps BOTH
-    with open(claim, "w") as fh:
-        fh.write(_dead_claim_payload())
     out = vacuum_snapshots(root, keep_last=10)
     assert out["orphans"] == [2]
     assert not os.path.exists(claim)
@@ -457,17 +440,14 @@ def test_live_claim_is_never_reclaimed(spark, tmp_path):
 def test_vacuum_removes_claim_leftover_from_crash_after_commit(spark, tmp_path):
     """Crash AFTER the manifest swap but before claim cleanup: the
     version is committed and permanently taken, the marker is junk —
-    vacuum removes it regardless of holder, and the version's data
-    survives."""
-    import socket
-
+    vacuum removes it, and the version's data survives."""
     from mapreduce_google_spark.io import read_snapshot, vacuum_snapshots, versioned_write
+    from tests.lock_holders import killed_holder
 
     root = str(tmp_path / "store")
     versioned_write(spark.range(3).selectExpr("id AS n"), root)
     versioned_write(spark.range(5).selectExpr("id AS n"), root)
-    with open(os.path.join(root, "v=2.claim"), "w") as fh:
-        fh.write(f"{socket.gethostname()}:{os.getpid()}")  # even a live holder
+    killed_holder(os.path.join(root, "v=2.claim"))
     vacuum_snapshots(root, keep_last=10)
     assert not [f for f in os.listdir(root) if f.endswith(".claim")]
     assert read_snapshot(spark, root, version=2).count() == 5
@@ -584,6 +564,7 @@ def test_snapshot_store_crash_vacuum_publish_fuzz(spark, tmp_path):
         vacuum_snapshots,
         versioned_write,
     )
+    from tests.lock_holders import killed_holder
 
     rng = random.Random(0xC0FFEE)
     root = str(tmp_path / "store")
@@ -596,8 +577,7 @@ def test_snapshot_store_crash_vacuum_publish_fuzz(spark, tmp_path):
     def crash_before_data() -> None:
         vs = set(list_versions(root))
         n = (max(vs) if vs else 0) + rng.randint(1, 2)
-        with open(os.path.join(root, f"v={n}.claim"), "w") as fh:
-            fh.write(_dead_claim_payload())
+        killed_holder(os.path.join(root, f"v={n}.claim"))
 
     def crash_before_commit() -> None:
         vs = set(list_versions(root))
@@ -605,15 +585,13 @@ def test_snapshot_store_crash_vacuum_publish_fuzz(spark, tmp_path):
         d = os.path.join(root, f"v={n}")
         if not os.path.exists(d):
             os.makedirs(d)  # partial data, no _SUCCESS
-        with open(os.path.join(root, f"v={n}.claim"), "w") as fh:
-            fh.write(_dead_claim_payload())
+        killed_holder(os.path.join(root, f"v={n}.claim"))
 
     def crash_after_commit() -> None:
         vs = list_versions(root)
         if not vs:
             return
-        with open(os.path.join(root, f"v={vs[-1]}.claim"), "w") as fh:
-            fh.write(_dead_claim_payload())
+        killed_holder(os.path.join(root, f"v={vs[-1]}.claim"))
 
     def vacuum() -> None:
         keep = rng.choice([1, 2, 3])
@@ -638,118 +616,20 @@ def test_snapshot_store_crash_vacuum_publish_fuzz(spark, tmp_path):
     publish()  # the store must never end bricked
 
 
-def test_vacuum_reclaims_unparseable_legacy_claims_by_age(spark, tmp_path):
-    """A claim with no parseable host:pid payload (pre-payload stores,
-    or a crash between the O_EXCL create and the payload write) cannot
-    be liveness-probed — vacuum reclaims it by AGE instead: kept while
-    younger than max(min_age_s, 60s), then removed along with its
-    partial data dir in ONE vacuum (claims sweep before dirs)."""
-    import time
-
-    from mapreduce_google_spark.io import vacuum_snapshots, versioned_write
-
-    root = str(tmp_path / "store")
-    versioned_write(spark.range(3).selectExpr("id AS n"), root)
-    claim = os.path.join(root, "v=2.claim")
-    open(claim, "w").close()  # empty payload — legacy/torn
-    os.makedirs(os.path.join(root, "v=2"))  # its partial data
-
-    # young: protected (a live publisher's create->write window)
-    out = vacuum_snapshots(root, keep_last=10)
-    assert out["orphans"] == [] and os.path.exists(claim)
-
-    old = time.time() - 120  # past the 60s hard floor
-    os.utime(claim, (old, old))
-    os.utime(os.path.join(root, "v=2"), (old, old))
-    out = vacuum_snapshots(root, keep_last=10)
-    assert not os.path.exists(claim)
-    assert out["orphans"] == [2]
-    assert not os.path.exists(os.path.join(root, "v=2"))
-    # the freed number is allocatable again
-    assert versioned_write(spark.range(1).selectExpr("id AS n"), root) == 2
-
-
 def test_dead_manifest_lock_is_broken_automatically(spark, tmp_path):
-    """A publisher that crashes INSIDE the manifest swap leaves
-    _versions.json.lock behind; the next taker breaks it when the
-    recorded holder is a provably dead same-host process (the same
-    protocol as the refresh lock and the claim sweep) instead of
-    failing after 5s and demanding manual deletion."""
-    from mapreduce_google_spark.io import versioned_write
+    """A publisher or vacuum that crashes INSIDE the manifest swap dies
+    holding _versions.json.lock; the kernel drops the lock with the
+    process, so the next publish or vacuum proceeds instead of waiting
+    on it."""
+    from mapreduce_google_spark.io import vacuum_snapshots, versioned_write
+    from tests.lock_holders import killed_holder
 
     root = str(tmp_path / "store")
-    versioned_write(spark.range(3).selectExpr("id AS n"), root)
     lock = os.path.join(root, "_versions.json.lock")
-    with open(lock, "w") as fh:
-        fh.write(_dead_claim_payload())
+    versioned_write(spark.range(3).selectExpr("id AS n"), root)
+    killed_holder(lock)
     assert versioned_write(spark.range(5).selectExpr("id AS n"), root) == 2
-    assert not os.path.exists(lock)
     assert list_versions(root) == [1, 2]
-
-
-def test_failed_lock_payload_write_leaves_no_lock(tmp_path, monkeypatch):
-    """If the holder-payload write fails right after the O_EXCL create
-    (e.g. ENOSPC), the fd must be closed and the lock unlinked before
-    the exception propagates — an orphaned EMPTY lock would stall every
-    taker for the 10s empty-age floor (ADVICE r12)."""
-    import mapreduce_google_spark.io as mio
-
-    lock_path = str(tmp_path / "_versions.json.lock")
-    monkeypatch.setattr(
-        mio, "_versions_manifest", lambda root: str(tmp_path / "_versions.json")
-    )
-    real_write = os.write
-
-    def boom(fd, data):
-        raise OSError(28, "No space left on device")
-
-    monkeypatch.setattr(mio.os, "write", boom)
-    with pytest.raises(OSError):
-        with mio._manifest_lock(str(tmp_path)):
-            pass  # pragma: no cover - must not be reached
-    monkeypatch.setattr(mio.os, "write", real_write)
-    assert not os.path.exists(lock_path), "empty lock left behind"
-    # and the path is immediately usable by the next taker
-    with mio._manifest_lock(str(tmp_path)):
-        assert os.path.exists(lock_path)
-    assert not os.path.exists(lock_path)
-
-
-def test_lock_breaking_is_single_breaker(tmp_path):
-    """The check-then-remove in _break_dead_holder_lock runs under a
-    sibling .breaker mutex with a re-read inside: two waiters may both
-    observe a dead holder, but only the breaker-mutex winner removes
-    the lock — the loser returning False could otherwise unlink the
-    NEXT holder's live lock after the winner re-acquired (review r12).
-    A breaker leaked by a crash mid-break is swept by age."""
-    import time
-
-    from mapreduce_google_spark.io import _break_dead_holder_lock
-
-    lock = str(tmp_path / "x.lock")
-    with open(lock, "w") as fh:
-        fh.write(_dead_claim_payload())
-
-    # a FRESH breaker is someone else mid-break: hands off, lock intact
-    breaker = lock + ".breaker"
-    open(breaker, "w").close()
-    assert _break_dead_holder_lock(lock) is False
-    assert os.path.exists(lock) and os.path.exists(breaker)
-
-    # an OLD breaker is a crashed breaker: swept, then the next call wins
-    old = time.time() - 30
-    os.utime(breaker, (old, old))
-    assert _break_dead_holder_lock(lock) is False  # sweeps the mutex only
-    assert not os.path.exists(breaker)
-    assert _break_dead_holder_lock(lock) is True
-    assert not os.path.exists(lock) and not os.path.exists(breaker)
-
-    # re-read inside the mutex: a LIVE holder observed at entry is never
-    # removed even when the caller raced a stale observation
-    import socket
-
-    with open(lock, "w") as fh:
-        fh.write(f"{socket.gethostname()}:{os.getpid()}")
-    assert _break_dead_holder_lock(lock) is False
-    assert os.path.exists(lock)
-    os.remove(lock)
+    killed_holder(lock)
+    assert vacuum_snapshots(root, keep_last=1) == {"dropped": [1], "orphans": []}
+    assert list_versions(root) == [2]

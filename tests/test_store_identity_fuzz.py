@@ -1,8 +1,9 @@
-"""Property fuzz for the bucketed-store identity/sweep protocol (r13).
+"""Property fuzz for the bucketed-store identity protocol (r13).
 
 ``io.adopt_or_build_bucketed_table`` is the substrate under t09/t11/
 t12/t16/t22/t25/t40/t45/t120/t223 — a wrong adoption silently
-mis-routes co-located joins, and a wrong sweep deletes a live store.
+mis-routes co-located joins, and a build that clears the wrong
+directory deletes a live store.
 This fuzz drives random SEQUENCES of builds over random bucket specs,
 interleaved with planted junk (retired-scheme directories, plain
 parquet, torn sidecar-less stores), and asserts the two safety
@@ -34,11 +35,9 @@ _SPECS = [
     (4, ["k"]),
     (4, ["k", "v"]),
     (2, ["v"]),
-    # a bucket COLUMN whose name itself matches the retired-scheme
-    # ``_k\d`` shape (VERDICT r13 item 6): the sweep's sibling regex
-    # anchors on the LAST ``_k<digits>`` of the CURRENT store's name, so
-    # a live sidecar-bearing store like ``st_k2_f_k2_<hash>`` must never
-    # be mistaken for a retired-scheme sibling and swept
+    # a bucket COLUMN whose name itself has the ``_k<digits>`` shape of
+    # the store suffix (VERDICT r13 item 6): ``st_k2_f_k2_<hash>`` is a
+    # store of its own, never confused with another spec's
     (2, ["f_k2"]),
 ]
 
@@ -110,7 +109,6 @@ def test_adopt_build_sequences_never_misroute_or_delete_live(
                 spec_file = os.path.join(target, "_BUCKET_SPEC.json")
                 if os.path.exists(spec_file):
                     os.remove(spec_file)  # foreign writers have no sidecar
-                os.utime(target, (1.0, 1.0))  # past the sweep age floor
                 continue
 
             i = arg
