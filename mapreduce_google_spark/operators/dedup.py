@@ -226,7 +226,7 @@ def ngram_jaccard_pairs(
     oracle-green at sf0.01). −65% at sf0.1, −36% at sf1 for t21;
     composes into t120's exact side, t135 and t170.
     ``use_shingle_store=False`` forces the string-keyed retokenizing
-    form for one-shot corpora (the from_bands escape-hatch precedent).
+    form for one-shot corpora.
 
     ``warn_df`` (ON by default at 1000, the t22 ``max_bucket`` analog
     for the exact detector): a NON-semantic skew guard. Dropping
@@ -403,7 +403,7 @@ def minhash_lsh_pairs(
     # and the guard aggregation's distribution requirements — zero
     # further shuffles of the banded set (measured ~15% off t22's
     # steady state). At 100 TB the same role is played by the
-    # materialized parquet band table (minhash_band_table); write it
+    # materialized parquet band table (minhash_band_table_counted),
     # bucketed by (band, bucket) — the t40 recipe — for the same
     # shuffle-free join property across runs.
     banded = (
@@ -454,60 +454,6 @@ def minhash_lsh_pairs(
     )
 
 
-def minhash_band_table(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    max_df: int | None = None,
-) -> str:
-    """Materialize the (doc_id, band, bucket) LSH index as a parquet
-    table BUCKETED BY (band, bucket) (one signature pass), keyed by the
-    source fingerprint (``io.cache_tag``). Returns the catalog table
-    name; idempotent until the corpus changes.
-
-    This is the production form of the LSH pipeline: the signature/band
-    table is the durable asset — computed once per corpus version, read
-    by every downstream pass (candidate joins, bucket-size profiles,
-    incremental re-runs) — so signature computation cost is paid exactly
-    once no matter how many consumers follow.
-
-    The bucketed+sorted layout (the same recipe t40 uses,
-    ``io.write_parquet``) is what makes the CROSS-RUN candidate join
-    shuffle-free: every reader of ``spark.table(name)`` sees the
-    bucketing metadata, so the self-join on exactly (band, bucket) and
-    the bucket-size guard aggregation run with ZERO exchange of the
-    banded set — the property the in-session path gets from
-    ``repartition("band","bucket").cache()``, held durably on disk.
-    It has as many buckets as the session's parallelism
-    (``io.store_bucket_count``), so at 100 TB the table is sized by the
-    cluster's executor cores with no argument to raise.
-    """
-    from mapreduce_google_spark.io import (
-        adopt_or_build_bucketed_table,
-        cache_tag,
-        shared_store_path,
-    )
-
-    tag = cache_tag(sf_dir, "documents")
-    name = f"mgs_lsh_bands_{tag}_n{n}_h{num_hashes}_b{bands}_df{max_df}"
-
-    def build():
-        # signatures come from the durable shingle-hash store (r14): the
-        # tokenize + n-gram + hash pass — the expensive expression —
-        # then runs ONCE per corpus version across BOTH LSH assets
-        # instead of once per asset (the store also serves the verify
-        # stage directly)
-        sets = spark.table(shingle_store_table(spark, sf_dir, n, max_df))
-        sig = _signatures_from_hashes(sets, num_hashes)
-        return _band_buckets(sig, num_hashes, bands)
-
-    return adopt_or_build_bucketed_table(
-        spark, name, shared_store_path(name), ["band", "bucket"], None, build
-    )
-
-
 def minhash_band_table_counted(
     spark: SparkSession,
     sf_dir: str,
@@ -516,27 +462,42 @@ def minhash_band_table_counted(
     bands: int = 8,
     max_df: int | None = None,
 ) -> str:
-    """Band table WITH a precomputed ``bucket_n`` column — t22's DEFAULT
-    substrate since r17 (r17 t22 guard probe: the previous
-    ``max_bucket`` guard re-AGGREGATED the full band table and
-    broadcast-anti-joined it on EVERY query; a per-row group count
-    baked in at build time turns the guard into a pushed filter —
-    −27%/−12%/−23% at sf0.1/sf1/sf3, interleaved — and the saving grows
-    with the corpus because the guard agg scanned the whole banded set).
+    """Materialize the (doc_id, band, bucket, bucket_n) LSH index as a
+    parquet table BUCKETED BY (band, bucket) (one signature pass), keyed
+    by the source fingerprint (``io.cache_tag``). Returns the catalog
+    table name; idempotent until the corpus changes.
+
+    This is the production form of the LSH pipeline: the signature/band
+    table is the durable asset — computed once per corpus version, read
+    by every downstream pass (candidate joins, incremental re-runs) —
+    so signature computation cost is paid exactly once no matter how
+    many consumers follow. The bucketed+sorted layout (the same recipe
+    t40 uses, ``io.write_parquet``) is what makes the CROSS-RUN
+    candidate join shuffle-free: every reader of ``spark.table(name)``
+    sees the bucketing metadata, so the self-join on exactly (band,
+    bucket) runs with ZERO exchange of the banded set — the property
+    the in-session path gets from ``repartition("band","bucket").cache()``,
+    held durably on disk. It has as many buckets as the session's
+    parallelism (``io.store_bucket_count``), so at 100 TB the table is
+    sized by the cluster's executor cores with no argument to raise.
 
     ``bucket_n`` is the (band, bucket) group size, computed with a
-    window over the build output BEFORE the bucketed write — the same
-    count the query-time aggregation derives, stamped once per corpus
-    version. A row is guard-dropped iff its group count exceeds
-    ``max_bucket``, so ``WHERE bucket_n <= max_bucket`` is exactly the
-    old anti-join (equality pinned at caps 1000 AND 2 in
+    window over the build output BEFORE the bucketed write and stamped
+    once per corpus version (r17 t22 guard probe: the previous
+    ``max_bucket`` guard re-AGGREGATED the full band table and
+    broadcast-anti-joined it on EVERY query; the baked-in count turns
+    the guard into a pushed filter — −27%/−12%/−23% at sf0.1/sf1/sf3,
+    interleaved — and the saving grows with the corpus because the
+    guard agg scanned the whole banded set). A row is guard-dropped iff
+    its group count exceeds ``max_bucket``, so ``WHERE bucket_n <=
+    max_bucket`` drops exactly the rows the in-session
+    :func:`minhash_lsh_pairs` anti-join drops (equality pinned at caps
+    1000 AND 2 in
     ``tests/test_plans.py::test_t22_counted_guard_equals_agg_antijoin``).
 
-    DISTINCT table name (``mgs_lsh_bands2_``): the bucket spec suffix
-    does not hash the SCHEMA, so reusing the v1 name could adopt
-    bucket_n-less v1 files; the name bump fences them off. The
-    uncounted :func:`minhash_band_table` stays as the forced
-    ``guard="agg_antijoin"`` reference's substrate."""
+    The ``mgs_lsh_bands2_`` name fences off the bucket_n-less
+    ``mgs_lsh_bands_`` stores older code wrote: the bucket spec suffix
+    does not hash the SCHEMA, so reusing that name could adopt them."""
     from mapreduce_google_spark.io import (
         adopt_or_build_bucketed_table,
         cache_tag,
@@ -666,63 +627,39 @@ def minhash_lsh_pairs_from_bands(
     threshold: float = 0.5,
     max_df: int | None = None,
     max_bucket: int | None = 1000,
-    use_shingle_store: bool = True,
-    guard: str = "counted",
 ) -> DataFrame:
     """MinHash-LSH near-dup pairs from the MATERIALIZED band table —
     semantically identical to :func:`minhash_lsh_pairs` (equality pinned
     in tests), with the 100 TB cost profile:
 
     * the signature pipeline runs once ever (table build), not once per
-      plan subtree — so the bucket-size guard, both join sides and any
-      re-run read cheap parquet instead of recomputing hashes
-      (``max_bucket`` therefore defaults ON here);
-    * the bucket-size guard is a PUSHED FILTER, not a query-time pass
-      (r17 t22 guard probe): the default ``guard="counted"``
-      reads :func:`minhash_band_table_counted`, whose build stamps each
-      row with its (band, bucket) group size, so ``bucket_n <=
-      max_bucket`` drops exactly the rows the old per-query
-      aggregation + broadcast anti-join dropped (equality pinned at
-      caps 1000 AND 2) without re-scanning the banded set per run —
-      −27%/−12%/−23% at sf0.1/sf1/sf3, and the saving grows with the
-      corpus because the guard agg scanned the whole banded set.
-      ``guard="agg_antijoin"`` forces the pre-r17 reference form over
-      the uncounted v1 table (shootout + equality-gate substrate);
+      plan subtree — so both join sides and any re-run read cheap
+      parquet instead of recomputing hashes (``max_bucket`` therefore
+      defaults ON here);
+    * the bucket-size guard is a PUSHED FILTER, not a query-time pass:
+      :func:`minhash_band_table_counted` stamps each row with its
+      (band, bucket) group size at build time, so ``bucket_n <=
+      max_bucket`` drops exactly the rows the in-session anti-join
+      drops without re-scanning the banded set per run;
     * the verify stage reads hashed shingle sets from the doc_id-
       bucketed :func:`shingle_store_table` (semi-join pruned to
       candidate documents) — no re-tokenization, 8-byte array elements,
       and the raw corpus is never scanned at all on the steady state
-      (plan-gated); ``use_shingle_store=False`` forces the store-free
-      retokenizing verify for one-shot corpora;
+      (plan-gated);
     * the band table is bucketed+sorted on (band, bucket), so the
-      candidate self-join (and, on the reference form, the guard
-      aggregation) needs NO exchange of the banded set — the cross-run
-      analog of the in-session ``repartition().cache()`` (plan-gated in
+      candidate self-join needs NO exchange of the banded set — the
+      cross-run analog of the in-session ``repartition().cache()``
+      (plan-gated in
       ``tests/test_plans.py::test_from_bands_candidate_join_has_no_banded_exchange``).
+
+    For a corpus read once, :func:`minhash_lsh_pairs` is the store-free
+    path.
     """
-    if guard == "counted":
-        table = minhash_band_table_counted(
-            spark, sf_dir, n, num_hashes, bands, max_df
-        )
-        banded = spark.table(table)
-        if max_bucket is not None:
-            banded = banded.where(F.col("bucket_n") <= max_bucket)
-        banded = banded.drop("bucket_n")
-    elif guard == "agg_antijoin":
-        table = minhash_band_table(spark, sf_dir, n, num_hashes, bands, max_df)
-        banded = spark.table(table)
-        if max_bucket is not None:
-            oversized = (
-                banded.groupBy("band", "bucket")
-                .agg(F.count("*").alias("n"))
-                .where(F.col("n") > max_bucket)
-                .select("band", "bucket")
-            )
-            banded = banded.join(
-                F.broadcast(oversized), ["band", "bucket"], "left_anti"
-            )
-    else:
-        raise ValueError(f"unknown guard form: {guard!r}")
+    table = minhash_band_table_counted(spark, sf_dir, n, num_hashes, bands, max_df)
+    banded = spark.table(table)
+    if max_bucket is not None:
+        banded = banded.where(F.col("bucket_n") <= max_bucket)
+    banded = banded.drop("bucket_n")
     # `merge` hint (same rationale as t40): at test scale the tiny band
     # table would broadcast, hiding the property this path exists for —
     # the bucketed layout lets the self-join read co-located buckets with
@@ -744,41 +681,14 @@ def minhash_lsh_pairs_from_bands(
         .union(candidates.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    if use_shingle_store:
-        # steady-state verify (r14): hashed shingle sets come from the
-        # doc_id-bucketed store — one tokenize pass per corpus version,
-        # 8-byte elements instead of re-tokenized ~20-char strings
-        sets = (
-            spark.table(shingle_store_table(spark, sf_dir, n, max_df))
-            .join(cand_ids, "doc_id", "left_semi")
-            .select("doc_id", F.col("xh").alias("sh"), "set_size")
-        )
-    else:
-        docs = load_table(spark, sf_dir, "documents")
-        if max_df is None:
-            # no stop-set to compute → prune BEFORE tokenizing, so the
-            # fallback verify only ever tokenizes candidate documents
-            arr = _doc_shingle_arrays(
-                docs.join(cand_ids, "doc_id", "left_semi"), n
-            )
-        else:
-            # the max_df stop-set is defined over FULL-corpus document
-            # frequencies — the store path and the direct operator both
-            # compute it that way, and deriving it from the candidate-
-            # pruned subset instead skews every df count and can flip
-            # which shingles survive, silently changing Jaccard values
-            # between the two verify paths (ADVICE r14). Tokenize-then-
-            # prune costs one corpus pass, exactly what the direct
-            # operator pays; one-shot callers wanting the cheap prune
-            # use max_df=None.
-            arr = _doc_shingle_arrays(docs, n, max_df=max_df).join(
-                cand_ids, "doc_id", "left_semi"
-            )
-        sets = arr.select(
-            "doc_id",
-            F.col("shingles").alias("sh"),
-            F.size("shingles").alias("set_size"),
-        )
+    # steady-state verify (r14): hashed shingle sets come from the
+    # doc_id-bucketed store — one tokenize pass per corpus version,
+    # 8-byte elements instead of re-tokenized ~20-char strings
+    sets = (
+        spark.table(shingle_store_table(spark, sf_dir, n, max_df))
+        .join(cand_ids, "doc_id", "left_semi")
+        .select("doc_id", F.col("xh").alias("sh"), "set_size")
+    )
     sa = sets.select(
         F.col("doc_id").alias("doc_a"),
         F.col("sh").alias("sh_a"),
@@ -853,7 +763,7 @@ def fingerprint_store_table(
     anti-joins against co-located buckets with ZERO exchange of the
     store side (the batch side — the small side, by definition of
     incremental ingest — shuffles to match). Same recipe as the LSH
-    band table (:func:`minhash_band_table`) and t40. Returns the
+    band table (:func:`minhash_band_table_counted`) and t40. Returns the
     catalog table name; idempotent until the corpus changes.
     """
     from mapreduce_google_spark.io import (

@@ -187,69 +187,70 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str, k: int = 3) -> Dat
     )
 
 
-def revenue_rollup(
-    spark: SparkSession, sf_dir: str, form: str | None = None
-) -> DataFrame:
+def revenue_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T12 — revenue by (region, nation) with ROLLUP subtotals.
 
-    DEFAULT = the PRE-JOINED store form (r16, VERDICT r15 item 3): the
-    fact side is ONE exchange-free per-customer hash-agg over
-    :func:`prejoined_order_lines_table` — the custkey-bucketed
-    lineitem ⋈ orders line store already carries ``o_custkey`` on every
-    line, so the per-order pre-agg AND the fact-fact join the previous
-    default ran at query time are paid once per corpus version in the
-    store build instead. Measured (r16 rollup shootout, equality-gated): medians
+    The fact side is ONE exchange-free per-customer hash-agg over
+    :func:`prejoined_order_lines_table` (r16, VERDICT r15 item 3): the
+    custkey-bucketed lineitem ⋈ orders line store already carries
+    ``o_custkey`` on every line, so the per-order pre-agg AND the
+    fact-fact join that :func:`revenue_rollup_direct` runs at query
+    time are paid once per corpus version in the store build instead.
+    Measured (r16 rollup shootout, equality-gated): medians
     0.875 vs 1.418 s at sf0.1 (−38%), 1.055 vs 3.032 s at sf1 (−65%),
     2.087 vs 7.636 s at the 30× replica (−73%) — spreads fully
     separated at every tier, and the win GROWS with scale because the
     store removes the two stages whose cost scales with lineitem. The
     same shootout settled the r15 twolevel question: pushing the rollup
     Expand above a finest-grain pre-agg is a wash on EVERY substrate
-    (the expand was never the dominant cost; the join chain was), so
-    the retired ``revenue_rollup_twolevel`` candidate is gone.
-
-    ``form="direct"`` forces the storeless reference path (equality
-    pinned in ``tests/test_plans.py``): per-order pre-agg below the
-    fact-fact join over the raw scans, customer-grain partials
-    exchanged. Shared tail for both: broadcast customer/nation/region
-    joins, rollup Expand over the per-customer relation (~|customers|
-    rows — grouping-set expansion after aggregation, no extra scan),
-    exact decimal partials throughout (associative, so regrouping
-    across forms is value-identical).
+    (the expand was never the dominant cost; the join chain was).
     """
-    form = form or "prejoined"
+    revenue = money("l_extendedprice") * one_minus("l_discount")
+    store = spark.table(prejoined_order_lines_table(spark, sf_dir))
+    per_cust = store.groupBy("o_custkey").agg(
+        F.sum(revenue).alias("rev_dec"),  # exact decimal partials
+        F.count("*").alias("n_lines"),
+    )
+    return _rollup_by_region(spark, sf_dir, per_cust)
+
+
+def revenue_rollup_direct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T12's storeless reference (equality pinned against
+    :func:`revenue_rollup` in ``tests/test_plans.py`` and
+    ``tests/test_flip_fuzz.py``): per-order pre-agg below the fact-fact
+    join over the raw scans, customer-grain partials exchanged."""
+    revenue = money("l_extendedprice") * one_minus("l_discount")
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders")
+    li_per_order = li.groupBy("l_orderkey").agg(
+        F.sum(revenue).alias("rev_dec"),  # exact decimal partial sum
+        F.count("*").alias("n_lines"),
+    )
+    per_cust = (
+        li_per_order.join(
+            orders.select("o_orderkey", "o_custkey"),
+            li_per_order.l_orderkey == F.col("o_orderkey"),
+        )
+        .groupBy("o_custkey")
+        .agg(
+            F.sum("rev_dec").alias("rev_dec"),
+            F.sum("n_lines").alias("n_lines"),
+        )
+    )
+    return _rollup_by_region(spark, sf_dir, per_cust)
+
+
+def _rollup_by_region(
+    spark: SparkSession, sf_dir: str, per_cust: DataFrame
+) -> DataFrame:
+    """T12's tail over a per-customer ``(o_custkey, rev_dec, n_lines)``
+    relation: broadcast customer/nation/region joins, then the rollup
+    Expand over ~|customers| rows (grouping-set expansion after
+    aggregation, no extra scan). The partials are exact decimals, so
+    regrouping them is value-identical whichever body built them."""
     customer = load_table(spark, sf_dir, "customer")
     nation = F.broadcast(load_table(spark, sf_dir, "nation"))
     region = F.broadcast(load_table(spark, sf_dir, "region"))
-    revenue = money("l_extendedprice") * one_minus("l_discount")
-    if form == "prejoined":
-        store = spark.table(prejoined_order_lines_table(spark, sf_dir))
-        per_cust = store.groupBy("o_custkey").agg(
-            F.sum(revenue).alias("rev_dec"),  # exact decimal partials
-            F.count("*").alias("n_lines"),
-        )
-    elif form == "direct":
-        li = load_table(spark, sf_dir, "lineitem")
-        orders = load_table(spark, sf_dir, "orders")
-        li_per_order = li.groupBy("l_orderkey").agg(
-            F.sum(revenue).alias("rev_dec"),  # exact decimal partial sum
-            F.count("*").alias("n_lines"),
-        )
-        per_cust = (
-            li_per_order.join(
-                orders.select("o_orderkey", "o_custkey"),
-                li_per_order.l_orderkey == F.col("o_orderkey"),
-            )
-            .groupBy("o_custkey")
-            .agg(
-                F.sum("rev_dec").alias("rev_dec"),
-                F.sum("n_lines").alias("n_lines"),
-            )
-        )
-    else:
-        raise ValueError(
-            f"unknown form {form!r}; use prejoined|direct"
-        )
     joined = (
         per_cust.join(customer, per_cust.o_custkey == customer.c_custkey)
         .join(nation, customer.c_nationkey == nation.n_nationkey)
@@ -408,46 +409,88 @@ def price_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def asof_latest_order(
-    spark: SparkSession, sf_dir: str, form: str | None = None
-) -> DataFrame:
+def asof_latest_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T33 — as-of join: for each event, the most recent order of the same
-    customer with o_orderdate ≤ event time.
+    customer with o_orderdate ≤ event time, read from the BUCKETED FACT
+    STORES — the zero-exchange as-of join (r14; VERDICT r13 item 4).
 
-    DEFAULT = the bucketed-stores form (r14,
-    :func:`asof_latest_order_stores`): both facts read from their
-    :func:`io.bucketed_fact_table` copies, join co-partitioned with
-    zero exchange, per-customer history collapsed to one sorted array.
-    The r14 implementation shootout (medians of 5) measured it
-    fastest at EVERY scale — sf0.1: 1.11 s vs 1.32 s union-merge vs
-    2.23 s cogroup; sf1: 2.12 s vs 8.62 s vs 5.45 s — which retired
-    the r13 size dispatcher (``ASOF_UNION_MERGE_MAX_ROWS``): there is
-    no crossover left to dispatch on, the store form dominates both
-    branches. ``form="union_merge"``/``"cogroup"``/``"stores"`` forces
-    a path (tests pin all three equal on boundary corpora).
+    Both facts come from :func:`io.bucketed_fact_table` copies already
+    built for their join families (orders by o_custkey for t09/t11,
+    events by user_id for t16/t45), bucketed with EQUAL bucket counts —
+    so the equi-join on user_id = o_custkey is co-partitioned on both
+    sides and runs with ZERO exchange of either fact. Order history is
+    first collapsed per customer into ONE sorted array (groupBy on the
+    bucket column: exchange-free too), then each event picks the last
+    array element with t ≤ event time — a per-row JVM expression, no
+    window sort over |events|+|orders| rows and no Python stage.
 
-    Union-merge formulation — the JOIN-FREE, store-free as-of kept as
-    the forced fallback (a corpus read once with no store budget): tag
-    orders and events into ONE stream, sort per customer by (time,
-    kind) with order rows before event rows at equal timestamps
-    (≤ semantics), and forward-fill the running last order with
-    ``last(..., ignorenulls)``. One shuffle + sort on the customer key
-    and zero fan-out: the old range-join plan produced a row per
-    (event × earlier-order) pair before its argmax collapsed them —
-    quadratic in orders-per-customer — while this plan's row count is
-    exactly |events| + |orders| at every stage. Ties among
-    same-timestamp orders resolve to the max orderkey via the ascending
-    sort, matching the argmax the oracle computes. The cogrouped-pandas
-    ``merge_asof`` path (t50) remains the skew alternative when one
-    customer's full history must stream through ``merge_asof`` rather
-    than materialize as an array element.
+    Tie-break parity with :func:`asof_latest_order_union_merge`: the
+    history is sorted ascending by (t, o_orderkey), so the LAST
+    qualifying element is the max (date, orderkey) — the same
+    lexicographic struct-max the oracle's row_number computes.
+    ``try_element_at`` (not element_at) keeps ANSI mode happy when no
+    order precedes the event.
+
+    Cost model: per-event work is O(per-customer history) rather than
+    the union-merge's global n·log n sort — on TPC-H-shaped data
+    (≈10 orders/customer) the array scan is trivially cheap and the
+    plan ships no fact exchange. Measured (r14 implementation shootout,
+    medians of 5): sf0.1 — 1.11 s vs 1.32 s union-merge vs 2.23 s for a
+    cogrouped-pandas ``merge_asof``; sf1 — 2.12 s vs 8.62 s vs 5.45 s,
+    and the gap WIDENS with scale. A pathological customer with a
+    10^8-order history would make one fat array row; for such skew,
+    salt the history into date-range sub-arrays.
     """
-    if form not in (None, "stores", "union_merge", "cogroup"):
-        raise ValueError(f"unknown as-of form {form!r}")
-    if form in (None, "stores"):
-        return asof_latest_order_stores(spark, sf_dir)
-    if form == "cogroup":
-        return asof_latest_order_pandas(spark, sf_dir)
+    from mapreduce_google_spark.io import bucketed_fact_table
+
+    orders = spark.table(bucketed_fact_table(spark, sf_dir, "orders", "o_custkey"))
+    events = spark.table(bucketed_fact_table(spark, sf_dir, "events", "user_id"))
+    hist = orders.groupBy("o_custkey").agg(
+        F.sort_array(
+            F.collect_list(
+                F.struct(
+                    F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("t"),
+                    F.col("o_orderkey"),
+                    F.col("o_orderdate"),
+                )
+            )
+        ).alias("hist")
+    )
+    ev = events.select(
+        "event_id",
+        "user_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("t_ev"),
+    )
+    best = F.try_element_at(
+        F.filter("hist", lambda o: o["t"] <= F.col("t_ev")), F.lit(-1)
+    )
+    return (
+        ev.join(hist, ev.user_id == hist.o_custkey)
+        .select(
+            "event_id",
+            "user_id",
+            best.getField("o_orderkey").alias("o_orderkey"),
+            F.date_format(best.getField("o_orderdate"), "yyyy-MM-dd HH:mm:ss").alias(
+                "order_ts"
+            ),
+        )
+        .where(F.col("o_orderkey").isNotNull())
+        .orderBy("event_id")
+    )
+
+
+def asof_latest_order_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """T33's store-free reference (equality pinned against
+    :func:`asof_latest_order` on boundary corpora and ``sf_dir``): the
+    JOIN-FREE as-of. Tag orders and events into ONE stream, sort per
+    customer by (time, kind) with order rows before event rows at equal
+    timestamps (≤ semantics), and forward-fill the running last order
+    with ``last(..., ignorenulls)``. One shuffle + sort on the customer
+    key and zero fan-out: the row count is exactly |events| + |orders|
+    at every stage. Ties among same-timestamp orders resolve to the max
+    orderkey via the ascending sort, matching the argmax the oracle
+    computes.
+    """
     events = load_table(spark, sf_dir, "events")
     orders = load_table(spark, sf_dir, "orders")
     ev = events.select(
@@ -568,167 +611,6 @@ def top_orders_global(spark: SparkSession, sf_dir: str, k: int = 100) -> DataFra
         orders.select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
         .limit(k)
-    )
-
-
-def asof_latest_order_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T50 — the as-of join (T33) as a cogrouped-Pandas sort-merge:
-    ``events.groupBy(user) cogroup orders.groupBy(cust)`` →
-    ``applyInPandas`` running ``pandas.merge_asof`` per key group.
-
-    This is the drop-in upgrade path T33's docstring promises for huge
-    per-customer order histories: instead of joining EVERY qualifying
-    (event, order) pair and reducing (work ∝ pairs), each side is shuffled
-    once on the key and merged sorted within the group (work ∝ rows).
-    Arrow batches both directions — the Python cost is per-batch, not
-    per-row. Tie-break parity with T33: sorting orders by
-    (o_orderdate, o_orderkey) makes ``merge_asof``'s backward search pick
-    the max orderkey among equal dates, exactly the lexicographic
-    struct-max.
-
-    The trade: a Python stage and full materialization of each group in
-    memory. Since r14 the bucketed-stores form
-    (:func:`asof_latest_order_stores`) is t33's default — it beats this
-    path at every measured scale (sf1: 2.12 s vs 5.45 s here vs 8.62 s
-    union-merge, r14 implementation shootout medians of 5) because it ships
-    zero fact exchange and no Python stage. This form remains the
-    SKEW-TOLERANT alternative: ``merge_asof`` streams each bucket's
-    rows, so a single customer with a pathological history costs one
-    pandas frame per 64-way bucket rather than one collect_list array
-    element, and it needs no store build on a corpus read exactly once.
-
-    Cogroup key: NOT the raw user (that made one Python call per user —
-    ~40 ms of interpreter/Arrow overhead each, 58 s at sf0.1) but a fixed
-    64-way hash bucket of it, with ``merge_asof(by=user)`` doing the
-    per-user grouping inside one vectorized call per bucket. Python
-    invocation count is now a constant independent of key cardinality —
-    the difference between O(users) and O(buckets) interpreter round
-    trips at 100 TB (measured 58 s → ~2 s at sf0.1).
-    """
-    import pandas as pd
-
-    n_buckets = 64
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", F.pmod("user_id", F.lit(n_buckets)).alias("b")
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.pmod("o_custkey", F.lit(n_buckets)).alias("b"),
-    )
-
-    def merge(ev: pd.DataFrame, od: pd.DataFrame) -> pd.DataFrame:
-        if ev.empty or od.empty:
-            return pd.DataFrame(
-                columns=["event_id", "user_id", "o_orderkey", "o_orderdate"]
-            )
-        ev = ev.sort_values("ts", kind="mergesort")
-        # stable sort on (date, orderkey): merge_asof's backward search
-        # takes the LAST ≤-ts row per by-group → max orderkey among equal
-        # dates, the same lexicographic struct-max tie-break as T33
-        od = od.sort_values(["o_orderdate", "o_orderkey"], kind="mergesort")
-        m = pd.merge_asof(
-            ev,
-            od,
-            left_on="ts",
-            right_on="o_orderdate",
-            left_by="user_id",
-            right_by="o_custkey",
-            direction="backward",
-            allow_exact_matches=True,
-        )
-        m = m.dropna(subset=["o_orderkey"])
-        return m[["event_id", "user_id", "o_orderkey", "o_orderdate"]]
-
-    merged = (
-        events.groupBy("b")
-        .cogroup(orders.groupBy("b"))
-        .applyInPandas(
-            lambda ev, od: merge(
-                ev.drop(columns=["b"]), od.drop(columns=["b"])
-            ),
-            schema="event_id long, user_id long, o_orderkey long, o_orderdate timestamp",
-        )
-    )
-    return merged.select(
-        "event_id",
-        "user_id",
-        "o_orderkey",
-        F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("order_ts"),
-    ).orderBy("event_id")
-
-
-def asof_latest_order_stores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T33 semantics from the BUCKETED FACT STORES — the zero-exchange
-    as-of join, t33's DEFAULT since r14 (shootout-proven fastest at
-    every measured scale; VERDICT r13 item 4).
-
-    Both facts come from :func:`io.bucketed_fact_table` copies already
-    built for their join families (orders by o_custkey for t09/t11,
-    events by user_id for t16/t45), bucketed with EQUAL bucket counts —
-    so the equi-join on user_id = o_custkey is co-partitioned on both
-    sides and runs with ZERO exchange of either fact. Order history is
-    first collapsed per customer into ONE sorted array (groupBy on the
-    bucket column: exchange-free too), then each event picks the last
-    array element with t ≤ event time — a per-row JVM expression, no
-    window sort over |events|+|orders| rows and no Python stage.
-
-    Tie-break parity with the union-merge/cogroup forms: the history is
-    sorted ascending by (t, o_orderkey), so the LAST qualifying element
-    is the max (date, orderkey) — the same lexicographic struct-max the
-    oracle's row_number computes. ``try_element_at`` (not element_at)
-    keeps ANSI mode happy when no order precedes the event.
-
-    Cost model: per-event work is O(per-customer history) rather than
-    the union-merge's global n·log n sort or the cogroup's Python
-    per-batch overhead — on TPC-H-shaped data (≈10 orders/customer) the
-    array scan is trivially cheap and the plan's only exchange is the
-    events-side NONE (both sides co-located). Measured
-    (r14 implementation shootout, medians of 5): sf0.1 — 1.11 s vs 1.32 s
-    union-merge / 2.23 s cogroup; sf1 — 2.12 s vs 8.62 s / 5.45 s, and
-    the gap WIDENS with scale because this is the only form whose plan
-    ships no fact exchange at all. A pathological customer with a
-    10^8-order history would make one fat array row — the cogroup form
-    shares that exact failure mode (one pandas frame per group); for
-    such skew, salt the history into date-range sub-arrays or force
-    ``form="cogroup"``.
-    """
-    from mapreduce_google_spark.io import bucketed_fact_table
-
-    orders = spark.table(bucketed_fact_table(spark, sf_dir, "orders", "o_custkey"))
-    events = spark.table(bucketed_fact_table(spark, sf_dir, "events", "user_id"))
-    hist = orders.groupBy("o_custkey").agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("t"),
-                    F.col("o_orderkey"),
-                    F.col("o_orderdate"),
-                )
-            )
-        ).alias("hist")
-    )
-    ev = events.select(
-        "event_id",
-        "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("t_ev"),
-    )
-    best = F.try_element_at(
-        F.filter("hist", lambda o: o["t"] <= F.col("t_ev")), F.lit(-1)
-    )
-    return (
-        ev.join(hist, ev.user_id == hist.o_custkey)
-        .select(
-            "event_id",
-            "user_id",
-            best.getField("o_orderkey").alias("o_orderkey"),
-            F.date_format(best.getField("o_orderdate"), "yyyy-MM-dd HH:mm:ss").alias(
-                "order_ts"
-            ),
-        )
-        .where(F.col("o_orderkey").isNotNull())
-        .orderBy("event_id")
     )
 
 
@@ -2097,8 +1979,7 @@ def price_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T167 — per-brand size-weighted median retail price via a
-    GROUPED_AGG ``pandas_udf`` — the one Arrow UDF variant the engine
-    didn't yet exercise (scalar, mapInPandas, cogroup, and UDTF are all
+    GROUPED_AGG ``pandas_udf`` (scalar, mapInPandas and UDTF are
     registered elsewhere): a custom aggregate that Spark's built-ins
     can't express, pushed into the hash-agg like any native function.
 

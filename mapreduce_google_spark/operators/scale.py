@@ -254,72 +254,70 @@ def above_segment_average_customers(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def event_pairs_within_minute(
-    spark: SparkSession,
-    sf_dir: str,
-    window_s: int = 60,
-    form: str | None = None,
+    spark: SparkSession, sf_dir: str, window_s: int = 60
 ) -> DataFrame:
     """T45 — pairs of events by the same user within ``window_s``
     seconds, counted per (earlier, later) event-type.
 
-    DEFAULT = the RANGE-FRAME window form (r16, VERDICT r15 item 5):
-    per earlier event, the later event-types within the window are
-    exactly ``collect_list(event_type)`` over ``rangeBetween(1 µs,
-    window_s)`` ordered by ``unix_micros(ts)`` within the user
-    partition — the strictly-after lower bound is the join form's
-    ``ts_b > ts_a`` and the inclusive upper its ``ts_b <= ts_a +
-    window_s``. The window consumes the user_id-bucketed store's
-    co-location (shared with t16; only a local (user, ts) sort is
-    added), so the fact side runs with ZERO exchange — the previous
-    default shuffled BOTH self-join sides on (user, bucket) and doubled
-    the probe side with a 2-bucket explode, costs that grow with the
-    corpus. Measured (r16 event-pairs shootout, equality-gated): medians
-    0.334 vs 0.678 s at sf0.1 (−51%), 0.439 vs 1.722 s at sf1 (−75%),
-    0.327 vs 3.915 s at the 30× replica (−92%) — t45 was the worst 30×
-    scaler (6.39×) and the exchange-free form is essentially FLAT
-    across 30× of data on 32 local cores.
-
-    ``form="raw_join"`` forces the reference path (equality pinned in
-    ``tests/test_plans.py``) over the raw scan: time bucketed into
-    ``window_s`` blocks, self-join on (user_id, bucket) with the later
-    side probing its own and the previous bucket (any pair ≤ window_s
-    apart lands in same/adjacent buckets), exact timestamp refine —
-    hash-equi-join + filter, never a cross product (a naive interval
-    self-join is BroadcastNestedLoop, undoable at 100 TB). At 100 TB
-    the window form's per-user frame buffer is bounded by
-    events-per-user-per-minute — per-key skew, not corpus size — while
-    the join form's exchange grows with the corpus.
+    The RANGE-FRAME window form (r16, VERDICT r15 item 5): per earlier
+    event, the later event-types within the window are exactly
+    ``collect_list(event_type)`` over ``rangeBetween(1 µs, window_s)``
+    ordered by ``unix_micros(ts)`` within the user partition — the
+    strictly-after lower bound is the join form's ``ts_b > ts_a`` and
+    the inclusive upper its ``ts_b <= ts_a + window_s``. The window
+    consumes the user_id-bucketed store's co-location (shared with t16;
+    only a local (user, ts) sort is added), so the fact side runs with
+    ZERO exchange — :func:`event_pairs_within_minute_raw_join` shuffles
+    BOTH self-join sides on (user, bucket) and doubles the probe side
+    with a 2-bucket explode, costs that grow with the corpus. Measured
+    (r16 event-pairs shootout, equality-gated): medians 0.334 vs
+    0.678 s at sf0.1 (−51%), 0.439 vs 1.722 s at sf1 (−75%), 0.327 vs
+    3.915 s at the 30× replica (−92%) — t45 was the worst 30× scaler
+    (6.39×) and the exchange-free form is essentially FLAT across 30×
+    of data on 32 local cores. At 100 TB the per-user frame buffer is
+    bounded by events-per-user-per-minute — per-key skew, not corpus
+    size.
     """
-    # ADVICE r16: window_s=0 fails differently per form (rangeframe
-    # builds an inverted rangeBetween(1, 0) frame; raw_join divides by
-    # zero) — reject the degenerate window up front so every form fails
-    # identically and loudly.
+    # ADVICE r16: window_s=0 would build an inverted rangeBetween(1, 0)
+    # frame here and divide by zero in the reference — reject it up front.
     if window_s < 1:
         raise ValueError(f"window_s must be >= 1 second, got {window_s}")
-    form = form or "rangeframe"
-    if form == "rangeframe":
-        from mapreduce_google_spark.io import bucketed_fact_table
+    from mapreduce_google_spark.io import bucketed_fact_table
 
-        ev = spark.table(
-            bucketed_fact_table(spark, sf_dir, "events", "user_id")
-        ).select("user_id", "ts", "event_type")
-        w = (
-            Window.partitionBy("user_id")
-            .orderBy(F.unix_micros("ts"))
-            .rangeBetween(1, window_s * 1_000_000)
+    ev = spark.table(
+        bucketed_fact_table(spark, sf_dir, "events", "user_id")
+    ).select("user_id", "ts", "event_type")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy(F.unix_micros("ts"))
+        .rangeBetween(1, window_s * 1_000_000)
+    )
+    return (
+        ev.select(
+            F.col("event_type").alias("type_a"),
+            F.collect_list("event_type").over(w).alias("laters"),
         )
-        return (
-            ev.select(
-                F.col("event_type").alias("type_a"),
-                F.collect_list("event_type").over(w).alias("laters"),
-            )
-            .select("type_a", F.explode("laters").alias("type_b"))
-            .groupBy("type_a", "type_b")
-            .agg(F.count("*").cast("long").alias("n_pairs"))
-            .orderBy("type_a", "type_b")
-        )
-    if form != "raw_join":
-        raise ValueError(f"unknown form {form!r}; use rangeframe|raw_join")
+        .select("type_a", F.explode("laters").alias("type_b"))
+        .groupBy("type_a", "type_b")
+        .agg(F.count("*").cast("long").alias("n_pairs"))
+        .orderBy("type_a", "type_b")
+    )
+
+
+def event_pairs_within_minute_raw_join(
+    spark: SparkSession, sf_dir: str, window_s: int = 60
+) -> DataFrame:
+    """T45's reference over the raw scan (equality pinned against
+    :func:`event_pairs_within_minute` in ``tests/test_plans.py`` and
+    ``tests/test_flip_fuzz.py``): time bucketed into ``window_s``
+    blocks, self-join on (user_id, bucket) with the later side probing
+    its own and the previous bucket (any pair ≤ window_s apart lands in
+    same/adjacent buckets), exact timestamp refine — hash-equi-join +
+    filter, never a cross product (a naive interval self-join is
+    BroadcastNestedLoop, undoable at 100 TB).
+    """
+    if window_s < 1:
+        raise ValueError(f"window_s must be >= 1 second, got {window_s}")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )

@@ -509,34 +509,6 @@ def ivf_topk(
     )
 
 
-def partial_topk_per_batch(scored: DataFrame, k: int) -> DataFrame:
-    """Per-Arrow-batch partial top-k fold over a scored relation
-    ``(probe_id, vec_id, cosine)`` — the map-side combine of a top-k:
-    each batch emits at most ``k`` rows per probe under the final total
-    order (cosine desc, vec_id asc), so the downstream merge window
-    shuffles ``k·P·num_batches`` rows instead of the full candidate
-    set. Exact by the union-containment property (the global top-k is
-    contained in the union of per-part top-k under the same order);
-    ``cosine`` must already carry its final rounded value, which both
-    callers guarantee (``F.round`` JVM-side here, the kernel's HALF_UP
-    in :func:`_gemm_scored`). Batch-local: adds NO exchange — the plan
-    gate in tests/test_plans.py pins the bounded row count."""
-    schema = scored.schema
-
-    def fold(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(
-                ["probe_id", "cosine", "vec_id"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            )
-            yield pdf.groupby("probe_id", sort=False).head(k)
-
-    return scored.mapInPandas(fold, schema)
-
-
 def ivf_index_table(
     spark: SparkSession, sf_dir: str, n_cells: int = 8
 ) -> str:
@@ -570,91 +542,6 @@ def ivf_index_table(
     )
 
 
-def ivf_topk_from_index(
-    spark: SparkSession,
-    sf_dir: str,
-    n_probes: int = 10,
-    k: int = 5,
-    n_cells: int = 8,
-    n_probe_cells: int = 3,
-) -> DataFrame:
-    """t25's r13/r14 registered form — identical results to
-    :func:`ivf_topk` (equality pinned in ``tests/test_approx_ops.py``),
-    with the assignment pass served from the materialized
-    :func:`ivf_index_table` instead of recomputed per query. Demoted to
-    the pinned equality reference in r15 by the fused-kernel shootout
-    (:func:`ivf_topk_from_index_fused`).
-
-    Query-time work is ONLY: route each probe to its ``n_probe_cells``
-    closest centroids (n_probes × n_cells — probe-sized), then score
-    candidates read from the probed cells' buckets. Centroids are
-    re-derived from the same deterministic seed rule (the ``n_cells``
-    lowest vec_ids), so routing agrees with the stored assignment by
-    construction."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned = spark.table(ivf_index_table(spark, sf_dir, n_cells))
-    centroids = F.broadcast(
-        emb.orderBy("vec_id")
-        .limit(n_cells)
-        .select(F.col("vec_id").alias("cell_id"), F.col("embedding").alias("centroid"))
-    )
-    probes = F.broadcast(_probes(emb, n_probes))
-    wc = Window.partitionBy("probe_id").orderBy(
-        F.col("c_cos").desc(), F.col("cell_id").asc()
-    )
-    probe_cells = (
-        probes.crossJoin(centroids)
-        .select(
-            "probe_id",
-            "probe_vec",
-            "cell_id",
-            F.round(cosine_similarity("probe_vec", "centroid"), 6).alias("c_cos"),
-        )
-        .withColumn("rn", F.row_number().over(wc))
-        .where(F.col("rn") <= n_probe_cells)
-        .select("probe_id", "probe_vec", "cell_id")
-    )
-    # checked cosine (ADVICE r16): the fused kernel this form is
-    # equality-pinned against raises on any non-finite candidate
-    # cosine, so the JVM scoring expression must fail identically on a
-    # zero-norm embedding instead of silently ordering NaN rows
-    from mapreduce_google_spark.functions.vectors import (
-        cosine_similarity_checked,
-    )
-
-    scored = (
-        probe_cells.join(assigned, "cell_id")
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select(
-            "probe_id",
-            "vec_id",
-            F.round(
-                cosine_similarity_checked(
-                    "probe_vec", "embedding", "ivf_topk_from_index"
-                ),
-                6,
-            ).alias("cosine"),
-        )
-    )
-    # map-side combine for the rank stage (VERDICT r13 "What's wrong
-    # #1", shared shape with t18): fold each scan batch to its
-    # per-probe top-k before the probe_id window, so the exchange
-    # carries k*P*num_batches rows instead of every probed-cell
-    # candidate — the IVF pruning bounds the constant, this bounds the
-    # shape
-    scored = partial_topk_per_batch(scored, k)
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.select(
-            "probe_id", "vec_id", "cosine", F.row_number().over(w).alias("rank")
-        )
-        .where(F.col("rank") <= k)
-        .orderBy("probe_id", "rank")
-    )
-
-
 def ivf_topk_from_index_fused(
     spark: SparkSession,
     sf_dir: str,
@@ -663,36 +550,39 @@ def ivf_topk_from_index_fused(
     n_cells: int = 8,
     n_probe_cells: int = 3,
 ) -> DataFrame:
-    """T25, registered form since r15 — the FUSED score+fold Arrow
-    kernel (VERDICT r14 "What's wrong #2"; result equality with
-    :func:`ivf_topk_from_index` and transitively :func:`ivf_topk` is
-    pinned in ``tests/test_approx_ops.py``).
+    """T25 — IVF approximate cosine top-k served from the materialized
+    :func:`ivf_index_table`, scored and folded by ONE fused Arrow kernel
+    (r15, VERDICT r14 "What's wrong #2"; result equality with the
+    in-session :func:`ivf_topk` is pinned in
+    ``tests/test_approx_ops.py``).
 
-    The r13/r14 form scored probed-cell candidates JVM-side with the
-    ``cosine_similarity`` higher-order function, then crossed to Python
-    once more for :func:`partial_topk_per_batch` — correct and bounded,
-    but the fold's crossing was the one ABBA regression r14 accepted
-    (+2.6%). This form gives scoring and folding ONE shared crossing in
-    the t18 kernel shape: candidates arrive as ``(probe_id, vec_id,
-    embedding)`` straight off the cell-bucketed index join, each Arrow
-    batch groups by probe, scores the group with a vectorized
-    matrix-vector product, rounds HALF_UP exactly like ``F.round``
-    (:func:`_round_half_up_6`), and folds to the per-probe top-k via
-    the SAME tie-exact selection the t18 kernel uses
-    (:func:`_batch_topk_rows`, one column per call) — ≤ ``k`` rows per
-    probe per batch reach the merge window, the bounded shape the
-    previous form already guaranteed. Probe vectors ride the closure
-    (probe-sized collect, same class as the IVF centroids), so the
-    Arrow crossing carries each candidate's embedding ONCE and no
-    probe_vec duplication per candidate row.
+    Query-time work is ONLY: route each probe to its ``n_probe_cells``
+    closest centroids (n_probes × n_cells — probe-sized), then score
+    candidates read from the probed cells' buckets. Centroids are
+    re-derived from the same deterministic seed rule (the ``n_cells``
+    lowest vec_ids), so routing agrees with the stored assignment by
+    construction.
 
-    Measured (r15 fused-IVF shootout, equality-gated): medians
-    0.848 vs 0.897 s at sf0.1 (−5.5%) and 0.841 vs 0.973 s at sf1
-    (−13.6%) — the win GROWS with scale because the crossing it removes
-    carries the full probed-cell candidate relation. t25 is rows-only
-    (its hash row cannot exist); t165's invariant oracle checks the
-    in-session :func:`ivf_topk`, unchanged here, and the equality
-    chain carries the evidence across.
+    Scoring and folding share one Arrow crossing in the t18 kernel
+    shape: candidates arrive as ``(probe_id, vec_id, embedding)``
+    straight off the cell-bucketed index join, each Arrow batch groups
+    by probe, scores the group with a vectorized matrix-vector product,
+    rounds HALF_UP exactly like ``F.round`` (:func:`_round_half_up_6`),
+    and folds to the per-probe top-k via the SAME tie-exact selection
+    the t18 kernel uses (:func:`_batch_topk_rows`, one column per call)
+    — ≤ ``k`` rows per probe per batch reach the merge window. Probe
+    vectors ride the closure (probe-sized collect, same class as the
+    IVF centroids), so the Arrow crossing carries each candidate's
+    embedding ONCE and no probe_vec duplication per candidate row.
+
+    Measured (r15 fused-IVF shootout, equality-gated, against the r14
+    form that scored JVM-side and folded in a second Python crossing):
+    medians 0.848 vs 0.897 s at sf0.1 (−5.5%) and 0.841 vs 0.973 s at
+    sf1 (−13.6%) — the win GROWS with scale because the crossing it
+    removes carries the full probed-cell candidate relation. t25 is
+    rows-only (its hash row cannot exist); t165's invariant oracle
+    checks the in-session :func:`ivf_topk`, and the equality test
+    carries the evidence across.
     """
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = spark.table(ivf_index_table(spark, sf_dir, n_cells))

@@ -40,14 +40,6 @@ class QuerySpec:
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
     headline: bool = False  # included in perfbench ``query_mix``
-    #: True → superseded by a sibling spec (named beside its registration)
-    #: but kept because tests use its builder as a reference (t50's,
-    #: superseded by t33, in test_property_fuzz and test_scale_smoke):
-    #: still in REGISTRY, so the local oracle certification keeps
-    #: covering it (a retired spec must keep its oracle — asserted in
-    #: tests/test_registry_contract.py::test_every_query_declares_semantics),
-    #: but EXCLUDED from the driver contract (queries()/oracle_sql()).
-    retired: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -59,18 +51,14 @@ def register(spec: QuerySpec) -> QuerySpec:
 
 
 def queries() -> dict[str, Builder]:
-    return {
-        name: spec.builder
-        for name, spec in REGISTRY.items()
-        if not spec.retired
-    }
+    return {name: spec.builder for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         name: spec.oracle
         for name, spec in REGISTRY.items()
-        if spec.oracle is not None and not spec.retired
+        if spec.oracle is not None
     }
 
 
@@ -604,14 +592,13 @@ register(
         # the PRODUCTION form: candidates from the persisted bucketed
         # band table (one signature pass per corpus version) instead of
         # recomputing signatures per run, the bucket-size guard a pushed
-        # bucket_n filter stamped at build time (r17 — the pre-r17
-        # per-query guard agg + broadcast anti-join stays as the forced
-        # guard="agg_antijoin" reference; r17 t22 guard probe),
+        # bucket_n filter stamped at build time (r17 t22 guard probe),
         # verify from the doc_id-bucketed shingle-HASH store (r14 — the
         # steady state never scans the raw corpus, plan-gated) —
         # result-identical to the in-session minhash_lsh_pairs (equality
-        # pinned in test_approx_ops.py::test_lsh_from_band_table_equals_
-        # direct), and what a 100 TB deployment would actually execute
+        # pinned in
+        # test_approx_ops.py::test_lsh_from_band_table_equals_direct),
+        # and what a 100 TB deployment would actually execute
         # repeatedly (VERDICT r12 item 6)
         builder=dedup_ops.minhash_lsh_pairs_from_bands,
         oracle=None,  # hash-permutation family not SQL-portable; tests
@@ -732,11 +719,10 @@ register(
         # cell-bucketed ivf_index_table (one pass per corpus version,
         # the band-table pattern), candidates scored AND folded in one
         # fused Arrow kernel (r15 fused-IVF shootout: -5.5%
-        # at sf0.1, -13.6% at sf1 vs the JVM-HOF + separate-fold form;
-        # removes the extra crossing behind r14's one ABBA regression)
+        # at sf0.1, -13.6% at sf1 vs the JVM-HOF + separate-fold form)
         # — result-identical to the in-session ivf_topk (equality
-        # chain pinned in tests/test_approx_ops.py:
-        # in-session == from_index == fused)
+        # pinned in tests/test_approx_ops.py at the defaults and at the
+        # degenerate parameter sets)
         builder=sim_ops.ivf_topk_from_index_fused,
         oracle=None,  # approximate by construction; tests measure recall
         # against t18's exact result
@@ -1292,39 +1278,6 @@ register(
         """,
         doc="streaming dropDuplicatesWithinWatermark over a doubled (redelivered) source — counts equal the original table",
         tags=("streaming", "dedup"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t50_asof_latest_order_pandas",
-        builder=rel_ops.asof_latest_order_pandas,
-        oracle="""
-            SELECT event_id, user_id, o_orderkey,
-                   strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS order_ts
-            FROM (
-                SELECT e.event_id, e.user_id, o.o_orderkey, o.o_orderdate,
-                       row_number() OVER (
-                           PARTITION BY e.event_id
-                           ORDER BY o.o_orderdate DESC, o.o_orderkey DESC
-                       ) AS rn
-                FROM events e
-                JOIN orders o
-                  ON e.user_id = o.o_custkey AND o.o_orderdate <= e.ts
-            )
-            WHERE rn = 1
-            ORDER BY event_id
-        """,
-        doc="as-of join via cogrouped applyInPandas merge_asof (skew-tolerant "
-        "alternative; since r14 the bucketed-stores form is t33's default — "
-        "sf1 shootout: stores 2.12s vs 5.45s here vs 8.62s union-merge)",
-        tags=("relational", "join", "asof", "pandas"),
-        retired=True,
-        # retired in r8 (registry headroom): driver slot ceded to its twin
-        # t33_asof_latest_order — same semantics/oracle; t50 stays the
-        # skew-tolerant forced form (form="cogroup") and remains locally
-        # certified via tests (test_queries_oracle, test_scale_smoke
-        # kernel bound)
     )
 )
 
@@ -7145,7 +7098,7 @@ EAGER_BUILD: frozenset[str] = frozenset(
 
 #: The first 50 ``queries()`` keys, frozen in the order the external
 #: driver checks them: three canaries (t01, t09, t17), then the last
-#: window the round-era rotation composed. Every slot is an active,
+#: window the round-era rotation composed. Every slot is an
 #: oracle-bearing spec (tests/test_registry_contract.py::
 #: test_driver_window_ordering).
 DRIVER_WINDOW: tuple[str, ...] = (

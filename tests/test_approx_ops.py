@@ -62,49 +62,6 @@ def test_gemm_scored_relation_is_bounded(spark, sf_dir):
     assert scored.where("vec_id = probe_id").count() == 0
 
 
-def test_partial_topk_per_batch_is_exact_and_bounded(spark):
-    """partial_topk_per_batch (t25's map-side combine): folding batches
-    to per-probe top-k must not change the final ranked result (union
-    containment under the shared total order, ties broken by vec_id),
-    and the folded relation is bounded by k·P·num_batches. Built on a
-    synthetic relation with deliberate ties across partitions so the
-    tie-break path is exercised, not just the happy path."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from mapreduce_google_spark.operators.similarity import (
-        partial_topk_per_batch,
-    )
-
-    n_parts, k = 8, 3
-    scored = (
-        spark.range(0, 4000, 1, n_parts)
-        .selectExpr(
-            "id % 5 AS probe_id",
-            "id AS vec_id",
-            # heavy ties: only 7 distinct cosine values
-            "round((id % 7) / 10.0, 6) AS cosine",
-        )
-    )
-    folded = partial_topk_per_batch(scored, k)
-    assert folded.count() <= k * 5 * n_parts
-
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-
-    def topk(df):
-        return [
-            tuple(r)
-            for r in df.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-            .orderBy("probe_id", "rank")
-            .collect()
-        ]
-
-    assert topk(folded) == topk(scored)
-
-
 def test_round_half_up_matches_spark_round(spark):
     """_round_half_up_6 vs F.round (ADVICE r13): np.round is
     half-to-EVEN while Spark/DuckDB round HALF_UP, a systematic
@@ -149,31 +106,19 @@ def test_ivf_recall(spark, sf_dir):
     assert recall >= 0.5, f"IVF recall {recall:.2f}"
 
 
-def test_ivf_from_index_equals_in_session(spark, sf_dir):
-    """t25's registered from-index form must produce exactly the
-    in-session operator's rows: the store holds the same deterministic
-    assignment (seed centroids = lowest vec_ids), so the only difference
-    is WHERE the assignment pass ran — build time, not query time."""
-    from mapreduce_google_spark.operators.similarity import ivf_topk_from_index
-
-    a = [tuple(r) for r in ivf_topk(spark, sf_dir).collect()]
-    b = [tuple(r) for r in ivf_topk_from_index(spark, sf_dir).collect()]
-    assert a == b
-
-
 def test_ivf_fused_kernel_equals_registered(spark, sf_dir):
-    """The registered t25 default since r15 (fused Arrow score+fold
-    kernel, VERDICT r14 wrong #2) must produce exactly the from-index
-    reference form's rows — same routing, same HALF_UP rounding, same
-    tie-exact per-probe fold, one Arrow crossing instead of
-    JVM-HOF-score + separate fold crossing; the chain to the in-session
-    operator closes via test_ivf_from_index_equals_in_session."""
+    """The registered t25 body (fused Arrow score+fold kernel over the
+    materialized assignment index, VERDICT r14 wrong #2) must produce
+    exactly the in-session :func:`ivf_topk` rows: the index holds the
+    same deterministic assignment (seed centroids = lowest vec_ids), the
+    kernel rounds HALF_UP like ``F.round`` and folds with the same
+    tie-exact per-probe order, so the only differences are WHERE the
+    assignment pass ran and how many Arrow crossings scoring takes."""
     from mapreduce_google_spark.operators.similarity import (
-        ivf_topk_from_index,
         ivf_topk_from_index_fused,
     )
 
-    a = [tuple(r) for r in ivf_topk_from_index(spark, sf_dir).collect()]
+    a = [tuple(r) for r in ivf_topk(spark, sf_dir).collect()]
     b = [tuple(r) for r in ivf_topk_from_index_fused(spark, sf_dir).collect()]
     assert a == b and len(a) > 0
 
@@ -184,9 +129,8 @@ def test_ivf_fused_kernel_equality_at_degenerate_params(spark, sf_dir):
     cut), k far above any cell's candidate count (kk=min(k, B) per
     batch, merge window completes the union), and single-cell probing
     (fewest candidates per probe, most ties at the k-th value). Each
-    must equal the reference form exactly."""
+    must equal the in-session :func:`ivf_topk` exactly."""
     from mapreduce_google_spark.operators.similarity import (
-        ivf_topk_from_index,
         ivf_topk_from_index_fused,
     )
 
@@ -196,58 +140,12 @@ def test_ivf_fused_kernel_equality_at_degenerate_params(spark, sf_dir):
         {"n_probe_cells": 1, "k": 3},
         {"n_probes": 3, "k": 7},
     ):
-        a = [
-            tuple(r)
-            for r in ivf_topk_from_index(spark, sf_dir, **kwargs).collect()
-        ]
+        a = [tuple(r) for r in ivf_topk(spark, sf_dir, **kwargs).collect()]
         b = [
             tuple(r)
             for r in ivf_topk_from_index_fused(spark, sf_dir, **kwargs).collect()
         ]
         assert a == b and len(a) > 0, kwargs
-
-
-def test_cosine_checked_raises_on_zero_norm(spark):
-    """ADVICE r16: the fused Arrow kernel raises on any non-finite
-    cosine, so the JVM scoring expression its reference form uses must
-    fail identically on a degenerate (zero-norm) embedding — loudly,
-    via raise_error inside the expression, not by silently ordering
-    NaN rows. On non-degenerate rows the checked expression must equal
-    the unchecked one exactly (the equality chain to the fused kernel
-    rests on it)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from mapreduce_google_spark.functions.vectors import (
-        cosine_similarity,
-        cosine_similarity_checked,
-    )
-
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0], [1.0, 2.0]), (2, [1.0, 3.0], [1.0, 2.0])],
-        "id long, a array<float>, b array<float>",
-    )
-    ok = (
-        df.where("id = 2")
-        .select(
-            F.round(cosine_similarity_checked("a", "b"), 6).alias("c"),
-            F.round(cosine_similarity("a", "b"), 6).alias("u"),
-        )
-        .collect()[0]
-    )
-    assert ok.c == ok.u and ok.c is not None
-    with pytest.raises(Exception, match="zero-norm"):
-        df.select(cosine_similarity_checked("a", "b", "test")).collect()
-    # ADVICE r17: the contract is the FULL non-finite set, not just
-    # zero norms — a NaN or Inf component must raise identically
-    # (the Arrow kernel raises on any non-finite cosine).
-    for bad_component in (float("nan"), float("inf"), float("-inf")):
-        bad = spark.createDataFrame(
-            [(1, [bad_component, 1.0], [1.0, 2.0])],
-            "id long, a array<float>, b array<float>",
-        )
-        with pytest.raises(Exception, match="zero-norm or non-finite"):
-            bad.select(cosine_similarity_checked("a", "b", "test")).collect()
 
 
 def test_ivf_scans_fraction_of_vectors(spark, sf_dir):
@@ -493,25 +391,15 @@ def test_lsh_from_band_table_equals_direct(spark, sf_dir):
         for r in minhash_lsh_pairs_from_bands(spark, sf_dir).collect()
     }
     assert from_tbl == direct
-    # the retokenizing (store-less) verify is the fallback contract —
-    # pin it to the same pair set
-    retok = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs_from_bands(
-            spark, sf_dir, use_shingle_store=False
-        ).collect()
-    }
-    assert retok == direct
 
 
 def test_lsh_retok_fallback_matches_direct_with_max_df(spark, sf_dir):
-    """ADVICE r14: with max_df set, the store-less fallback verify used
-    to compute the stop-set over only the CANDIDATE-pruned documents —
-    document frequencies from a tiny subset — while the direct operator
-    and the store path both derive it from the full corpus, so the two
-    verify paths could disagree on Jaccard values. Pin all three forms
-    equal at a max_df low enough that the stop-set is non-empty (so the
-    test actually exercises the divergent computation)."""
+    """ADVICE r14: with max_df set, the stop-set must come from
+    FULL-corpus document frequencies on both paths — a stop-set derived
+    from the candidate-pruned documents skews every df count and can
+    flip which shingles survive. Pin the store path equal to the direct
+    operator at a max_df low enough that the stop-set is non-empty (so
+    the test actually exercises the capped computation)."""
     from pyspark.sql import functions as F
 
     from mapreduce_google_spark.operators.dedup import (
@@ -541,14 +429,7 @@ def test_lsh_retok_fallback_matches_direct_with_max_df(spark, sf_dir):
             spark, sf_dir, max_df=max_df
         ).collect()
     }
-    retok = {
-        (r.doc_a, r.doc_b, r.jaccard)
-        for r in minhash_lsh_pairs_from_bands(
-            spark, sf_dir, max_df=max_df, use_shingle_store=False
-        ).collect()
-    }
     assert stored == direct
-    assert retok == direct
 
 
 def test_signatures_from_hashes_equal_string_pipeline(spark, sf_dir):
@@ -676,10 +557,10 @@ def test_bucketed_tables_adopted_not_rebuilt_across_sessions(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from mapreduce_google_spark.io import shared_store_path
-    from mapreduce_google_spark.operators.dedup import minhash_band_table
+    from mapreduce_google_spark.operators.dedup import minhash_band_table_counted
     from mapreduce_google_spark.plans import formatted_plan
 
-    name = minhash_band_table(spark, sf_dir)
+    name = minhash_band_table_counted(spark, sf_dir)
     # the effective name doubles as the store's directory name under the
     # per-user root (r14 moved stores off the world-writable /tmp/{name})
     path = shared_store_path(name)
@@ -690,7 +571,7 @@ def test_bucketed_tables_adopted_not_rebuilt_across_sessions(spark, sf_dir):
     spark.sql(f"DROP TABLE {name}")
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
 
-    name2 = minhash_band_table(spark, sf_dir)
+    name2 = minhash_band_table_counted(spark, sf_dir)
     assert name2 == name
     after = {f: os.path.getmtime(f) for f in glob.glob(f"{path}/part-*")}
     assert after == before, "adoption rewrote the table"

@@ -104,12 +104,15 @@ def _brute_force_pairs(df: pd.DataFrame, window_s: int) -> dict:
 def test_t45_forms_agree_on_adversarial_corpus(
     spark, tmp_path, store_root_in_tmp_path
 ):
-    """Both t45 forms must agree with each other AND a pure-Python
-    brute force on a corpus concentrating ties, boundary pairs, bucket
-    straddles, and per-user skew — at three window widths (the narrow
-    1 s window exercises empty frames; 3600 s makes the bot user's
-    whole burst one frame)."""
-    from mapreduce_google_spark.operators.scale import event_pairs_within_minute
+    """The registered t45 body and its raw-join reference must agree
+    with each other AND a pure-Python brute force on a corpus
+    concentrating ties, boundary pairs, bucket straddles, and per-user
+    skew — at three window widths (the narrow 1 s window exercises
+    empty frames; 3600 s makes the bot user's whole burst one frame)."""
+    from mapreduce_google_spark.operators.scale import (
+        event_pairs_within_minute,
+        event_pairs_within_minute_raw_join,
+    )
 
     pdf = _adversarial_events()
     _write_parquet(tmp_path, "events", pdf)
@@ -117,20 +120,21 @@ def test_t45_forms_agree_on_adversarial_corpus(
     for window_s in (1, 60, 3600):
         expected = _brute_force_pairs(pdf, window_s)
         results = {}
-        for form in ("rangeframe", "raw_join"):
+        for fn in (event_pairs_within_minute, event_pairs_within_minute_raw_join):
             got = {
                 (r["type_a"], r["type_b"]): r["n_pairs"]
-                for r in event_pairs_within_minute(
-                    spark, sf_dir, window_s=window_s, form=form
-                ).collect()
+                for r in fn(spark, sf_dir, window_s=window_s).collect()
             }
-            results[form] = got
+            results[fn.__name__] = got
             assert got == expected, (
                 window_s,
-                form,
+                fn.__name__,
                 sorted(set(got.items()) ^ set(expected.items()))[:5],
             )
-        assert results["rangeframe"] == results["raw_join"]
+        assert (
+            results["event_pairs_within_minute"]
+            == results["event_pairs_within_minute_raw_join"]
+        )
 
 
 # --- t12: pre-joined store vs direct join vs DuckDB oracle ----------------
@@ -203,7 +207,8 @@ _T12_ORACLE = """
 def test_t12_forms_agree_on_ragged_corpus(
     spark, tmp_path, store_root_in_tmp_path
 ):
-    """Both t12 forms must agree with each other AND the registered
+    """The registered t12 body and its direct reference must agree with
+    each other AND the registered
     DuckDB oracle SQL on a corpus with referential raggedness: customers
     without orders (must not appear — inner joins), orders without
     lineitems (contribute nothing), and orders whose custkey has no
@@ -214,10 +219,13 @@ def test_t12_forms_agree_on_ragged_corpus(
 
     _ragged_tpch(tmp_path)
     sf_dir = str(tmp_path)
-    from mapreduce_google_spark.operators.relational import revenue_rollup
+    from mapreduce_google_spark.operators.relational import (
+        revenue_rollup,
+        revenue_rollup_direct,
+    )
 
     a = [tuple(r) for r in revenue_rollup(spark, sf_dir).collect()]
-    c = [tuple(r) for r in revenue_rollup(spark, sf_dir, form="direct").collect()]
+    c = [tuple(r) for r in revenue_rollup_direct(spark, sf_dir).collect()]
     assert a == c and len(a) > 0
     con = duckdb.connect()
     for t in ("region", "nation", "customer", "orders", "lineitem"):
@@ -229,7 +237,7 @@ def test_t12_forms_agree_on_ragged_corpus(
     )
 
 
-# --- t22: counted guard vs agg-antijoin guard on a boilerplate corpus -------
+# --- t22: counted guard vs in-session anti-join guard on a boilerplate corpus
 
 
 def _boilerplate_documents(seed: int = 1701) -> pd.DataFrame:
@@ -261,14 +269,15 @@ def test_t22_guard_forms_agree_on_boilerplate_corpus(
     """The r17 flip gate, fuzzed where the guard actually FIRES: on a
     corpus with a planted 30-copy boilerplate cluster, the counted
     table's pushed ``bucket_n <= max_bucket`` filter must drop exactly
-    the rows the per-query aggregation + broadcast anti-join drops — at
-    a cap the cluster exceeds (5: all its pairs vanish, non-vacuity
-    asserted both ways), at a cap above it (1000: guard passes
-    everything), and with the guard OFF (None: both forms emit the
-    boilerplate's 435 pairs). Both store builds (counted and v1) run
-    fresh on this corpus, so build-time bucket_n stamping is exercised
-    on the degenerate shape too."""
+    the rows the in-session :func:`minhash_lsh_pairs` per-query
+    aggregation + broadcast anti-join drops — at a cap the cluster
+    exceeds (5: all its pairs vanish, non-vacuity asserted both ways),
+    at a cap above it (1000: guard passes everything), and with the
+    guard OFF (None: both paths emit the boilerplate's 435 pairs). The
+    counted store build runs fresh on this corpus, so build-time
+    bucket_n stamping is exercised on the degenerate shape too."""
     from mapreduce_google_spark.operators.dedup import (
+        minhash_lsh_pairs,
         minhash_lsh_pairs_from_bands,
     )
 
@@ -285,9 +294,7 @@ def test_t22_guard_forms_agree_on_boilerplate_corpus(
         )
         anti = sorted(
             tuple(r)
-            for r in minhash_lsh_pairs_from_bands(
-                spark, sf_dir, max_bucket=cap, guard="agg_antijoin"
-            ).collect()
+            for r in minhash_lsh_pairs(spark, sf_dir, max_bucket=cap).collect()
         )
         assert counted == anti, (cap, len(counted), len(anti))
         by_cap[cap] = counted

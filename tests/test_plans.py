@@ -74,27 +74,27 @@ def test_t38_global_topk_avoids_full_sort(spark, sf_dir):
 
 
 def test_t33_union_merge_form_is_join_free(spark, sf_dir):
-    """The forced union-merge form is the JOIN-FREE as-of: ONE window
+    """The union-merge reference is the JOIN-FREE as-of: ONE window
     over the tagged union — a range join would fan out a row per
-    (event × earlier-order) pair before collapsing. (The r14 DEFAULT is
-    the bucketed-stores join form, covered below; this form stays the
-    store-free fallback and must keep its shape.)"""
-    from mapreduce_google_spark.operators.relational import asof_latest_order
+    (event × earlier-order) pair before collapsing. (The registered
+    body is the bucketed-stores join form, covered below; this
+    store-free reference must keep its shape.)"""
+    from mapreduce_google_spark.operators.relational import (
+        asof_latest_order_union_merge,
+    )
 
-    plan = formatted_plan(asof_latest_order(spark, sf_dir, form="union_merge"))
+    plan = formatted_plan(asof_latest_order_union_merge(spark, sf_dir))
     assert "Join" not in plan, plan
     assert "Window" in plan, plan
     assert "Union" in plan, plan
 
 
 def test_t33_default_reads_stores_and_forms_force(spark, sf_dir):
-    """r14: t33's default is the bucketed-stores form at every size (the
-    shootout measured it fastest at sf0.1 AND sf1, which retired the r13
-    row-count dispatcher). The default plan must read bucketed scans with
-    no Python stage and no window over the tagged union; each forced form
-    must still produce its own shape."""
-    import pytest
-
+    """r14: t33's registered body is the bucketed-stores form at every
+    size (the shootout measured it fastest at sf0.1 AND sf1, which
+    retired the r13 row-count dispatcher). Its plan must read bucketed
+    scans with no Python stage and no window over the tagged union; the
+    union-merge reference must still produce its own shape."""
     import mapreduce_google_spark.operators.relational as rel
 
     default = formatted_plan(rel.asof_latest_order(spark, sf_dir))
@@ -102,21 +102,13 @@ def test_t33_default_reads_stores_and_forms_force(spark, sf_dir):
     assert "FlatMapCoGroupsInPandas" not in default, default
     assert "Union" not in default, default
 
-    forced_cg = formatted_plan(rel.asof_latest_order(spark, sf_dir, form="cogroup"))
-    assert "FlatMapCoGroupsInPandas" in forced_cg, forced_cg
-
-    forced_um = formatted_plan(
-        rel.asof_latest_order(spark, sf_dir, form="union_merge")
-    )
-    assert "Union" in forced_um and "Bucketed: true" not in forced_um, forced_um
-
-    with pytest.raises(ValueError, match="unknown as-of form"):
-        rel.asof_latest_order(spark, sf_dir, form="nope")
+    ref = formatted_plan(rel.asof_latest_order_union_merge(spark, sf_dir))
+    assert "Union" in ref and "Bucketed: true" not in ref, ref
 
 
 def test_t33_stores_form_equal_and_coloc(spark, sf_dir):
-    """The bucketed-stores as-of form (r14): result-identical to the
-    union-merge reference, and its fact-fact join is CO-PARTITIONED —
+    """The registered bucketed-stores as-of (r14): result-identical to
+    the union-merge reference, and its fact-fact join is CO-PARTITIONED —
     both stores are bucketed on their join key with equal counts, so a
     merge-hinted build of the same join shape shows SortMergeJoin with
     zero Exchange (at test scale AQE would broadcast the tiny history
@@ -126,14 +118,11 @@ def test_t33_stores_form_equal_and_coloc(spark, sf_dir):
     from mapreduce_google_spark.io import bucketed_fact_table
     from mapreduce_google_spark.operators.relational import (
         asof_latest_order,
-        asof_latest_order_stores,
+        asof_latest_order_union_merge,
     )
 
-    ref = [
-        tuple(r)
-        for r in asof_latest_order(spark, sf_dir, form="union_merge").collect()
-    ]
-    got = [tuple(r) for r in asof_latest_order_stores(spark, sf_dir).collect()]
+    ref = [tuple(r) for r in asof_latest_order_union_merge(spark, sf_dir).collect()]
+    got = [tuple(r) for r in asof_latest_order(spark, sf_dir).collect()]
     assert got == ref and len(ref) > 0
 
     orders = spark.table(bucketed_fact_table(spark, sf_dir, "orders", "o_custkey"))
@@ -229,18 +218,21 @@ def test_t45_rangeframe_default_equals_forced_forms(spark, sf_dir):
     and strictly fewer exchanges than the join form (the window
     consumes bucket co-location; the join shuffles both sides on
     (user, bucket))."""
-    from mapreduce_google_spark.operators.scale import event_pairs_within_minute
+    from mapreduce_google_spark.operators.scale import (
+        event_pairs_within_minute,
+        event_pairs_within_minute_raw_join,
+    )
 
     a = [tuple(r) for r in event_pairs_within_minute(spark, sf_dir).collect()]
     c = [
         tuple(r)
-        for r in event_pairs_within_minute(spark, sf_dir, form="raw_join").collect()
+        for r in event_pairs_within_minute_raw_join(spark, sf_dir).collect()
     ]
     assert a == c and len(a) > 0
     plan = formatted_plan(event_pairs_within_minute(spark, sf_dir))
     assert "Join" not in plan, plan
     assert "Bucketed: true" in plan, plan
-    ref = formatted_plan(event_pairs_within_minute(spark, sf_dir, form="raw_join"))
+    ref = formatted_plan(event_pairs_within_minute_raw_join(spark, sf_dir))
     assert plan.count("Exchange") < ref.count("Exchange"), (
         plan.count("Exchange"),
         ref.count("Exchange"),
@@ -248,18 +240,21 @@ def test_t45_rangeframe_default_equals_forced_forms(spark, sf_dir):
 
 
 def test_t45_rejects_degenerate_window(spark, sf_dir):
-    """ADVICE r16: window_s=0 used to fail differently per form (an
-    inverted rangeBetween(1, 0) frame on the default; a division by
-    zero on the join form) — every form must now reject it up front
+    """ADVICE r16: window_s=0 used to fail differently per body (an
+    inverted rangeBetween(1, 0) frame on the registered one; a division
+    by zero on the raw-join reference) — both must reject it up front
     with the same ValueError, before any store or scan work."""
     import pytest
 
-    from mapreduce_google_spark.operators.scale import event_pairs_within_minute
+    from mapreduce_google_spark.operators.scale import (
+        event_pairs_within_minute,
+        event_pairs_within_minute_raw_join,
+    )
 
-    for form in (None, "rangeframe", "raw_join"):
+    for fn in (event_pairs_within_minute, event_pairs_within_minute_raw_join):
         for bad in (0, -5):
             with pytest.raises(ValueError, match="window_s"):
-                event_pairs_within_minute(spark, sf_dir, window_s=bad, form=form)
+                fn(spark, sf_dir, window_s=bad)
 
 
 def test_t40_bucketed_join_has_no_join_exchange(spark, sf_dir):
@@ -418,36 +413,40 @@ def test_t24_near_dup_avoids_nested_loop(spark, sf_dir):
 
 def test_t12_preaggregates_below_join(spark, sf_dir):
     """The decimal-sum recipe makes partial aggregation associative, so
-    t12 pre-aggregates below the customer join in EVERY form: the
-    default (prejoined store) must carry a HashAggregate keyed solely
-    on o_custkey below the join (only customer-grain partials reach the
-    broadcast tail), and the forced direct reference must keep its
+    t12 pre-aggregates below the customer join in BOTH bodies: the
+    registered one (prejoined store) must carry a HashAggregate keyed
+    solely on o_custkey below the join (only customer-grain partials
+    reach the broadcast tail), and the direct reference must keep its
     lineitem→order-grain pre-aggregation (the heavy exchange shrinks by
     the lines-per-order factor)."""
     import re
 
+    from mapreduce_google_spark.operators.relational import revenue_rollup_direct
+
     plan = formatted_plan(revenue_rollup(spark, sf_dir))
     assert re.search(r"Keys \[1\]: \[o_custkey", plan), plan
-    direct = formatted_plan(revenue_rollup(spark, sf_dir, form="direct"))
+    direct = formatted_plan(revenue_rollup_direct(spark, sf_dir))
     assert re.search(r"Keys \[1\]: \[l_orderkey", direct), direct
 
 
 def test_t12_prejoined_default_equals_forced_forms(spark, sf_dir):
-    """t12's r16 flip gate: the registered default (custkey-bucketed
+    """t12's r16 flip gate: the registered body (custkey-bucketed
     PRE-JOINED line store — r16 rollup shootout: −38%
     sf0.1, −65% sf1, −73% at 30×, spreads fully separated) must equal
-    the forced direct reference — the store's build is the same
+    the direct reference — the store's build is the same
     lineitem ⋈ orders the direct form runs at query time, and decimal
     partials are associative, so collapsing per-customer straight off
     the store is value-identical. Also pin the plan shape the flip
     bought: a bucketed store scan, zero fact-side exchange — strictly
     fewer exchanges than the reference."""
+    from mapreduce_google_spark.operators.relational import revenue_rollup_direct
+
     a = [tuple(r) for r in revenue_rollup(spark, sf_dir).collect()]
-    c = [tuple(r) for r in revenue_rollup(spark, sf_dir, form="direct").collect()]
+    c = [tuple(r) for r in revenue_rollup_direct(spark, sf_dir).collect()]
     assert a == c and len(a) > 0
     plan = formatted_plan(revenue_rollup(spark, sf_dir))
     assert "Bucketed: true" in plan, plan
-    ref = formatted_plan(revenue_rollup(spark, sf_dir, form="direct"))
+    ref = formatted_plan(revenue_rollup_direct(spark, sf_dir))
     assert plan.count("Exchange") < ref.count("Exchange"), (
         plan.count("Exchange"),
         ref.count("Exchange"),
@@ -455,25 +454,25 @@ def test_t12_prejoined_default_equals_forced_forms(spark, sf_dir):
 
 
 def test_t22_counted_guard_equals_agg_antijoin(spark, sf_dir):
-    """The r17 default for t22's guard stage
-    (r17 t22 guard probe): the counted band table's pushed
-    ``bucket_n <= max_bucket`` filter must produce exactly the pre-r17
-    reference form's pairs — both at the default cap (the guard fires
-    on nothing here) and at a tiny forced cap (max_bucket=2, where the
-    guard actively prunes: a row drops iff its (band, bucket) group
-    count exceeds the cap, the anti-join's exact semantics). Also pin
-    what the flip exists for: the DEFAULT plan carries no
-    aggregation-fed broadcast left-anti stage on the banded set."""
+    """t22's guard stage (r17 t22 guard probe): the counted band
+    table's pushed ``bucket_n <= max_bucket`` filter must produce
+    exactly the pairs of the in-session :func:`minhash_lsh_pairs`,
+    whose guard is the per-query aggregation + broadcast anti-join —
+    both at the default cap (the guard fires on nothing here) and at a
+    tiny forced cap (max_bucket=2, where the guard actively prunes: a
+    row drops iff its (band, bucket) group count exceeds the cap, the
+    anti-join's exact semantics). Also pin what the flip exists for:
+    the registered plan carries no aggregation-fed broadcast left-anti
+    stage on the banded set."""
     from mapreduce_google_spark.operators.dedup import (
+        minhash_lsh_pairs,
         minhash_lsh_pairs_from_bands,
     )
 
     for cap in (1000, 2):
         a = [
             tuple(r)
-            for r in minhash_lsh_pairs_from_bands(
-                spark, sf_dir, max_bucket=cap, guard="agg_antijoin"
-            ).collect()
+            for r in minhash_lsh_pairs(spark, sf_dir, max_bucket=cap).collect()
         ]
         b = [
             tuple(r)
@@ -483,9 +482,7 @@ def test_t22_counted_guard_equals_agg_antijoin(spark, sf_dir):
         ]
         assert a == b, cap
     plan = formatted_plan(minhash_lsh_pairs_from_bands(spark, sf_dir))
-    reference = formatted_plan(
-        minhash_lsh_pairs_from_bands(spark, sf_dir, guard="agg_antijoin")
-    )
+    reference = formatted_plan(minhash_lsh_pairs(spark, sf_dir))
     assert "LeftAnti" not in plan, plan
     assert "LeftAnti" in reference, reference
     assert plan.count("Exchange") <= reference.count("Exchange"), (
@@ -827,36 +824,28 @@ def test_from_bands_candidate_join_has_no_banded_exchange(spark, sf_dir):
     """The materialized LSH band table is bucketed+sorted on
     (band, bucket), so the cross-run candidate self-join must read
     co-located buckets: a sort-merge join with ZERO shuffle exchange of
-    the banded set (the broadcast exchange of the tiny oversized-bucket
-    guard is the only one allowed). This is the durable on-disk analog
-    of the in-session repartition().cache() co-partitioning. Gated on
-    BOTH substrates: the counted table (the r17 default — its stamped
-    bucket_n guard filter must not break bucket-scan co-location) and
-    the uncounted v1 reference table."""
-    from mapreduce_google_spark.operators.dedup import (
-        minhash_band_table,
-        minhash_band_table_counted,
-    )
+    the banded set. This is the durable on-disk analog of the
+    in-session repartition().cache() co-partitioning; the stamped
+    bucket_n guard filter must not break bucket-scan co-location."""
+    from mapreduce_google_spark.operators.dedup import minhash_band_table_counted
 
     from pyspark.sql import functions as F
 
-    for name, counted in (
-        (minhash_band_table_counted(spark, sf_dir), True),
-        (minhash_band_table(spark, sf_dir), False),
-    ):
-        banded = spark.table(name)
-        if counted:
-            banded = banded.where(F.col("bucket_n") <= 1000).drop("bucket_n")
-        a, b = banded.hint("merge").alias("a"), banded.alias("b")
-        cand = a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        plan = formatted_plan(cand)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, plan
+    banded = (
+        spark.table(minhash_band_table_counted(spark, sf_dir))
+        .where(F.col("bucket_n") <= 1000)
+        .drop("bucket_n")
+    )
+    a, b = banded.hint("merge").alias("a"), banded.alias("b")
+    cand = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+    plan = formatted_plan(cand)
+    assert "SortMergeJoin" in plan, plan
+    assert "Exchange" not in plan, plan
     # A local per-partition Sort remains: Spark 3+ ignores bucketed
     # sortBy order unless spark.sql.legacy.bucketedTableScan.outputOrdering
     # is set (one-file-per-bucket verification was deemed too costly).

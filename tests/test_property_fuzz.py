@@ -364,7 +364,9 @@ def test_asof_boundary_fuzz(spark, duck, tmp_path_factory, ev, od):
     µs-random data never exercises."""
     import pandas as pd
 
-    from mapreduce_google_spark.operators.relational import asof_latest_order
+    from mapreduce_google_spark.operators.relational import (
+        asof_latest_order_union_merge,
+    )
 
     base = pd.Timestamp("2024-01-01")
     d = tmp_path_factory.mktemp("asof")
@@ -394,14 +396,14 @@ def test_asof_boundary_fuzz(spark, duck, tmp_path_factory, ev, od):
     orders["o_orderdate"] = orders["o_orderdate"].astype("datetime64[us]")
     events.to_parquet(d / "events.parquet")
     orders.to_parquet(d / "orders.parquet")
-    # force the store-free union-merge: the r14 default builds two
-    # bucketed stores per corpus, which per hypothesis example would be
-    # all build cost; the stores form's boundary/tie semantics are
-    # pinned on a handcrafted corpus in test_asof_boundary_parity and
-    # equality-pinned against this form on the real sf dirs
+    # the store-free union-merge reference: the registered body builds
+    # two bucketed stores per corpus, which per hypothesis example would
+    # be all build cost; its boundary/tie semantics are pinned on a
+    # handcrafted corpus in test_asof_boundary_parity and
+    # equality-pinned against this reference on the real sf dirs
     got = sorted(
         tuple(r)
-        for r in asof_latest_order(spark, str(d), form="union_merge").collect()
+        for r in asof_latest_order_union_merge(spark, str(d)).collect()
     )
     duck.register("fz_ev", events)
     duck.register("fz_od", orders)
@@ -562,9 +564,9 @@ def test_token_hof_fuzz_spark_matches_duckdb(
 def test_asof_boundary_parity(
     spark, tmp_path, store_root_in_tmp_path
 ):
-    """ALL THREE as-of engine paths (the r14-default bucketed-stores
-    form, the union-merge fallback, the cogrouped merge_asof skew form)
-    must agree with a brute-force reference on a corpus built entirely
+    """Both as-of engine paths (the registered bucketed-stores body and
+    the store-free union-merge reference) must agree with a brute-force
+    reference on a corpus built entirely
     of boundary cases: an order EXACTLY at an event timestamp
     (<= semantics keeps it), two orders on the same date (max orderkey
     wins), events before any order (dropped), customers with orders but
@@ -574,8 +576,7 @@ def test_asof_boundary_parity(
 
     from mapreduce_google_spark.operators.relational import (
         asof_latest_order,
-        asof_latest_order_pandas,
-        asof_latest_order_stores,
+        asof_latest_order_union_merge,
     )
 
     T = datetime
@@ -622,16 +623,11 @@ def test_asof_boundary_parity(
         if best:
             want[e] = (u, best[1], best[0].strftime("%Y-%m-%d %H:%M:%S"))
 
-    impls = (
-        asof_latest_order_stores,  # the r14 default
-        lambda s, d: asof_latest_order(s, d, form="union_merge"),
-        asof_latest_order_pandas,
-    )
-    for impl in impls:
+    for impl in (asof_latest_order, asof_latest_order_union_merge):
         got = {
             r[0]: (r[1], r[2], r[3]) for r in impl(spark, sf).collect()
         }
-        assert got == want, getattr(impl, "__name__", "union_merge")
+        assert got == want, impl.__name__
     assert want == {
         1: (1, 11, "1995-06-01 12:00:00"),
         3: (2, 23, "1995-06-30 00:00:00"),

@@ -52,11 +52,6 @@ def test_every_query_declares_semantics():
     for name, spec in REGISTRY.items():
         assert spec.doc, f"{name} has no doc"
         assert spec.tags, f"{name} has no tags"
-    # retirement keeps local certification: a retired spec still
-    # carries its oracle so test_queries_oracle covers it
-    for name, spec in REGISTRY.items():
-        if spec.retired:
-            assert spec.oracle is not None, f"{name}: retired AND uncheckable"
 
 
 def test_builders_are_importable_functions():
@@ -94,26 +89,45 @@ def test_readme_registry_counts():
     with open(os.path.join(root, "README.md")) as fh:
         readme = fh.read()
     total = len(REGISTRY)
-    active = sum(1 for s in REGISTRY.values() if not s.retired)
-    oracle_active = sum(
-        1 for s in REGISTRY.values() if s.oracle is not None and not s.retired
+    oracle = sum(1 for s in REGISTRY.values() if s.oracle is not None)
+    assert f"THE registry: {total} QuerySpecs —" in readme
+    assert f"{oracle}/{total} queries are oracle-checked" in readme
+    assert f"({total} specs / {oracle} oracle-checked)" in readme.replace(
+        "\n", " "
     )
-    retired = total - active
-    assert f"{total} QuerySpecs ({active} active + {retired} retired" in readme
-    assert f"{oracle_active}/{active} active queries are oracle-checked" in readme
 
     # COVERAGE.md's closing paragraph was the last counts surface
     # without a pin — it drifted at r10 (t239 updated README only)
     with open(os.path.join(root, "COVERAGE.md")) as fh:
         coverage = fh.read()
-    rows_only = active - oracle_active
     assert (
-        f"{total} registered queries: {active} active "
-        f"({oracle_active} oracle-checked, {rows_only} rows-only" in coverage
+        f"{total} registered queries ({oracle} oracle-checked, "
+        f"{total - oracle} rows-only" in coverage.replace("\n", " ")
     ), "COVERAGE.md counts paragraph drifted from the live registry"
-    assert f"and {retired} retired" in coverage.replace("\n", " "), (
-        "COVERAGE.md retired count drifted"
+
+
+def test_coverage_builder_column_matches_registry():
+    """COVERAGE.md has one row per registered query, and the row's
+    first backticked builder is the registry builder's
+    ``module.qualname`` (package prefix dropped) — the column drifted
+    silently when t25, t114 and t237 changed builders."""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "COVERAGE.md")) as fh:
+        coverage = fh.read()
+    rows = re.findall(
+        r"^\| (t\d{2,3}b?_[a-z0-9_]+) \| `([^`]+)`", coverage, re.M
     )
+    cited = dict(rows)
+    assert len(cited) == len(rows), "COVERAGE.md has a duplicate query row"
+    assert set(cited) == set(REGISTRY), (
+        sorted(set(cited) ^ set(REGISTRY))
+    )
+    for name, spec in REGISTRY.items():
+        module = spec.builder.__module__.removeprefix("mapreduce_google_spark.")
+        want = f"{module}.{spec.builder.__qualname__}"
+        assert cited[name] == want, (name, cited[name], want)
 
 
 def test_oracles_are_nonvacuous_at_driver_scale():
@@ -146,8 +160,9 @@ def test_oracles_are_nonvacuous_at_driver_scale():
 
 
 def test_claimed_test_references_exist():
-    """Every ``tests/xxx.py`` (optionally ``::test_name``) cited in
-    package source, ``COVERAGE.md`` or ``README.md`` — docstrings
+    """Every ``tests/xxx.py`` or bare ``test_xxx.py`` (optionally
+    ``::test_name``) cited in package source, ``COVERAGE.md`` or
+    ``README.md`` — docstrings
     claiming "plan-gated in tests/..." and the like — must name a test
     file that exists and, when a specific test is named, a function
     defined in it. Pins the r9 t239 failure class (a docstring asserting
@@ -164,7 +179,9 @@ def test_claimed_test_references_exist():
         os.path.join(repo, "COVERAGE.md"),
         os.path.join(repo, "README.md"),
     ]
-    ref = re.compile(r"(tests/[A-Za-z0-9_]+\.py)(::([A-Za-z0-9_]+))?")
+    ref = re.compile(
+        r"(?<![\w/.-])(?:tests/)?(test_[A-Za-z0-9_]+\.py)(::([A-Za-z0-9_]+))?"
+    )
     artifact = re.compile(
         r"(?<![\w/.-])"
         r"(tools/[A-Za-z0-9_]+\.py|[A-Z][A-Z0-9]*(?:_[A-Za-z0-9*]+)*\.json)"
@@ -177,9 +194,9 @@ def test_claimed_test_references_exist():
             # .py:249``") describe the OTHER repo's tests — not ours
             if "eference" in text[max(0, m.start() - 250) : m.start()]:
                 continue
-            path = os.path.join(repo, m.group(1))
+            path = os.path.join(repo, "tests", m.group(1))
             if not os.path.exists(path):
-                problems.append(f"{src}: cites missing {m.group(1)}")
+                problems.append(f"{src}: cites missing tests/{m.group(1)}")
             elif m.group(3) and f"def {m.group(3)}(" not in open(path).read():
                 problems.append(
                     f"{src}: cites {m.group(1)}::{m.group(3)} which is not defined"

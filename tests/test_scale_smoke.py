@@ -23,9 +23,10 @@ SCALE_QUERIES = [
     "t62_unshipped_orders_topk",
     "t65_incremental_dedup",
     "t68_trailing_active_users",
-    # the two Arrow-Python kernel paths on the bench-relevant surface —
+    # the registered as-of join over the two bucketed fact stores
+    "t33_asof_latest_order",
+    # the Arrow-Python kernel path on the bench-relevant surface —
     # per-batch-overhead regressions only show up past the sf0.001 tier
-    "t50_asof_latest_order_pandas",
     "t83_pack_invariants",
     # native codec pipeline (encode→decode→resize→checksum in one Arrow
     # pass) — the heaviest per-row Python work on the registered surface
@@ -38,11 +39,10 @@ SCALE_QUERIES = [
 ]
 
 #: generous wall-clock ceilings (seconds) for the Python-kernel paths at
-#: sf0.1 on local[8] — r04 measured ~4 s (t50) / ~3 s (t64); a 10×
-#: per-batch-overhead regression (the failure mode Arrow paths have when
-#: batches degenerate to row-at-a-time) blows through these.
+#: sf0.1 on local[8] — r04 measured ~3 s (t64); a 10× per-batch-overhead
+#: regression (the failure mode Arrow paths have when batches degenerate
+#: to row-at-a-time) blows through these.
 KERNEL_TIME_BOUNDS = {
-    "t50_asof_latest_order_pandas": 45.0,
     "t83_pack_invariants": 45.0,
     "t156_image_resize_checksum": 90.0,
 }
