@@ -224,7 +224,7 @@ def ngram_jaccard_pairs(
     distinct shingle pair — the bound the t22 verify stage has shipped
     on since r14; in-tool sorted-rows equality gated at sf0.1 AND sf1,
     oracle-green at sf0.01). −65% at sf0.1, −36% at sf1 for t21;
-    composes into t120's exact side, t135 and t170.
+    composes into t135 and t170.
     ``use_shingle_store=False`` forces the string-keyed retokenizing
     form for one-shot corpora.
 
@@ -1095,140 +1095,6 @@ def dedup_clusters(
             "cluster_size",
         )
         .orderBy("doc_id")
-    )
-
-
-def lsh_invariants(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """T120 — SQL-checkable invariant summary of :func:`minhash_lsh_pairs`
-    (the t83/t84 recipe applied to the LSH path, whose hash family isn't
-    SQL-portable).
-
-    Laws the oracle can state without knowing the hash family:
-
-    - **precision 1.0** — every emitted pair must appear in the EXACT
-      n-gram Jaccard pair set (:func:`ngram_jaccard_pairs`) with the
-      identical jaccard value: ``bad_pairs = 0``. LSH only prunes
-      candidates; its verify stage is the same exact intersection, so
-      any disagreement is a defect, not approximation.
-    - **threshold respected** — ``below_threshold = 0``.
-    - **exact pipeline agreement** — ``n_exact_pairs`` (the count of
-      all exact pairs ≥ threshold, computed by the Spark exact operator)
-      must equal the oracle's own SQL count: ties the two engines'
-      shingle/Jaccard machinery together and anchors non-vacuity.
-    - **non-empty** — ``found_nonempty = 1``: the hash family is fixed
-      and the corpus deterministic, so LSH finding at least one pair is
-      a stable fact at every shipped SF; an operator regression that
-      silently emits nothing trips this instead of vacuously passing.
-    """
-    lsh = minhash_lsh_pairs(spark, sf_dir, n=n, threshold=threshold)
-    exact = ngram_jaccard_pairs(spark, sf_dir, n=n, threshold=threshold)
-    joined = lsh.join(
-        exact.select("doc_a", "doc_b", F.col("jaccard").alias("exact_j")),
-        ["doc_a", "doc_b"],
-        "left",
-    )
-    checks = joined.agg(
-        F.count(
-            F.when(F.col("exact_j").isNull() | (F.col("jaccard") != F.col("exact_j")), 1)
-        )
-        .cast("long")
-        .alias("bad_pairs"),
-        F.count(F.when(F.col("jaccard") < threshold, 1))
-        .cast("long")
-        .alias("below_threshold"),
-        F.least(F.count("*"), F.lit(1)).cast("long").alias("found_nonempty"),
-    )
-    n_exact = exact.agg(F.count("*").cast("long").alias("n_exact_pairs"))
-    return checks.crossJoin(n_exact)  # two 1-row frames
-
-
-def cluster_invariants(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """T123 — invariant summary of :func:`dedup_clusters` (connected
-    components over the LSH near-dup graph; iterative, not SQL-portable).
-
-    Component laws, all checkable against the edge list the clustering
-    itself consumed:
-
-    - ``cross_cluster_edges = 0`` — both endpoints of every near-dup
-      pair carry the same cluster label (edges never span clusters);
-    - ``bad_labels = 0`` — each cluster's label IS its minimum doc_id;
-    - ``bad_sizes = 0`` — the stamped ``cluster_size`` equals the
-      actual member count;
-    - ``node_mismatch = 0`` — the assignment covers exactly the
-      distinct endpoints of the pair graph (no doc dropped or invented);
-    - ``clusters_nonempty = 1`` — deterministic non-vacuity anchor
-      (same argument as t120).
-    """
-    pairs = minhash_lsh_pairs(spark, sf_dir, threshold=threshold).select(
-        "doc_a", "doc_b"
-    ).localCheckpoint()
-    clusters = dedup_clusters(spark, sf_dir, threshold=threshold).localCheckpoint()
-    ca = clusters.select(F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("cl_a"))
-    cb = clusters.select(F.col("doc_id").alias("doc_b"), F.col("cluster_id").alias("cl_b"))
-    edge_check = (
-        pairs.join(ca, "doc_a", "left")
-        .join(cb, "doc_b", "left")
-        .agg(
-            F.count(
-                F.when(
-                    F.col("cl_a").isNull()
-                    | F.col("cl_b").isNull()
-                    | (F.col("cl_a") != F.col("cl_b")),
-                    1,
-                )
-            )
-            .cast("long")
-            .alias("cross_cluster_edges")
-        )
-    )
-    per_cluster = clusters.groupBy("cluster_id").agg(
-        F.min("doc_id").alias("min_doc"),
-        F.count("*").alias("n_members"),
-        F.max(F.col("cluster_size")).alias("size_max"),
-        F.min(F.col("cluster_size")).alias("size_min"),
-    )
-    label_check = per_cluster.agg(
-        F.count(F.when(F.col("cluster_id") != F.col("min_doc"), 1))
-        .cast("long")
-        .alias("bad_labels"),
-        F.count(
-            F.when(
-                (F.col("size_max") != F.col("n_members"))
-                | (F.col("size_min") != F.col("n_members")),
-                1,
-            )
-        )
-        .cast("long")
-        .alias("bad_sizes"),
-        F.least(F.count("*"), F.lit(1)).cast("long").alias("clusters_nonempty"),
-    )
-    nodes = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # set equality as two anti-join counts (scalar actions, like the CC
-    # loop's own convergence counts — not data collects)
-    missing = nodes.join(clusters.select("doc_id"), "doc_id", "left_anti").count()
-    extra = clusters.select("doc_id").join(nodes, "doc_id", "left_anti").count()
-    node_mismatch = spark.createDataFrame(
-        [(int(missing) + int(extra),)], "node_mismatch long"
-    )
-    return edge_check.crossJoin(label_check).crossJoin(node_mismatch).select(
-        "cross_cluster_edges",
-        "bad_labels",
-        "bad_sizes",
-        "node_mismatch",
-        "clusters_nonempty",
     )
 
 

@@ -1784,61 +1784,6 @@ def unpivoted_pricing_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def percentile_rank_invariants(
-    spark: SparkSession, sf_dir: str, accuracy: int = 1000
-) -> DataFrame:
-    """T124 — rank-error-bound oracle for :func:`approx_segment_percentiles`
-    (t71; GK sketch values aren't SQL-portable, but the GK GUARANTEE is).
-
-    ``percentile_approx(q, accuracy)`` returns an element of the data
-    whose rank is within ``n / accuracy`` of the target rank ``q·n``
-    (Greenwald-Khanna bound). For each segment we recompute the returned
-    value's true rank interval ``[count(< v) + 1, count(<= v)]`` against
-    the raw customer table and flag a violation when the target rank
-    falls outside that interval widened by ``n/accuracy + 1`` (the +1
-    absorbs ceil-vs-floor rank conventions).
-
-    Oracle columns: ``segments_checked`` (count of distinct segments —
-    source-derived non-vacuity), ``median_violations = 0``,
-    ``p90_violations = 0``.
-    """
-    approx = approx_segment_percentiles(spark, sf_dir, accuracy)
-    cust = load_table(spark, sf_dir, "customer").select("c_mktsegment", "c_acctbal")
-    joined = cust.join(F.broadcast(approx), "c_mktsegment")
-    per_seg = joined.groupBy("c_mktsegment", "median_acctbal", "p90_acctbal").agg(
-        F.count("*").cast("double").alias("n"),
-        F.count(F.when(F.col("c_acctbal") < F.col("median_acctbal"), 1))
-        .cast("double")
-        .alias("lt_med"),
-        F.count(F.when(F.col("c_acctbal") <= F.col("median_acctbal"), 1))
-        .cast("double")
-        .alias("le_med"),
-        F.count(F.when(F.col("c_acctbal") < F.col("p90_acctbal"), 1))
-        .cast("double")
-        .alias("lt_p90"),
-        F.count(F.when(F.col("c_acctbal") <= F.col("p90_acctbal"), 1))
-        .cast("double")
-        .alias("le_p90"),
-    )
-    slack = F.col("n") / F.lit(float(accuracy)) + F.lit(1.0)
-
-    def _viol(q: float, lt: str, le: str):
-        target = F.lit(q) * F.col("n")
-        return F.count(
-            F.when(
-                (target < F.col(lt) + F.lit(1.0) - slack)
-                | (target > F.col(le) + slack),
-                1,
-            )
-        ).cast("long")
-
-    return per_seg.agg(
-        F.count("*").cast("long").alias("segments_checked"),
-        _viol(0.5, "lt_med", "le_med").alias("median_violations"),
-        _viol(0.9, "lt_p90", "le_p90").alias("p90_violations"),
-    )
-
-
 def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T125 — MERGE INTO (SCD-1 upsert): apply a changeset of updates /
     deletes / inserts to a snapshot in one pass.

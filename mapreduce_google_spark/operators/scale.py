@@ -521,56 +521,6 @@ def bucketed_distinct_suppliers(
     )
 
 
-def compaction_invariants(
-    spark: SparkSession,
-    sf_dir: str,
-    small_files: int = 64,
-    target_files: int = 4,
-) -> DataFrame:
-    """T130 — small-file compaction with conservation laws: stage the
-    documents table as ``small_files`` parquet shards (the pathological
-    layout streaming ingest leaves behind), compact with ``coalesce``
-    (narrow — no shuffle, files merge in place), and prove nothing was
-    lost:
-
-    - ``n_rows`` / ``sum_doc_id`` equal the source table (any dropped or
-      duplicated row breaks an exact BIGINT sum);
-    - ``files_over_target = 0`` — the compacted layout really is
-      ≤ ``target_files`` data files.
-
-    The table-maintenance primitive every lakehouse needs (Delta
-    OPTIMIZE / Iceberg rewrite_data_files): at 100 TB compaction is the
-    difference between a scan planning 10⁶ splits and 10³. Staged
-    layouts are keyed by the source fingerprint and reused (idempotent
-    until the corpus changes).
-    """
-    import glob
-
-    small = write_once(
-        derived_dir(f"smallfiles_{small_files}", sf_dir, "documents"),
-        lambda path: load_table(spark, sf_dir, "documents")
-        .repartition(small_files)
-        .write.mode("overwrite")
-        .parquet(path),
-    )
-    compacted = write_once(
-        derived_dir(f"compacted_{target_files}", sf_dir, "documents"),
-        lambda path: spark.read.parquet(small)
-        .coalesce(target_files)
-        .write.mode("overwrite")
-        .parquet(path),
-    )
-    n_files = len(glob.glob(os.path.join(compacted, "*.parquet")))
-    after = spark.read.parquet(compacted)
-    return after.agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("doc_id").cast("long").alias("sum_doc_id"),
-        F.lit(max(0, n_files - target_files)).cast("long").alias(
-            "files_over_target"
-        ),
-    )
-
-
 def join_skew_profile(
     spark: SparkSession, sf_dir: str, k: int = 10
 ) -> DataFrame:
@@ -813,67 +763,6 @@ def pipeline_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(revenue)
         .orderBy("metric")
     )
-
-
-def cardinality_sketch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T207 — sketch QA across columns: for each lineitem key column,
-    the HLL++ estimate (rsd=0.01) next to the exact distinct count and
-    a within-3·rsd bound flag — the audit that decides whether sketches
-    can replace exact counts in the planner's statistics.
-
-    Plan note (r18 repair + r19 repair, both results-identical): each
-    column's (approx, exact) pair is its OWN aggregation over a scan
-    pruned to that one column, and the three 1-row results are unioned
-    — the r18 repair, which removed the EXPAND of the original
-    three-``countDistinct``-in-one-agg form (60M rows shuffled as
-    ~240M, 277 s at sf1). The r19 repair removes the cost that was
-    STILL left per column — and the plan names a sharper mechanism
-    than row doubling: mixing one ``countDistinct`` with one regular
-    aggregate makes RewriteDistinctAggregates key the FIRST partial
-    aggregation by the column while carrying a partial
-    ``approx_count_distinct`` per key, i.e. a full 1,639-long HLL++
-    sketch buffer (``MS[0..1638]``) attached to EVERY distinct key
-    through the first HashAggregate and Exchange
-    (r19 physical plan, node (2): Results [1640]) — ~13 KB
-    of aggregation state per distinct orderkey, ~200 GB of transient
-    state at sf1's 15M keys, all spill/GC. Dedup FIRST instead:
-    ``select(c).distinct()`` is a plain partial-aggregated group-by
-    (map-side dedup, one exchange of the per-partition DISTINCT values
-    only), and over the deduped set ``count(*)`` IS the exact distinct
-    count by definition while ``approx_count_distinct`` is bit-
-    identical to the raw-multiset sketch (HLL register state is a max
-    over per-value hashes — duplicate-idempotent). Measured
-    (r19 dedup-first probe, interleaved + equality-gated):
-    11.5 → 1.7 s at sf0.1, 62.5 → 4.8 s at sf1 (−92%). The output
-    carries no raw estimate, so it is plan-shape-independent: exact
-    counts are hash-checked by the oracle and the bound flag is the
-    t164 invariant per column (HLL++ at a fixed rsd is deterministic
-    on identical input data).
-    """
-    li = load_table(spark, sf_dir, "lineitem")
-    cols = ["l_orderkey", "l_partkey", "l_suppkey"]
-    per_col = []
-    for c in cols:
-        row = li.select(c).distinct().agg(
-            F.approx_count_distinct(c, rsd=0.01).alias("a"),
-            F.count("*").alias("e"),
-        )
-        per_col.append(
-            row.select(
-                F.lit(c).alias("column"),
-                F.col("e").cast("long").alias("exact_distinct"),
-                F.when(
-                    F.abs(F.col("a") - F.col("e")) <= 3 * 0.01 * F.col("e"), 0
-                )
-                .otherwise(1)
-                .cast("long")
-                .alias("bound_violations"),
-            )
-        )
-    out = per_col[0]
-    for df in per_col[1:]:
-        out = out.unionByName(df)
-    return out.orderBy("column")
 
 
 # --------------------------------------------------------------------------
@@ -1646,8 +1535,8 @@ def rolling_distinct_users_hll(
     and ``hll_within_5pct`` comparing the sketch estimate against it
     (default lgConfigK=12 → ~0.8% rse, so 5% is a hard invariant, not a
     hope). The oracle re-derives the exact side and pins the invariant
-    TRUE — the t83/t84-style invariant-oracle pattern for approximate
-    ops, here folded into the op itself.
+    TRUE — the invariant-oracle pattern of t164/t165, here folded into
+    the op itself.
     """
     ev = load_table(spark, sf_dir, "events").select(
         F.to_date("ts").alias("day"), "user_id"
@@ -1957,35 +1846,24 @@ class ConcurrentRefreshError(RuntimeError):
     no-op refresh never takes the lock."""
 
 
-def _read_covered_sidecar(
-    spark: SparkSession, idx_dir: str, flist: str
-) -> tuple[set, int]:
+def _read_covered_sidecar(idx_dir: str, flist: str) -> tuple[set, int]:
     """(covered source files, segment count) from the tiny sidecar —
     NOT a scan of the posting table (the no-op refresh is on every
-    lookup's path). Legacy indexes without a sidecar pay a one-time
-    posting scan; legacy list-format sidecars read as one segment."""
+    lookup's path). An index without a dict-format sidecar counts as
+    unbuilt (no covered files), so the refresh takes the compact path
+    and rebuilds it."""
     import json as _json
 
-    known: set[str] = set()
-    segments = 0
-    if os.path.exists(os.path.join(idx_dir, "_SUCCESS")):
-        segments = 1
-        if os.path.exists(flist):
-            sidecar = _json.load(open(flist))
-            if isinstance(sidecar, dict):
-                known = set(sidecar["covered"])
-                segments = sidecar["segments"]
-            else:  # legacy list-format sidecar: one monolithic segment
-                known = set(sidecar)
-        else:  # legacy index without the sidecar: one-time scan
-            known = {
-                r["file"]
-                for r in spark.read.parquet(idx_dir)
-                .select("file")
-                .distinct()
-                .collect()
-            }
-    return known, segments
+    if not os.path.exists(os.path.join(idx_dir, "_SUCCESS")):
+        return set(), 0
+    try:
+        with open(flist) as fh:
+            sidecar = _json.load(fh)
+    except FileNotFoundError:
+        return set(), 0
+    if not isinstance(sidecar, dict):
+        return set(), 0
+    return set(sidecar["covered"]), sidecar["segments"]
 
 
 def refresh_point_index(
@@ -2043,8 +1921,8 @@ def refresh_point_index(
     override via ``index_partitions``), so key envelopes are disjoint
     WITHIN a segment and the index manifest admits at most one index
     file per segment per probe; row-group stats prune inside those.
-    Segment count is tracked in the ``_covered_files.json`` sidecar
-    (legacy list-format sidecars read as one segment).
+    Segment count is tracked in the ``_covered_files.json`` sidecar; an
+    index without a dict-format sidecar is rebuilt by the compact path.
 
     **Single-writer contract**: segment files and the sidecar mutate
     non-atomically, so concurrent refreshes could under-count segments
@@ -2086,13 +1964,14 @@ def refresh_point_index(
     # at corpus scale an O(postings) "what do I cover" scan per probe
     # would swamp the lookup itself)
     flist = os.path.join(idx_dir, "_covered_files.json")
-    known, segments = _read_covered_sidecar(spark, idx_dir, flist)
+    known, segments = _read_covered_sidecar(idx_dir, flist)
     new = [f for f in files if f not in known]
     vanished = known - set(files)
     if not new and not vanished:
-        # steady state — but a LEGACY index may predate the manifest;
-        # build it here (cheap _SUCCESS check) so the one-time footer
-        # walk lands on the refresh path, never inside a probe (ADVICE r9)
+        # steady state — but a crash between the sidecar swap and the
+        # manifest refresh leaves the manifest missing; build it here
+        # (cheap _SUCCESS check) so the footer walk lands on the refresh
+        # path, never inside a probe (ADVICE r9)
         if not os.path.exists(os.path.join(idx_dir, "_manifest", "_SUCCESS")):
             refresh_file_manifest(spark, idx_dir, ["key"])
         return idx_dir
@@ -2110,7 +1989,7 @@ def refresh_point_index(
                 f"refresh_point_index is single-writer: {lock} is held by "
                 "another writer"
             ) from None
-        known, segments = _read_covered_sidecar(spark, idx_dir, flist)
+        known, segments = _read_covered_sidecar(idx_dir, flist)
         new = [f for f in files if f not in known]
         vanished = known - set(files)
         if not new and not vanished:

@@ -19,7 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from mapreduce_google_spark.functions.vectors import cosine_similarity, dot
+from mapreduce_google_spark.functions.vectors import cosine_similarity
 from mapreduce_google_spark.io import load_table
 
 
@@ -958,46 +958,6 @@ def kmeans_cluster_stats(
     )
 
 
-def kmeans_invariants(
-    spark: SparkSession, sf_dir: str, n_cells: int = 8, iters: int = 5
-) -> DataFrame:
-    """T84 — SQL-checkable invariant summary of the k-means fit +
-    assignment (t82's training loop is iterative and not SQL-portable,
-    but its coverage laws are):
-
-    - every vector assigned exactly once → ``n_assigned`` equals
-      ``count(embeddings)`` and ``n_distinct_vecs`` matches;
-    - every assigned cell id is in ``[0, n_cells)`` → 0 violations;
-    - every assignment cosine is a valid cosine (|cos| ≤ 1 + ε) →
-      0 violations.
-
-    A dropped vector, duplicated assignment, or out-of-range cell in the
-    driver-held centroid loop breaks a count against the DuckDB oracle.
-    """
-    emb = load_table(spark, sf_dir, "embeddings")
-    centroids = kmeans_fit(emb, n_cells, iters)
-    assign = _assign_cells(centroids)
-    assigned = emb.select("vec_id", assign("embedding").alias("a")).select(
-        "vec_id",
-        F.col("a.cell").alias("cell_id"),
-        F.col("a.cos").alias("cos"),
-    )
-    return assigned.agg(
-        F.count("*").cast("long").alias("n_assigned"),
-        F.countDistinct("vec_id").cast("long").alias("n_distinct_vecs"),
-        F.sum(
-            F.when(
-                (F.col("cell_id") < 0) | (F.col("cell_id") >= n_cells), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("bad_cells"),
-        F.sum(F.when(F.abs("cos") > 1.000001, 1).otherwise(0))
-        .cast("long")
-        .alias("bad_cosines"),
-    )
-
-
 def _assign_cells(centroids: list[list[float]]):
     """Max-cosine centroid assignment: one Arrow-batched ``pandas_udf``
     computing ``struct(cos, cell)`` via ``(batch × dim) @ (dim × k)``.
@@ -1030,126 +990,6 @@ def _assign_cells(centroids: list[list[float]]):
         )
 
     return assign
-
-
-def ann_topk_invariants(
-    spark: SparkSession,
-    sf_dir: str,
-    n_probes: int = 10,
-    k: int = 5,
-) -> DataFrame:
-    """T122 — SQL-checkable invariant summary of
-    :func:`hyperplane_lsh_topk` (t47; the plane family isn't SQL-portable
-    — t83/t84 recipe).
-
-    - ``bad_cosines = 0`` — every reported cosine re-verified by an
-      INDEPENDENT kernel (numpy float64 dot in a ``pandas_udf``, vs the
-      JVM ``aggregate``-HOF the operator used) to 6 decimals;
-    - ``rank_violations = 0`` — per probe: ranks contiguous from 1,
-      at most ``k`` rows, cosine non-increasing in rank, ties broken by
-      ascending vec_id;
-    - ``beats_exact = 0`` — ANN's rank-r cosine can never exceed the
-      EXACT brute-force operator's rank-r cosine (:func:`cosine_topk`)
-      for the same probe;
-    - ``probes_over_limit = 0`` — every probe_id is one of the
-      ``n_probes`` lowest vec_ids (the declared probe set);
-    - ``found_nonempty = 1`` — deterministic non-vacuity anchor (fixed
-      plane seed + deterministic corpus).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    ann = hyperplane_lsh_topk(spark, sf_dir, n_probes=n_probes, k=k).localCheckpoint()
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    @pandas_udf("double")
-    def np_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.vstack(a.to_numpy()).astype(np.float64)
-        mb = np.vstack(b.to_numpy()).astype(np.float64)
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        na[na == 0.0] = 1.0
-        nb[nb == 0.0] = 1.0
-        return pd.Series(np.einsum("ij,ij->i", ma, mb) / (na * nb))
-
-    pv = emb.select(F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pv"))
-    vv = emb.select("vec_id", F.col("embedding").alias("vv"))
-    rechecked = (
-        ann.join(pv, "probe_id")
-        .join(vv, "vec_id")
-        .select(
-            "probe_id",
-            "vec_id",
-            "cosine",
-            "rank",
-            F.round(np_cosine("pv", "vv"), 6).alias("np_cos"),
-        )
-    )
-    w = Window.partitionBy("probe_id").orderBy("rank")
-    seq = rechecked.select(
-        "*",
-        F.lag("rank", 1, 0).over(w).alias("prev_rank"),
-        F.lag("cosine").over(w).alias("prev_cos"),
-        F.lag("vec_id").over(w).alias("prev_vec"),
-    )
-    exact = cosine_topk(spark, sf_dir, n_probes=n_probes, k=k).select(
-        "probe_id", "rank", F.col("cosine").alias("exact_cos")
-    )
-    vs_exact = ann.join(exact, ["probe_id", "rank"], "left")
-    checks = seq.agg(
-        F.count(F.when(F.abs(F.col("cosine") - F.col("np_cos")) > 1e-6, 1))
-        .cast("long")
-        .alias("bad_cosines"),
-        F.count(
-            F.when(
-                (F.col("rank") != F.col("prev_rank") + 1)
-                | (F.col("rank") > k)
-                | (
-                    F.col("prev_cos").isNotNull()
-                    & (
-                        (F.col("cosine") > F.col("prev_cos"))
-                        | (
-                            (F.col("cosine") == F.col("prev_cos"))
-                            & (F.col("vec_id") < F.col("prev_vec"))
-                        )
-                    )
-                ),
-                1,
-            )
-        )
-        .cast("long")
-        .alias("rank_violations"),
-        F.least(F.count("*"), F.lit(1)).cast("long").alias("found_nonempty"),
-    )
-    beats = vs_exact.agg(
-        F.count(
-            F.when(
-                F.col("exact_cos").isNull()
-                | (F.col("cosine") > F.col("exact_cos")),
-                1,
-            )
-        )
-        .cast("long")
-        .alias("beats_exact")
-    )
-    over = (
-        ann.join(
-            F.broadcast(_probes(emb, n_probes).select("probe_id")),
-            "probe_id",
-            "left_anti",
-        )
-        .agg(F.count("*").cast("long").alias("probes_over_limit"))
-    )
-    return (
-        checks.crossJoin(beats)
-        .crossJoin(over)
-        .select(
-            "bad_cosines",
-            "rank_violations",
-            "beats_exact",
-            "probes_over_limit",
-            "found_nonempty",
-        )
-    )
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1197,7 +1037,7 @@ def semantic_dedup(
     iters: int = 3,
     tau: float = 0.4,
 ) -> DataFrame:
-    """T145 (op) — SemDeDup (Abbas et al. 2023): cluster embeddings with
+    """SemDeDup (Abbas et al. 2023): cluster embeddings with
     k-means, then within each cluster drop every vector that has cosine
     ≥ tau with a LOWER-id vector of the same cluster (the deterministic
     keep-lowest-id restatement of the paper's per-cluster pruning).
@@ -1221,7 +1061,7 @@ def _semantic_dedup(
 ) -> tuple[DataFrame, DataFrame]:
     """:func:`semantic_dedup`'s dropped rows, and the cell assignment
     (vec_id, embedding, cell_id) they come from — one k-means fit,
-    which the t145 invariant checks reuse."""
+    which the SemDeDup law checks in tests reuse."""
     emb = load_table(spark, sf_dir, "embeddings")
     assign = _assign_cells(kmeans_fit(emb, n_cells, iters))
     assigned = emb.select(
@@ -1280,95 +1120,6 @@ def _auto_semantic_cells(n_vecs: int, target_cell: int = 500) -> int:
     clustering by design (Abbas et al. 2023 §3 — the cluster count is a
     quality/cost knob), so the cell count is part of the result."""
     return max(8, min(4096, n_vecs // target_cell if target_cell else 8))
-
-
-def semantic_dedup_invariants(
-    spark: SparkSession,
-    sf_dir: str,
-    iters: int = 3,
-    tau: float = 0.4,
-) -> DataFrame:
-    """T145 — SQL-checkable invariant summary of :func:`semantic_dedup`
-    (the k-means fit isn't SQL-portable — t83/t84 recipe), with the cell
-    count derived from the parquet-footer row count
-    (:func:`_auto_semantic_cells`; metadata-only, no Spark job):
-
-    - ``bad_cosines = 0`` — every reported cosine re-verified by an
-      independent numpy float64 kernel to 6 decimals, and ≥ tau;
-    - ``order_violations = 0`` — keeper_id < vec_id always (the
-      keep-lowest-id law);
-    - ``kept_close_pairs = 0`` — no two SURVIVING vectors of the same
-      cell sit at cosine ≥ tau (a survivor has, by definition, no
-      lower-id partner at ≥ tau, so any close survivor pair disproves
-      the drop rule — re-derived here by an independent self-join over
-      the survivor set);
-    - ``found_nonempty = 1`` — deterministic non-vacuity anchor.
-
-    The contract is cell-count-independent, which keeps the invariant
-    oracle valid at every scale although the dropped set is not.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    from mapreduce_google_spark.io import parquet_rows
-
-    n_vecs = parquet_rows(sf_dir, "embeddings")
-    n_cells = _auto_semantic_cells(n_vecs if n_vecs is not None else 0)
-    dropped, assigned = _semantic_dedup(spark, sf_dir, n_cells, iters, tau)
-    dropped = dropped.localCheckpoint()
-
-    @pandas_udf("double")
-    def np_cosine(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.vstack(a.to_numpy()).astype(np.float64)
-        mb = np.vstack(b.to_numpy()).astype(np.float64)
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        na[na == 0.0] = 1.0
-        nb[nb == 0.0] = 1.0
-        return pd.Series(np.einsum("ij,ij->i", ma, mb) / (na * nb))
-
-    ka = assigned.select(
-        F.col("vec_id").alias("keeper_id"), F.col("embedding").alias("ke")
-    )
-    va = assigned.select("vec_id", F.col("embedding").alias("ve"))
-    rechecked = (
-        dropped.join(ka, "keeper_id")
-        .join(va, "vec_id")
-        .select(
-            "vec_id",
-            "keeper_id",
-            "cosine",
-            F.round(np_cosine("ke", "ve"), 6).alias("np_cos"),
-        )
-    )
-    bad_cos = rechecked.where(
-        (F.abs(F.col("np_cos") - F.col("cosine")) > 1e-6)
-        | (F.col("np_cos") < tau - 1e-6)
-    ).count()
-    order_bad = dropped.where(F.col("keeper_id") >= F.col("vec_id")).count()
-    survivors = assigned.join(
-        dropped.select("vec_id"), "vec_id", "left_anti"
-    ).select("vec_id", "embedding", "cell_id")
-    s2 = survivors.select(
-        F.col("vec_id").alias("v2"), F.col("embedding").alias("e2"), "cell_id"
-    )
-    kept_close = (
-        survivors.join(s2, "cell_id")
-        .where(F.col("vec_id") < F.col("v2"))
-        .where(F.round(cosine_similarity("embedding", "e2"), 6) >= tau)
-        .count()
-    )
-    n_dropped = dropped.count()
-    return spark.createDataFrame(
-        [
-            (
-                int(bad_cos),
-                int(order_bad),
-                int(kept_close),
-                int(1 if n_dropped > 0 else 0),
-            )
-        ],
-        "bad_cosines long, order_violations long, kept_close_pairs long, found_nonempty long",
-    )
 
 
 def source_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1479,9 +1230,8 @@ def ivf_topk_invariants(
     n_probe_cells: int = 3,
 ) -> DataFrame:
     """T165 — SQL-checkable invariant summary of :func:`ivf_topk` (t25;
-    cell assignment + probe routing aren't one SQL query — the t83/t84
-    recipe), completing the invariant-oracle shadow for every rows-only
-    registry entry:
+    cell assignment + probe routing aren't one SQL query, but the laws
+    of its output are):
 
     - ``bad_cosines = 0`` — every reported cosine re-verified by the
       independent numpy kernel to 6 decimals;

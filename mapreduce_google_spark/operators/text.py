@@ -236,40 +236,6 @@ def pack_documents(
     )
 
 
-def pack_invariants(
-    spark: SparkSession, sf_dir: str, budget: int = 256, num_shards: int = 16
-) -> DataFrame:
-    """T83 — SQL-checkable invariant summary of :func:`pack_documents`.
-
-    The greedy first-fit runs in Python (``mapInPandas``) — the one place
-    driver-side hash evidence can't reach its row-level output (pack
-    membership depends on shard-local order). But its conservation laws
-    ARE oracle-checkable from the source table alone:
-
-    - every document is packed exactly once → ``sum(n_docs)`` equals
-      ``count(documents)``;
-    - no token invented or lost → ``sum(pack n_tokens)`` equals the
-      corpus token count;
-    - no multi-doc pack exceeds the budget (single oversized docs are
-      legally packed alone) → ``over_budget_packs = 0``.
-
-    Any drop, double-pack, or overfill in the Python kernel breaks one of
-    these sums against the DuckDB oracle.
-    """
-    packs = pack_documents(spark, sf_dir, budget, num_shards)
-    return packs.agg(
-        F.sum("n_docs").cast("long").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("total_tokens"),
-        F.sum(
-            F.when(
-                (F.col("n_docs") > 1) & (F.col("n_tokens") > budget), 1
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("over_budget_packs"),
-    )
-
-
 def pysource_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T119 — T01 word count read through the pluggable Python
     DataSource (:mod:`mapreduce_google_spark.kvtext`): documents.text is
@@ -305,7 +271,7 @@ def pysource_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def approx_distinct_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T164 — SQL-checkable error bound for T39's HyperLogLog++ sketch
-    (HLL internals aren't SQL-portable — the t83/t84 recipe): the
+    (HLL internals aren't SQL-portable, but its error bound is): the
     estimate must land within 3× the configured relative standard
     deviation of the EXACT distinct count (t05's semantics, re-computed
     here engine-side; the oracle re-derives the exact count and the

@@ -1906,12 +1906,10 @@ register(
         name="t71_approx_percentiles",
         builder=rel_ops.approx_segment_percentiles,
         oracle=None,  # GK sketch values aren't SQL-portable (DuckDB's
-        # approx_quantile uses t-digest); rank-error bound vs exact T35
-        # pinned in tests/test_approx_ops.py. ORACLE-BEARING TWIN:
-        # t124_percentile_rank_invariants proves the GK guarantee
-        # (rank error <= n/accuracy per segment) with a driver-checkable
-        # hash oracle — driver-green since round 4.
-        doc="GK-sketch percentiles (median, p90) per segment — bounded-memory scale path of exact T35, rank error <= 1/accuracy; invariant twin t124",
+        # approx_quantile uses t-digest); the GK rank-error bound vs exact
+        # T35 is pinned in
+        # tests/test_approx_ops.py::test_approx_percentiles_within_rank_error
+        doc="GK-sketch percentiles (median, p90) per segment — bounded-memory scale path of exact T35, rank error <= 1/accuracy",
         tags=("relational", "sketch", "percentile"),
     )
 )
@@ -2152,40 +2150,6 @@ register(
         """,
         doc="TPC-H Q18 shape: top-100 large-volume orders (HAVING on order-grain quantity, then join out)",
         tags=("relational", "join", "topk"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t83_pack_invariants",
-        builder=text_ops.pack_invariants,
-        oracle="""
-            SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(len(list_filter(string_split_regex(lower(text),
-                                                               '\\s+'),
-                                            t -> t <> ''))) AS BIGINT)
-                       AS total_tokens,
-                   CAST(0 AS BIGINT) AS over_budget_packs
-            FROM documents
-        """,
-        doc="conservation-law oracle for t64 greedy packing: every doc packed once, corpus tokens conserved, no multi-doc pack over budget",
-        tags=("llm", "packing", "invariant"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t84_kmeans_invariants",
-        builder=sim_ops.kmeans_invariants,
-        oracle="""
-            SELECT CAST(count(*) AS BIGINT) AS n_assigned,
-                   CAST(count(DISTINCT vec_id) AS BIGINT) AS n_distinct_vecs,
-                   CAST(0 AS BIGINT) AS bad_cells,
-                   CAST(0 AS BIGINT) AS bad_cosines
-            FROM embeddings
-        """,
-        doc="coverage-law oracle for t82 k-means: every vector assigned exactly once to a valid cell with a valid cosine",
-        tags=("llm", "similarity", "invariant"),
     )
 )
 
@@ -3096,48 +3060,6 @@ register(
 
 register(
     QuerySpec(
-        name="t120_lsh_precision_invariants",
-        builder=dedup_ops.lsh_invariants,
-        oracle="""
-            WITH """ + _TOKENS_CTE + """,
-            shingles AS (
-                SELECT DISTINCT doc_id, shingle
-                FROM (
-                    SELECT doc_id,
-                           unnest(list_transform(range(1, len(tokens) - 1),
-                               i -> array_to_string(tokens[i:i+2], ' ')))
-                               AS shingle
-                    FROM toks WHERE len(tokens) >= 3
-                )
-            ),
-            sizes AS (
-                SELECT doc_id, count(*) AS set_size
-                FROM shingles GROUP BY doc_id
-            ),
-            common AS (
-                SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                       count(*) AS n_common
-                FROM shingles a JOIN shingles b
-                  ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-                GROUP BY a.doc_id, b.doc_id
-            )
-            SELECT CAST(0 AS BIGINT) AS bad_pairs,
-                   CAST(0 AS BIGINT) AS below_threshold,
-                   CAST(1 AS BIGINT) AS found_nonempty,
-                   CAST(count(*) AS BIGINT) AS n_exact_pairs
-            FROM common
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE round(n_common /
-                        (sa.set_size + sb.set_size - n_common), 6) >= 0.5
-        """,
-        doc="invariant oracle for t22 MinHash-LSH: precision 1.0 vs the exact Jaccard pair set, threshold respected, exact-pipeline pair count re-derived by SQL (t83/t84 recipe)",
-        tags=("llm", "dedup", "invariant"),
-    )
-)
-
-register(
-    QuerySpec(
         name="t121_image_dims",
         builder=mm_ops.image_dims,
         oracle="""
@@ -3153,54 +3075,6 @@ register(
         """,
         doc="native-codec round trip: per-doc synthetic PNG/PPM encoded then header-decoded with use_fake=False; dims/format are closed-form in doc_id so DuckDB states the expected output exactly",
         tags=("multimodal", "codec"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t122_ann_topk_invariants",
-        builder=sim_ops.ann_topk_invariants,
-        oracle="""
-            SELECT CAST(0 AS BIGINT) AS bad_cosines,
-                   CAST(0 AS BIGINT) AS rank_violations,
-                   CAST(0 AS BIGINT) AS beats_exact,
-                   CAST(0 AS BIGINT) AS probes_over_limit,
-                   CAST(1 AS BIGINT) AS found_nonempty
-        """,
-        doc="invariant oracle for t47 hyperplane-LSH ANN: cosines re-verified by an independent numpy kernel, rank sequence laws, never beats exact brute force, probe set respected",
-        tags=("llm", "similarity", "invariant"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t123_cluster_invariants",
-        builder=dedup_ops.cluster_invariants,
-        oracle="""
-            SELECT CAST(0 AS BIGINT) AS cross_cluster_edges,
-                   CAST(0 AS BIGINT) AS bad_labels,
-                   CAST(0 AS BIGINT) AS bad_sizes,
-                   CAST(0 AS BIGINT) AS node_mismatch,
-                   CAST(1 AS BIGINT) AS clusters_nonempty
-        """,
-        doc="invariant oracle for t48 connected components: no edge spans clusters, labels are cluster minima, sizes exact, node set equals the pair-graph endpoints",
-        tags=("llm", "dedup", "invariant"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t124_percentile_rank_invariants",
-        builder=rel_ops.percentile_rank_invariants,
-        oracle="""
-            SELECT CAST(count(DISTINCT c_mktsegment) AS BIGINT)
-                       AS segments_checked,
-                   CAST(0 AS BIGINT) AS median_violations,
-                   CAST(0 AS BIGINT) AS p90_violations
-            FROM customer
-        """,
-        doc="rank-error-bound oracle for t71 GK percentiles: each returned value's true rank interval must contain the target rank within n/accuracy (+1 convention slack)",
-        tags=("relational", "sketch", "invariant"),
     )
 )
 
@@ -3343,21 +3217,6 @@ register(
         """,
         doc="BPE tokenizer-training kernel: top-50 adjacent character-pair counts (whitespace-crossing pairs excluded), the argmax table each merge iteration consumes",
         tags=("llm", "text", "tokenizer"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t130_compaction_invariants",
-        builder=scale_ops.compaction_invariants,
-        oracle="""
-            SELECT CAST(count(*) AS BIGINT) AS n_rows,
-                   CAST(sum(doc_id) AS BIGINT) AS sum_doc_id,
-                   CAST(0 AS BIGINT) AS files_over_target
-            FROM documents
-        """,
-        doc="small-file compaction (64 shards coalesced to 4) with conservation laws: exact row and doc_id-sum equality to the source plus a file-count bound",
-        tags=("io", "maintenance", "invariant"),
     )
 )
 
@@ -3922,23 +3781,6 @@ register(
         """,
         doc="interval sweep-line: per-user max simultaneously-open 5-min intervals and first peak instant; closes sort before opens at equal instants (half-open semantics), exact BIGINT time arithmetic",
         tags=("events", "window", "interval"),
-    )
-)
-
-register(
-    QuerySpec(
-        name="t145_semantic_dedup_invariants",
-        # SemDeDup cells sized from the corpus; the invariant contract
-        # is cell-count-independent
-        builder=sim_ops.semantic_dedup_invariants,
-        oracle="""
-            SELECT CAST(0 AS BIGINT) AS bad_cosines,
-                   CAST(0 AS BIGINT) AS order_violations,
-                   CAST(0 AS BIGINT) AS kept_close_pairs,
-                   CAST(1 AS BIGINT) AS found_nonempty
-        """,
-        doc="invariant oracle for SemDeDup (k-means cells + within-cell cosine pruning, keep-lowest-id): cosines re-verified by an independent numpy kernel, ordering law, no surviving close pair, non-vacuity anchor",
-        tags=("llm", "dedup", "similarity", "invariant"),
     )
 )
 
@@ -4588,7 +4430,7 @@ register(
                    CAST(0 AS BIGINT) AS beats_exact,
                    CAST(1 AS BIGINT) AS found_nonempty
         """,
-        doc="invariant oracle for t25 IVF top-k: cosines re-verified by an independent numpy kernel, rank sequence laws, never beats exact brute force — completes the invariant shadow for every rows-only entry",
+        doc="invariant oracle for t25 IVF top-k: cosines re-verified by an independent numpy kernel, rank sequence laws, never beats exact brute force",
         tags=("llm", "similarity", "invariant"),
     )
 )
@@ -5951,32 +5793,6 @@ register(
 
 register(
     QuerySpec(
-        name="t207_cardinality_sketch_audit",
-        builder=scale_ops.cardinality_sketch_audit,
-        oracle="""
-            SELECT "column", exact_distinct,
-                   CAST(0 AS BIGINT) AS bound_violations
-            FROM (
-                SELECT 'l_orderkey' AS "column",
-                       CAST(count(DISTINCT l_orderkey) AS BIGINT)
-                           AS exact_distinct
-                FROM lineitem
-                UNION ALL
-                SELECT 'l_partkey', CAST(count(DISTINCT l_partkey) AS BIGINT)
-                FROM lineitem
-                UNION ALL
-                SELECT 'l_suppkey', CAST(count(DISTINCT l_suppkey) AS BIGINT)
-                FROM lineitem
-            )
-            ORDER BY "column"
-        """,
-        doc="multi-column sketch QA: HLL++ within 3 rsd of the exact distinct count for every key column, exact counts re-derived by SQL; one scan, long-form output",
-        tags=("scale", "sketch", "invariant"),
-    )
-)
-
-register(
-    QuerySpec(
         name="t208_shipping_sla_report",
         builder=rel_ops.shipping_sla_report,
         oracle="""
@@ -7041,11 +6857,7 @@ EAGER_BUILD: frozenset[str] = frozenset(
         "t21_ngram_jaccard_pairs",
         "t48_dedup_clusters",
         "t82_kmeans_clusters",
-        "t84_kmeans_invariants",
-        "t122_ann_topk_invariants",
-        "t123_cluster_invariants",
         "t126_token_pmi",
-        "t145_semantic_dedup_invariants",
         "t161_event_pagerank",
         "t165_ivf_topk_invariants",
         "t189_top_principal_component",
@@ -7065,9 +6877,7 @@ EAGER_BUILD: frozenset[str] = frozenset(
         "t66_jsonl_ingest",
         "t116_dead_letter_ingest",
         "t119_pysource_word_count",
-        "t120_lsh_precision_invariants",  # persisted band table (shared with t22)
-        "t22_minhash_lsh_pairs",
-        "t130_compaction_invariants",
+        "t22_minhash_lsh_pairs",  # persisted band table + shingle-hash store
         "t219_kvtext_roundtrip_word_count",
         "t223_incremental_dedup_from_store",
         "t224_zordered_box_revenue",

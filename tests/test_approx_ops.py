@@ -4,6 +4,9 @@ brute-force cosine)."""
 
 from __future__ import annotations
 
+import numpy as np
+
+from mapreduce_google_spark.io import load_table
 from mapreduce_google_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
@@ -11,14 +14,33 @@ from mapreduce_google_spark.operators.dedup import (
 from mapreduce_google_spark.operators.similarity import cosine_topk, ivf_topk
 
 
+def _embeddings(spark, sf_dir) -> dict:
+    """vec_id → float64 embedding, for numpy rechecks of reported
+    cosines (an independent kernel from the JVM HOF the operators use)."""
+    return {
+        r.vec_id: np.asarray(r.embedding, dtype=np.float64)
+        for r in load_table(spark, sf_dir, "embeddings").collect()
+    }
+
+
+def _np_cosine(a, b) -> float:
+    return float(a @ b / ((np.linalg.norm(a) or 1.0) * (np.linalg.norm(b) or 1.0)))
+
+
 def test_minhash_lsh_precision_and_recall(spark, sf_dir):
     exact = {
         (r.doc_a, r.doc_b): r.jaccard
         for r in ngram_jaccard_pairs(spark, sf_dir).collect()
     }
-    lsh = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(spark, sf_dir).collect()}
-    # exact-verify stage ⇒ precision 1.0 by construction
-    assert lsh <= set(exact), "LSH returned a pair the exact join rejects"
+    lsh = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in minhash_lsh_pairs(spark, sf_dir).collect()
+    }
+    assert lsh, "LSH found no pair on a corpus with near-duplicates"
+    # exact-verify stage ⇒ precision 1.0 by construction, with the exact
+    # operator's jaccard value for every pair
+    assert lsh.items() <= exact.items(), "LSH pair or jaccard differs from exact"
+    assert min(lsh.values()) >= 0.5, "LSH pair below the threshold"
     if exact:
         recall = len(lsh) / len(exact)
         # 8 bands × 4 rows at threshold 0.5 ⇒ P(candidate) ≈ 1-(1-s^4)^8,
@@ -175,19 +197,40 @@ def test_approx_distinct_within_error(spark, sf_dir):
 
 
 def test_hyperplane_lsh_recall_and_exactness(spark, sf_dir):
+    from collections import defaultdict
+
     from mapreduce_google_spark.operators.similarity import hyperplane_lsh_topk
 
-    exact_rows = cosine_topk(spark, sf_dir).collect()
+    k = 5
+    exact_rows = cosine_topk(spark, sf_dir, k=k).collect()
     exact = {(r.probe_id, r.vec_id) for r in exact_rows}
     exact_cos = {(r.probe_id, r.vec_id): r.cosine for r in exact_rows}
-    approx_rows = hyperplane_lsh_topk(spark, sf_dir).collect()
-    # returned cosines must be the TRUE cosines (verify stage is exact)
-    for r in approx_rows:
-        if (r.probe_id, r.vec_id) in exact_cos:
-            assert abs(r.cosine - exact_cos[(r.probe_id, r.vec_id)]) < 1e-9
-    # per-probe ranks are 1..n with no self matches
+    exact_at_rank = {(r.probe_id, r.rank): r.cosine for r in exact_rows}
+    approx_rows = hyperplane_lsh_topk(spark, sf_dir, k=k).collect()
+    assert approx_rows, "hyperplane LSH returned nothing"
+    emb = _embeddings(spark, sf_dir)
+    probe_set = set(sorted(emb)[:10])  # the declared n_probes lowest vec_ids
+    per_probe = defaultdict(list)
     for r in approx_rows:
         assert r.probe_id != r.vec_id
+        # returned cosines are the TRUE cosines (verify stage is exact):
+        # the exact operator's where both report the pair, and a numpy
+        # recheck for every pair
+        if (r.probe_id, r.vec_id) in exact_cos:
+            assert abs(r.cosine - exact_cos[(r.probe_id, r.vec_id)]) < 1e-9
+        assert abs(r.cosine - _np_cosine(emb[r.probe_id], emb[r.vec_id])) <= 1e-6, r
+        per_probe[r.probe_id].append(r)
+    assert set(per_probe) <= probe_set, sorted(set(per_probe) - probe_set)
+    for probe, rows in per_probe.items():
+        rows.sort(key=lambda r: r.rank)
+        # ranks run 1..n with n ≤ k; cosine non-increasing, ties by vec_id
+        assert [r.rank for r in rows] == list(range(1, len(rows) + 1))
+        assert len(rows) <= k, (probe, len(rows))
+        keys = [(-r.cosine, r.vec_id) for r in rows]
+        assert keys == sorted(keys), (probe, keys)
+        # an approximate rank-r neighbor is never closer than the exact one
+        for r in rows:
+            assert r.cosine <= exact_at_rank[(probe, r.rank)], r
     recall = len(exact & {(r.probe_id, r.vec_id) for r in approx_rows}) / len(exact)
     # 8 tables x 6 bits OR-amplification on random-ish vectors: a floor,
     # not a tuning target
@@ -202,17 +245,25 @@ def test_dedup_clusters_cover_exact_dup_groups(spark, sf_dir):
 
     from mapreduce_google_spark.operators.dedup import dedup_clusters, exact_dedup
 
-    clusters = {r.doc_id: r.cluster_id for r in dedup_clusters(spark, sf_dir).collect()}
+    rows = dedup_clusters(spark, sf_dir).collect()
+    clusters = {r.doc_id: r.cluster_id for r in rows}
     assert clusters, "no near-dup clusters found at all"
+    assert len(clusters) == len(rows), "a doc is labeled twice"
     # cluster label == min member id
     members = defaultdict(list)
     for doc, lbl in clusters.items():
         members[lbl].append(doc)
     for lbl, docs in members.items():
         assert lbl == min(docs), (lbl, docs)
+    # the stamped size is the member count
+    for r in rows:
+        assert r.cluster_size == len(members[r.cluster_id]), r
     # every LSH near-dup pair must be in ONE cluster (edges respected)
-    for r in minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b").collect():
+    pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b").collect()
+    for r in pairs:
         assert clusters[r.doc_a] == clusters[r.doc_b], (r.doc_a, r.doc_b)
+    # the labeled docs are exactly the pair graph's endpoints
+    assert set(clusters) == {d for r in pairs for d in (r.doc_a, r.doc_b)}
     # exact duplicates (identical signatures) must co-cluster — the
     # fixture has none at sf0.001, so this arm only fires when present
     for r in exact_dedup(spark, sf_dir).collect():
@@ -220,21 +271,22 @@ def test_dedup_clusters_cover_exact_dup_groups(spark, sf_dir):
             assert r.doc_id in clusters
 
 
-def test_packing_invariants(spark, sf_dir):
-    """T64: every document lands in exactly one pack; no pack exceeds the
-    budget unless it holds a single oversized doc; the result is
-    deterministic across runs; pack count is near the lower bound."""
-    from pyspark.sql import functions as F
-
+def test_packing_invariants(spark, sf_dir, duck):
+    """T64: every document lands in exactly one pack and no token is
+    invented or lost; no pack exceeds the budget unless it holds a
+    single oversized doc; the result is deterministic across runs; pack
+    count is near the lower bound."""
     from mapreduce_google_spark.operators.text import pack_documents
 
     budget = 256
     packs = pack_documents(spark, sf_dir, budget=budget).collect()
-    n_docs_total = sum(r.n_docs for r in packs)
-    assert (
-        n_docs_total
-        == spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-    )
+    n_docs, n_tokens = duck.execute(
+        """SELECT count(*), sum(len(list_filter(
+               string_split_regex(lower(text), '\\s+'), t -> t <> '')))
+           FROM documents"""
+    ).fetchone()
+    assert sum(r.n_docs for r in packs) == n_docs
+    assert sum(r.n_tokens for r in packs) == n_tokens
     for r in packs:
         assert r.n_tokens <= budget or r.n_docs == 1, r
     # deterministic re-run
@@ -242,8 +294,7 @@ def test_packing_invariants(spark, sf_dir):
     assert [tuple(r) for r in packs] == [tuple(r) for r in again]
     # waste bound: shard-local greedy stays within 2x of the global
     # lower bound at this corpus' doc-length distribution
-    total_tokens = sum(r.n_tokens for r in packs)
-    assert len(packs) <= 2 * (total_tokens // budget + 16)
+    assert len(packs) <= 2 * (n_tokens // budget + 16)
 
 
 def test_boilerplate_footer_does_not_explode_candidates(
@@ -487,15 +538,28 @@ def test_lsh_steady_state_never_scans_raw_corpus(spark, sf_dir):
 
 
 def test_kmeans_clusters_invariants(spark, sf_dir):
-    """Lloyd's fit (t82): full coverage, deterministic across runs, and
-    training must improve mean assignment cosine over the raw seeds."""
-    from mapreduce_google_spark.operators.similarity import kmeans_cluster_stats
+    """Lloyd's fit (t82): full coverage, every vector in a valid cell at
+    a valid cosine, deterministic across runs, and training must improve
+    mean assignment cosine over the raw seeds."""
+    from mapreduce_google_spark.operators.similarity import (
+        _assign_cells,
+        kmeans_cluster_stats,
+        kmeans_fit,
+    )
 
     trained = kmeans_cluster_stats(spark, sf_dir, n_cells=8, iters=3).collect()
     total = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     assert sum(r.n_members for r in trained) == total
     assert len(trained) <= 8
     assert all(r.min_cos <= r.mean_cos for r in trained)
+    # per-vector assignment of the same fit: a cell in [0, 8) and a
+    # cosine of magnitude ≤ 1 for every vector
+    emb = load_table(spark, sf_dir, "embeddings")
+    assign = _assign_cells(kmeans_fit(emb, 8, 3))
+    assigned = emb.select(assign("embedding").alias("a")).select("a.*").collect()
+    assert len(assigned) == total
+    for r in assigned:
+        assert 0 <= r.cell < 8 and abs(r.cos) <= 1 + 1e-6, r
 
     again = kmeans_cluster_stats(spark, sf_dir, n_cells=8, iters=3).collect()
     assert [tuple(r) for r in trained] == [tuple(r) for r in again]
@@ -732,25 +796,43 @@ def test_t24_auto_equals_registered_at_oracle_scale(spark, sf_dir):
     assert "LeftAnti" not in plan_off, plan_off
 
 
-def test_t145_auto_cells_derivation_and_oracle_equality(spark, sf_dir):
-    """The registered t145 builder derives its cell count from the
-    corpus size: the derivation clamps to 8 cells at oracle scale and
-    scales the cell count linearly with N in between the clamps; the
-    invariant summary equals the oracle's constant row."""
+def test_semantic_dedup_auto_cells_and_laws(spark, sf_dir):
+    """SemDeDup's cell count is derived from the corpus size: the
+    derivation clamps to 8 cells at oracle scale and scales the cell
+    count linearly with N in between the clamps. Its output obeys the
+    drop rule: every reported cosine is the true one and ≥ tau, the
+    keeper has the lower id, no two survivors of one cell are within
+    tau, and something is dropped."""
+    from mapreduce_google_spark.io import parquet_rows
     from mapreduce_google_spark.operators.similarity import (
         _auto_semantic_cells,
-        semantic_dedup_invariants,
+        _semantic_dedup,
     )
-    from mapreduce_google_spark.queries import REGISTRY
 
-    assert (
-        REGISTRY["t145_semantic_dedup_invariants"].builder
-        is semantic_dedup_invariants
-    )
     assert _auto_semantic_cells(500) == 8
     assert _auto_semantic_cells(0) == 8
     assert _auto_semantic_cells(5_000) == 10
     assert _auto_semantic_cells(200_000) == 400
     assert _auto_semantic_cells(10_000_000) == 4096  # broadcast cap
-    rows = [tuple(r) for r in semantic_dedup_invariants(spark, sf_dir).collect()]
-    assert rows == [(0, 0, 0, 1)]
+    tau = 0.4
+    n_cells = _auto_semantic_cells(parquet_rows(sf_dir, "embeddings"))
+    dropped_df, assigned_df = _semantic_dedup(spark, sf_dir, n_cells, 3, tau)
+    dropped = dropped_df.collect()
+    assigned = {
+        r.vec_id: (r.cell_id, np.asarray(r.embedding, dtype=np.float64))
+        for r in assigned_df.collect()
+    }
+    assert dropped, "SemDeDup dropped nothing"
+    for r in dropped:
+        assert r.keeper_id < r.vec_id, r
+        cos = _np_cosine(assigned[r.keeper_id][1], assigned[r.vec_id][1])
+        assert abs(r.cosine - cos) <= 1e-6 and r.cosine >= tau, (r, cos)
+    # a survivor has no lower-id partner at ≥ tau in its cell, so no two
+    # survivors of one cell may be that close
+    gone = {r.vec_id for r in dropped}
+    survivors = sorted(v for v in assigned if v not in gone)
+    for i, a in enumerate(survivors):
+        for b in survivors[i + 1 :]:
+            if assigned[a][0] == assigned[b][0]:
+                cos = round(_np_cosine(assigned[a][1], assigned[b][1]), 6)
+                assert cos < tau, (a, b, cos)

@@ -14,14 +14,15 @@ from tests.conftest import SF_DIR
 
 #: every registry entry that touches the catalog — t40 (the r11
 #: driver-red, when it wrote MANAGED tables) and t12's default path read
-#: io.bucketed_fact_table stores, t120/t22's band table and t223's
-#: fingerprint store go through io.adopt_or_build_bucketed_table
+#: io.bucketed_fact_table stores, t22's band table and shingle-hash
+#: store and t223's fingerprint store go through
+#: io.adopt_or_build_bucketed_table
 #: (external LOCATION under io.shared_store_root + CREATE TABLE). Grep
 #: audit for completeness lives in test_probe_list_covers_catalog_touchers
 #: below.
 CATALOG_TOUCHING = (
     "t40_bucketed_segment_revenue",
-    "t120_lsh_precision_invariants",
+    "t22_minhash_lsh_pairs",
     "t223_incremental_dedup_from_store",
     "t12_revenue_rollup",
     "t25_ivf_topk",
@@ -88,7 +89,7 @@ def test_probe_list_covers_catalog_touchers():
             if re.search(r"\bsaveAsTable\(|\bspark\.table\(|\btableExists\(", text):
                 hits.add(os.path.relpath(path, pkg))
     # modules whose catalog use is exercised by the probe list (scale→
-    # t40, dedup→t120/t223, io→adopt_or_build under both, relational→
+    # t40, dedup→t22/t223, io→adopt_or_build under both, relational→
     # t12's bucketed fact stores) or explicitly session-scoped
     # (streaming memory sink: spark.table on a temp view of the SAME
     # session, no warehouse involvement)

@@ -972,30 +972,6 @@ def test_runtime_bloom_filter_join_injection_available(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_t207_distinct_aggs_carry_no_per_key_sketch(spark, sf_dir):
-    """t207's r19 repair (dedup-first probe): dedup
-    FIRST, then sketch+count over the set. The defective shape — one
-    countDistinct mixed with approx_count_distinct in a single agg —
-    plans a partial HLL++ sketch buffer (1,639 MS[...] longs) attached
-    to EVERY distinct key through the first HashAggregate and Exchange
-    (~13 KB of aggregation state per key; 62 s at sf1 vs 4.8 s). Pin
-    the repaired shape: no HashAggregate node may both be KEYED by a
-    column and carry a partial_approx_count_distinct function."""
-    from mapreduce_google_spark.queries import REGISTRY
-
-    df = REGISTRY["t207_cardinality_sketch_audit"].builder(spark, sf_dir)
-    plan = formatted_plan(df)
-    assert "partial_approx_count_distinct" in plan  # sketch still there
-    for block in plan.split("\n\n"):
-        if "partial_approx_count_distinct" not in block:
-            continue
-        m = re.search(r"Keys \[(\d+)\]", block)
-        if m is not None:
-            assert m.group(1) == "0", (
-                "per-key partial HLL sketch is back:\n" + block[:400]
-            )
-
-
 def test_exact_jaccard_family_reads_shingle_store(spark, sf_dir):
     """r19 (shingle hash-join probe): the registered t21/t134
     builders serve their inverted index from the persisted shingle-hash

@@ -7,8 +7,10 @@ looked-up files are re-filtered by the pushed-down predicate."""
 from __future__ import annotations
 
 import glob
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_google_spark.operators.scale import (
@@ -637,6 +639,39 @@ def test_real_concurrent_refresh_race_one_writer_wins(spark, tmp_path):
     assert refresh_point_index(spark, path, "k") == idx_dir
     got = point_lookup(spark, path, "k", [80_001]).collect()
     assert [(r["k"], r["v"]) for r in got] == [(80_001, 2)]
+
+
+@pytest.mark.parametrize("sidecar", ["list", "missing"])
+def test_index_without_dict_sidecar_is_rebuilt(spark, tmp_path, sidecar):
+    """An index whose ``_covered_files.json`` is a bare file list, or
+    absent, counts as unbuilt: the refresh rebuilds it through the
+    compact path instead of trusting the list or scanning the postings.
+    Planted here over a stale posting table that covers one of the four
+    source files, so trusting the list would miss keys."""
+    path = str(tmp_path / "tbl")
+    _write_hashed(spark, path, 1_000, 4)
+    idx_dir = refresh_point_index(spark, path, "k")
+    flist = os.path.join(idx_dir, "_covered_files.json")
+    files = json.load(open(flist))["covered"]
+    stale = (
+        spark.read.parquet(idx_dir)
+        .where(F.col("file") == files[0])
+        .localCheckpoint()  # don't read from the dir being replaced
+    )
+    stale.write.mode("overwrite").parquet(idx_dir)  # drops sidecar + manifest
+    if sidecar == "list":
+        with open(flist, "w") as fh:
+            json.dump(files, fh)
+
+    refresh_point_index(spark, path, "k")
+    assert json.load(open(flist)) == {"covered": files, "segments": 1}
+    posted = spark.read.parquet(idx_dir).select("file").distinct().collect()
+    assert {r.file for r in posted} == set(files)
+    keys = list(range(0, 1_000, 37))
+    got = {(r.k, r.v) for r in point_lookup(spark, path, "k", keys).collect()}
+    scan = spark.read.parquet(path).where(F.col("k").isin(keys)).collect()
+    assert got == {(r.k, r.v) for r in scan}
+    assert len(got) == len(keys)
 
 
 def test_covered_sidecar_swap_is_atomic_artifact(spark, tmp_path):

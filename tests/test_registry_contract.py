@@ -38,7 +38,9 @@ def test_headline_queries_are_oracle_checked():
     """Bench queries must also be correctness-gated — a fast wrong answer
     is worse than a slow right one. Two approximate-by-construction
     exceptions, each with measured evidence instead of a SQL oracle:
-    t22 (precision/recall vs the exact operator + t120 invariants) and
+    t22 (precision, jaccard equality, threshold and recall vs the exact
+    operator, asserted in
+    tests/test_approx_ops.py::test_minhash_lsh_precision_and_recall) and
     t25 (recall vs exact t18, asserted in tests)."""
     approx_with_measured_evidence = {"t22_minhash_lsh_pairs", "t25_ivf_topk"}
     for name, spec in REGISTRY.items():
@@ -204,6 +206,32 @@ def test_claimed_test_references_exist():
         for m in artifact.finditer(text):
             if not os.path.exists(os.path.join(repo, m.group(1))):
                 problems.append(f"{src}: cites missing {m.group(1)}")
+    assert not problems, "\n".join(problems)
+
+
+def test_cited_spec_ids_are_registered():
+    """Every spec id ``t<N>`` cited in package source (docstrings,
+    comments, ``doc=`` strings) names a registered spec, so deleting a
+    spec also means rewording what pointed at it. The one non-citation
+    is the ``t0`` struct-field alias of textstats.py's trigram zip."""
+    import glob
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "mapreduce_google_spark")
+    registered = {int(re.match(r"t(\d+)", name).group(1)) for name in REGISTRY}
+    not_citations = {("operators/textstats.py", "t0")}
+    cite = re.compile(r"(?<!\w)[tT](\d+)(?!\d)")
+    problems = []
+    for src in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(src, pkg)
+        for lineno, line in enumerate(open(src), 1):
+            for m in cite.finditer(line):
+                if (
+                    int(m.group(1)) not in registered
+                    and (rel, m.group(0)) not in not_citations
+                ):
+                    problems.append(f"{rel}:{lineno}: {m.group(0)}")
     assert not problems, "\n".join(problems)
 
 

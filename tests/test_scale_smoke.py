@@ -25,9 +25,6 @@ SCALE_QUERIES = [
     "t68_trailing_active_users",
     # the registered as-of join over the two bucketed fact stores
     "t33_asof_latest_order",
-    # the Arrow-Python kernel path on the bench-relevant surface —
-    # per-batch-overhead regressions only show up past the sf0.001 tier
-    "t83_pack_invariants",
     # native codec pipeline (encode→decode→resize→checksum in one Arrow
     # pass) — the heaviest per-row Python work on the registered surface
     "t156_image_resize_checksum",
@@ -43,7 +40,7 @@ SCALE_QUERIES = [
 #: regression (the failure mode Arrow paths have when batches degenerate
 #: to row-at-a-time) blows through these.
 KERNEL_TIME_BOUNDS = {
-    "t83_pack_invariants": 45.0,
+    "t64_pack_documents": 45.0,
     "t156_image_resize_checksum": 90.0,
 }
 
@@ -69,20 +66,30 @@ def test_scale_smoke_matches_oracle(name, spark, duck_sf01):
 
 
 @pytest.mark.parametrize("name", sorted(KERNEL_TIME_BOUNDS))
-def test_python_kernel_walltime_bound(name, spark):
+def test_python_kernel_walltime_bound(name, spark, duck_sf01):
     """Arrow-Python kernel paths stay batch-shaped at 100× the test tier:
     a timed end-to-end run (build + full materialization) under a ceiling
-    that only a per-batch-overhead regression would breach."""
+    that only a per-batch-overhead regression would breach. The t64 run
+    doubles as the packing kernel's sf0.1 conservation check: every
+    document packed once, no token invented or lost."""
     import time
 
     spec = REGISTRY[name]
     start = time.monotonic()
-    spec.builder(spark, SF01).collect()
+    rows = spec.builder(spark, SF01).collect()
     elapsed = time.monotonic() - start
     assert elapsed < KERNEL_TIME_BOUNDS[name], (
         f"{name} took {elapsed:.1f}s at sf0.1 "
         f"(bound {KERNEL_TIME_BOUNDS[name]}s) — Arrow batching regressed?"
     )
+    if name == "t64_pack_documents":
+        n_docs, n_tokens = duck_sf01.execute(
+            """SELECT count(*), sum(len(list_filter(
+                   string_split_regex(lower(text), '\\s+'), t -> t <> '')))
+               FROM documents"""
+        ).fetchone()
+        assert sum(r.n_docs for r in rows) == n_docs
+        assert sum(r.n_tokens for r in rows) == n_tokens
 
 
 @pytest.mark.skipif(

@@ -1,7 +1,7 @@
 """Property fuzz for the bucketed-store identity protocol (r13).
 
 ``io.adopt_or_build_bucketed_table`` is the substrate under t09/t11/
-t12/t16/t22/t25/t40/t45/t120/t223 — a wrong adoption silently
+t12/t16/t22/t25/t40/t45/t223 — a wrong adoption silently
 mis-routes co-located joins, and a build that clears the wrong
 directory deletes a live store.
 This fuzz drives random SEQUENCES of builds over random bucket specs,
