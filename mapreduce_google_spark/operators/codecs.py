@@ -1,12 +1,11 @@
 """Pure-Python media codecs for the multimodal pipeline.
 
-This container ships no image/audio libraries, but several real formats
-are decodable with the stdlib alone: PNG (zlib + per-scanline filters),
-BMP (struct), netpbm P5/P6 (ASCII header + raw pixels), GIF/JPEG headers
-(dimension parse), and WAV PCM (stdlib ``wave``). These kernels make the
-``use_fake=False`` path of :mod:`.multimodal` genuinely functional here,
-while PIL — when installed on executors — remains the preferred
-full-fidelity/fast path.
+Several real formats are decodable with the stdlib alone: PNG (zlib +
+per-scanline filters), BMP (struct), netpbm P5/P6 (ASCII header + raw
+pixels), GIF/JPEG headers (dimension parse), and WAV PCM (stdlib
+``wave``). These kernels make the decode stages of :mod:`.multimodal`
+work without any image/audio library, while PIL — when installed on
+executors — remains the preferred full-fidelity/fast path.
 
 Performance honesty: the PNG filter undo below is a per-scanline numpy
 loop — fine for metadata extraction and correctness tests, but on a real

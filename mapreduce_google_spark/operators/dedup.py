@@ -200,7 +200,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_df: int | None = None,
     warn_df: int | None = 1000,
-    use_shingle_store: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by exact Jaccard over word-3-gram shingle sets.
 
@@ -210,23 +209,21 @@ def ngram_jaccard_pairs(
     per-shingle fan-out so boilerplate can't make it quadratic; Jaccard
     is then computed over the CAPPED sets on both engine and oracle).
 
-    ``use_shingle_store`` (r19, default ON — guide §2.3 narrower types
-    + §6 build-once substrate; r19 shingle hash-join probe): the
-    inverted index is served from the persisted
-    :func:`shingle_store_table` — each doc's sorted distinct
-    ``xxhash64`` shingle values plus ``set_size``, the SAME store the
-    t22 verify stage reads — so tokenize + n-gram assembly (the most
-    expensive expression in the dedup family) is paid once per corpus
-    version, the self-join key shrinks from a ~20-char string to 8
-    bytes, and the per-doc sizes aggregation disappears into a store
-    column. Pair counts over hashes equal pair counts over strings
-    absent an xxhash64 collision inside a document pair (~2^-64 per
-    distinct shingle pair — the bound the t22 verify stage has shipped
-    on since r14; in-tool sorted-rows equality gated at sf0.1 AND sf1,
-    oracle-green at sf0.01). −65% at sf0.1, −36% at sf1 for t21;
-    composes into t135 and t170.
-    ``use_shingle_store=False`` forces the string-keyed retokenizing
-    form for one-shot corpora.
+    The inverted index is served from the persisted
+    :func:`shingle_store_table` (r19, guide §2.3 narrower types + §6
+    build-once substrate; r19 shingle hash-join probe) — each doc's
+    sorted distinct ``xxhash64`` shingle values plus ``set_size``, the
+    SAME store the t22 verify stage reads — so tokenize + n-gram
+    assembly (the most expensive expression in the dedup family) is
+    paid once per corpus version, the self-join key shrinks from a
+    ~20-char string to 8 bytes, and the per-doc sizes aggregation
+    disappears into a store column. Pair counts over hashes equal pair
+    counts over strings absent an xxhash64 collision inside a document
+    pair (~2^-64 per distinct shingle pair — the bound the t22 verify
+    stage has shipped on since r14); rows equal the string-keyed
+    :func:`ngram_jaccard_pairs_direct` (sorted-rows equality gated at
+    sf0.1 AND sf1, oracle-green at sf0.01). −65% at sf0.1, −36% at sf1
+    for t21; composes into t135 and t170.
 
     ``warn_df`` (ON by default at 1000, the t22 ``max_bucket`` analog
     for the exact detector): a NON-semantic skew guard. Dropping
@@ -248,19 +245,39 @@ def ngram_jaccard_pairs(
     plan audits) are memoized dict hits, i.e. fully lazy; pass
     ``warn_df=None`` for a strictly lazy plan.
     """
-    if use_shingle_store:
-        sets = spark.table(shingle_store_table(spark, sf_dir, n, max_df))
-        # the hash column keeps the name "shingle" so the join/agg body
-        # below is identical on both paths — the join only needs key
-        # EQUALITY, which xxhash64 preserves (collision bound above)
-        sh = sets.select("doc_id", F.explode("xh").alias("shingle"))
-        sizes = sets.select("doc_id", "set_size")
-    else:
-        docs = load_table(spark, sf_dir, "documents")
-        sh = _doc_shingles(docs, n, max_df=max_df)
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("set_size"))
+    sets = spark.table(shingle_store_table(spark, sf_dir, n, max_df))
+    # the hash column keeps the name "shingle" so the tail is the one
+    # the direct reference runs — the join only needs key EQUALITY,
+    # which xxhash64 preserves (collision bound above)
+    sh = sets.select("doc_id", F.explode("xh").alias("shingle"))
     if warn_df is not None:
         _warn_on_shingle_skew(sh, sf_dir, n, max_df, warn_df)
+    return _jaccard_pairs_from_index(
+        sh, sets.select("doc_id", "set_size"), threshold
+    )
+
+
+def ngram_jaccard_pairs_direct(
+    spark: SparkSession,
+    sf_dir: str,
+    n: int = 3,
+    threshold: float = 0.5,
+    max_df: int | None = None,
+) -> DataFrame:
+    """Reference for :func:`ngram_jaccard_pairs`: the same pairs with
+    the inverted index built from the raw documents, string-keyed
+    (retokenize, n-gram assembly, per-doc set sizes by aggregation)
+    instead of read from the shingle-hash store."""
+    sh = _doc_shingles(load_table(spark, sf_dir, "documents"), n, max_df=max_df)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("set_size"))
+    return _jaccard_pairs_from_index(sh, sizes, threshold)
+
+
+def _jaccard_pairs_from_index(
+    sh: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a < doc_b, jaccard ≥ threshold) from an inverted index
+    (doc_id, shingle) and per-doc set sizes (doc_id, set_size)."""
     a, b = sh.alias("a"), sh.alias("b")
     common = (
         a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
@@ -1104,7 +1121,6 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = None,
-    use_shingle_store: bool = True,
 ) -> DataFrame:
     """T134 — asymmetric containment near-dup: pairs where
     ``|A∩B| / |A|`` ≥ threshold (doc_a mostly contained in doc_b).
@@ -1118,25 +1134,44 @@ def containment_pairs(
     Excludes identical sets (containment 1.0 both ways is T17/T21's
     business) only by threshold, not specially.
 
-    ``use_shingle_store`` (r19, default ON): the inverted index is
-    served from the persisted :func:`shingle_store_table` exactly as in
-    :func:`ngram_jaccard_pairs` — see the collision-bound and
-    measurement notes there (r19 shingle hash-join probe: −58%
-    at sf0.1, −23% at sf1 for t134; the residual 250M-row pair shuffle
-    at sf1 is the EXACT operator's irreducible Σdf² volume on the
-    closed-vocabulary corpus — measured join_rows ≈ distinct pairs ≈
-    2.5e8, avg 1.1 shared shingles per candidate pair, so per-pair
-    array intersection has no headroom either; the production path at
-    scale is the LSH family).
+    The inverted index is served from the persisted
+    :func:`shingle_store_table` exactly as in :func:`ngram_jaccard_pairs`
+    — see the collision-bound and measurement notes there; rows equal
+    the string-keyed :func:`containment_pairs_direct` (r19 shingle
+    hash-join probe: −58% at sf0.1, −23% at sf1 for t134; the residual
+    250M-row pair shuffle at sf1 is the EXACT operator's irreducible
+    Σdf² volume on the closed-vocabulary corpus — measured join_rows ≈
+    distinct pairs ≈ 2.5e8, avg 1.1 shared shingles per candidate pair,
+    so per-pair array intersection has no headroom either; the
+    production path at scale is the LSH family).
     """
-    if use_shingle_store:
-        sets = spark.table(shingle_store_table(spark, sf_dir, n, max_df))
-        sh = sets.select("doc_id", F.explode("xh").alias("shingle"))
-        sizes = sets.select("doc_id", "set_size")
-    else:
-        docs = load_table(spark, sf_dir, "documents")
-        sh = _doc_shingles(docs, n, max_df=max_df)
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("set_size"))
+    sets = spark.table(shingle_store_table(spark, sf_dir, n, max_df))
+    sh = sets.select("doc_id", F.explode("xh").alias("shingle"))
+    return _containment_pairs_from_index(
+        sh, sets.select("doc_id", "set_size"), threshold
+    )
+
+
+def containment_pairs_direct(
+    spark: SparkSession,
+    sf_dir: str,
+    n: int = 3,
+    threshold: float = 0.8,
+    max_df: int | None = None,
+) -> DataFrame:
+    """Reference for :func:`containment_pairs`: the same pairs with the
+    inverted index built string-keyed from the raw documents instead of
+    read from the shingle-hash store."""
+    sh = _doc_shingles(load_table(spark, sf_dir, "documents"), n, max_df=max_df)
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("set_size"))
+    return _containment_pairs_from_index(sh, sizes, threshold)
+
+
+def _containment_pairs_from_index(
+    sh: DataFrame, sizes: DataFrame, threshold: float
+) -> DataFrame:
+    """(doc_a ≠ doc_b, containment of doc_a in doc_b ≥ threshold) from
+    an inverted index (doc_id, shingle) and per-doc set sizes."""
     a, b = sh.alias("a"), sh.alias("b")
     common = (
         a.join(

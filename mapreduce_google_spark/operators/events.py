@@ -73,7 +73,6 @@ def session_window_stats(
     spark: SparkSession,
     sf_dir: str,
     gap_minutes: int = 30,
-    use_bucketed_store: bool = True,
 ) -> DataFrame:
     """T16 — sessionization: per-user sessions with a 30-minute gap.
 
@@ -94,22 +93,18 @@ def session_window_stats(
     ``tests/test_property_fuzz.py::test_session_window_boundary_fuzz``
     and the streaming session tests.
 
-    ``use_bucketed_store`` (default on, r13): events come from the
-    user_id-bucketed :func:`io.bucketed_fact_table` copy, so the
-    session window's partitionBy(user_id) — and both rollup groupBys
-    after it — consume bucket co-location instead of exchanging the
-    event stream. Measured at BOTH tiers (medians): sf0.1 0.91→0.58 s,
-    sf1 4.31→0.97 s (−78%: at 10× data the exchange IS the cost), so
-    unlike t11/t33 no size dispatch is needed — the store wins
-    everywhere. Result-identical (same plan past the scan; plan-gated
-    in tests/test_plans.py).
+    Events come from the user_id-bucketed :func:`io.bucketed_fact_table`
+    copy, so the session window's partitionBy(user_id) — and both
+    rollup groupBys after it — consume bucket co-location instead of
+    exchanging the event stream. Measured against the raw scan at BOTH
+    tiers (r13 medians): sf0.1 0.91→0.58 s, sf1 4.31→0.97 s (−78%: at
+    10× data the exchange IS the cost), so unlike t11/t33 no size
+    dispatch is needed — the store wins everywhere (plan-gated in
+    tests/test_plans.py).
     """
-    if use_bucketed_store:
-        from mapreduce_google_spark.io import bucketed_fact_table
+    from mapreduce_google_spark.io import bucketed_fact_table
 
-        ev = spark.table(bucketed_fact_table(spark, sf_dir, "events", "user_id"))
-    else:
-        ev = load_table(spark, sf_dir, "events")
+    ev = spark.table(bucketed_fact_table(spark, sf_dir, "events", "user_id"))
     w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
     gap_us = gap_minutes * 60 * 1_000_000
     # microsecond precision on both engine and oracle side — second-level

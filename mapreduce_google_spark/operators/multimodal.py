@@ -2,15 +2,13 @@
 metadata, with decode / feature-extract / resize / frame-sample stages as
 Arrow-batched ``mapInPandas`` pipelines.
 
-Codec strategy (``use_fake=False``): PIL when importable on executors
-(the fast, full-coverage path), else the pure-stdlib native kernels in
+Codec strategy: PIL when importable on executors (the fast,
+full-coverage path), else the pure-stdlib native kernels in
 :mod:`.codecs` (PNG/BMP/netpbm pixel decode, GIF/JPEG header decode, WAV
-PCM frames) — so real decode WORKS in this library-free container for
-those formats; only payloads neither path recognizes raise
+PCM frames) — so real decode WORKS without third-party codecs for those
+formats; only payloads neither path recognizes raise
 ``NotImplementedError``, deliberately inside the UDF so the failure
 surfaces exactly where a cluster would need the library.
-``use_fake=True`` (default in tests) runs a deterministic fake decoder
-(dimensions derived from the content hash) for corpus-independent CI.
 
 Scale notes: binary payloads ride in parquet as-is (no base64 inflation);
 ``mapInPandas`` streams Arrow batches so executor memory is bounded by
@@ -21,7 +19,6 @@ row counts.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -89,12 +86,6 @@ def attach_binary(docs: DataFrame) -> DataFrame:
     )
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake codec: dimensions from the content digest."""
-    d = hashlib.sha256(payload).digest()
-    return 16 + d[0] % 240, 16 + d[1] % 240, 1 + d[2] % 4
-
-
 def _real_decode_dims(payload: bytes) -> tuple[int, int, int, str]:
     """Real header decode: PIL if importable, else the native stdlib
     kernels. Raises NotImplementedError for unrecognized payloads."""
@@ -113,27 +104,23 @@ def _real_decode_dims(payload: bytes) -> tuple[int, int, int, str]:
     if dims is None:
         raise NotImplementedError(
             f"unrecognized media payload (magic={payload[:4]!r}); native "
-            "kernels cover png/jpeg/gif/bmp/pnm — install pillow for more, "
-            "or use use_fake=True"
+            "kernels cover png/jpeg/gif/bmp/pnm — install pillow for more"
         )
     w, h, c, fmt = dims
     return w, h, c, f"native-{fmt}"
 
 
-def decode_images(df: DataFrame, use_fake: bool = True) -> DataFrame:
+def decode_images(df: DataFrame) -> DataFrame:
     """Decode stage over (doc_id, blob): Arrow-batched ``mapInPandas``.
 
-    ``use_fake=False`` uses PIL when present, else the pure-stdlib header
-    kernels (:func:`codecs.parse_image_dims`); payloads neither recognizes
-    raise ``NotImplementedError`` from inside the UDF.
+    Uses PIL when present, else the pure-stdlib header kernels
+    (:func:`codecs.parse_image_dims`); payloads neither recognizes raise
+    ``NotImplementedError`` from inside the UDF.
     """
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_fake:
-                dims = [(*_fake_decode(bytes(b)), "fake-sha256") for b in pdf["blob"]]
-            else:
-                dims = [_real_decode_dims(bytes(b)) for b in pdf["blob"]]
+            dims = [_real_decode_dims(bytes(b)) for b in pdf["blob"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -192,18 +179,15 @@ def _real_resize(payload: bytes, width: int, height: int) -> bytes:
         raise NotImplementedError(
             f"unsupported payload for native resize (magic={payload[:4]!r}); "
             "native kernels cover 8-bit png/bmp/pnm — install pillow for "
-            "more, or use use_fake=True"
+            "more"
         )
     return codecs.encode_png(codecs.resize_nearest(arr, width, height))
 
 
-def resize_images(df: DataFrame, width: int, height: int, use_fake: bool = True) -> DataFrame:
-    """Resize stage: blob → blob, same schema in and out.
-
-    Fake mode passes payloads through and restamps metadata (deterministic
-    CI behavior); real mode resizes via PIL or the native kernels and
-    re-encodes (PNG under the native path).
-    """
+def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
+    """Resize stage: blob → blob, same schema in and out. Resizes via
+    PIL or the native kernels and re-encodes (PNG under the native
+    path)."""
     out_schema = StructType(
         [
             StructField("doc_id", LongType()),
@@ -215,10 +199,7 @@ def resize_images(df: DataFrame, width: int, height: int, use_fake: bool = True)
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_fake:
-                blobs = list(pdf["blob"])
-            else:
-                blobs = [_real_resize(bytes(b), width, height) for b in pdf["blob"]]
+            blobs = [_real_resize(bytes(b), width, height) for b in pdf["blob"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -231,15 +212,13 @@ def resize_images(df: DataFrame, width: int, height: int, use_fake: bool = True)
     return df.select("doc_id", "blob").mapInPandas(resize, out_schema)
 
 
-def sample_frames(df: DataFrame, every_n_bytes: int = 64, use_fake: bool = True) -> DataFrame:
-    """Frame-sample stage: one row per sampled "frame" (video/audio
-    analog), exercising the 1-row-in/N-rows-out batch shape real frame
-    extraction has.
+def sample_frames(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
+    """Frame-sample stage: one row per sampled "frame", the
+    1-row-in/N-rows-out batch shape of frame extraction.
 
-    Fake mode samples every ``every_n_bytes``-th byte as a frame marker.
-    Real mode handles WAV PCM natively (every ``every_n_bytes``-th audio
-    sample of the first channel, via the stdlib ``wave`` kernel); video
-    containers still need a codec (ffmpeg/PyAV) on the executors.
+    Handles WAV PCM natively (every ``every_n_bytes``-th audio sample of
+    the first channel, via the stdlib ``wave`` kernel); video containers
+    still need a codec (ffmpeg/PyAV) on the executors.
     """
     out_schema = StructType(
         [
@@ -256,16 +235,12 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64, use_fake: bool = True)
             rows: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_byte": []}
             for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
                 data = bytes(b)
-                if use_fake:
-                    marks = [data[pos] for pos in range(0, len(data), every_n_bytes)]
-                elif codecs.sniff_format(data) == "wav":
-                    samples = codecs.wav_samples(data)
-                    marks = [int(v) for v in samples[::every_n_bytes]]
-                else:
+                if codecs.sniff_format(data) != "wav":
                     raise NotImplementedError(
-                        "real frame sampling covers WAV natively; video "
-                        "needs a codec on executors — use use_fake=True"
+                        "frame sampling covers WAV natively; video needs a "
+                        "codec on executors"
                     )
+                marks = [int(v) for v in codecs.wav_samples(data)[::every_n_bytes]]
                 for i, v in enumerate(marks):
                     rows["doc_id"].append(doc_id)
                     rows["frame_idx"].append(i)
@@ -335,9 +310,9 @@ def synthetic_image_blobs(docs: DataFrame) -> DataFrame:
 def image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T121 — REAL native-codec decode with an oracle: synthesize one
     tiny PNG/PPM per document (:func:`synthetic_image_blobs`), decode
-    headers with ``use_fake=False`` (:func:`decode_images` → the stdlib
-    kernels in :mod:`.codecs` — PIL is absent in this container, so the
-    ``native-*`` path is what runs), and emit the decoded dimensions.
+    headers (:func:`decode_images` → the stdlib kernels in
+    :mod:`.codecs` when PIL is absent, so the ``native-*`` path is what
+    runs), and emit the decoded dimensions.
 
     The oracle states (width, height, channels, decoder) in closed form
     from doc_id — any drift in either the encoders or the header parsers
@@ -346,7 +321,7 @@ def image_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     blobs = synthetic_image_blobs(docs)
-    return decode_images(blobs, use_fake=False).orderBy("doc_id")
+    return decode_images(blobs).orderBy("doc_id")
 
 
 def synthetic_wav_blobs(docs: DataFrame) -> DataFrame:
@@ -393,8 +368,8 @@ def synthetic_wav_blobs(docs: DataFrame) -> DataFrame:
 def wav_frame_stats(spark: SparkSession, sf_dir: str, every_n: int = 4) -> DataFrame:
     """T128 — real WAV decode with an oracle: synthesize one PCM WAV per
     document (:func:`synthetic_wav_blobs`), frame-sample every
-    ``every_n``-th sample with ``use_fake=False`` (the stdlib ``wave``
-    kernel in :func:`sample_frames`), and aggregate per-document frame
+    ``every_n``-th sample (the stdlib ``wave`` kernel in
+    :func:`sample_frames`), and aggregate per-document frame
     statistics. Sample values are closed-form in doc_id, so DuckDB
     states the expected (n_frames, sum/min/max) exactly — the audio
     decode path's driver-side evidence, completing what t121 does for
@@ -402,7 +377,7 @@ def wav_frame_stats(spark: SparkSession, sf_dir: str, every_n: int = 4) -> DataF
     """
     docs = load_table(spark, sf_dir, "documents")
     blobs = synthetic_wav_blobs(docs)
-    frames = sample_frames(blobs, every_n_bytes=every_n, use_fake=False)
+    frames = sample_frames(blobs, every_n_bytes=every_n)
     return (
         frames.groupBy("doc_id")
         .agg(

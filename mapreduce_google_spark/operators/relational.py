@@ -76,9 +76,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def revenue_per_region(
-    spark: SparkSession, sf_dir: str, use_bucketed_store: bool = True
-) -> DataFrame:
+def revenue_per_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T09 — orders ⋈ customer ⋈ nation ⋈ region, revenue per region.
 
     nation/region are broadcast (tiny, fixed-size); customer⋈orders is the
@@ -89,22 +87,16 @@ def revenue_per_region(
     both sides on custkey, so bucketing customer and orders on custkey at
     write time removes the exchange too.
 
-    ``use_bucketed_store`` (default on, r13) reads orders from the
-    custkey-bucketed :func:`io.bucketed_fact_table` copy: the per-
-    customer pre-aggregation — the query's only fact shuffle — then
-    consumes bucket co-location instead of exchanging (0.98→0.60 s
-    median at sf0.1, result-identical; plan-gated in
-    ``tests/test_plans.py``). The same store serves every custkey join
-    family member (t10 semi/anti, t11 window, t40's join).
+    Orders come from the custkey-bucketed :func:`io.bucketed_fact_table`
+    copy: the per-customer pre-aggregation — the query's only fact
+    shuffle — then consumes bucket co-location instead of exchanging
+    (0.98→0.60 s median at sf0.1 against the raw scan, r13; plan-gated
+    in ``tests/test_plans.py``). The same store serves every custkey
+    join family member (t10 semi/anti, t11 window, t40's join).
     """
-    if use_bucketed_store:
-        from mapreduce_google_spark.io import bucketed_fact_table
+    from mapreduce_google_spark.io import bucketed_fact_table
 
-        orders = spark.table(
-            bucketed_fact_table(spark, sf_dir, "orders", "o_custkey")
-        )
-    else:
-        orders = load_table(spark, sf_dir, "orders")
+    orders = spark.table(bucketed_fact_table(spark, sf_dir, "orders", "o_custkey"))
     customer = load_table(spark, sf_dir, "customer")
     nation = F.broadcast(load_table(spark, sf_dir, "nation"))
     region = F.broadcast(load_table(spark, sf_dir, "region"))

@@ -1871,7 +1871,6 @@ def refresh_point_index(
     path: str,
     key_col: str,
     index_partitions: int | None = None,
-    compact_after: int | None = None,
 ) -> str:
     """Build or INCREMENTALLY refresh the persisted secondary index of
     the parquet table at ``path`` on ``key_col``: a posting table of
@@ -1902,18 +1901,18 @@ def refresh_point_index(
       Cost: O(new postings) scan + sort, exactly the docstring contract.
     * **compact** (the rare path): on first build, when source files
       VANISHED (replaced by source compaction — their postings must
-      drop), or when the segment count would pass ``compact_after``,
-      all live postings are merged into one sorted generation
-      (``mode("overwrite")``), resetting the segment count. Under
-      continuous ingest the O(index) rewrite is paid once per
-      ``compact_after`` refreshes, not per refresh. Vanished files
-      route through the merge deliberately: a tombstone sidecar could
-      defer it, but the only event that vanishes files is a source
-      rewrite (compaction/GDPR apply), which already paid O(source) —
-      the index merge (two narrow columns, a small fraction of source
-      bytes) rides on it without changing the event's asymptotic cost,
-      and skipping tombstones keeps lookup exactness independent of a
-      second metadata structure.
+      drop), or when the segment count would pass
+      :data:`INDEX_COMPACT_SEGMENTS`, all live postings are merged into
+      one sorted generation (``mode("overwrite")``), resetting the
+      segment count. Under continuous ingest the O(index) rewrite is
+      paid once per :data:`INDEX_COMPACT_SEGMENTS` refreshes, not per
+      refresh. Vanished files route through the merge deliberately: a
+      tombstone sidecar could defer it, but the only event that
+      vanishes files is a source rewrite (compaction/GDPR apply), which
+      already paid O(source) — the index merge (two narrow columns, a
+      small fraction of source bytes) rides on it without changing the
+      event's asymptotic cost, and skipping tombstones keeps lookup
+      exactness independent of a second metadata structure.
 
     Probes see one layout either way: every segment is
     ``repartitionByRange(N, key)`` + sort-within (N scales with the
@@ -1937,11 +1936,6 @@ def refresh_point_index(
     """
     import glob
 
-    if compact_after is None:
-        # late-bound so tests (and operators wired through point_lookup,
-        # which can't thread the knob) can tighten the budget by
-        # monkeypatching the module constant
-        compact_after = INDEX_COMPACT_SEGMENTS
     idx_dir = os.path.join(path, f"_pointidx_{key_col}")
     if glob.glob(os.path.join(path, "*=*/")):
         raise ValueError(
@@ -1996,7 +1990,7 @@ def refresh_point_index(
             return idx_dir  # the racing writer did our work
         return _refresh_point_index_locked(
             spark, idx_dir, flist, files, new, vanished, known, segments,
-            key_col, index_partitions, compact_after,
+            key_col, index_partitions,
         )
 
 
@@ -2011,7 +2005,6 @@ def _refresh_point_index_locked(
     segments: int,
     key_col: str,
     index_partitions: int | None,
-    compact_after: int,
 ) -> str:
     """The mutation half of :func:`refresh_point_index` — caller holds
     the single-writer refresh lock."""
@@ -2037,7 +2030,7 @@ def _refresh_point_index_locked(
     compact = (
         not known  # first build
         or bool(vanished)  # replaced source files: postings must drop
-        or segments + 1 > compact_after  # segment budget exhausted
+        or segments + 1 > INDEX_COMPACT_SEGMENTS  # segment budget exhausted
     )
     if not compact:
         # APPEND path: the fresh postings become their own sorted

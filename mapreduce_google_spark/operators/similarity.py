@@ -1036,14 +1036,16 @@ def semantic_dedup(
     n_cells: int,
     iters: int = 3,
     tau: float = 0.4,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """SemDeDup (Abbas et al. 2023): cluster embeddings with
     k-means, then within each cluster drop every vector that has cosine
     ≥ tau with a LOWER-id vector of the same cluster (the deterministic
     keep-lowest-id restatement of the paper's per-cluster pruning).
 
-    Emits one row per dropped vector: (vec_id, cell_id, keeper_id =
-    lowest such partner, cosine to it).
+    Returns ``(dropped, assigned)``: one row per dropped vector
+    (vec_id, cell_id, keeper_id = lowest such partner, cosine to it),
+    and the cell assignment (vec_id, embedding, cell_id) of the one
+    k-means fit they come from.
 
     Scale shape — the whole point of SemDeDup: clustering first bounds
     the quadratic stage to within-cell self-joins (cost Σ|cell|² ≪ N²,
@@ -1053,15 +1055,6 @@ def semantic_dedup(
     anywhere. ``n_cells`` is sized from the corpus by the caller
     (:func:`_auto_semantic_cells`), which keeps |cell| bounded.
     """
-    return _semantic_dedup(spark, sf_dir, n_cells, iters, tau)[0]
-
-
-def _semantic_dedup(
-    spark: SparkSession, sf_dir: str, n_cells: int, iters: int, tau: float
-) -> tuple[DataFrame, DataFrame]:
-    """:func:`semantic_dedup`'s dropped rows, and the cell assignment
-    (vec_id, embedding, cell_id) they come from — one k-means fit,
-    which the SemDeDup law checks in tests reuse."""
     emb = load_table(spark, sf_dir, "embeddings")
     assign = _assign_cells(kmeans_fit(emb, n_cells, iters))
     assigned = emb.select(
@@ -1516,7 +1509,7 @@ def _cov_moments_arrow(
 
 
 def top_principal_component(
-    spark: SparkSession, sf_dir: str, iters: int = 20, moments: str = "arrow"
+    spark: SparkSession, sf_dir: str, iters: int = 20
 ) -> DataFrame:
     """T189 — distributed PCA, the scalable way: the d×d covariance
     matrix is ONE pass over the embeddings (outer-product partial sums
@@ -1533,92 +1526,95 @@ def top_principal_component(
     sqrt/division chain from deterministic operands. Start vector is
     the uniform unit vector (1/√d exact for d=64).
 
-    ``moments`` (r18, results-identical — BIT-identical, cell by cell):
-    the default ``"arrow"`` computes the quantized sums in one
-    :func:`_cov_moments_arrow` pass — scaled-int64 partials per
-    partition, one long aggregation — instead of the ``"sql"``
-    reference's N·d² row explosion (posexplode self-join + d²-keyed
-    decimal aggregation over 82M rows at sf1). The r17 covariance
-    shootout refuted the JOIN as the cost (join-free generator form was
-    within 1.5%); the cost was the 82M per-row decimal quantize+sum
-    operations themselves, which the kernel performs as vectorized
-    exact binary rounding with per-element Decimal repair inside the
-    repr-divergence window (see :func:`_quantize12_scaled`). All 4096
-    covariance cells bit-identical at sf0.01/sf0.1/sf1; 128.8 → 9.1 s
-    at sf1 (−93%, r18 covariance-kernel probe). ``"sql"`` keeps
-    the reference pipeline verbatim."""
+    The quantized sums come from one :func:`_cov_moments_arrow` pass —
+    scaled-int64 partials per partition, one long aggregation — instead
+    of :func:`top_principal_component_sql`'s N·d² row explosion
+    (posexplode self-join + d²-keyed decimal aggregation over 82M rows
+    at sf1); the two are BIT-identical, cell by cell (r18). The r17
+    covariance shootout refuted the JOIN as the cost (join-free
+    generator form was within 1.5%); the cost was the 82M per-row
+    decimal quantize+sum operations themselves, which the kernel
+    performs as vectorized exact binary rounding with per-element
+    Decimal repair inside the repr-divergence window (see
+    :func:`_quantize12_scaled`). All 4096 covariance cells
+    bit-identical at sf0.01/sf0.1/sf1; 128.8 → 9.1 s at sf1 (−93%, r18
+    covariance-kernel probe)."""
+    from decimal import Decimal
+
+    n, sx, sxy, n_bad = _cov_moments_arrow(spark, sf_dir)
+    if n_bad:
+        import warnings
+
+        warnings.warn(
+            f"top_principal_component: QUARANTINED {n_bad} embedding "
+            f"row(s) outside the decimal(20,12) exact quantization "
+            f"domain (|x| or |x*y| >= 2^53*1e-12); the covariance is "
+            f"computed over the remaining {n} rows. Clean the corpus "
+            "or run top_principal_component_sql to reproduce the "
+            "reference pipeline's own overflow behavior.",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    nf = float(n)
+    means_k = {i: float(Decimal(v).scaleb(-12)) / nf for i, v in sx.items()}
+    C = {
+        (i, j): float(Decimal(v).scaleb(-12)) / nf - means_k[i] * means_k[j]
+        for (i, j), v in sxy.items()
+    }
+    return _top_eigenvector(spark, C, iters)
+
+
+def top_principal_component_sql(
+    spark: SparkSession, sf_dir: str, iters: int = 20
+) -> DataFrame:
+    """Reference for :func:`top_principal_component`: the covariance
+    from the verbatim SQL pipeline — posexplode self-join on vec_id and
+    a (i, j)-keyed decimal aggregation — then the same power
+    iteration."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    exploded = emb.select("vec_id", F.posexplode("embedding").alias("i", "x"))
+    a = exploded.select("vec_id", F.col("i"), F.col("x").cast("double").alias("xa"))
+    b = exploded.select(
+        "vec_id", F.col("i").alias("j"), F.col("x").cast("double").alias("xb")
+    )
+    moments_df = (
+        a.join(b, "vec_id")
+        .groupBy("i", "j")
+        .agg(
+            F.sum((F.col("xa") * F.col("xb")).cast("decimal(20,12)"))
+            .cast("double")
+            .alias("sxy"),
+            F.count("*").cast("double").alias("n"),
+        )
+    )
+    means = exploded.groupBy("i").agg(
+        (
+            F.sum(F.col("x").cast("double").cast("decimal(20,12)")).cast("double")
+            / F.count("*")
+        ).alias("m")
+    )
+    cov = (
+        moments_df.join(means.select(F.col("i"), F.col("m").alias("mi")), "i")
+        .join(means.select(F.col("i").alias("j"), F.col("m").alias("mj")), "j")
+        .select(
+            "i",
+            "j",
+            (F.col("sxy") / F.col("n") - F.col("mi") * F.col("mj")).alias("cov"),
+        )
+    )
+    C = {(r.i, r.j): r.cov for r in cov.collect()}
+    return _top_eigenvector(spark, C, iters)
+
+
+def _top_eigenvector(spark: SparkSession, C: dict, iters: int) -> DataFrame:
+    """(dim_idx, loading) — ``iters`` driver-side power iterations over
+    the covariance cells ``C[(i, j)]`` from the uniform unit vector,
+    each matvec term quantized to 12 decimals HALF_UP before its exact
+    sum (the oracle's arithmetic)."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    if moments == "arrow":
-        n, sx, sxy, n_bad = _cov_moments_arrow(spark, sf_dir)
-        if n_bad:
-            import warnings
-
-            warnings.warn(
-                f"top_principal_component: QUARANTINED {n_bad} embedding "
-                f"row(s) outside the decimal(20,12) exact quantization "
-                f"domain (|x| or |x*y| >= 2^53*1e-12); the covariance is "
-                f"computed over the remaining {n} rows. Clean the corpus "
-                "or pass moments='sql' to reproduce the reference "
-                "pipeline's own overflow behavior.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-        nf = float(n)
-        means_k = {i: float(Decimal(v).scaleb(-12)) / nf for i, v in sx.items()}
-        C = {
-            (i, j): float(Decimal(v).scaleb(-12)) / nf
-            - means_k[i] * means_k[j]
-            for (i, j), v in sxy.items()
-        }
-        d = max(i for i, _ in C) + 1
-    else:
-        emb = load_table(spark, sf_dir, "embeddings")
-        exploded = emb.select(
-            "vec_id", F.posexplode("embedding").alias("i", "x")
-        )
-        a = exploded.select(
-            "vec_id", F.col("i"), F.col("x").cast("double").alias("xa")
-        )
-        b = exploded.select(
-            "vec_id", F.col("i").alias("j"), F.col("x").cast("double").alias("xb")
-        )
-        moments_df = (
-            a.join(b, "vec_id")
-            .groupBy("i", "j")
-            .agg(
-                F.sum((F.col("xa") * F.col("xb")).cast("decimal(20,12)"))
-                .cast("double")
-                .alias("sxy"),
-                F.count("*").cast("double").alias("n"),
-            )
-        )
-        means = (
-            exploded.groupBy("i")
-            .agg(
-                (
-                    F.sum(
-                        F.col("x").cast("double").cast("decimal(20,12)")
-                    ).cast("double")
-                    / F.count("*")
-                ).alias("m")
-            )
-        )
-        cov = (
-            moments_df.join(means.select(F.col("i"), F.col("m").alias("mi")), "i")
-            .join(means.select(F.col("i").alias("j"), F.col("m").alias("mj")), "j")
-            .select(
-                "i",
-                "j",
-                (F.col("sxy") / F.col("n") - F.col("mi") * F.col("mj")).alias(
-                    "cov"
-                ),
-            )
-        )
-        rows = cov.collect()
-        d = max(r.i for r in rows) + 1
-        C = {(r.i, r.j): r.cov for r in rows}
+    d = max(i for i, _ in C) + 1
     q12 = Decimal(1).scaleb(-12)
     v = [1.0 / (d ** 0.5)] * d
     for _ in range(iters):

@@ -3073,7 +3073,7 @@ register(
             FROM documents
             ORDER BY doc_id
         """,
-        doc="native-codec round trip: per-doc synthetic PNG/PPM encoded then header-decoded with use_fake=False; dims/format are closed-form in doc_id so DuckDB states the expected output exactly",
+        doc="native-codec round trip: per-doc synthetic PNG/PPM encoded then header-decoded by the native codecs; dims/format are closed-form in doc_id so DuckDB states the expected output exactly",
         tags=("multimodal", "codec"),
     )
 )
@@ -3192,7 +3192,7 @@ register(
             )
             ORDER BY doc_id
         """,
-        doc="native WAV round trip: per-doc synthetic PCM encoded (stdlib wave), frame-sampled with use_fake=False; sample values closed-form in doc_id (audio counterpart of t121)",
+        doc="native WAV round trip: per-doc synthetic PCM encoded (stdlib wave), frame-sampled by the native WAV kernel; sample values closed-form in doc_id (audio counterpart of t121)",
         tags=("multimodal", "codec", "audio"),
     )
 )

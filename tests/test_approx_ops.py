@@ -806,7 +806,7 @@ def test_semantic_dedup_auto_cells_and_laws(spark, sf_dir):
     from mapreduce_google_spark.io import parquet_rows
     from mapreduce_google_spark.operators.similarity import (
         _auto_semantic_cells,
-        _semantic_dedup,
+        semantic_dedup,
     )
 
     assert _auto_semantic_cells(500) == 8
@@ -816,7 +816,7 @@ def test_semantic_dedup_auto_cells_and_laws(spark, sf_dir):
     assert _auto_semantic_cells(10_000_000) == 4096  # broadcast cap
     tau = 0.4
     n_cells = _auto_semantic_cells(parquet_rows(sf_dir, "embeddings"))
-    dropped_df, assigned_df = _semantic_dedup(spark, sf_dir, n_cells, 3, tau)
+    dropped_df, assigned_df = semantic_dedup(spark, sf_dir, n_cells, 3, tau)
     dropped = dropped_df.collect()
     assigned = {
         r.vec_id: (r.cell_id, np.asarray(r.embedding, dtype=np.float64))

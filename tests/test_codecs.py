@@ -1,5 +1,5 @@
 """Native media codec kernels: real PNG/BMP/PPM/GIF/JPEG/WAV decode with
-stdlib+numpy only, and the Spark `use_fake=False` paths built on them."""
+stdlib+numpy only, and the Spark decode stages built on them."""
 
 from __future__ import annotations
 
@@ -171,7 +171,7 @@ def test_wav_parse_and_samples():
     np.testing.assert_array_equal(codecs.wav_samples(data), samples.astype(np.int32))
 
 
-# --- Spark use_fake=False paths ---------------------------------------
+# --- Spark decode stages ----------------------------------------------
 
 
 def _media_df(spark, blobs: list[bytes]):
@@ -190,7 +190,7 @@ def test_spark_real_decode_native(spark):
     df = _media_df(
         spark, [codecs.encode_png(arrs[0]), _make_bmp24(arrs[1])]
     )
-    got = {r.doc_id: r for r in decode_images(df, use_fake=False).collect()}
+    got = {r.doc_id: r for r in decode_images(df).collect()}
     assert (got[0].width, got[0].height, got[0].channels) == (8, 12, 3)
     assert (got[1].width, got[1].height, got[1].channels) == (20, 6, 3)
     assert got[0].decoder in ("native-png", "pil")
@@ -202,7 +202,7 @@ def test_spark_real_resize_native(spark):
 
     arr = _rng(13).integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
     df = _media_df(spark, [codecs.encode_ppm(arr)])
-    row = resize_images(df, 4, 4, use_fake=False).first()
+    row = resize_images(df, 4, 4).first()
     assert (row.width, row.height) == (4, 4)
     out = codecs.decode_pixels(bytes(row.blob))
     assert out is not None and out.shape == (4, 4, 3)
@@ -213,10 +213,15 @@ def test_spark_real_wav_frames(spark):
     from mapreduce_google_spark.operators.multimodal import sample_frames
 
     samples = np.arange(-50, 50, dtype=np.int16) * 100
-    df = _media_df(spark, [_make_wav(samples)])
-    rows = sample_frames(df, every_n_bytes=10, use_fake=False).orderBy("frame_idx").collect()
-    want = [int(v) for v in samples[::10]]
-    assert [r.frame_byte for r in rows] == want
+    short = samples[:37]
+    df = _media_df(spark, [_make_wav(samples), _make_wav(short)])
+    rows = sample_frames(df, every_n_bytes=10).orderBy("doc_id", "frame_idx").collect()
+    # 1 row in -> ceil(samples / every_n) frame rows out, per document
+    for doc_id, src in enumerate((samples, short)):
+        got = [r for r in rows if r.doc_id == doc_id]
+        assert len(got) == -(-len(src) // 10)
+        assert [r.frame_idx for r in got] == list(range(len(got)))
+        assert [r.frame_byte for r in got] == [int(v) for v in src[::10]]
 
 
 def test_spark_real_decode_unknown_format_raises(spark):
@@ -224,5 +229,5 @@ def test_spark_real_decode_unknown_format_raises(spark):
 
     df = _media_df(spark, [b"definitely not an image"])
     with pytest.raises(Exception) as exc_info:
-        decode_images(df, use_fake=False).collect()
+        decode_images(df).collect()
     assert "NotImplementedError" in str(exc_info.value)

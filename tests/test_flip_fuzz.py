@@ -645,9 +645,9 @@ def test_t189_kernel_agrees_with_sql_and_pure_decimal_reference(
     """On a planted float32 corpus whose products include exact
     decimal-tie values (1/64 · 1/128 = 1/8192), the registered arrow
     kernel must produce the SAME final rows as the verbatim SQL
-    reference (moments='sql') and the SAME covariance cells as an
-    independent pure-Python Decimal implementation of the SQL
-    semantics — bit-for-bit."""
+    reference (top_principal_component_sql) and the SAME covariance
+    cells as an independent pure-Python Decimal implementation of the
+    SQL semantics — bit-for-bit."""
     import struct
 
     import numpy as np
@@ -657,6 +657,7 @@ def test_t189_kernel_agrees_with_sql_and_pure_decimal_reference(
     from mapreduce_google_spark.operators.similarity import (
         _cov_moments_arrow,
         top_principal_component,
+        top_principal_component_sql,
     )
 
     rng = random.Random(1907)
@@ -711,7 +712,7 @@ def test_t189_kernel_agrees_with_sql_and_pure_decimal_reference(
     )
     sql_rows = sorted(
         tuple(r)
-        for r in top_principal_component(spark, sf_dir, moments="sql").collect()
+        for r in top_principal_component_sql(spark, sf_dir).collect()
     )
     assert arrow_rows == sql_rows
     assert len(arrow_rows) == d

@@ -1,21 +1,19 @@
 """Multimodal plumbing tests: binary column schema, Arrow batch shape,
-deterministic fake decode, feature extraction, frame fan-out, and the
-NotImplementedError gate for real codecs."""
+feature extraction, and the NotImplementedError gate for payloads no
+codec recognizes. The decode stages over real media are tested in
+test_codecs.py."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pytest
-from py4j.protocol import Py4JJavaError
 
 from mapreduce_google_spark.io import load_table
 from mapreduce_google_spark.operators.multimodal import (
     attach_binary,
     decode_images,
     extract_features,
-    resize_images,
-    sample_frames,
 )
 
 
@@ -36,17 +34,9 @@ def test_binary_schema_and_metadata(with_bin, spark, sf_dir):
     assert payload.decode("utf-8") == src.text
 
 
-def test_fake_decode_deterministic(with_bin):
-    a = {r.doc_id: (r.width, r.height, r.channels) for r in decode_images(with_bin).collect()}
-    b = {r.doc_id: (r.width, r.height, r.channels) for r in decode_images(with_bin).collect()}
-    assert a == b
-    assert all(16 <= w <= 255 and 16 <= h <= 255 and 1 <= c <= 4 for w, h, c in a.values())
-    assert len(set(a.values())) > 1, "fake decoder collapsed to one dimension"
-
-
 def test_real_decode_raises_without_codec(with_bin):
     with pytest.raises((NotImplementedError, Exception)) as exc_info:
-        decode_images(with_bin.limit(2), use_fake=False).collect()
+        decode_images(with_bin.limit(2)).collect()
     assert "NotImplementedError" in str(exc_info.value) or isinstance(
         exc_info.value, NotImplementedError
     )
@@ -57,15 +47,3 @@ def test_feature_histogram(with_bin):
     for r in rows:
         assert len(r.features) == 16
         assert abs(sum(r.features) - 1.0) < 1e-5  # normalized histogram
-
-
-def test_resize_passthrough_and_frame_fanout(with_bin, spark):
-    few = with_bin.limit(5)
-    resized = resize_images(few, 32, 32).collect()
-    assert all(r.width == 32 and r.height == 32 for r in resized)
-    frames = sample_frames(few, every_n_bytes=16)
-    per_doc = {r[0]: r[1] for r in frames.groupBy("doc_id").count().collect()}
-    blobs = {r.doc_id: bytes(r.blob) for r in few.collect()}
-    for doc_id, n in per_doc.items():
-        expected = (len(blobs[doc_id]) + 15) // 16
-        assert n == expected  # 1 row in → N frame rows out

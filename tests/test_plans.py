@@ -180,31 +180,23 @@ def test_t11_window_reads_bucketed_store(spark, sf_dir):
     assert store_rows == [tuple(r) for r in raw_df.collect()]
 
 
+def _hash_exchanges_on(plan: str, col: str) -> list[str]:
+    """The hash-partitioning exchange keys of ``plan`` that include
+    ``col``."""
+    return re.findall(rf"hashpartitioning\([^)]*\b{col}#[^)]*\)", plan)
+
+
 def test_t16_session_window_reads_bucketed_events(spark, sf_dir):
-    """t16's default path reads the user_id-bucketed events store: the
-    session window and both rollup groupBys consume bucket co-location
-    (fewer exchanges than the raw scan; result equality asserted here
-    and by the oracle every round). Like t11/t33 since r16 there is no size
-    dispatch — the store measured faster at every tier (r13)."""
+    """t16 reads the user_id-bucketed events store: the session window
+    and both rollup groupBys consume bucket co-location, so no exchange
+    is keyed on user_id (a raw events scan needs exactly one). Like
+    t11/t33 since r16 there is no size dispatch — the store measured
+    faster at every tier (r13)."""
     from mapreduce_google_spark.operators.events import session_window_stats
 
-    direct = formatted_plan(
-        session_window_stats(spark, sf_dir, use_bucketed_store=False)
-    )
-    bucketed = formatted_plan(session_window_stats(spark, sf_dir))
-    assert "Bucketed: true" in bucketed, bucketed
-    assert bucketed.count("Exchange") < direct.count("Exchange"), (
-        bucketed.count("Exchange"),
-        direct.count("Exchange"),
-    )
-    a = [tuple(r) for r in session_window_stats(spark, sf_dir).collect()]
-    b = [
-        tuple(r)
-        for r in session_window_stats(
-            spark, sf_dir, use_bucketed_store=False
-        ).collect()
-    ]
-    assert a == b
+    plan = formatted_plan(session_window_stats(spark, sf_dir))
+    assert "Bucketed: true" in plan, plan
+    assert not _hash_exchanges_on(plan, "user_id"), plan
 
 
 def test_t45_rangeframe_default_equals_forced_forms(spark, sf_dir):
@@ -545,21 +537,13 @@ def test_t77_guard_semantics_and_plan(spark, sf_dir):
 
 
 def test_t09_bucketed_store_removes_fact_exchange(spark, sf_dir):
-    """t09's default path reads orders from the custkey-bucketed store:
-    the per-customer pre-agg (the query's only fact shuffle) must
-    consume bucket co-location — bucketed scan in the plan, strictly
-    fewer exchanges than the direct path (r13)."""
-    from mapreduce_google_spark.operators.relational import revenue_per_region
-
-    direct = formatted_plan(
-        revenue_per_region(spark, sf_dir, use_bucketed_store=False)
-    )
-    bucketed = formatted_plan(revenue_per_region(spark, sf_dir))
-    assert "Bucketed: true" in bucketed, bucketed
-    assert bucketed.count("Exchange") < direct.count("Exchange"), (
-        bucketed.count("Exchange"),
-        direct.count("Exchange"),
-    )
+    """t09 reads orders from the custkey-bucketed store: the
+    per-customer pre-agg (the query's only fact shuffle) must consume
+    bucket co-location — bucketed scan in the plan, no exchange keyed
+    on o_custkey (a raw orders scan needs exactly one, r13)."""
+    plan = formatted_plan(revenue_per_region(spark, sf_dir))
+    assert "Bucketed: true" in plan, plan
+    assert not _hash_exchanges_on(plan, "o_custkey"), plan
 
 
 def test_t65_incremental_dedup_is_anti_join(spark, sf_dir):
@@ -976,11 +960,11 @@ def test_exact_jaccard_family_reads_shingle_store(spark, sf_dir):
     """r19 (shingle hash-join probe): the registered t21/t134
     builders serve their inverted index from the persisted shingle-hash
     store — the plan must scan the store table and must NOT scan (or
-    retokenize) the raw documents; the string-keyed legacy path stays
-    reachable behind use_shingle_store=False and must show the inverse."""
+    retokenize) the raw documents; the string-keyed ``_direct``
+    references must show the inverse."""
     from mapreduce_google_spark.operators.dedup import (
-        containment_pairs,
-        ngram_jaccard_pairs,
+        containment_pairs_direct,
+        ngram_jaccard_pairs_direct,
     )
     from mapreduce_google_spark.queries import REGISTRY
 
@@ -988,26 +972,25 @@ def test_exact_jaccard_family_reads_shingle_store(spark, sf_dir):
         plan = formatted_plan(REGISTRY[name].builder(spark, sf_dir))
         assert "mgs_shingle_hashes_" in plan, name
         assert "documents" not in plan, name
-    for fn in (ngram_jaccard_pairs, containment_pairs):
-        legacy = formatted_plan(
-            fn(spark, sf_dir, use_shingle_store=False, warn_df=None)
-            if fn is ngram_jaccard_pairs
-            else fn(spark, sf_dir, use_shingle_store=False)
-        )
-        assert "mgs_shingle_hashes_" not in legacy
-        assert "documents" in legacy
+    for fn in (ngram_jaccard_pairs_direct, containment_pairs_direct):
+        direct = formatted_plan(fn(spark, sf_dir))
+        assert "mgs_shingle_hashes_" not in direct
+        assert "documents" in direct
 
 
 def test_exact_jaccard_store_form_equals_string_form(spark, sf_dir):
     """The hash-vs-string equality the r19 store flip ships on (the t22
     verify-stage bound, ~2^-64 per distinct shingle pair): on the real
     corpus the store-served builders must produce row-identical output
-    to the string-keyed legacy forms — for t21 AND t134, including a
-    max_df-capped parameterization (the store identity includes
-    max_df, so the capped store must reproduce the capped stop-set)."""
+    to the string-keyed ``_direct`` references — for t21 AND t134,
+    including a max_df-capped parameterization (the store identity
+    includes max_df, so the capped store must reproduce the capped
+    stop-set)."""
     from mapreduce_google_spark.operators.dedup import (
         containment_pairs,
+        containment_pairs_direct,
         ngram_jaccard_pairs,
+        ngram_jaccard_pairs_direct,
     )
 
     for kwargs in ({}, {"max_df": 100}):
@@ -1019,18 +1002,13 @@ def test_exact_jaccard_store_form_equals_string_form(spark, sf_dir):
         )
         b = sorted(
             tuple(r)
-            for r in ngram_jaccard_pairs(
-                spark, sf_dir, warn_df=None, use_shingle_store=False, **kwargs
-            ).collect()
+            for r in ngram_jaccard_pairs_direct(spark, sf_dir, **kwargs).collect()
         )
         assert a == b and (len(a) > 0 or kwargs), kwargs
     ca = sorted(
         tuple(r) for r in containment_pairs(spark, sf_dir).collect()
     )
     cb = sorted(
-        tuple(r)
-        for r in containment_pairs(
-            spark, sf_dir, use_shingle_store=False
-        ).collect()
+        tuple(r) for r in containment_pairs_direct(spark, sf_dir).collect()
     )
     assert ca == cb and len(ca) > 0

@@ -97,14 +97,13 @@ def test_plan_has_no_scale_antipatterns(name, spark, sf_dir):
 
 #: builder -> guard parameter whose default must be ON (not None); a
 #: required parameter has no default and counts as ON (the cell count
-#: of _semantic_dedup, the body of semantic_dedup, which its caller
-#: sizes from the corpus)
+#: of semantic_dedup, which its caller sizes from the corpus)
 _BANDED_GUARDED = {
     "minhash_lsh_pairs": "max_bucket",
     "minhash_lsh_pairs_from_bands": "max_bucket",
     "simhash_near_dup_pairs": "max_bucket",
     "embedding_near_dup_pairs": "max_bucket",
-    "_semantic_dedup": "n_cells",
+    "semantic_dedup": "n_cells",
 }
 
 #: builder -> (guard param that EXISTS, reason the default is still
@@ -113,14 +112,18 @@ _BANDED_GUARDED = {
 #: of this dict and into _BANDED_GUARDED is what "landing the flip"
 #: means for this gate.
 _BANDED_EXCEPTIONS = {
-    "ngram_jaccard_pairs": (
-        "max_df",
+    "_jaccard_pairs_from_index": (
+        None,
         "BY-DESIGN: t21 is the exact-Jaccard oracle anchor "
         "(r17 registry sweep: by design) — at 100 TB it runs "
-        "on samples; capping it would change what 'exact' means",
+        "on samples; capping it would change what 'exact' means. The "
+        "cap that exists is max_df of ngram_jaccard_pairs and its "
+        "_direct reference, applied to the index this tail joins",
     ),
-    "containment_pairs": (
-        "max_df",
+    "_containment_pairs_from_index": (
+        None,
+        "max_df of containment_pairs and its _direct reference caps the "
+        "index this tail joins. "
         "MEASURED r18, default stays None (r18 banded-tail measurement): "
         "3-gram shingle document frequencies do not collapse like 8-bit "
         "band values — the 1000 cap never fires at sf1 (rows identical) "

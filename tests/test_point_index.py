@@ -257,28 +257,31 @@ def test_append_refresh_rewrites_no_prior_index_file(spark, tmp_path):
     assert len(admitted) <= sidecar["segments"] < total
 
 
-def test_segment_budget_triggers_compaction(spark, tmp_path):
-    """Per-refresh delta segments accumulate until compact_after, then
-    one merge rewrites the index into a single sorted generation — the
-    O(index) rewrite is paid once per budget, not per refresh."""
+def test_segment_budget_triggers_compaction(spark, tmp_path, monkeypatch):
+    """Per-refresh delta segments accumulate until INDEX_COMPACT_SEGMENTS,
+    then one merge rewrites the index into a single sorted generation —
+    the O(index) rewrite is paid once per budget, not per refresh."""
     import json
 
+    import mapreduce_google_spark.operators.scale as scale
+
+    monkeypatch.setattr(scale, "INDEX_COMPACT_SEGMENTS", 3)
     path = str(tmp_path / "tbl")
     _write_hashed(spark, path, 1_000, 4)
-    idx_dir = refresh_point_index(spark, path, "k", compact_after=3)
+    idx_dir = refresh_point_index(spark, path, "k")
     flist = os.path.join(idx_dir, "_covered_files.json")
 
     _append_source_file(spark, path, [(50_001, 1)], "k long, v long", "s1")
-    refresh_point_index(spark, path, "k", compact_after=3)
+    refresh_point_index(spark, path, "k")
     assert json.load(open(flist))["segments"] == 2
 
     _append_source_file(spark, path, [(50_002, 2)], "k long, v long", "s2")
-    refresh_point_index(spark, path, "k", compact_after=3)
+    refresh_point_index(spark, path, "k")
     assert json.load(open(flist))["segments"] == 3
 
     # the 4th segment would exceed the budget -> full compaction
     _append_source_file(spark, path, [(50_003, 3)], "k long, v long", "s3")
-    refresh_point_index(spark, path, "k", compact_after=3)
+    refresh_point_index(spark, path, "k")
     assert json.load(open(flist))["segments"] == 1
     # all postings survive the merge, exactly once
     idx = spark.read.parquet(idx_dir)
@@ -354,7 +357,7 @@ def test_mixed_type_lookup_keys_never_raise_or_silently_miss(spark, tmp_path):
     assert point_lookup(spark, ipath, "k", ["x", "y"]).count() == 0
 
 
-def test_torn_append_heals(spark, tmp_path):
+def test_torn_append_heals(spark, tmp_path, monkeypatch):
     """Crash-safety of the LSM append: if a refresh dies between writing
     its delta segment and updating the sidecar, the rerun re-appends the
     same postings (the sidecar still lists the source file as
@@ -378,8 +381,11 @@ def test_torn_append_heals(spark, tmp_path):
     assert got == {(7, 21)}
 
     # an append that trips the budget compacts — and the merge dedupes
+    import mapreduce_google_spark.operators.scale as scale
+
     _append_source_file(spark, path, [(70_001, 1)], "k long, v long", "t1")
-    refresh_point_index(spark, path, "k", compact_after=1)
+    monkeypatch.setattr(scale, "INDEX_COMPACT_SEGMENTS", 1)
+    refresh_point_index(spark, path, "k")
     idx = spark.read.parquet(idx_dir)
     assert idx.count() == idx.distinct().count() == 1_001
 
@@ -518,7 +524,7 @@ def test_concurrent_refresh_second_writer_fails_cleanly(spark, tmp_path):
     } == {(60_001, 9)}
 
 
-def test_refresh_lock_survives_compaction_overwrite(spark, tmp_path):
+def test_refresh_lock_survives_compaction_overwrite(spark, tmp_path, monkeypatch):
     """The lock lives BESIDE the index dir: compaction's
     mode('overwrite') clears the index dir, and a lock stored inside it
     would be silently released mid-mutation. Prove the lock is held for
@@ -543,7 +549,8 @@ def test_refresh_lock_survives_compaction_overwrite(spark, tmp_path):
     scale._refresh_point_index_locked = spy
     try:
         _append_source_file(spark, path, [(70_001, 1)], "k long, v long", "c1")
-        refresh_point_index(spark, path, "k", compact_after=1)  # forces compaction
+        monkeypatch.setattr(scale, "INDEX_COMPACT_SEGMENTS", 1)
+        refresh_point_index(spark, path, "k")  # forces compaction
     finally:
         scale._refresh_point_index_locked = real
     assert seen == {"held_during_mutation": True, "held_after_overwrite": True}
@@ -674,7 +681,7 @@ def test_index_without_dict_sidecar_is_rebuilt(spark, tmp_path, sidecar):
     assert len(got) == len(keys)
 
 
-def test_covered_sidecar_swap_is_atomic_artifact(spark, tmp_path):
+def test_covered_sidecar_swap_is_atomic_artifact(spark, tmp_path, monkeypatch):
     """ADVICE r11: steady-state lookups read _covered_files.json WITHOUT
     the refresh lock, so the writer must swap it with os.replace — a
     reader can then never see a truncated/empty JSON. Artifact check:
@@ -682,13 +689,16 @@ def test_covered_sidecar_swap_is_atomic_artifact(spark, tmp_path):
     a compaction."""
     import json
 
+    import mapreduce_google_spark.operators.scale as scale
+
     path = str(tmp_path / "tbl")
     _write_hashed(spark, path, 1_000, 4)
     idx_dir = refresh_point_index(spark, path, "k")
     _append_source_file(spark, path, [(80_001, 5)], "k long, v long", "a1")
     refresh_point_index(spark, path, "k")  # append (delta segment)
     _append_source_file(spark, path, [(80_002, 6)], "k long, v long", "a2")
-    refresh_point_index(spark, path, "k", compact_after=1)  # compaction
+    monkeypatch.setattr(scale, "INDEX_COMPACT_SEGMENTS", 1)
+    refresh_point_index(spark, path, "k")  # compaction
     flist = os.path.join(idx_dir, "_covered_files.json")
     sidecar = json.load(open(flist))
     assert set(sidecar) == {"covered", "segments"}

@@ -292,6 +292,36 @@ def test_package_source_has_one_lock():
     assert not problems, "\n".join(problems)
 
 
+def test_operators_take_no_body_switch():
+    """Each operator has one body: no function under ``operators/`` takes
+    a ``bool`` parameter or a ``use_*`` flag to pick another. A second
+    body that tests compare against is a function of its own (such as
+    ``ngram_jaccard_pairs_direct``). The one exception is
+    ``point_lookup_df(pin_keys)``, whose two package callers pass
+    different values."""
+    import ast
+    import glob
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ops = os.path.join(repo, "mapreduce_google_spark", "operators")
+    allowed = {("scale.py", "point_lookup_df", "pin_keys")}
+    problems = []
+    for src in glob.glob(os.path.join(ops, "*.py")):
+        rel = os.path.relpath(src, ops)
+        for node in ast.walk(ast.parse(open(src).read(), src)):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                ann = ast.unparse(arg.annotation) if arg.annotation else ""
+                if (
+                    re.search(r"\bbool\b", ann) or arg.arg.startswith("use_")
+                ) and (rel, node.name, arg.arg) not in allowed:
+                    problems.append(f"{rel}:{node.lineno}: {node.name}({arg.arg})")
+    assert not problems, "\n".join(problems)
+
+
 def test_registry_import_has_no_side_effects():
     """Importing the driver entry point spawns no process and opens no
     JSON file of the checkout: the registry order is a literal, not

@@ -43,7 +43,14 @@ if "--only" in args:
     del args[i : i + 2]
 SF = args[0] if args else "/root/testdata/sf0.01"
 
-spark = get_spark(app_name="driver-sim", master="local[8]", shuffle_partitions=8)
+# no console progress bar: it ends in \r, not \n, so with stdout and
+# stderr in one file it would share lines with the result lines
+spark = get_spark(
+    app_name="driver-sim",
+    master="local[8]",
+    shuffle_partitions=8,
+    extra_conf={"spark.ui.showConsoleProgress": "false"},
+)
 
 # 1. smoke: entry()
 df = e.entry(spark)
