@@ -79,7 +79,7 @@ def attach_binary(docs: DataFrame) -> DataFrame:
         "doc_id",
         blob.alias("blob"),
         F.struct(
-            F.lit("application/fake").alias("media_type"),
+            F.lit("text/plain; charset=utf-8").alias("media_type"),
             F.octet_length(blob).cast("long").alias("n_bytes"),
             F.sha2(blob, 256).alias("sha256"),
         ).alias("meta"),
@@ -212,11 +212,11 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     return df.select("doc_id", "blob").mapInPandas(resize, out_schema)
 
 
-def sample_frames(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
+def sample_frames(df: DataFrame, every_n: int = 64) -> DataFrame:
     """Frame-sample stage: one row per sampled "frame", the
     1-row-in/N-rows-out batch shape of frame extraction.
 
-    Handles WAV PCM natively (every ``every_n_bytes``-th audio sample of
+    Handles WAV PCM natively (every ``every_n``-th audio sample of
     the first channel, via the stdlib ``wave`` kernel); video containers
     still need a codec (ffmpeg/PyAV) on the executors.
     """
@@ -240,7 +240,7 @@ def sample_frames(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
                         "frame sampling covers WAV natively; video needs a "
                         "codec on executors"
                     )
-                marks = [int(v) for v in codecs.wav_samples(data)[::every_n_bytes]]
+                marks = [int(v) for v in codecs.wav_samples(data)[::every_n]]
                 for i, v in enumerate(marks):
                     rows["doc_id"].append(doc_id)
                     rows["frame_idx"].append(i)
@@ -377,7 +377,7 @@ def wav_frame_stats(spark: SparkSession, sf_dir: str, every_n: int = 4) -> DataF
     """
     docs = load_table(spark, sf_dir, "documents")
     blobs = synthetic_wav_blobs(docs)
-    frames = sample_frames(blobs, every_n_bytes=every_n)
+    frames = sample_frames(blobs, every_n=every_n)
     return (
         frames.groupBy("doc_id")
         .agg(

@@ -215,7 +215,7 @@ def test_spark_real_wav_frames(spark):
     samples = np.arange(-50, 50, dtype=np.int16) * 100
     short = samples[:37]
     df = _media_df(spark, [_make_wav(samples), _make_wav(short)])
-    rows = sample_frames(df, every_n_bytes=10).orderBy("doc_id", "frame_idx").collect()
+    rows = sample_frames(df, every_n=10).orderBy("doc_id", "frame_idx").collect()
     # 1 row in -> ceil(samples / every_n) frame rows out, per document
     for doc_id, src in enumerate((samples, short)):
         got = [r for r in rows if r.doc_id == doc_id]

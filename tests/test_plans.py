@@ -1005,10 +1005,11 @@ def test_exact_jaccard_store_form_equals_string_form(spark, sf_dir):
             for r in ngram_jaccard_pairs_direct(spark, sf_dir, **kwargs).collect()
         )
         assert a == b and (len(a) > 0 or kwargs), kwargs
-    ca = sorted(
-        tuple(r) for r in containment_pairs(spark, sf_dir).collect()
-    )
-    cb = sorted(
-        tuple(r) for r in containment_pairs_direct(spark, sf_dir).collect()
-    )
-    assert ca == cb and len(ca) > 0
+        ca = sorted(
+            tuple(r) for r in containment_pairs(spark, sf_dir, **kwargs).collect()
+        )
+        cb = sorted(
+            tuple(r)
+            for r in containment_pairs_direct(spark, sf_dir, **kwargs).collect()
+        )
+        assert ca == cb and (len(ca) > 0 or kwargs), kwargs

@@ -106,30 +106,44 @@ _BANDED_GUARDED = {
     "semantic_dedup": "n_cells",
 }
 
+#: private self-join tail -> the public builders that call it. The
+#: detection idiom matches the tail; the guard is a parameter of the
+#: callers, which cap the index the tail joins, so the inventory below
+#: is keyed by the callers.
+_BANDED_TAILS = {
+    "_jaccard_pairs_from_index": (
+        "ngram_jaccard_pairs",
+        "ngram_jaccard_pairs_direct",
+    ),
+    "_containment_pairs_from_index": (
+        "containment_pairs",
+        "containment_pairs_direct",
+    ),
+}
+
+_JACCARD_REASON = (
+    "BY-DESIGN: t21 is the exact-Jaccard oracle anchor "
+    "(r17 registry sweep: by design) — at 100 TB it runs "
+    "on samples; capping it would change what 'exact' means"
+)
+_CONTAINMENT_REASON = (
+    "MEASURED r18, default stays None (r18 banded-tail measurement): "
+    "3-gram shingle document frequencies do not collapse like 8-bit "
+    "band values — the 1000 cap never fires at sf1 (rows identical) "
+    "and only adds the df-profile pass (~5-8%). The guard stays "
+    "available for degenerate/boilerplate corpora"
+)
+
 #: builder -> (guard param that EXISTS, reason the default is still
 #: None / the fix is elsewhere). Pending entries name their flip round;
 #: by-design entries say why a cap would be wrong. Moving an entry OUT
 #: of this dict and into _BANDED_GUARDED is what "landing the flip"
 #: means for this gate.
 _BANDED_EXCEPTIONS = {
-    "_jaccard_pairs_from_index": (
-        None,
-        "BY-DESIGN: t21 is the exact-Jaccard oracle anchor "
-        "(r17 registry sweep: by design) — at 100 TB it runs "
-        "on samples; capping it would change what 'exact' means. The "
-        "cap that exists is max_df of ngram_jaccard_pairs and its "
-        "_direct reference, applied to the index this tail joins",
-    ),
-    "_containment_pairs_from_index": (
-        None,
-        "max_df of containment_pairs and its _direct reference caps the "
-        "index this tail joins. "
-        "MEASURED r18, default stays None (r18 banded-tail measurement): "
-        "3-gram shingle document frequencies do not collapse like 8-bit "
-        "band values — the 1000 cap never fires at sf1 (rows identical) "
-        "and only adds the df-profile pass (~5-8%). The guard stays "
-        "available for degenerate/boilerplate corpora",
-    ),
+    "ngram_jaccard_pairs": ("max_df", _JACCARD_REASON),
+    "ngram_jaccard_pairs_direct": ("max_df", _JACCARD_REASON),
+    "containment_pairs": ("max_df", _CONTAINMENT_REASON),
+    "containment_pairs_direct": ("max_df", _CONTAINMENT_REASON),
     "embedding_near_dup_pairs_exact": (
         None,
         "BY-DESIGN: the brute-force verification baseline tests and "
@@ -157,7 +171,14 @@ def test_banded_builders_carry_guard():
             if ('.alias("a")' in src and '.alias("b")' in src) or (
                 '"keep_emb"' in src and '"drop_emb"' in src
             ):
-                detected.add((mod, name))
+                if name in _BANDED_TAILS:
+                    for caller in _BANDED_TAILS[name]:
+                        assert f"{name}(" in inspect.getsource(
+                            vars(mod)[caller]
+                        ), (caller, name, "no longer calls its tail")
+                        detected.add((mod, caller))
+                else:
+                    detected.add((mod, name))
     assert detected, "detection pattern matched nothing — idiom drifted?"
     inventory = set(_BANDED_GUARDED) | set(_BANDED_EXCEPTIONS)
     unlisted = {n for _, n in detected} - inventory
