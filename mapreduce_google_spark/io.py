@@ -407,17 +407,18 @@ def derived_dir(kind: str, sf_dir: str, *tables: str) -> str:
     ``sf_dir``: ``mgs_{kind}_{cache_tag}`` under
     :func:`shared_store_root`, so regenerating a source moves its
     derivations to a fresh directory. Every staging, layout copy and
-    stream scratch directory the operators write is named here; the
-    caller decides whether the directory is written once
-    (:func:`write_once`) or rebuilt on every run."""
+    stream scratch directory the operators write is named here. A
+    directory that is built once per corpus is built and committed
+    by :func:`write_once`, under its ``.lock`` sibling; the stream
+    scratch directories are rebuilt on every run and take no lock."""
     return shared_store_path(f"mgs_{kind}_{cache_tag(sf_dir, *tables)}")
 
 
 @contextlib.contextmanager
 def exclusive(lock_path: str, wait_s: float | None):
     """Hold an exclusive ``flock`` on ``lock_path`` for the ``with``
-    body: the one lock of every writer in the package (store builds,
-    :func:`write_once` stagings, the snapshot manifest and version
+    body: the one lock of every writer in the package (the
+    :func:`write_once` store builds, the snapshot manifest and version
     claims, the point-index refresh).
 
     Waits up to ``wait_s`` seconds (``None``: until the lock is free,
@@ -452,20 +453,50 @@ def exclusive(lock_path: str, wait_s: float | None):
         os.close(fd)
 
 
+#: longest :func:`write_once` waits for another writer's build of the
+#: same store before it raises :class:`TimeoutError`
+STORE_BUILD_WAIT_S = 900.0
+
+#: commit marker :func:`write_once` stamps after ``write(path)`` has
+#: returned. Underscore prefix → ignored by Spark's file index.
+_COMMIT_FILE = "_COMMITTED"
+
+
+def _committed(path: str) -> bool:
+    """True iff :func:`write_once` committed ``path`` and the current
+    uid owns it: a directory another uid owns is never trusted into
+    query results (ADVICE r13), it is rebuilt."""
+    try:
+        return os.stat(path).st_uid == os.getuid() and os.path.exists(
+            os.path.join(path, _COMMIT_FILE)
+        )
+    except OSError:
+        return False
+
+
 def write_once(path: str, write) -> str:
-    """Run ``write(path)`` unless ``path`` holds a committed Spark write
-    (its ``_SUCCESS`` marker); return ``path``. The check is repeated
-    under :func:`exclusive` on ``{path}.lock``, so of two processes on
-    one staging the second waits and then reads the first one's
-    directory. A writer killed halfway leaves no ``_SUCCESS``, and the
-    next one overwrites its torn directory: ``write`` must write with
-    ``mode("overwrite")``."""
-    done = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(done):
+    """Build the derived store at ``path`` unless it is committed;
+    return ``path``. The one protocol by which the package builds a
+    store, staging or layout copy and decides that it is complete.
+
+    The build runs under :func:`exclusive` on ``{path}.lock`` (waiting
+    at most :data:`STORE_BUILD_WAIT_S`), so of two threads or processes
+    on one store the second waits and then reads the first one's. It
+    clears whatever an uncommitted ``path`` holds, runs ``write(path)``
+    and only then stamps ``path/_COMMITTED``. ``write`` may take
+    several steps (write, then upsert, delete or publish versions into
+    what it wrote): a writer that raises or dies at any step leaves no
+    marker, and the next call rebuilds from an empty ``path``. Nothing
+    mutates a committed store."""
+    if not _committed(path):
+        import shutil
+
         os.makedirs(os.path.dirname(path), exist_ok=True)
-        with exclusive(path + ".lock", None):
-            if not os.path.exists(done):
+        with exclusive(path + ".lock", STORE_BUILD_WAIT_S):
+            if not _committed(path):
+                shutil.rmtree(path, ignore_errors=True)
                 write(path)
+                open(os.path.join(path, _COMMIT_FILE), "w").close()
     return path
 
 
@@ -528,7 +559,6 @@ def adopt_or_build_bucketed_table(
     bucket_cols: list[str],
     num_buckets: int | None,
     build,
-    build_wait_s: float = 900.0,
 ) -> str:
     """Ensure a bucketed catalog table exists; returns the EFFECTIVE
     table name — ``{name}{bucket_table_suffix(...)}``, i.e.
@@ -549,95 +579,38 @@ def adopt_or_build_bucketed_table(
     The same suffix is appended to ``path``, which also fences off any
     plain parquet an older layout left at the unsuffixed location.
 
-    Three cases, cheapest first:
-    1. table already in the catalog → done;
-    2. files exist (``_SUCCESS``) but the catalog is fresh (the
-       in-memory catalog dies with the session while the parquet
-       survives) → verify the ``_BUCKET_SPEC.json`` sidecar stamped at
-       build time matches the requested spec exactly AND the data files
-       carry writer-stamped bucket ids consistent with ``num_buckets``
-       (:func:`_bucket_layout_ok`), then ADOPT them with ``CREATE TABLE
-       … CLUSTERED BY … LOCATION`` — a metadata op, not a rebuild. A
-       directory that fails either check (foreign/partial/non-bucketed
-       files, retired-scheme store) is cleared and rebuilt instead of
-       adopted;
-    3. nothing on disk → ``build()`` must return the DataFrame to
-       write; it is bucketed+sorted via :func:`write_parquet` and the
-       sidecar is stamped last (a crash mid-build leaves no sidecar →
-       the next caller rebuilds instead of adopting a torn store).
-       Builds are SERIALIZED by :func:`exclusive` on
-       ``{path}.build.lock`` (one writer per _SUCCESS-gated store):
-       concurrent callers wait up to ``build_wait_s`` and then adopt
-       the winner's files. A builder that died released the lock with
-       its process, and the next one clears its torn directory.
+    A warm call returns on ``spark.catalog.tableExists`` before any
+    filesystem work. Otherwise the store is built through
+    :func:`write_once`, whose body writes ``build()`` bucketed and
+    sorted via :func:`write_parquet` and stamps the
+    ``_BUCKET_SPEC.json`` sidecar; ``build`` is called only when it
+    builds. A committed store another session built (the in-memory
+    catalog dies with the session while the parquet survives) is
+    ADOPTED with ``CREATE TABLE … CLUSTERED BY … LOCATION``, a metadata
+    op, once its sidecar matches the requested spec exactly and its
+    data files carry writer-stamped bucket ids consistent with
+    ``num_buckets`` (:func:`_bucket_layout_ok`). A committed store that
+    fails either check is never adopted: the call raises, naming the
+    path. Uncommitted leftovers (foreign, partial or non-bucketed
+    files, a torn build) are cleared and rebuilt by :func:`write_once`.
 
     This function is what makes the materialized LSH band table and
     the fingerprint store cost one signature pass per CORPUS VERSION,
-    not one per session (with a persistent metastore case 2 never
+    not one per session (with a persistent metastore the adoption never
     fires).
     """
     import json
-    import shutil
 
     if num_buckets is None:
         num_buckets = store_bucket_count(spark)
     suffix = bucket_table_suffix(num_buckets, bucket_cols)
     name = f"{name}{suffix}"
     path = f"{path.rstrip('/')}{suffix}"
+    if spark.catalog.tableExists(name):
+        return name
     want_spec = {"num_buckets": num_buckets, "bucket_cols": list(bucket_cols)}
 
-    def _try_adopt() -> bool:
-        if spark.catalog.tableExists(name):
-            return True
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return False
-        try:
-            # never adopt a foreign-owned directory into query results
-            # (ADVICE r13) — belt-and-braces on top of the 0700
-            # shared_store_root the default callers build under
-            if os.stat(path).st_uid != os.getuid():
-                return False
-        except OSError:
-            return False
-        on_disk = _read_bucket_spec(path)
-        if (
-            on_disk is not None
-            and {k: on_disk.get(k) for k in want_spec} == want_spec
-            and _bucket_layout_ok(path, num_buckets)
-        ):
-            schema = spark.read.parquet(path).schema
-            cols = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}" for f in schema
-            )
-            bc = ", ".join(bucket_cols)
-            # IF NOT EXISTS: two threads of one session can both reach
-            # here (adoption runs outside the build lock); the second
-            # CREATE must be a no-op, not an AnalysisException
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING PARQUET "
-                f"CLUSTERED BY ({bc}) SORTED BY ({bc}) INTO {num_buckets} BUCKETS "
-                f"LOCATION '{path}'"
-            )
-            return True
-        return False
-
-    if _try_adopt():
-        return name
-
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    lock = path + ".build.lock"
-    with contextlib.ExitStack() as held:
-        try:
-            held.enter_context(exclusive(lock, build_wait_s))
-        except TimeoutError:
-            raise RuntimeError(
-                f"bucketed-store build lock {lock} held by a live builder "
-                f"for >{build_wait_s:.0f}s"
-            ) from None
-        if _try_adopt():  # the lock's previous holder built it
-            return name
-        if os.path.exists(path):  # unadoptable leftovers (torn build)
-            shutil.rmtree(path, ignore_errors=True)
+    def write(path: str) -> None:
         write_parquet(
             build().repartition(num_buckets, *bucket_cols),
             path,
@@ -645,11 +618,33 @@ def adopt_or_build_bucketed_table(
             bucket_cols=bucket_cols,
             num_buckets=num_buckets,
         )
-        tmp = os.path.join(path, _BUCKET_SPEC_FILE + ".tmp")
-        with open(tmp, "w") as fh:
+        with open(os.path.join(path, _BUCKET_SPEC_FILE), "w") as fh:
             json.dump({**want_spec, "version": 2}, fh)
-        os.replace(tmp, os.path.join(path, _BUCKET_SPEC_FILE))
+
+    write_once(path, write)
+    if spark.catalog.tableExists(name):  # this session built it
         return name
+    on_disk = _read_bucket_spec(path)
+    if (
+        on_disk is None
+        or {k: on_disk.get(k) for k in want_spec} != want_spec
+        or not _bucket_layout_ok(path, num_buckets)
+    ):
+        raise RuntimeError(
+            f"committed store {path} does not hold {num_buckets} buckets on "
+            f"{list(bucket_cols)} (sidecar {on_disk}); remove it to rebuild"
+        )
+    schema = spark.read.parquet(path).schema
+    cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema)
+    bc = ", ".join(bucket_cols)
+    # IF NOT EXISTS: two threads of one session can both adopt; the
+    # second CREATE must be a no-op, not an AnalysisException
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING PARQUET "
+        f"CLUSTERED BY ({bc}) SORTED BY ({bc}) INTO {num_buckets} BUCKETS "
+        f"LOCATION '{path}'"
+    )
+    return name
 
 
 def bucketed_fact_table(

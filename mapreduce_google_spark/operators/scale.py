@@ -969,12 +969,6 @@ UPSERT_DAY = "2024-01-02"
 #: 1e9 clears any replica count this repo will ever build (<100).
 UPSERT_INSERT_OFFSET = 1_000_000_000
 
-#: table paths already upserted this process — the upsert is idempotent
-#: (same delta, same keys, same result), so re-running it on every
-#: builder call (registry sweeps, plan audits) would only burn a write
-#: job; one application per corpus per process is enough.
-_UPSERTED: set[str] = set()
-
 
 def _events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical (event_id, day, value) projection of the events
@@ -1004,28 +998,24 @@ def _corrections_delta(ev: DataFrame) -> DataFrame:
 
 def _events_daily_upserted_path(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the day-partitioned events table exists with the t225
-    corrections delta applied (once per corpus per process — the upsert
-    is idempotent) and return its path. Shared by the upsert query
-    (t225) and the snapshot-diff CDC query (t226), which audits what
-    the upsert changed."""
-    # offset in the path: changing UPSERT_INSERT_OFFSET must invalidate
-    # any previous process's cached table (its inserts carry old ids)
-    path = derived_dir(f"events_daily_o{UPSERT_INSERT_OFFSET}", sf_dir, "events")
-    ev = _events_source(spark, sf_dir)
+    corrections delta applied (once per corpus: the write and the
+    upsert are one :func:`write_once` build) and return its path.
+    Shared by the upsert query (t225) and the snapshot-diff CDC query
+    (t226), which audits what the upsert changed."""
+    from mapreduce_google_spark.io import partition_upsert
 
     def write(path: str) -> None:
+        ev = _events_source(spark, sf_dir)
         ev.repartition("day").write.mode("overwrite").partitionBy("day").parquet(
             path
         )
-        _UPSERTED.discard(path)
-
-    write_once(path, write)
-    if path not in _UPSERTED:
-        from mapreduce_google_spark.io import partition_upsert
-
         partition_upsert(spark, path, _corrections_delta(ev), "day", ["event_id"])
-        _UPSERTED.add(path)
-    return path
+
+    # offset in the path: changing UPSERT_INSERT_OFFSET must invalidate
+    # any previous process's cached table (its inserts carry old ids)
+    return write_once(
+        derived_dir(f"events_daily_o{UPSERT_INSERT_OFFSET}", sf_dir, "events"), write
+    )
 
 
 def event_corrections_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1250,24 +1240,27 @@ def manifest_pruned_box_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _events_snapshot_root(spark: SparkSession, sf_dir: str) -> str:
     """Ensure the two-version events snapshot chain exists (v1 = as
     ingested, v2 = after the t225 corrections merge) and return its
-    root. Shared by time travel (t228) and cross-snapshot IVM (t239)."""
-    from mapreduce_google_spark.io import list_versions, versioned_write
+    root. Shared by time travel (t228) and cross-snapshot IVM (t239).
+    Both versions are published in one :func:`write_once` build, so a
+    run that dies after v1 leaves the chain uncommitted and the next
+    one republishes it from an empty root."""
+    from mapreduce_google_spark.io import versioned_write
 
-    root = derived_dir(f"events_snapshots_o{UPSERT_INSERT_OFFSET}", sf_dir, "events")
-    if len(list_versions(root)) < 2:
+    def write(root: str) -> None:
         ev = _events_source(spark, sf_dir)
         delta = _corrections_delta(ev)
-        merged = (
-            ev.join(delta.select("event_id"), ["event_id"], "left_anti")
-            .unionByName(delta)
+        versioned_write(ev, root)  # v1: as ingested
+        versioned_write(  # v2: after corrections
+            ev.join(delta.select("event_id"), ["event_id"], "left_anti").unionByName(
+                delta
+            ),
+            root,
         )
-        # write only the MISSING versions — a crash after v1 must not
-        # re-publish the raw source as v2 on the next run
-        if not list_versions(root):
-            versioned_write(ev, root)      # v1: as ingested
-        if len(list_versions(root)) == 1:
-            versioned_write(merged, root)  # v2: after corrections
-    return root
+
+    return write_once(
+        derived_dir(f"events_snapshots_o{UPSERT_INSERT_OFFSET}", sf_dir, "events"),
+        write,
+    )
 
 
 def snapshot_version_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1459,11 +1452,6 @@ def pruned_files_from_manifest(
 #: the DML verbs are probed on different partitions)
 DV_DELETE_DAY = "2024-01-03"
 
-#: table paths whose DV delete already ran this process — delete_where is
-#: idempotent (already-masked rows are never re-marked), the memo just
-#: skips the no-op scan on registry sweeps
-_DV_DELETED: set[str] = set()
-
 
 def events_after_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T231 — merge-on-read DELETE via deletion vectors: daily event
@@ -1483,23 +1471,18 @@ def events_after_dv_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from mapreduce_google_spark.io import delete_where, read_with_deletes
 
-    path = derived_dir("events_dv", sf_dir, "events")
-
     def write(path: str) -> None:
         _events_source(spark, sf_dir).repartition(4).write.mode(
             "overwrite"
         ).parquet(path)
-        _DV_DELETED.discard(path)
-
-    write_once(path, write)
-    if path not in _DV_DELETED:
         delete_where(
             spark,
             path,
             (F.col("day") == F.lit(DV_DELETE_DAY).cast("date"))
             & (F.pmod("event_id", F.lit(13)) == 0),
         )
-        _DV_DELETED.add(path)
+
+    path = write_once(derived_dir("events_dv", sf_dir, "events"), write)
     return (
         read_with_deletes(spark, path)
         .groupBy("day")

@@ -71,7 +71,7 @@ def killed_holder(lock: str, *files: str) -> None:
 def write_once_slowly(path: str, log: str, start, out) -> None:
     """Wait at the ``start`` barrier, then put on ``out`` what
     ``io.write_once(path, ...)`` returns for a writer that appends its
-    pid to ``log``, takes a second, then commits ``path/_SUCCESS``."""
+    pid to ``log``, takes a second, then writes ``path/_SUCCESS``."""
     from mapreduce_google_spark.io import write_once
 
     def write(staged: str) -> None:

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -325,42 +326,45 @@ def test_store_bucket_count_is_fixed_per_spark_context(spark, tmp_path, monkeypa
         spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_bucketed_build_lock_serializes_and_breaks_dead_holders(spark, tmp_path):
-    """adopt_or_build_bucketed_table builds under io.exclusive on
-    {path}.build.lock (the r8 shared-cache rule: one writer per
-    _SUCCESS-gated store). A killed holder never blocks the next build;
-    a LIVE holder in another process makes the call fail after
-    build_wait_s instead of corrupting the winner's commit; concurrent
-    threads produce exactly one build that everyone adopts."""
+def test_bucketed_build_lock_serializes_and_breaks_dead_holders(
+    spark, tmp_path, monkeypatch
+):
+    """adopt_or_build_bucketed_table builds through io.write_once, under
+    io.exclusive on {path}.lock (the r8 shared-cache rule: one writer
+    per store). A killed holder never blocks the next build; a LIVE
+    holder in another process makes the call fail after
+    io.STORE_BUILD_WAIT_S instead of corrupting the winner's commit;
+    concurrent threads produce exactly one build that everyone adopts."""
     import threading
 
     import pytest
 
+    from mapreduce_google_spark import io as mio
     from mapreduce_google_spark.io import (
         adopt_or_build_bucketed_table,
         bucket_table_suffix,
     )
     from tests.lock_holders import killed_holder, live_holder
 
+    monkeypatch.setattr(mio, "STORE_BUILD_WAIT_S", 0.5)
     df = spark.range(60).selectExpr("id", "id % 5 AS k")
 
     # 1. killed holder → its lock died with it, build proceeds at once
     base = str(tmp_path / "locked")
     path = base + bucket_table_suffix(4, ["k"])
-    killed_holder(path + ".build.lock")
+    killed_holder(path + ".lock")
     n1 = adopt_or_build_bucketed_table(
-        spark, "mgs_test_lock_a", base, ["k"], 4, lambda: df, build_wait_s=0.5
+        spark, "mgs_test_lock_a", base, ["k"], 4, lambda: df
     )
     assert spark.table(n1).count() == 60
 
     # 2. live holder in another process → bounded failure, no write
     base2 = str(tmp_path / "held")
     path2 = base2 + bucket_table_suffix(4, ["k"])
-    with live_holder(path2 + ".build.lock"):
-        with pytest.raises(RuntimeError, match="build lock"):
+    with live_holder(path2 + ".lock"):
+        with pytest.raises(TimeoutError, match="held by another writer"):
             adopt_or_build_bucketed_table(
-                spark, "mgs_test_lock_b", base2, ["k"], 4, lambda: df,
-                build_wait_s=0.5,
+                spark, "mgs_test_lock_b", base2, ["k"], 4, lambda: df
             )
     assert not os.path.exists(path2)
 
@@ -395,12 +399,16 @@ def test_bucketed_build_lock_serializes_and_breaks_dead_holders(spark, tmp_path)
         spark.sql(f"DROP TABLE IF EXISTS {n}")
 
 
-def test_store_build_killed_halfway_is_rebuilt_not_adopted(spark, tmp_path):
+def test_store_build_killed_halfway_is_rebuilt_not_adopted(
+    spark, tmp_path, monkeypatch
+):
     """A builder SIGKILLed after writing part files and _SUCCESS but
-    before stamping _BUCKET_SPEC.json leaves a torn store. Its lock died
-    with it, so the next call takes the lock at once (build_wait_s=0.5
-    would raise otherwise), refuses to adopt the torn files and
-    rebuilds: right row count, the torn part files gone."""
+    before write_once committed the store leaves a torn store. Its lock
+    died with it, so the next call takes the lock at once (a
+    STORE_BUILD_WAIT_S of 0.5 s would raise otherwise), refuses to
+    adopt the torn files and rebuilds: right row count, the torn part
+    files gone."""
+    from mapreduce_google_spark import io as mio
     from mapreduce_google_spark.io import (
         _BUCKET_SPEC_FILE,
         adopt_or_build_bucketed_table,
@@ -408,6 +416,7 @@ def test_store_build_killed_halfway_is_rebuilt_not_adopted(spark, tmp_path):
     )
     from tests.lock_holders import killed_holder
 
+    monkeypatch.setattr(mio, "STORE_BUILD_WAIT_S", 0.5)
     df = spark.range(40).selectExpr("id", "id % 4 AS k")
     base = str(tmp_path / "torn")
     path = base + bucket_table_suffix(2, ["k"])
@@ -416,12 +425,12 @@ def test_store_build_killed_halfway_is_rebuilt_not_adopted(spark, tmp_path):
         os.path.join(path, f"part-00000-torn_0000{b}.c000.snappy.parquet")
         for b in (0, 1)
     ]
-    killed_holder(path + ".build.lock", *torn, os.path.join(path, "_SUCCESS"))
+    killed_holder(path + ".lock", *torn, os.path.join(path, "_SUCCESS"))
     assert all(os.path.exists(f) for f in torn)
     assert not os.path.exists(os.path.join(path, _BUCKET_SPEC_FILE))
 
     name = adopt_or_build_bucketed_table(
-        spark, "mgs_test_torn", base, ["k"], 2, lambda: df, build_wait_s=0.5
+        spark, "mgs_test_torn", base, ["k"], 2, lambda: df
     )
     try:
         assert spark.table(name).count() == 40
@@ -434,7 +443,7 @@ def test_store_build_killed_halfway_is_rebuilt_not_adopted(spark, tmp_path):
 
 def test_write_once_runs_one_writer_across_processes(tmp_path):
     """Two processes calling io.write_once on one staging path: the
-    second waits on {path}.lock, sees the first one's _SUCCESS and
+    second waits on {path}.lock, sees the first one's commit and
     skips its writer, so the writer runs exactly once and both callers
     return the same path. No JVM: the writer is plain Python."""
     import multiprocessing
@@ -457,6 +466,88 @@ def test_write_once_runs_one_writer_across_processes(tmp_path):
     assert got == [path, path]
     assert len(open(log).read().split()) == 1
     assert os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def test_write_once_commits_only_after_write_returns(spark, tmp_path):
+    """A write that finishes a Spark write (so Spark's _SUCCESS exists)
+    and then fails at a later step leaves the store uncommitted: the
+    next io.write_once call runs its write again, from an empty path,
+    and a committed store is never written again."""
+    import pytest
+
+    from mapreduce_google_spark.io import write_once
+
+    path = str(tmp_path / "staged")
+    calls = []
+
+    def fails_after_spark_write(p: str) -> None:
+        calls.append(p)
+        spark.range(5).write.mode("overwrite").parquet(p)
+        assert os.path.exists(os.path.join(p, "_SUCCESS"))
+        raise RuntimeError("second step failed")
+
+    def writes(p: str) -> None:
+        calls.append(p)
+        spark.range(7).write.parquet(p)  # mode error: needs an empty path
+
+    with pytest.raises(RuntimeError, match="second step failed"):
+        write_once(path, fails_after_spark_write)
+    assert write_once(path, writes) == path
+    assert len(calls) == 2
+    assert spark.read.parquet(path).count() == 7
+    assert write_once(path, fails_after_spark_write) == path  # committed
+    assert len(calls) == 2
+
+
+def test_committed_store_with_wrong_layout_is_never_adopted(spark, tmp_path):
+    """A committed bucketed store whose sidecar names another spec, or
+    whose part files carry no bucket id, is never adopted into a fresh
+    catalog: the call raises, naming the path, and leaves the files as
+    they are."""
+    import json
+
+    import pytest
+
+    from mapreduce_google_spark.io import (
+        _BUCKET_FILE_RE,
+        _BUCKET_SPEC_FILE,
+        adopt_or_build_bucketed_table,
+        bucket_table_suffix,
+    )
+
+    df = spark.range(40).selectExpr("id", "id % 4 AS k")
+    base = str(tmp_path / "planted")
+    path = base + bucket_table_suffix(4, ["k"])
+    name = adopt_or_build_bucketed_table(
+        spark, "mgs_test_planted", base, ["k"], 4, lambda: df
+    )
+    spark.sql(f"DROP TABLE {name}")  # fresh-session analog
+    sidecar = os.path.join(path, _BUCKET_SPEC_FILE)
+    good = open(sidecar).read()
+    before = sorted(os.listdir(path))
+
+    def refused() -> None:
+        with pytest.raises(RuntimeError, match=re.escape(path)):
+            adopt_or_build_bucketed_table(
+                spark, "mgs_test_planted", base, ["k"], 4, lambda: df
+            )
+        assert not spark.catalog.tableExists(name)
+
+    with open(sidecar, "w") as fh:  # a sidecar naming another count
+        json.dump({**json.loads(good), "num_buckets": 8}, fh)
+    refused()
+    assert sorted(os.listdir(path)) == before
+
+    with open(sidecar, "w") as fh:  # the right sidecar, unbucketed files
+        fh.write(good)
+    for f in os.listdir(path):
+        m = _BUCKET_FILE_RE.search(f)
+        if m is not None:
+            os.rename(
+                os.path.join(path, f),
+                os.path.join(path, f.replace(f"_{m.group(1)}.", ".")),
+            )
+    refused()
 
 
 def test_bucketed_fact_table_adopts_and_serves_colocated_join(spark, sf_dir):

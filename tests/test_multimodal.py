@@ -1,7 +1,7 @@
-"""Multimodal plumbing tests: binary column schema, Arrow batch shape,
-feature extraction, and the NotImplementedError gate for payloads no
-codec recognizes. The decode stages over real media are tested in
-test_codecs.py."""
+"""Multimodal plumbing tests: binary column schema, Arrow batch shape
+and feature extraction. The decode stages over real media, and the
+NotImplementedError gate for payloads no codec recognizes, are tested
+in test_codecs.py."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ import pytest
 from mapreduce_google_spark.io import load_table
 from mapreduce_google_spark.operators.multimodal import (
     attach_binary,
-    decode_images,
     extract_features,
 )
 
@@ -32,14 +31,6 @@ def test_binary_schema_and_metadata(with_bin, spark, sf_dir):
     # metadata matches the source text it was derived from
     src = load_table(spark, sf_dir, "documents").orderBy("doc_id").first()
     assert payload.decode("utf-8") == src.text
-
-
-def test_real_decode_raises_without_codec(with_bin):
-    with pytest.raises((NotImplementedError, Exception)) as exc_info:
-        decode_images(with_bin.limit(2)).collect()
-    assert "NotImplementedError" in str(exc_info.value) or isinstance(
-        exc_info.value, NotImplementedError
-    )
 
 
 def test_feature_histogram(with_bin):

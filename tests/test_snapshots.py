@@ -198,6 +198,44 @@ def test_snapshot_totals_recovers_from_crash_after_v1(spark, sf_dir):
     assert rows[1]["n_events"] > rows[0]["n_events"]  # v2 has the late inserts
 
 
+def test_snapshot_chain_ensured_by_two_threads_is_published_once(
+    spark, sf_dir, store_root_in_tmp_path
+):
+    """Two threads ensuring the t228 chain on a fresh store root publish
+    it once: versions [1, 2], v1 the source and v2 the merge that holds
+    the late inserts, never a second copy of the raw source."""
+    import threading
+
+    from mapreduce_google_spark.operators.scale import (
+        UPSERT_INSERT_OFFSET,
+        _events_snapshot_root,
+    )
+
+    roots, errors = [], []
+
+    def ensure() -> None:
+        try:
+            roots.append(_events_snapshot_root(spark, sf_dir))
+        except Exception as e:  # pragma: no cover - failure detail
+            errors.append(e)
+
+    threads = [threading.Thread(target=ensure) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    root = roots[0]
+    assert roots == [root, root]
+    assert root.startswith(str(store_root_in_tmp_path))
+    assert list_versions(root) == [1, 2]
+    late = F.col("event_id") >= UPSERT_INSERT_OFFSET
+    v1, v2 = (read_snapshot(spark, root, version=v) for v in (1, 2))
+    assert v1.where(late).count() == 0
+    assert v2.where(late).count() > 0
+
+
 def test_manifest_steady_state_call_does_not_rewrite(spark, tmp_path):
     from mapreduce_google_spark.operators.scale import refresh_file_manifest
 

@@ -77,7 +77,9 @@ def test_t225_is_idempotent_and_keeps_other_days_untouched(spark, sf_dir):
     }
     assert other_days
 
-    scale._UPSERTED.discard(path)  # force a real re-application
+    # a real re-application of the same delta to the committed table
+    delta = scale._corrections_delta(scale._events_source(spark, sf_dir))
+    partition_upsert(spark, path, delta, "day", ["event_id"])
     second = event_corrections_upsert(spark, sf_dir).collect()
     assert second == first
     for d, before in other_days.items():
@@ -92,6 +94,37 @@ def test_t225_is_idempotent_and_keeps_other_days_untouched(spark, sf_dir):
     assert dup == 0
     n_inserts = day.where(F.col("event_id") >= UPSERT_INSERT_OFFSET).count()
     assert n_inserts > 0
+
+
+def test_t225_called_by_two_threads_at_once_matches_one_call(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Two t225 calls at once on a fresh store root (the shape of
+    ``cli batch --parallel 2`` running t225 and t226): the upsert runs
+    inside the table's one write_once build, so neither call overwrites
+    a partition the other is reading. Both succeed, with the rows of a
+    single call."""
+    import tempfile
+    import threading
+
+    one = sorted(event_corrections_upsert(spark, sf_dir).collect())
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))  # fresh root
+    got, errors = [], []
+
+    def call() -> None:
+        try:
+            got.append(sorted(event_corrections_upsert(spark, sf_dir).collect()))
+        except Exception as e:  # pragma: no cover - failure detail
+            errors.append(e)
+
+    threads = [threading.Thread(target=call) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert got == [one, one]
 
 
 def test_partition_upsert_empty_delta_is_a_safe_noop(spark, tmp_path):
